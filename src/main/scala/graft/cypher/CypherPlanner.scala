@@ -2574,7 +2574,7 @@ object CypherPlanner {
       // relationships(p), a named relationship list, group variables —
       // the BFS carries ONE deterministic walk per pair alongside the
       // frontier (min node-id sequence; still pair-bounded, never walk
-      // enumeration — see shortestRel). allShortestPaths and weighted
+      // enumeration — see frontierSearch). allShortestPaths and weighted
       // searches keep their pair-level aggregates (multiplicity /
       // cost) and stay walk-free.
       val spCarry = chain.shortest && !chain.allShortest &&
@@ -2605,6 +2605,10 @@ object CypherPlanner {
           rel.variable.exists(wref.idents) ||
           rel.groupNodes.exists { case (a, b) =>
             (a.toSeq ++ b.toSeq).exists(wref.idents) })
+      // the frontier kernel's selector for a shortest-path chain
+      val pathSel: PathSelector =
+        if (chain.allShortest) AllMinimal
+        else chain.kBest.filter(_ > 1).fold[PathSelector](FirstReach)(KBest)
       val needWalkEid = !chain.shortest && rel.varLength.exists(_._2 > 1)
       val needChainEid = !chain.shortest && chainEidAt(hopIdx)
       // `relationships(p)` needs every hop's edge identity, even on
@@ -2941,7 +2945,7 @@ object CypherPlanner {
             "\"Path selector semantics and permanent carve-outs\")")
         // lower bound pinned to 1 under shortestPath (first-reach BFS
         // = fewest repetitions; a {2,…} floor would need post-floor
-        // re-search) — same restriction as the single-edge shortestRel
+        // re-search) — same restriction as the single-edge search
         require(!chain.shortest || lo == 1,
           "shortestPath over a quantified group requires lower bound " +
             s"exactly 1 (got {$lo,$hi})")
@@ -3255,11 +3259,11 @@ object CypherPlanner {
           val (pr, ir) = stepWhereRefs(pred)
           ((pr.keySet ++ ir) -- nodePats.flatMap(_.variable).toSet).nonEmpty
         }
-        // shortestPath over the composite frame: repetition-level
-        // walk-carrying BFS (fewest repetitions = fewest edges, k·h
-        // monotone in k); the weighted spelling takes the
-        // repetition-level Bellman–Ford instead (cheapest total edge
-        // weight, k·h-bounded). Seed rebuilt HERE because an
+        // shortest-path selectors over the composite frame: the
+        // frontier kernel steps one repetition per level (fewest
+        // repetitions = fewest edges, k·h monotone in k; the weighted
+        // spelling relaxes on the summed repetition weight, k·h-
+        // bounded). Seed rebuilt HERE because an
         // outer-ref repetition WHERE composite-keys the frame only
         // during composeRep above — the chain-level bfsSeed predates
         // that. A SEEDED search with plain keys composes lazily, per
@@ -3281,19 +3285,8 @@ object CypherPlanner {
             if (spSeed.isDefined && !hasOuterWhere)
               Some((starts: DataFrame) => baseOf(Some(starts)))
             else None
-          return if (chain.allShortest && weighted)
-            compositeWeightedAllWalks(baseOf(None), h, hi, spSeed,
-              composeFrom)
-          else if (chain.allShortest)
-            compositeAllShortestWalks(baseOf(None), h, hi, spSeed,
-              composeFrom)
-          else if (weighted)
-            compositeWeightedWalks(baseOf(None), h, hi, spSeed, composeFrom)
-          else if (chain.kBest.exists(_ > 1))
-            compositeKShortestWalks(baseOf(None), h, hi, spSeed,
-              chain.kBest.get, composeFrom)
-          else
-            compositeShortestWalks(baseOf(None), h, hi, spSeed, composeFrom)
+          return frontierSearch(baseOf(None), pathSel, Walks, lo, hi, spSeed,
+            chain.weightProp, h, composeFrom)
         }
         // (r19, measured: checkpointing this once for the k-fold
         // chaining below — which re-references it per k — made the qpp
@@ -3363,38 +3356,24 @@ object CypherPlanner {
             s"quantified group bound {$lo,$hi} above the shared " +
               s"var-length cap *..${CypherParser.MaxVarHops}")
           compositeExpand(rel.groupChain.get, lo, hi)
-        } else if (chain.weightProp.isDefined) {
-          val wp = chain.weightProp.get
-          require(expandEdges.columns.contains(wp),
-            s"weight property '$wp' is not a property of this relationship " +
-              s"(have: ${expandEdges.columns.filterNot(_.startsWith("__")).sorted.mkString(", ")})")
-          require(chain.kBest.forall(_ <= 1) || !chain.allShortest,
-            "SHORTEST k (k > 1) does not compose with weighted " +
-              "allShortestPaths (no GQL spelling; see README \"Path " +
-              "selector semantics and permanent carve-outs\")")
-          if (chain.kBest.exists(_ > 1))
-            weightedKShortestWalks(expandEdges, wp, rel.varLength.get._1,
-              rel.varLength.get._2, bfsSeed, chain.kBest.get)
-          else if (chain.allShortest)
-            weightedAllShortestWalks(expandEdges, wp, rel.varLength.get._1,
-              rel.varLength.get._2, bfsSeed)
-          else
-            weightedShortestRel(expandEdges, wp, rel.varLength.get._1,
-              rel.varLength.get._2, bfsSeed, carryWalks = spCarry)
-        } else if (chain.allShortest) {
-          if (aspCarry)
-            allShortestWalks(expandEdges, rel.varLength.get._1,
-              rel.varLength.get._2, bfsSeed)
-          else
-            shortestRelCounted(expandEdges, rel.varLength.get._1,
-              rel.varLength.get._2, bfsSeed)
+        } else if (chain.shortest) {
+          chain.weightProp.foreach { wp =>
+            require(expandEdges.columns.contains(wp),
+              s"weight property '$wp' is not a property of this relationship " +
+                s"(have: ${expandEdges.columns.filterNot(_.startsWith("__"))
+                  .sorted.mkString(", ")})")
+            require(chain.kBest.forall(_ <= 1) || !chain.allShortest,
+              "SHORTEST k (k > 1) does not compose with weighted " +
+                "allShortestPaths (no GQL spelling; see README \"Path " +
+                "selector semantics and permanent carve-outs\")")
+          }
+          val payload =
+            if (pathSel == AllMinimal && !aspCarry) Sigma
+            else if (pathSel == FirstReach && !spCarry) PairsOnly
+            else Walks
+          frontierSearch(expandEdges, pathSel, payload, rel.varLength.get._1,
+            rel.varLength.get._2, bfsSeed, chain.weightProp)
         }
-        else if (chain.kBest.exists(_ > 1))
-          kShortestWalks(expandEdges, rel.varLength.get._1,
-            rel.varLength.get._2, bfsSeed, chain.kBest.get)
-        else if (chain.shortest)
-          shortestRel(expandEdges, rel.varLength.get._1,
-            rel.varLength.get._2, bfsSeed, carryWalks = spCarry)
         else {
           // zero-lower-bound expansion needs the node universe for
           // its k=0 branch: every node id, across all labels (a
@@ -3623,10 +3602,11 @@ object CypherPlanner {
           // need no lists — the walk-free search stands. A name the
           // query DOES consume forces spCarry on plain AND weighted
           // shortestPath (r15/r16) and aspCarry on allShortestPaths
-          // (r18 — the formerly-rejected cell: allShortestWalks
-          // enumerates every shortest walk under the per-pair cap,
-          // so group lists bind per path below), so reaching here
-          // means the names are unconsumed by construction.
+          // (r18 — the formerly-rejected cell: the kernel's AllMinimal
+          // walk search enumerates every shortest walk under the
+          // per-pair cap, so group lists bind per path below), so
+          // reaching here means the names are unconsumed by
+          // construction.
           val consumed = (aName.toSeq ++ bName.toSeq).exists(wref.idents)
           assert(!consumed, "internal: consumed group variables must " +
             "ride a walk-carrying search (spCarry/aspCarry)")
@@ -3912,80 +3892,283 @@ object CypherPlanner {
         }
     }
 
-  /** `shortestPath` expansion: level-synchronous multi-source BFS.
-    * Each level extends the surviving frontier by one hop and
-    * anti-joins away (src, dst) pairs already reached, so every pair
-    * is kept at its FIRST — minimum — hop count and walks are never
-    * enumerated (the var-length union is exponential on dense graphs;
-    * the BFS frontier is bounded by the reachable pair set). Shortest
-    * walks cannot repeat an edge, so no edge-identity bookkeeping.
-    *
-    * Scale shape: per-level cost is one equi-join + distinct +
-    * anti-join, all keyed on node id; the frontier is eagerly
-    * localCheckpoint'ed per level, which truncates lineage (keeps the
-    * plan linear in the hop bound), lets the empty-frontier early
-    * exit read materialized data, and sidesteps the union-self-join
-    * constraint-propagation issue. Returns (__src, __dst, __hops).
+  /** Selector axis of [[frontierSearch]]. */
+  private sealed trait PathSelector
+  /** `shortestPath` / `SHORTEST 1`: one first-reach result per pair —
+    * fewest hops, or, weighted, the cheapest (ties keep fewer hops).
     */
-  /** `allShortestPaths` expansion: the same level-synchronous BFS as
-    * [[shortestRel]], additionally carrying each pair's shortest-path
-    * MULTIPLICITY `__np` (Brandes' σ counting): parallel
-    * relationships weight the edge (`__w`), and a pair first reached
+  private case object FirstReach extends PathSelector
+  /** `allShortestPaths`: every minimal walk per pair, or their count. */
+  private case object AllMinimal extends PathSelector
+  /** GQL `SHORTEST k` (k > 1): the k least trails per pair. */
+  private final case class KBest(k: Int) extends PathSelector
+
+  /** Payload axis of [[frontierSearch]]: what a result row carries
+    * besides `(__src, __dst, __hops[, __wcost])`.
+    */
+  private sealed trait PathPayload
+  private case object PairsOnly extends PathPayload
+  /** `__np`, the pair's shortest-path multiplicity (Brandes' σ):
+    * parallel relationships weight the edge, and a pair first reached
     * at level k sums `σ(src, m) · w(m, dst)` over its predecessors —
     * every shortest walk's prefix is itself a shortest walk, so the
-    * recurrence is exact under the first-reach anti-join. `count(p)`
-    * over the path variable consumes the multiplicity.
-    *
-    * Scale shape identical to [[shortestRel]] (one keyed join + agg +
-    * anti-join per level, frontier localCheckpoint'ed); the weighted
-    * edge list adds one up-front (src, dst)-keyed agg.
+    * recurrence is exact under the first-reach anti-join. Feeds
+    * `count(p)` when the query consumes no walk.
     */
-  private def shortestRelCounted(rel: DataFrame, lo: Int, hi: Int,
-      seed: Option[DataFrame] = None): DataFrame = {
-    require(lo == 1 && hi >= lo && hi <= 10,
-      s"allShortestPaths var-length bounds *$lo..$hi out of supported range")
-    // seeded reachable-set scan restriction (r18, seedRestrictEdges):
-    // levels >= 2 join this frame, and the multiplicity groupBy
-    // shuffles only the touched edges
-    val edges = seedRestrictEdges(rel, seed, hi)
-      .select(col("__src"), col("__dst"))
-      .groupBy(col("__src"), col("__dst"))
-      .agg(count(lit(1)).as("__w"))
-      .localCheckpoint()
-    val e0 = seed match {
-      case Some(s) =>
-        edges.join(s, edges("__src") === s("__seedid"), "left_semi")
-      case None => edges
+  private case object Sigma extends PathPayload
+  /** The walk contract: `__nids` (node ids after the source),
+    * `__eids` (edge identities) and the payload lists `__epls` /
+    * `__epls_j` when the query names relationships.
+    */
+  private case object Walks extends PathPayload
+
+  /** The shortest-path / walk search behind `shortestPath`,
+    * `allShortestPaths`, GQL `SHORTEST k`, their weighted forms and
+    * their multi-hop quantified-group spellings: one level-synchronous
+    * multi-source frontier loop, parameterised by selector, cost (hops,
+    * or the strictly positive `weightProp` — Bellman–Ford relaxation
+    * bounded by `hi` steps) and payload.
+    *
+    * The step frame is a set of REPETITIONS: `rel` is either a single
+    * relationship (h = 1 — it enters as `__nids = [dst]`, `__eids =
+    * [eid]`, `__epls = [epl]`) or the composite frame of an h-hop
+    * quantified group, which already carries those arrays per
+    * repetition (and its summed weight `__w`). Every level extends the
+    * frontier by one repetition — walk arrays concatenate, `__hops`
+    * counts k·h relationships — and merges by selector:
+    *  - FirstReach, hops: collapse per pair, anti-join the pairs
+    *    already reached — a pair keeps its first level and ONE walk,
+    *    the per-pair least by the tie order below; never enumeration.
+    *  - FirstReach, weighted: collapse per pair to the cheapest
+    *    candidate; only strictly cheaper candidates replace the
+    *    standing best (ties keep fewer hops), and the next level
+    *    extends just the improved pairs.
+    *  - AllMinimal: keep every extension of a pair's first level
+    *    (hops), or every extension at or below the pair's standing
+    *    minimum cost (weighted; a final per-pair min filter drops the
+    *    undercut ones); rows carry `__np = 1` so `count(p)` counts
+    *    them. The Sigma payload counts instead of enumerating.
+    *  - KBest: keep every trail; one per-pair window ordered by (cost,
+    *    hops, node walk, identities, payloads) takes the k least.
+    * With strictly positive weights every prefix of a minimal walk is
+    * minimal, which makes each pruning exact.
+    *
+    * Rules that differ per cell, each kept as its variant had it:
+    *  - src ≠ n: the BFS family never binds a path's two ends to one
+    *    node; SHORTEST k follows TRAIL semantics instead, where edge
+    *    uniqueness is the only rule (closed trails and source revisits
+    *    are valid — README "Path selector semantics"). The weighted
+    *    and composite BFS forms also drop same-node steps from the
+    *    step frame.
+    *  - edge reuse: trails, composite repetitions (which may share
+    *    inner edges) and weighted all-minimal walks skip an extension
+    *    whose identities overlap the walk's; the other single-edge
+    *    searches only record node-simple walks (first-reach levels,
+    *    strictly positive weights), so they need no check.
+    *  - parallel edges: single-edge `shortestPath` collapses them up
+    *    front to the payload-least edge (so `relationships(p)` and a
+    *    named list describe the SAME edge) and σ counts them; every
+    *    other cell keeps them apart and picks per candidate row.
+    *  - tie order of a first-reach walk: node walk, identities,
+    *    payloads — the composite weighted search compares identities
+    *    before the node walk.
+    *  - each cell's driver actions, checkpoints and broadcast choice.
+    * Per level: one guarded driver action — `isEmpty`, or, for the
+    * enumerations, the [[MaxAllShortestWalks]] per-pair cap check,
+    * whose max aggregate is null exactly when the level is empty. A
+    * seeded composite search composes its repetitions per level from
+    * the frontier (`composeFrom`), so the corpus-wide composite frame
+    * never materializes. Returns the var-expand walk contract.
+    */
+  private def frontierSearch(rel: DataFrame, sel: PathSelector,
+      payload: PathPayload, lo: Int, hi: Int, seed: Option[DataFrame],
+      weightProp: Option[String] = None, h: Int = 1,
+      composeFrom: Option[DataFrame => DataFrame] = None): DataFrame = {
+    val composite = h > 1
+    val weighted = weightProp.isDefined
+    val walks = payload == Walks
+    val trail = sel.isInstanceOf[KBest]
+    val what = (if (weighted) "weighted " else "") + (sel match {
+      case FirstReach => "shortestPath"
+      case AllMinimal => "allShortestPaths"
+      case KBest(k)   => s"SHORTEST $k"
+    }) + (if (composite) " over a quantified group" else "")
+    require(lo == 1 && hi >= lo && hi <= CypherParser.MaxVarHops,
+      s"$what var-length bounds *$lo..$hi out of supported range")
+    val pair = Seq("__src", "__dst")
+    val pairCols = pair.map(col)
+    val dropSelf = !trail && (weighted || composite)
+    val noReuse = composite || trail || (weighted && sel == AllMinimal)
+    def stepFrame(e: DataFrame): DataFrame =
+      if (dropSelf) e.filter(col("__src") =!= col("__dst")) else e
+    def composeAt(from: DataFrame, idCol: String): DataFrame =
+      stepFrame(composeFrom.get(
+        from.select(col(idCol).as("__cstart")).distinct()))
+    val edges: DataFrame =
+      if (composeFrom.isDefined) null
+      else if (composite) stepFrame(rel).localCheckpoint()
+      else {
+        // the seeded reachable-set scan restriction shrinks the scan
+        // and any __eid identity window to the touched edges
+        val scanned =
+          if (weighted && !walks) rel else seedRestrictEdges(rel, seed, hi)
+        val e = stepFrame(scanned.select(pairCols ++
+          weightProp.map(wp => positiveWeightOrDie(wp, what).as("__w")) ++
+          (if (!walks) Nil
+           else array(col("__dst")).as("__nids") +:
+             Seq("__eid", "__epl").filter(rel.columns.contains)
+               .map(c => array(col(c)).as(c + "s"))): _*))
+        // weighted: the walk-free relaxation reads the raw frame (the
+        // per-round min collapses parallel edges on the stepped set);
+        // the walk searches materialize it at session parallelism
+        if (weighted && !trail) { if (walks) loopEdgeFrame(e) else e }
+        else (payload match {
+          case Sigma => e.groupBy(pairCols: _*).agg(count(lit(1)).as("__w"))
+          // first-reach: parallel edges collapse to the payload-least
+          case _ if sel == FirstReach =>
+            Seq("__epls", "__eids").filter(e.columns.contains) match {
+              case Seq() => e.distinct()
+              case pay => e.groupBy(pairCols: _*)
+                .agg(min(struct((pay :+ "__nids").map(col): _*)).as("__pk"))
+                .select(col("__src"), col("__dst"), col("__pk.*"))
+            }
+          case _ => e
+        }).localCheckpoint()
+      }
+    val carry = (if (composite) rel else edges).columns
+      .filter(c => c == "__nids" || c == "__eids" || c.startsWith("__epls"))
+      .toSeq.sorted
+    val order = Seq("__nids", "__eids").filter(carry.contains) ++
+      carry.filterNot(Set("__nids", "__eids"))
+    val tieOrder = if (composite && weighted) carry else order
+    val cost = if (weighted) Seq("__wcost") else Nil
+    def guard(level: DataFrame, k: Int): Boolean = {
+      val top = level.groupBy(pairCols: _*).agg(count(lit(1)).as("__m"))
+        .agg(max(col("__m"))).collect()(0)
+      if (!top.isNullAt(0) && top.getLong(0) > MaxAllShortestWalks) {
+        val noun = sel match {
+          case KBest(_) => "trails"
+          case _ => if (weighted) "candidate minimal walks" else "shortest paths"
+        }
+        val unit = if (composite) "repetition" else "hop"
+        throw new IllegalArgumentException(
+          s"$what: a pair at ${if (composite) "repetition " else ""}depth " +
+            s"$k has ${top.getLong(0)} $noun, above the " +
+            s"$MaxAllShortestWalks cap — " +
+            (if (sel == AllMinimal && !weighted && !composite)
+              "consume count(p)/length(p) (the pair-aggregate plan) or "
+            else "") + s"bind tighter endpoints or lower the $unit bound")
+      }
+      top.isNullAt(0)
     }
-    var seen = e0.select(col("__src"), col("__dst"),
-      lit(1).as("__hops"), col("__w").cast("long").as("__np"))
-    var frontier = seen.select(col("__src"), col("__dst"), col("__np"))
+    def keepMin(df: DataFrame): DataFrame =
+      df.join(df.groupBy(pairCols: _*).agg(min(col("__wcost")).as("__mc")),
+        pair).filter(col("__wcost") === col("__mc")).drop("__mc")
+    val e0 =
+      if (composeFrom.isDefined) composeAt(seed.get, "__seedid")
+      else seed.fold(edges)(s =>
+        edges.join(s, edges("__src") === s("__seedid"), "left_semi"))
+    var acc = e0.select(Seq(col("__src"), col("__dst"), lit(h).as("__hops")) ++
+      (if (weighted) Seq(col("__w").as("__wcost")) else Nil) ++
+      (if (payload == Sigma) Seq(col("__w").cast("long").as("__np")) else Nil) ++
+      carry.map(col): _*)
+    if (sel == FirstReach && (weighted || composite))
+      acc = acc.groupBy(pairCols: _*)
+        .agg(min(struct((cost ++ tieOrder).map(col): _*)).as("__wk"))
+        .select(col("__src"), col("__dst"), lit(h).as("__hops"), col("__wk.*"))
+    else if (sel != FirstReach && (composite || weighted && sel == AllMinimal))
+      acc = acc.distinct()
+    if (walks || weighted) acc = acc.localCheckpoint()
+    var frontier =
+      if (weighted && sel == AllMinimal) keepMin(acc).localCheckpoint() else acc
+    val guarded = walks && sel != FirstReach
+    var exhausted = (guarded && guard(frontier, 1)) || hi < 2 ||
+      (!guarded && frontier.isEmpty)
+    var seenPairs =
+      if (walks && sel == AllMinimal && !weighted)
+        Some(acc.select(pairCols: _*).distinct().localCheckpoint())
+      else None
+    // a seeded frontier stays bounded by the seeds' reachable pairs —
+    // the enumerations and the relaxation broadcast it, so a level is
+    // a map-side join over the edge scan
+    val bcast = seed.isDefined && !composite &&
+      (trail || (if (weighted) sel == FirstReach else sel == AllMinimal && walks))
     var k = 2
-    var exhausted = hi < 2 || frontier.isEmpty
     while (k <= hi && !exhausted) {
-      val stepped = frontier
-        .join(edges.select(col("__src").as("__m"), col("__dst").as("__n"),
-          col("__w")), col("__dst") === col("__m"))
-        .filter(col("__src") =!= col("__n"))
-        .groupBy(col("__src"), col("__n"))
-        .agg(sum(col("__np") * col("__w")).as("__np"))
-        .select(col("__src"), col("__n").as("__dst"), col("__np"))
-      val fresh = stepped
-        .join(seen.select(col("__src"), col("__dst")), Seq("__src", "__dst"),
-          "left_anti")
-        .localCheckpoint()
-      exhausted = fresh.isEmpty
+      val right = (if (composeFrom.isDefined) composeAt(frontier, "__dst")
+        else edges).select(Seq(col("__src").as("__m"), col("__dst").as("__n")) ++
+        (if (weighted || payload == Sigma) Seq(col("__w")) else Nil) ++
+        carry.map(c => col(c).as(s"__r$c")): _*)
+      var stepped = (if (bcast) broadcast(frontier) else frontier)
+        .join(right, col("__dst") === col("__m"))
+      if (!trail) stepped = stepped.filter(col("__src") =!= col("__n"))
+      if (noReuse && carry.contains("__eids"))
+        stepped = stepped.filter(!arrays_overlap(col("__eids"), col("__r__eids")))
+      val stepCost =
+        if (weighted) Seq((col("__wcost") + col("__w")).as("__wcost")) else Nil
+      val grouped = stepped.groupBy(col("__src"), col("__n").as("__dst"))
+      val cand =
+        if (payload == Sigma)
+          grouped.agg(sum(col("__np") * col("__w")).as("__np"))
+        else if (sel != FirstReach)
+          stepped.select(Seq(col("__src"), col("__n").as("__dst")) ++ stepCost ++
+            carry.map(c => concat(col(c), col(s"__r$c")).as(c)): _*)
+        else if (!weighted && !walks)
+          stepped.select(col("__src"), col("__n").as("__dst")).distinct()
+        else
+          // deferred walk concat: every candidate of a level extends an
+          // equal-length prefix, so (prefix, tail) pairs compare exactly
+          // like the concatenated arrays and the concat runs once per
+          // per-pair winner instead of once per candidate
+          grouped.agg(min(struct(stepCost ++ tieOrder.flatMap(c =>
+            Seq(col(c).as(s"__p$c"), col(s"__r$c").as(s"__t$c"))): _*)).as("__wk"))
+            .select(pairCols ++ cost.map(c => col(s"__wk.$c").as(c)) ++
+              tieOrder.map(c =>
+                concat(col(s"__wk.__p$c"), col(s"__wk.__t$c")).as(c)): _*)
+      val level = cand.withColumn("__hops", lit(k * h))
+      val fresh = (sel match {
+        case FirstReach if weighted =>
+          level.join(acc.select(col("__src"), col("__dst"),
+            col("__wcost").as("__old")), pair, "left_outer")
+            .filter(col("__old").isNull || col("__wcost") < col("__old"))
+            .drop("__old")
+        case AllMinimal if weighted =>
+          level.distinct().join(acc.groupBy(pairCols: _*)
+            .agg(min(col("__wcost")).as("__mc")), pair, "left_outer")
+            .filter(col("__mc").isNull || col("__wcost") <= col("__mc"))
+            .drop("__mc")
+        case KBest(_) => level
+        case _ => level.join(
+          seenPairs.getOrElse(acc.select(pairCols: _*)), pair, "left_anti")
+      }).localCheckpoint()
+      exhausted = if (guarded) guard(fresh, k) else fresh.isEmpty
       if (!exhausted) {
-        seen = seen.unionByName(fresh.withColumn("__hops", lit(k))
-          .select(col("__src"), col("__dst"), col("__hops"), col("__np")))
-        frontier = fresh.select(col("__src"), col("__dst"), col("__np"))
+        acc = sel match {
+          case FirstReach if weighted =>
+            acc.join(fresh.select(pairCols: _*), pair, "left_anti")
+              .unionByName(fresh).localCheckpoint()
+          case AllMinimal if weighted => acc.unionByName(fresh).localCheckpoint()
+          case _ => acc.unionByName(fresh)
+        }
+        seenPairs = seenPairs.map(_.unionByName(
+          fresh.select(pairCols: _*).distinct()).localCheckpoint())
+        frontier = fresh
       }
       k += 1
     }
-    seen
+    sel match {
+      case KBest(n) =>
+        val w = org.apache.spark.sql.expressions.Window.partitionBy(pairCols: _*)
+          .orderBy((cost ++ ("__hops" +: order)).map(col): _*)
+        acc.withColumn("__kb_rk", row_number().over(w))
+          .filter(col("__kb_rk") <= n).drop("__kb_rk")
+      case AllMinimal if walks =>
+        (if (weighted) keepMin(acc) else acc).withColumn("__np", lit(1L))
+      case _ => acc
+    }
   }
 
-  /** Per-pair cap on [[allShortestWalks]]' enumeration — the
+  /** Per-pair cap on [[frontierSearch]]'s enumerations — the
     * `MaxQppOuterDomain` loud-guard discipline applied to σ: the
     * enumerated row count per pair IS that pair's shortest-path
     * multiplicity, which is exponential in the worst case (a braided
@@ -4118,299 +4301,6 @@ object CypherPlanner {
     Some(reach)
   }
 
-  /** All-shortest-walk ENUMERATION for allShortestPaths chains whose
-    * walks the query CONSUMES — nodes(p), relationships(p), named
-    * relationship lists, group variables (r16; formerly loud
-    * rejects). Neo4j answers these by enumerating paths; this is the
-    * capped equivalent: the plain level-synchronous BFS keeping EVERY
-    * distinct first-reach walk per pair (a prefix of a shortest path
-    * is a shortest path to its endpoint, so first-reach enumerates
-    * exactly the σ shortest walks, all node-simple — an extension
-    * into its own walk hits an already-seen pair and anti-joins
-    * away). Parallel edges are distinct paths (their identities
-    * differ), exactly the σ-counting semantics. After every level a
-    * bounded driver action (one max row) checks the per-pair walk
-    * count against [[MaxAllShortestWalks]] and fails LOUDLY above it
-    * — never a silent truncation. Walk-free consumers
-    * (count(p)/length(p)) stay on [[shortestRelCounted]]'s pair
-    * aggregates. Returns the walk contract with `__np = 1` per row,
-    * so the untouched count(p) = sum(__np) arithmetic counts
-    * enumerated paths.
-    */
-  private def allShortestWalks(rel: DataFrame, lo: Int, hi: Int,
-      seed: Option[DataFrame]): DataFrame = {
-    require(lo == 1 && hi >= lo && hi <= 10,
-      s"allShortestPaths var-length bounds *$lo..$hi out of supported range")
-    val hasEpl = rel.columns.contains("__epl")
-    require(rel.columns.contains("__eid"),
-      "internal: allShortestPaths walk enumeration needs edge identities")
-    // no distinct: the __eid rank is unique per (src, dst), so rows
-    // already are — a global distinct would be a full extra shuffle
-    // of the edge table (r18); seeded searches additionally restrict
-    // the scan (and the identity window below it) to the seeds'
-    // reachable neighborhood (seedRestrictEdges)
-    val edges = seedRestrictEdges(rel, seed, hi)
-      .select(Seq(col("__src"), col("__dst"), col("__eid")) ++
-      (if (hasEpl) Seq(col("__epl")) else Seq.empty): _*)
-      .localCheckpoint()
-    // a SEEDED frontier stays bounded by the seeds' reachable pair
-    // set — broadcast it so each level is a map-side join over the
-    // edge scan instead of shuffling the full edge table (r18, the
-    // weightedShortestRel discipline); unseeded searches stay keyed
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (seed.isDefined) broadcast(df) else df
-    val e0 = seed match {
-      case Some(s) =>
-        edges.join(s, edges("__src") === s("__seedid"), "left_semi")
-      case None => edges
-    }
-    // ONE driver action per level: the cap guard's max-σ aggregate is
-    // null exactly when the level is empty, so it doubles as the
-    // exhaustion probe (was: a separate isEmpty job per level — r19)
-    def guard(fresh: DataFrame, k: Int): Boolean = {
-      val top = fresh.groupBy(col("__src"), col("__dst"))
-        .agg(count(lit(1)).as("__sigma"))
-        .agg(max(col("__sigma"))).collect()(0)
-      if (!top.isNullAt(0) && top.getLong(0) > MaxAllShortestWalks)
-        throw new IllegalArgumentException(
-          s"allShortestPaths walk enumeration: a pair at depth $k has " +
-            s"${top.getLong(0)} shortest paths, above the " +
-            s"$MaxAllShortestWalks cap — consume count(p)/length(p) " +
-            "(the pair-aggregate plan) or bind tighter endpoints")
-      top.isNullAt(0)
-    }
-    var seen = e0.select(Seq(col("__src"), col("__dst"),
-      lit(1).as("__hops"), array(col("__dst")).as("__nids"),
-      array(col("__eid")).as("__eids")) ++
-      (if (hasEpl) Seq(array(col("__epl")).as("__epls")) else Seq.empty): _*)
-      .localCheckpoint()
-    val emptySeed = guard(seen, 1)
-    var seenPairs = seen.select(col("__src"), col("__dst")).distinct()
-      .localCheckpoint()
-    var frontier = seen
-    var k = 2
-    var exhausted = hi < 2 || emptySeed
-    while (k <= hi && !exhausted) {
-      val right = edges.select(Seq(col("__src").as("__m"),
-        col("__dst").as("__n"), col("__eid").as("__ne")) ++
-        (if (hasEpl) Seq(col("__epl").as("__nepl")) else Seq.empty): _*)
-      val stepped = maybeBroadcast(frontier)
-        .join(right, col("__dst") === col("__m"))
-        .filter(col("__src") =!= col("__n"))
-        .select(Seq(col("__src"), col("__n").as("__dst"),
-          concat(col("__nids"), array(col("__n"))).as("__nids"),
-          concat(col("__eids"), array(col("__ne"))).as("__eids")) ++
-          (if (hasEpl)
-            Seq(concat(col("__epls"), array(col("__nepl"))).as("__epls"))
-          else Seq.empty): _*)
-      val fresh = stepped
-        .join(seenPairs, Seq("__src", "__dst"), "left_anti")
-        .localCheckpoint()
-      exhausted = guard(fresh, k)
-      if (!exhausted) {
-        seen = seen.unionByName(fresh.withColumn("__hops", lit(k)))
-        seenPairs = seenPairs.unionByName(
-          fresh.select(col("__src"), col("__dst")).distinct())
-          .localCheckpoint()
-        frontier = fresh
-      }
-      k += 1
-    }
-    seen.withColumn("__np", lit(1L))
-  }
-
-  /** GQL `SHORTEST k` (k > 1, r16): the k length-least TRAILS per
-    * pair — edge-unique walks, Cypher's relationship-uniqueness rule;
-    * the i-th best path may be LONGER than the shortest, so
-    * first-reach pruning cannot apply. Planned as a level-synchronous
-    * trail enumeration — extensions never reuse an edge identity,
-    * and that is the ONLY uniqueness rule: GQL/Cypher trail semantics
-    * permit node revisits, including trails that pass back through
-    * (or close at) the source, so the BFS family's src≠n shortcut
-    * does NOT apply here (r17, ADVICE — it silently dropped valid
-    * trails on graphs with cycles through the source) — with the
-    * [[MaxAllShortestWalks]] per-pair loud guard at every
-    * level, then one per-pair row_number window ordered by
-    * (hops, node walk, edge identities) keeping the k least —
-    * deterministic, never silently truncated. Parallel edges are
-    * distinct trails via their identities, exactly the
-    * allShortestPaths multiplicity semantics.
-    */
-  private def kShortestWalks(rel: DataFrame, lo: Int, hi: Int,
-      seed: Option[DataFrame], kBest: Int): DataFrame = {
-    require(lo == 1 && hi >= lo && hi <= 10,
-      s"SHORTEST $kBest var-length bounds *$lo..$hi out of supported range")
-    val hasEpl = rel.columns.contains("__epl")
-    require(rel.columns.contains("__eid"),
-      "internal: SHORTEST k trail enumeration needs edge identities")
-    // no distinct (the __eid rank already makes rows unique), a
-    // broadcast seeded frontier, and the seeded reachable-set scan
-    // restriction — the r18 enumeration scale shape, see
-    // allShortestWalks/seedRestrictEdges
-    val edges = seedRestrictEdges(rel, seed, hi)
-      .select(Seq(col("__src"), col("__dst"), col("__eid")) ++
-      (if (hasEpl) Seq(col("__epl")) else Seq.empty): _*)
-      .localCheckpoint()
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (seed.isDefined) broadcast(df) else df
-    val e0 = seed match {
-      case Some(s) =>
-        edges.join(s, edges("__src") === s("__seedid"), "left_semi")
-      case None => edges
-    }
-    // cap guard + exhaustion probe in ONE driver action per level
-    // (the max-trails aggregate is null exactly when empty — r19)
-    def guard(level: DataFrame, k: Int): Boolean = {
-      val top = level.groupBy(col("__src"), col("__dst"))
-        .agg(count(lit(1)).as("__m")).agg(max(col("__m"))).collect()(0)
-      if (!top.isNullAt(0) && top.getLong(0) > MaxAllShortestWalks)
-        throw new IllegalArgumentException(
-          s"SHORTEST $kBest: a pair at depth $k has ${top.getLong(0)} " +
-            s"trails, above the $MaxAllShortestWalks cap — bind " +
-            "tighter endpoints or lower the hop bound")
-      top.isNullAt(0)
-    }
-    // no src≠dst filter: a self-loop edge is a valid 1-hop trail and
-    // a cycle back to the source is a valid closed trail (edge
-    // uniqueness is the only trail rule)
-    var level = e0.select(Seq(col("__src"), col("__dst"),
-      lit(1).as("__hops"), array(col("__dst")).as("__nids"),
-      array(col("__eid")).as("__eids")) ++
-      (if (hasEpl) Seq(array(col("__epl")).as("__epls")) else Seq.empty): _*)
-      .localCheckpoint()
-    val emptySeed = guard(level, 1)
-    var all = level
-    var k = 2
-    var exhausted = hi < 2 || emptySeed
-    while (k <= hi && !exhausted) {
-      val right = edges.select(Seq(col("__src").as("__m"),
-        col("__dst").as("__n"), col("__eid").as("__ne")) ++
-        (if (hasEpl) Seq(col("__epl").as("__nepl")) else Seq.empty): _*)
-      val stepped = maybeBroadcast(level)
-        .join(right, col("__dst") === col("__m"))
-        .filter(!array_contains(col("__eids"), col("__ne")))
-        .select(Seq(col("__src"), col("__n").as("__dst"),
-          lit(k).as("__hops"),
-          concat(col("__nids"), array(col("__n"))).as("__nids"),
-          concat(col("__eids"), array(col("__ne"))).as("__eids")) ++
-          (if (hasEpl)
-            Seq(concat(col("__epls"), array(col("__nepl"))).as("__epls"))
-          else Seq.empty): _*)
-        .localCheckpoint()
-      exhausted = guard(stepped, k)
-      if (!exhausted) {
-        all = all.unionByName(stepped)
-        level = stepped
-      }
-      k += 1
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__src"), col("__dst"))
-      .orderBy(Seq(col("__hops"), col("__nids"), col("__eids")) ++
-        (if (hasEpl) Seq(col("__epls")) else Seq.empty): _*)
-    all.withColumn("__kb_rk", row_number().over(w))
-      .filter(col("__kb_rk") <= kBest)
-      .drop("__kb_rk")
-  }
-
-  /** WEIGHTED `SHORTEST k` (k > 1, r18) — the GDS/Yen-shaped
-    * "k cheapest trails per pair", spelled
-    * `SHORTEST k shortestPath((a)-[:T*1..h]->(b), 'prop')` (an engine
-    * extension: GQL/Cypher has no spelling — Neo4j reaches k-cheapest
-    * via `gds.shortestPath.yens`; before r18 the planner silently
-    * DROPPED k on this spelling and answered 1-best). Same capped
-    * level-synchronous TRAIL enumeration as [[kShortestWalks]] (edge
-    * uniqueness the only rule; the i-th cheapest trail can be both
-    * LONGER and CHEAPER than shorter ones, so neither first-reach nor
-    * cost-frontier pruning can apply), additionally accumulating the
-    * strictly-positive guarded weight. The final per-pair row_number
-    * window orders by (cost, hops, node walk, edge identities,
-    * payloads) and keeps the k least — deterministic, never silently
-    * truncated (per-level [[MaxAllShortestWalks]] loud guard).
-    * Parallel edges are distinct trails via their identities and keep
-    * their OWN weights — no min-collapse, the 2nd-cheapest trail may
-    * ride the heavier parallel edge.
-    */
-  private def weightedKShortestWalks(rel: DataFrame, weightProp: String,
-      lo: Int, hi: Int, seed: Option[DataFrame], kBest: Int): DataFrame = {
-    require(lo == 1 && hi >= lo && hi <= 10,
-      s"weighted SHORTEST $kBest var-length bounds *$lo..$hi out of " +
-        "supported range")
-    val hasEpl = rel.columns.contains("__epl")
-    require(rel.columns.contains("__eid"),
-      "internal: weighted SHORTEST k trail enumeration needs edge identities")
-    val guardedW =
-      positiveWeightOrDie(weightProp, s"weighted SHORTEST $kBest")
-    // no distinct (the __eid rank already makes rows unique), a
-    // broadcast seeded frontier, and the seeded reachable-set scan
-    // restriction — the r18 enumeration scale shape, see
-    // allShortestWalks/seedRestrictEdges
-    val edges = seedRestrictEdges(rel, seed, hi)
-      .select(Seq(col("__src"), col("__dst"), col("__eid"),
-      guardedW.as("__w")) ++
-      (if (hasEpl) Seq(col("__epl")) else Seq.empty): _*)
-      .localCheckpoint()
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (seed.isDefined) broadcast(df) else df
-    val e0 = seed match {
-      case Some(s) =>
-        edges.join(s, edges("__src") === s("__seedid"), "left_semi")
-      case None => edges
-    }
-    def guard(level: DataFrame, k: Int): Boolean = {
-      val top = level.groupBy(col("__src"), col("__dst"))
-        .agg(count(lit(1)).as("__m")).agg(max(col("__m"))).collect()(0)
-      if (!top.isNullAt(0) && top.getLong(0) > MaxAllShortestWalks)
-        throw new IllegalArgumentException(
-          s"weighted SHORTEST $kBest: a pair at depth $k has " +
-            s"${top.getLong(0)} trails, above the $MaxAllShortestWalks " +
-            "cap — bind tighter endpoints or lower the hop bound")
-      top.isNullAt(0)
-    }
-    var level = e0.select(Seq(col("__src"), col("__dst"),
-      lit(1).as("__hops"), col("__w").as("__wcost"),
-      array(col("__dst")).as("__nids"),
-      array(col("__eid")).as("__eids")) ++
-      (if (hasEpl) Seq(array(col("__epl")).as("__epls")) else Seq.empty): _*)
-      .localCheckpoint()
-    val emptySeed = guard(level, 1)
-    var all = level
-    var k = 2
-    var exhausted = hi < 2 || emptySeed
-    while (k <= hi && !exhausted) {
-      val right = edges.select(Seq(col("__src").as("__m"),
-        col("__dst").as("__n"), col("__eid").as("__ne"),
-        col("__w").as("__nw")) ++
-        (if (hasEpl) Seq(col("__epl").as("__nepl")) else Seq.empty): _*)
-      val stepped = maybeBroadcast(level)
-        .join(right, col("__dst") === col("__m"))
-        .filter(!array_contains(col("__eids"), col("__ne")))
-        .select(Seq(col("__src"), col("__n").as("__dst"),
-          lit(k).as("__hops"),
-          (col("__wcost") + col("__nw")).as("__wcost"),
-          concat(col("__nids"), array(col("__n"))).as("__nids"),
-          concat(col("__eids"), array(col("__ne"))).as("__eids")) ++
-          (if (hasEpl)
-            Seq(concat(col("__epls"), array(col("__nepl"))).as("__epls"))
-          else Seq.empty): _*)
-        .localCheckpoint()
-      exhausted = guard(stepped, k)
-      if (!exhausted) {
-        all = all.unionByName(stepped)
-        level = stepped
-      }
-      k += 1
-    }
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__src"), col("__dst"))
-      .orderBy(Seq(col("__wcost"), col("__hops"), col("__nids"),
-        col("__eids")) ++
-        (if (hasEpl) Seq(col("__epls")) else Seq.empty): _*)
-    all.withColumn("__kb_rk", row_number().over(w))
-      .filter(col("__kb_rk") <= kBest)
-      .drop("__kb_rk")
-  }
-
   /** Weight guard shared by every weighted search. Null / non-numeric
     * weights would propagate NULL `__wcost` through every relaxation
     * touching the edge — a silent poisoning — and the `<=`-standing-min
@@ -4456,970 +4346,6 @@ object CypherPlanner {
         when(l === "true", lit(true)).when(l === "false", lit(false))
           .otherwise(lit(null)))
       .otherwise(lit(null))
-  }
-
-  /** Weighted shortest-path expansion — hop-bounded Bellman–Ford
-    * relaxation over (src, dst, weight) pairs, the Cypher surface of
-    * the `graph_sssp_weighted` algorithm's skeleton. Parallel edges
-    * collapse to their MIN weight up front (a cheapest walk never
-    * takes the heavier parallel edge); each round extends only the
-    * pairs IMPROVED last round and merges by lexicographic
-    * min(cost, hops), so ties prefer fewer hops and the fixpoint is
-    * deterministic. With positive weights an optimal walk never
-    * repeats a node, so edge-identity bookkeeping is unnecessary —
-    * same argument as the unweighted BFS. The hop bound `hi` is the
-    * documented sketch semantic (paths longer than the bound don't
-    * contribute — the `maxDepth` family).
-    *
-    * Scale shape: per round one keyed join + pair-keyed agg + one
-    * merge anti-join, frontier localCheckpoint'ed; the frontier holds
-    * only pairs improved last round, so rounds shrink toward the
-    * fixpoint. Returns (__src, __dst, __hops, __wcost).
-    */
-  private def weightedShortestRel(rel: DataFrame, weightProp: String,
-      lo: Int, hi: Int, seed: Option[DataFrame] = None,
-      carryWalks: Boolean = false): DataFrame = {
-    require(lo == 1 && hi >= lo && hi <= 10,
-      s"weighted shortestPath var-length bounds *$lo..$hi out of supported range")
-    if (carryWalks)
-      return weightedShortestRelWalks(rel, weightProp, hi, seed)
-    // RAW weighted edges — deliberately NOT min-collapsed up front: a
-    // global (src, dst) groupBy shuffles the whole edge table before
-    // any pruning, while the per-round min(struct) aggregate below
-    // collapses parallel edges for free on the (frontier-bounded)
-    // stepped set. cost + min(w) ≡ min(cost + w): IEEE addition is
-    // monotone in one operand, so the lazy collapse is value-exact.
-    // Weight validation (null / non-numeric / w <= 0 → loud error) is
-    // the shared positiveWeightOrDie guard, evaluated inline on the
-    // same scan that reads the property.
-    val guardedW =
-      positiveWeightOrDie(weightProp, "weighted shortestPath")
-    val raw = rel
-      .select(col("__src"), col("__dst"), guardedW.as("__w"))
-      .filter(col("__src") =!= col("__dst"))
-    val e0 = (seed match {
-      case Some(s) =>
-        raw.join(s, raw("__src") === s("__seedid"), "left_semi")
-      case None => raw
-    }).groupBy(col("__src"), col("__dst")).agg(min(col("__w")).as("__w"))
-    var best = e0.select(col("__src"), col("__dst"),
-      col("__w").as("__wcost"), lit(1).as("__hops")).localCheckpoint()
-    var frontier = best
-    var k = 2
-    var exhausted = hi < 2 || frontier.isEmpty
-    // a SEEDED frontier stays bounded by the seeds' reachable pair
-    // set — broadcast it so each round is a map-side join over the
-    // edge scan instead of shuffling the full edge table; unseeded
-    // (all-pairs) frontiers can be edge-scale, so they stay keyed
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (seed.isDefined) broadcast(df) else df
-    while (k <= hi && !exhausted) {
-      val stepped = raw
-        .select(col("__src").as("__m"), col("__dst").as("__n"), col("__w"))
-        .join(maybeBroadcast(frontier), col("__dst") === col("__m"))
-        .filter(col("__src") =!= col("__n"))
-        .select(col("__src"), col("__n").as("__dst"),
-          (col("__wcost") + col("__w")).as("__wcost"), lit(k).as("__hops"))
-        // several walks (and parallel edges) can reach a pair this
-        // round — keep the cheapest
-        .groupBy(col("__src"), col("__dst"))
-        .agg(min(struct(col("__wcost"), col("__hops"))).as("__b"))
-        .select(col("__src"), col("__dst"),
-          col("__b").getField("__wcost").as("__wcost"),
-          col("__b").getField("__hops").as("__hops"))
-      // strictly cheaper than the standing best (or unseen): an equal
-      // cost at more hops does NOT replace, so ties keep fewer hops
-      val improved = stepped
-        .join(best.select(col("__src"), col("__dst"),
-          col("__wcost").as("__old")), Seq("__src", "__dst"), "left_outer")
-        .filter(col("__old").isNull || col("__wcost") < col("__old"))
-        .select(col("__src"), col("__dst"), col("__wcost"), col("__hops"))
-        .localCheckpoint()
-      exhausted = improved.isEmpty
-      if (!exhausted) {
-        best = best
-          .join(improved.select(col("__src"), col("__dst")),
-            Seq("__src", "__dst"), "left_anti")
-          .unionByName(improved)
-          .localCheckpoint()
-        frontier = improved
-      }
-      k += 1
-    }
-    best
-  }
-
-  /** Walk-carrying variant of [[weightedShortestRel]] (r15): the same
-    * hop-bounded Bellman–Ford relaxation, additionally materializing
-    * ONE deterministic cheapest walk per pair. Parallel edges are
-    * deliberately NOT collapsed up front (a global (src, dst) groupBy
-    * would shuffle the full edge table before any pruning — see the
-    * inline note at `raw`); instead each round's pair-keyed aggregate
-    * keeps the min over WHOLE-ROW candidate structs ordered (cost,
-    * node walk, edge identity, payload), so the chosen cost, walk,
-    * identity and payload always come from the SAME edge — candidates
-    * in one round share the hop count, equal-weight parallels tie on
-    * cost+walk and break deterministically on edge identity. Only
-    * STRICTLY cheaper candidates replace the standing best (ties keep
-    * fewer hops, the unweighted discipline). With positive weights a
-    * recorded walk never contains a cycle: the cycle-free shortcut
-    * has fewer edges, so an at-most-equal cost was already standing
-    * when the cyclic candidate arrived, and equal never replaces.
-    *
-    * Returns (__src, __dst, __hops, __wcost, __nids[, __eids]
-    * [, __epls]) in the var-expand walk contract.
-    */
-  private def weightedShortestRelWalks(rel: DataFrame, weightProp: String,
-      hi: Int, seed: Option[DataFrame]): DataFrame = {
-    val hasEid = rel.columns.contains("__eid")
-    val hasEpl = rel.columns.contains("__epl")
-    val guardedW =
-      positiveWeightOrDie(weightProp, "weighted shortestPath")
-    // seeded reachable-set scan restriction (r18, seedRestrictEdges):
-    // shrinks the scan and any __eid identity window to touched
-    // edges; materialized once at session parallelism
-    // ([[loopEdgeFrame]], r18 optimization round) — every relaxation
-    // round re-reads this frame, and the lazy version re-scanned the
-    // relationship table per round at the scan's task width
-    val raw = loopEdgeFrame(seedRestrictEdges(rel, seed, hi)
-      .select(Seq(col("__src"), col("__dst"),
-      guardedW.as("__w")) ++
-      (if (hasEid) Seq(col("__eid")) else Seq.empty) ++
-      (if (hasEpl) Seq(col("__epl")) else Seq.empty): _*)
-      .filter(col("__src") =!= col("__dst")))
-    val seeded = seed match {
-      case Some(s) => raw.join(s, raw("__src") === s("__seedid"), "left_semi")
-      case None    => raw
-    }
-    // NO up-front parallel-edge collapse (a global (src, dst) groupBy
-    // would shuffle the full edge table before any pruning, the same
-    // argument as the walk-free variant's lazy collapse): each round's
-    // min(struct) below picks one whole candidate row, so the chosen
-    // cost, walk, payload and identity always describe the SAME edge.
-    // Candidate struct order is (cost, node walk, identity, payload) —
-    // equal-weight parallels tie on cost+walk and break
-    // deterministically on the rank-windowed identity.
-    def walkSelect(e: DataFrame): Seq[Column] =
-      Seq(col("__src"), col("__dst"), col("__w").as("__wcost"),
-        lit(1).as("__hops"), array(col("__dst")).as("__nids")) ++
-        (if (hasEid) Seq(array(col("__eid")).as("__eids")) else Seq.empty) ++
-        (if (hasEpl) Seq(array(col("__epl")).as("__epls")) else Seq.empty)
-    val initStruct = struct(Seq(col("__wcost"), col("__nids")) ++
-      (if (hasEid) Seq(col("__eids")) else Seq.empty) ++
-      (if (hasEpl) Seq(col("__epls")) else Seq.empty): _*)
-    def unpack(prefix: DataFrame): DataFrame =
-      prefix.select(Seq(col("__src"), col("__dst"),
-        col("__wk").getField("__wcost").as("__wcost"), col("__hops"),
-        col("__wk").getField("__nids").as("__nids")) ++
-        (if (hasEid) Seq(col("__wk").getField("__eids").as("__eids"))
-         else Seq.empty) ++
-        (if (hasEpl) Seq(col("__wk").getField("__epls").as("__epls"))
-         else Seq.empty): _*)
-    var best = unpack(seeded.select(walkSelect(seeded): _*)
-      .select(col("__src"), col("__dst"), lit(1).as("__hops"),
-        initStruct.as("__wk"))
-      .groupBy(col("__src"), col("__dst"), col("__hops"))
-      .agg(min(col("__wk")).as("__wk")))
-      .localCheckpoint()
-    var frontier = best
-    var k = 2
-    var exhausted = hi < 2 || frontier.isEmpty
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (seed.isDefined) broadcast(df) else df
-    while (k <= hi && !exhausted) {
-      val right = raw.select(Seq(col("__src").as("__m"),
-        col("__dst").as("__n"), col("__w")) ++
-        (if (hasEid) Seq(col("__eid").as("__ne")) else Seq.empty) ++
-        (if (hasEpl) Seq(col("__epl").as("__nepl")) else Seq.empty): _*)
-      // DEFERRED walk concat (r19, guide §2.3): the min-aggregate used
-      // to compare structs of freshly CONCATENATED arrays, paying two
-      // to three array allocations per candidate row — losers
-      // included. Every candidate in round k extends a length-(k-1)
-      // prefix, so comparing (prefix, tail-element) field-by-field is
-      // EXACTLY the old concatenated order (equal-length arrays
-      // compare element-wise), and the concat now runs once per
-      // per-pair WINNER after the aggregate.
-      val deferStruct = struct(
-        Seq((col("__wcost") + col("__w")).as("__wcost"),
-          col("__nids").as("__pn"), col("__n").as("__tn")) ++
-        (if (hasEid) Seq(col("__eids").as("__pe"), col("__ne").as("__te"))
-         else Seq.empty) ++
-        (if (hasEpl) Seq(col("__epls").as("__pp"), col("__nepl").as("__tp"))
-         else Seq.empty): _*)
-      val stepped = right
-        .join(maybeBroadcast(frontier), col("__dst") === col("__m"))
-        .filter(col("__src") =!= col("__n"))
-        .select(col("__src"), col("__n").as("__d2"), deferStruct.as("__wk"))
-        .groupBy(col("__src"), col("__d2"))
-        .agg(min(col("__wk")).as("__wk"))
-        .select(Seq(col("__src"), col("__d2").as("__dst"),
-          col("__wk.__wcost").as("__wcost"), lit(k).as("__hops"),
-          concat(col("__wk.__pn"), array(col("__wk.__tn"))).as("__nids")) ++
-          (if (hasEid)
-            Seq(concat(col("__wk.__pe"), array(col("__wk.__te")))
-              .as("__eids"))
-          else Seq.empty) ++
-          (if (hasEpl)
-            Seq(concat(col("__wk.__pp"), array(col("__wk.__tp")))
-              .as("__epls"))
-          else Seq.empty): _*)
-      val improved = stepped
-        .join(best.select(col("__src"), col("__dst"),
-          col("__wcost").as("__old")), Seq("__src", "__dst"), "left_outer")
-        .filter(col("__old").isNull || col("__wcost") < col("__old"))
-        .drop("__old")
-        .localCheckpoint()
-      exhausted = improved.isEmpty
-      if (!exhausted) {
-        best = best
-          .join(improved.select(col("__src"), col("__dst")),
-            Seq("__src", "__dst"), "left_anti")
-          .unionByName(improved)
-          .localCheckpoint()
-        frontier = improved
-      }
-      k += 1
-    }
-    best
-  }
-
-  /** WEIGHTED allShortestPaths (r17 — formerly unreachable: the
-    * weight argument only parsed on shortestPath): enumerate ALL
-    * cost-minimal walks per pair under the hop bound — the last
-    * walk-introspection cell, which Neo4j itself reaches only via
-    * apoc/GDS. Correctness rests on prefix optimality under positive
-    * weights (every prefix of a cost-minimal walk is cost-minimal to
-    * its endpoint — the cycle-cutting argument the walk-carrying
-    * Bellman–Ford already documents), so extending only each round's
-    * walks that are at-or-below the standing per-pair minimum
-    * generates every minimal walk of the next length; walks a later
-    * round undercuts are dropped by the FINAL per-pair min filter.
-    * Cost ties compare as exact doubles — exact whenever the weight
-    * property is integral-valued (the declared key uses `qty`).
-    * Per-round per-pair walk counts are loud-guarded by
-    * [[MaxAllShortestWalks]]; parallel edges are distinct paths via
-    * their identities; rows carry `__np = 1` so `count(p) =
-    * sum(__np)` counts enumerated paths, exactly the
-    * [[allShortestWalks]] contract plus `__wcost`.
-    */
-  private def weightedAllShortestWalks(rel: DataFrame, weightProp: String,
-      lo: Int, hi: Int, seed: Option[DataFrame]): DataFrame = {
-    require(lo == 1,
-      s"weighted allShortestPaths requires lower bound exactly 1 (got $lo)")
-    val hasEid = rel.columns.contains("__eid")
-    val hasEpl = rel.columns.contains("__epl")
-    val guardedW =
-      positiveWeightOrDie(weightProp, "weighted allShortestPaths")
-    // seeded reachable-set scan restriction (r18, seedRestrictEdges):
-    // shrinks the scan and any __eid identity window to touched
-    // edges; materialized once at session parallelism
-    // ([[loopEdgeFrame]], r18 optimization round) — same rescan /
-    // width argument as [[weightedShortestRelWalks]]
-    val raw = loopEdgeFrame(seedRestrictEdges(rel, seed, hi)
-      .select(Seq(col("__src"), col("__dst"),
-      guardedW.as("__w")) ++
-      (if (hasEid) Seq(col("__eid")) else Seq.empty) ++
-      (if (hasEpl) Seq(col("__epl")) else Seq.empty): _*)
-      .filter(col("__src") =!= col("__dst")))
-    val seeded = seed match {
-      case Some(s) => raw.join(s, raw("__src") === s("__seedid"), "left_semi")
-      case None    => raw
-    }
-    def guard(fresh: DataFrame, k: Int): Boolean = {
-      val top = fresh.groupBy(col("__src"), col("__dst"))
-        .agg(count(lit(1)).as("__m")).agg(max(col("__m"))).collect()(0)
-      if (!top.isNullAt(0) && top.getLong(0) > MaxAllShortestWalks)
-        throw new IllegalArgumentException(
-          s"weighted allShortestPaths: a pair at depth $k has " +
-            s"${top.getLong(0)} candidate minimal walks, above the " +
-            s"$MaxAllShortestWalks cap — bind tighter endpoints or " +
-            "lower the hop bound")
-      top.isNullAt(0)
-    }
-    def keepMin(df: DataFrame): DataFrame = {
-      val mc = df.groupBy(col("__src"), col("__dst"))
-        .agg(min(col("__wcost")).as("__mc"))
-      df.join(mc, Seq("__src", "__dst"))
-        .filter(col("__wcost") === col("__mc")).drop("__mc")
-    }
-    var all = seeded.select(Seq(col("__src"), col("__dst"),
-      col("__w").as("__wcost"), lit(1).as("__hops"),
-      array(col("__dst")).as("__nids")) ++
-      (if (hasEid) Seq(array(col("__eid")).as("__eids")) else Seq.empty) ++
-      (if (hasEpl) Seq(array(col("__epl")).as("__epls")) else Seq.empty): _*)
-      .distinct().localCheckpoint()
-    var frontier = keepMin(all).localCheckpoint()
-    val emptySeed = guard(frontier, 1)
-    var k = 2
-    var exhausted = hi < 2 || emptySeed
-    while (k <= hi && !exhausted) {
-      val right = raw.select(Seq(col("__src").as("__m"),
-        col("__dst").as("__n"), col("__w")) ++
-        (if (hasEid) Seq(col("__eid").as("__ne")) else Seq.empty) ++
-        (if (hasEpl) Seq(col("__epl").as("__nepl")) else Seq.empty): _*)
-      var stepped = frontier.join(right, col("__dst") === col("__m"))
-        .filter(col("__src") =!= col("__n"))
-      if (hasEid)
-        stepped = stepped.filter(!array_contains(col("__eids"), col("__ne")))
-      val extended = stepped.select(Seq(col("__src"),
-        col("__n").as("__dst"),
-        (col("__wcost") + col("__w")).as("__wcost"), lit(k).as("__hops"),
-        concat(col("__nids"), array(col("__n"))).as("__nids")) ++
-        (if (hasEid)
-          Seq(concat(col("__eids"), array(col("__ne"))).as("__eids"))
-        else Seq.empty) ++
-        (if (hasEpl)
-          Seq(concat(col("__epls"), array(col("__nepl"))).as("__epls"))
-        else Seq.empty): _*)
-        .distinct()
-      // extensions that can still be minimal: at-or-below the standing
-      // per-pair minimum (ties must keep flowing — they are the σ)
-      val mc = all.groupBy(col("__src"), col("__dst"))
-        .agg(min(col("__wcost")).as("__mc"))
-      val fresh = extended.join(mc, Seq("__src", "__dst"), "left_outer")
-        .filter(col("__mc").isNull || col("__wcost") <= col("__mc"))
-        .drop("__mc")
-        .localCheckpoint()
-      exhausted = guard(fresh, k)
-      if (!exhausted) {
-        all = all.unionByName(fresh).localCheckpoint()
-        frontier = fresh
-      }
-      k += 1
-    }
-    keepMin(all).withColumn("__np", lit(1L))
-  }
-
-  private def shortestRel(rel: DataFrame, lo: Int, hi: Int,
-      seed: Option[DataFrame] = None, carryWalks: Boolean = false): DataFrame = {
-    require(lo == 1 && hi >= lo && hi <= 10,
-      s"shortestPath var-length bounds *$lo..$hi out of supported range")
-    if (carryWalks)
-      return shortestRelWalks(rel, hi, seed)
-    val edges = seedRestrictEdges(rel, seed, hi)
-      .select(col("__src"), col("__dst")).distinct().localCheckpoint()
-    val e0 = seed match {
-      case Some(s) =>
-        edges.join(s, edges("__src") === s("__seedid"), "left_semi")
-      case None => edges
-    }
-    var seen = e0.withColumn("__hops", lit(1))
-    var frontier = e0
-    var k = 2
-    var exhausted = hi < 2 || frontier.isEmpty
-    while (k <= hi && !exhausted) {
-      // src = dst is excluded: Neo4j's shortestPath never binds both
-      // ends to one node, and without edge identities an undirected
-      // mirror-edge bounce (a-x-a) would fabricate a 2-hop self-pair.
-      // NOTE the selector-dependent contract (documented, r18): the
-      // whole BFS family — SHORTEST 1 / shortestPath /
-      // allShortestPaths — keeps this src≠n exclusion (matching
-      // Neo4j, which never binds a shortestPath's two ends to one
-      // node), while SHORTEST k (k > 1) follows GQL TRAIL semantics
-      // where edge uniqueness is the ONLY rule, so closed trails and
-      // source revisits ARE returned there ([[kShortestWalks]]). A
-      // same-endpoint pattern thus yields rows under SHORTEST 2 but
-      // none under SHORTEST 1 — intentional, per-selector semantics,
-      // harmless for a≠b hop-minimal searches where the pruning is
-      // complete. See README "path selector semantics".
-      val stepped = frontier
-        .join(edges.select(col("__src").as("__m"), col("__dst").as("__n")),
-          col("__dst") === col("__m"))
-        .select(col("__src"), col("__n").as("__dst"))
-        .filter(col("__src") =!= col("__dst"))
-        .distinct()
-      val fresh = stepped
-        .join(seen.select(col("__src"), col("__dst")), Seq("__src", "__dst"),
-          "left_anti")
-        .localCheckpoint()
-      exhausted = fresh.isEmpty
-      if (!exhausted) {
-        seen = seen.unionByName(fresh.withColumn("__hops", lit(k)))
-        frontier = fresh
-      }
-      k += 1
-    }
-    seen
-  }
-
-  /** Walk-carrying variant of [[shortestRel]] (r15): the same
-    * level-synchronous first-reach BFS, additionally materializing ONE
-    * deterministic shortest walk per (src, dst) pair — per level, the
-    * candidates extending recorded prefixes collapse to the
-    * lexicographically-least node-id sequence via a pair-keyed
-    * `min(struct(...))` aggregate (which REPLACES the plain BFS's
-    * distinct — same exchange count). Induction over first-reach
-    * prefixes makes every recorded walk a simple path, so no
-    * edge-identity bookkeeping is needed for uniqueness. Parallel
-    * edges collapse up front to ONE content-least payload/identity
-    * struct per (src, dst) — payload-led when both ride, so
-    * `relationships(p)` and a named list always describe the SAME
-    * edge. The frontier stays bounded by the reachable PAIR set (one
-    * row per pair, arrays ≤ hi elements) — never walk enumeration.
-    *
-    * Feeds `nodes(p)`, `relationships(p)`, named relationship lists
-    * and group variables inside `shortestPath` — shapes that were
-    * loud rejects while the BFS kept pair×depth only. Returns
-    * (__src, __dst, __hops, __nids[, __eids][, __epls]) in the
-    * var-expand walk contract (`__nids` = node ids after the source).
-    */
-  private def shortestRelWalks(rel: DataFrame, hi: Int,
-      seed: Option[DataFrame]): DataFrame = {
-    val hasEid = rel.columns.contains("__eid")
-    val hasEpl = rel.columns.contains("__epl")
-    // seeded reachable-set scan restriction (r18, seedRestrictEdges):
-    // the parallel-edge collapse and every level's join shuffle only
-    // the touched edges
-    val relR = seedRestrictEdges(rel, seed, hi)
-    val edges0 =
-      if (!hasEid && !hasEpl)
-        relR.select(col("__src"), col("__dst")).distinct()
-      else if (hasEid && hasEpl)
-        // one combined min keeps identity and payload from the SAME
-        // parallel edge (payload-led: content-deterministic ordering)
-        relR.groupBy(col("__src"), col("__dst"))
-          .agg(min(struct(col("__epl").as("__epl"),
-            col("__eid").as("__eid"))).as("__pk"))
-          .select(col("__src"), col("__dst"),
-            col("__pk").getField("__epl").as("__epl"),
-            col("__pk").getField("__eid").as("__eid"))
-      else {
-        val c = if (hasEid) "__eid" else "__epl"
-        relR.groupBy(col("__src"), col("__dst")).agg(min(col(c)).as(c))
-      }
-    val edges = edges0.localCheckpoint()
-    val e0 = seed match {
-      case Some(s) =>
-        edges.join(s, edges("__src") === s("__seedid"), "left_semi")
-      case None => edges
-    }
-    var seen = e0.select(Seq(col("__src"), col("__dst"),
-      lit(1).as("__hops"), array(col("__dst")).as("__nids")) ++
-      (if (hasEid) Seq(array(col("__eid")).as("__eids")) else Seq.empty) ++
-      (if (hasEpl) Seq(array(col("__epl")).as("__epls")) else Seq.empty): _*)
-      .localCheckpoint()
-    var frontier = seen
-    var k = 2
-    var exhausted = hi < 2 || frontier.isEmpty
-    while (k <= hi && !exhausted) {
-      val right = edges.select(Seq(col("__src").as("__m"),
-        col("__dst").as("__n")) ++
-        (if (hasEid) Seq(col("__eid").as("__ne")) else Seq.empty) ++
-        (if (hasEpl) Seq(col("__epl").as("__nepl")) else Seq.empty): _*)
-      // the walk struct's FIRST field is the node sequence, so the
-      // min-aggregate is ordered by it; the payload fields ride along
-      // (a walk's node sequence determines its payload after the
-      // parallel-edge collapse, so ties cannot diverge)
-      val walkStruct = struct(
-        Seq(concat(col("__nids"), array(col("__n"))).as("__nids")) ++
-        (if (hasEid)
-          Seq(concat(col("__eids"), array(col("__ne"))).as("__eids"))
-        else Seq.empty) ++
-        (if (hasEpl)
-          Seq(concat(col("__epls"), array(col("__nepl"))).as("__epls"))
-        else Seq.empty): _*)
-      val stepped = frontier
-        .join(right, col("__dst") === col("__m"))
-        .filter(col("__src") =!= col("__n"))
-        .select(col("__src"), col("__n").as("__d2"), walkStruct.as("__wk"))
-        .groupBy(col("__src"), col("__d2"))
-        .agg(min(col("__wk")).as("__wk"))
-      val walkCols =
-        Seq(col("__wk").getField("__nids").as("__nids")) ++
-        (if (hasEid) Seq(col("__wk").getField("__eids").as("__eids"))
-         else Seq.empty) ++
-        (if (hasEpl) Seq(col("__wk").getField("__epls").as("__epls"))
-         else Seq.empty)
-      val fresh = stepped
-        .select(Seq(col("__src"), col("__d2").as("__dst")) ++ walkCols: _*)
-        .join(seen.select(col("__src"), col("__dst")), Seq("__src", "__dst"),
-          "left_anti")
-        .localCheckpoint()
-      exhausted = fresh.isEmpty
-      if (!exhausted) {
-        seen = seen.unionByName(fresh.withColumn("__hops", lit(k)))
-        frontier = fresh
-      }
-      k += 1
-    }
-    seen
-  }
-
-  /** Multi-hop-quantified-group shortestPath (r16): the composite
-    * repetition frame IS a synthetic edge list — one row per full
-    * repetition of the h-hop inner chain, already carrying the
-    * repetition's node-id / edge-identity (/ per-named-hop payload)
-    * ARRAYS — so the walk-carrying first-reach BFS consumes it with
-    * two changes: walk columns CONCAT per step instead of
-    * array-wrapping a scalar, and extensions whose edge-identity
-    * arrays overlap the standing walk are skipped (repetitions may
-    * share inner edges, which Cypher's relationship-uniqueness rule
-    * forbids along one path; single-edge BFS needs no such check
-    * because node-simple ⇒ edge-simple there). Parallel repetitions
-    * (same juncture pair, different inner content) are deliberately
-    * NOT collapsed up front — the [[weightedShortestRelWalks]]
-    * discipline: each round's pair-keyed `min(struct(nids, eids,
-    * payloads…))` picks one whole candidate row AFTER the overlap
-    * filter, so a conflicting parallel repetition never blocks a
-    * non-conflicting sibling, and the recorded walk's content stays
-    * deterministic (node-sequence-led ordering).
-    * `__hops` reports RELATIONSHIPS traversed (k repetitions = k·h
-    * edges, `length(p)` semantics). Returns the var-expand walk
-    * contract (__src, __dst, __hops, __nids[, __eids][, __epls_j…]).
-    *
-    * Known bounded divergence (documented, not silent): keeping ONE
-    * walk per pair means a pair whose every minimal extension
-    * conflicts with the one RECORDED prefix may surface at a later
-    * level or not at all — the price of never enumerating walks,
-    * shared with every min-struct BFS here.
-    */
-  private def compositeShortestWalks(reps: DataFrame, h: Int, hi: Int,
-      seed: Option[DataFrame],
-      composeFrom: Option[DataFrame => DataFrame] = None): DataFrame = {
-    val carry = reps.columns.filter(c => c == "__nids" || c == "__eids" ||
-      c.startsWith("__epls")).toSeq.sorted
-    require(carry.contains("__nids") && carry.contains("__eids"),
-      s"composite repetition frame must carry __nids/__eids, has: $carry")
-    // seeded searches compose repetitions PER ROUND from the frontier
-    // (composeFrom) — the full composite frame never materializes
-    val lazyMode = composeFrom.isDefined && seed.isDefined
-    val fullEdges: Option[DataFrame] =
-      if (lazyMode) None
-      else Some(reps.filter(col("__src") =!= col("__dst")).localCheckpoint())
-    def edgesFrom(starts: DataFrame): DataFrame =
-      composeFrom.get(starts).filter(col("__src") =!= col("__dst"))
-    val e0 =
-      if (lazyMode)
-        edgesFrom(seed.get.select(col("__seedid").as("__cstart")).distinct())
-      else seed match {
-        case Some(s) => fullEdges.get.join(s,
-          fullEdges.get("__src") === s("__seedid"), "left_semi")
-        case None => fullEdges.get
-      }
-    val ordCols = Seq("__nids", "__eids") ++
-      carry.filterNot(Set("__nids", "__eids"))
-    var seen = e0
-      .select(col("__src"), col("__dst"),
-        struct(ordCols.map(col): _*).as("__wk"))
-      .groupBy(col("__src"), col("__dst"))
-      .agg(min(col("__wk")).as("__wk"))
-      .select(Seq(col("__src"), col("__dst"), lit(h).as("__hops")) ++
-        ordCols.map(c => col("__wk").getField(c).as(c)): _*)
-      .localCheckpoint()
-    var frontier = seen
-    var k = 2
-    var exhausted = hi < 2 || frontier.isEmpty
-    while (k <= hi && !exhausted) {
-      val stepEdges =
-        if (lazyMode)
-          edgesFrom(frontier.select(col("__dst").as("__cstart")).distinct())
-        else fullEdges.get
-      val right = stepEdges.select(Seq(col("__src").as("__m"),
-        col("__dst").as("__n")) ++
-        carry.map(c => col(c).as(s"__r$c")): _*)
-      // node-sequence-led struct — the same ordering as level 1, so
-      // the recorded walk is the lexicographically-least node walk
-      // among the non-conflicting extensions, ties broken by edge
-      // identity then payloads. Deferred concat (r19, see
-      // weightedShortestRelWalks): uniform prefix/tail lengths make
-      // (prefix, tail) pairs compare exactly like the concatenated
-      // arrays, so the concat runs once per per-pair winner
-      val deferStruct = struct(
-        ordCols.flatMap(c => Seq(col(c).as(s"__p$c"),
-          col(s"__r$c").as(s"__t$c"))): _*)
-      val stepped = frontier
-        .join(right, col("__dst") === col("__m"))
-        .filter(col("__src") =!= col("__n"))
-        // relationship uniqueness across repetitions
-        .filter(!arrays_overlap(col("__eids"), col("__r__eids")))
-        .select(col("__src"), col("__n").as("__d2"), deferStruct.as("__wk"))
-        .groupBy(col("__src"), col("__d2"))
-        .agg(min(col("__wk")).as("__wk"))
-      val fresh = stepped
-        .select(Seq(col("__src"), col("__d2").as("__dst")) ++
-          ordCols.map(c =>
-            concat(col(s"__wk.__p$c"), col(s"__wk.__t$c")).as(c)): _*)
-        .join(seen.select(col("__src"), col("__dst")), Seq("__src", "__dst"),
-          "left_anti")
-        .localCheckpoint()
-      exhausted = fresh.isEmpty
-      if (!exhausted) {
-        seen = seen.unionByName(fresh.withColumn("__hops", lit(k * h)))
-        frontier = fresh
-      }
-      k += 1
-    }
-    seen
-  }
-
-  /** allShortestPaths over a multi-hop quantified group (r16 — the
-    * matrix's last composition cell): [[allShortestWalks]]' capped
-    * first-reach enumeration with [[compositeShortestWalks]]' two
-    * composite changes (walk CONCAT per step, `arrays_overlap`
-    * relationship uniqueness across repetitions). Every distinct
-    * repetition chain reaching a pair at its first-reach level is one
-    * path row (`__np` = 1, so `count(p) = sum(__np)` counts them);
-    * the per-level [[MaxAllShortestWalks]] guard fails loudly above
-    * the cap. σ here is EXACT under relationship uniqueness — the
-    * recurrence-based σ count cannot express the overlap rule, which
-    * is why groups never took the pair-aggregate plan.
-    */
-  private def compositeAllShortestWalks(reps: DataFrame, h: Int, hi: Int,
-      seed: Option[DataFrame],
-      composeFrom: Option[DataFrame => DataFrame] = None): DataFrame = {
-    val carry = reps.columns.filter(c => c == "__nids" || c == "__eids" ||
-      c.startsWith("__epls")).toSeq.sorted
-    require(carry.contains("__nids") && carry.contains("__eids"),
-      s"composite repetition frame must carry __nids/__eids, has: $carry")
-    val lazyMode = composeFrom.isDefined && seed.isDefined
-    val fullEdges: Option[DataFrame] =
-      if (lazyMode) None
-      else Some(reps.filter(col("__src") =!= col("__dst")).localCheckpoint())
-    def edgesFrom(starts: DataFrame): DataFrame =
-      composeFrom.get(starts).filter(col("__src") =!= col("__dst"))
-    val e0 =
-      if (lazyMode)
-        edgesFrom(seed.get.select(col("__seedid").as("__cstart")).distinct())
-      else seed match {
-        case Some(s) => fullEdges.get.join(s,
-          fullEdges.get("__src") === s("__seedid"), "left_semi")
-        case None => fullEdges.get
-      }
-    def guard(fresh: DataFrame, k: Int): Boolean = {
-      val top = fresh.groupBy(col("__src"), col("__dst"))
-        .agg(count(lit(1)).as("__sigma"))
-        .agg(max(col("__sigma"))).collect()(0)
-      if (!top.isNullAt(0) && top.getLong(0) > MaxAllShortestWalks)
-        throw new IllegalArgumentException(
-          s"allShortestPaths over a quantified group: a pair at " +
-            s"repetition depth $k has ${top.getLong(0)} shortest " +
-            s"paths, above the $MaxAllShortestWalks cap — bind " +
-            "tighter endpoints")
-      top.isNullAt(0)
-    }
-    var seen = e0.select(Seq(col("__src"), col("__dst"),
-      lit(h).as("__hops")) ++ carry.map(col): _*)
-      .distinct().localCheckpoint()
-    val emptySeed = guard(seen, 1)
-    var seenPairs = seen.select(col("__src"), col("__dst")).distinct()
-      .localCheckpoint()
-    var frontier = seen
-    var k = 2
-    var exhausted = hi < 2 || emptySeed
-    while (k <= hi && !exhausted) {
-      val stepEdges =
-        if (lazyMode)
-          edgesFrom(frontier.select(col("__dst").as("__cstart")).distinct())
-        else fullEdges.get
-      val right = stepEdges.select(Seq(col("__src").as("__m"),
-        col("__dst").as("__n")) ++
-        carry.map(c => col(c).as(s"__r$c")): _*)
-      val stepped = frontier.join(right, col("__dst") === col("__m"))
-        .filter(col("__src") =!= col("__n"))
-        .filter(!arrays_overlap(col("__eids"), col("__r__eids")))
-        .select(Seq(col("__src"), col("__n").as("__dst")) ++
-          carry.map(c => concat(col(c), col(s"__r$c")).as(c)): _*)
-      val fresh = stepped
-        .join(seenPairs, Seq("__src", "__dst"), "left_anti")
-        .localCheckpoint()
-      exhausted = guard(fresh, k)
-      if (!exhausted) {
-        seen = seen.unionByName(fresh.withColumn("__hops", lit(k * h)))
-        seenPairs = seenPairs.unionByName(
-          fresh.select(col("__src"), col("__dst")).distinct())
-          .localCheckpoint()
-        frontier = fresh
-      }
-      k += 1
-    }
-    seen.withColumn("__np", lit(1L))
-  }
-
-  /** GQL `SHORTEST k` (k > 1) over a multi-hop quantified group (r17
-    * — formerly a loud reject): [[kShortestWalks]]' capped trail
-    * enumeration with [[compositeShortestWalks]]' two composite
-    * changes — walk columns CONCAT per repetition step, and
-    * extensions whose edge-identity arrays overlap the standing
-    * walk's are skipped (`arrays_overlap`, relationship uniqueness
-    * across repetitions; within-repetition uniqueness is enforced
-    * during composition). ALL repetition levels are kept (the i-th
-    * best trail may take more repetitions than the first, so
-    * first-reach pruning cannot apply), each level loud-guarded by
-    * the per-pair [[MaxAllShortestWalks]] cap, then one per-pair
-    * row_number window ordered by (hops, node walk, edge identities,
-    * payloads) keeps the k least — deterministic, never silently
-    * truncated. Trail semantics: edge uniqueness is the ONLY rule
-    * (source revisits and closed trails are valid, the r17 contract
-    * shared with [[kShortestWalks]]). A seeded search composes
-    * repetitions lazily per level from its frontier (`composeFrom`),
-    * so the corpus-wide composite frame never materializes.
-    */
-  private def compositeKShortestWalks(reps: DataFrame, h: Int, hi: Int,
-      seed: Option[DataFrame], kBest: Int,
-      composeFrom: Option[DataFrame => DataFrame] = None): DataFrame = {
-    val carry = reps.columns.filter(c => c == "__nids" || c == "__eids" ||
-      c.startsWith("__epls")).toSeq.sorted
-    require(carry.contains("__nids") && carry.contains("__eids"),
-      s"composite repetition frame must carry __nids/__eids, has: $carry")
-    val lazyMode = composeFrom.isDefined && seed.isDefined
-    val fullEdges: Option[DataFrame] =
-      if (lazyMode) None else Some(reps.localCheckpoint())
-    def edgesFrom(starts: DataFrame): DataFrame = composeFrom.get(starts)
-    val e0 =
-      if (lazyMode)
-        edgesFrom(seed.get.select(col("__seedid").as("__cstart")).distinct())
-      else seed match {
-        case Some(s) => fullEdges.get.join(s,
-          fullEdges.get("__src") === s("__seedid"), "left_semi")
-        case None => fullEdges.get
-      }
-    def guard(level: DataFrame, k: Int): Boolean = {
-      val top = level.groupBy(col("__src"), col("__dst"))
-        .agg(count(lit(1)).as("__m")).agg(max(col("__m"))).collect()(0)
-      if (!top.isNullAt(0) && top.getLong(0) > MaxAllShortestWalks)
-        throw new IllegalArgumentException(
-          s"SHORTEST $kBest over a quantified group: a pair at " +
-            s"repetition depth $k has ${top.getLong(0)} trails, above " +
-            s"the $MaxAllShortestWalks cap — bind tighter endpoints " +
-            "or lower the repetition bound")
-      top.isNullAt(0)
-    }
-    var level = e0.select(Seq(col("__src"), col("__dst"),
-      lit(h).as("__hops")) ++ carry.map(col): _*)
-      .distinct().localCheckpoint()
-    val emptySeed = guard(level, 1)
-    var all = level
-    var k = 2
-    var exhausted = hi < 2 || emptySeed
-    while (k <= hi && !exhausted) {
-      val stepEdges =
-        if (lazyMode)
-          edgesFrom(level.select(col("__dst").as("__cstart")).distinct())
-        else fullEdges.get
-      val right = stepEdges.select(Seq(col("__src").as("__m"),
-        col("__dst").as("__n")) ++
-        carry.map(c => col(c).as(s"__r$c")): _*)
-      val stepped = level.join(right, col("__dst") === col("__m"))
-        .filter(!arrays_overlap(col("__eids"), col("__r__eids")))
-        .select(Seq(col("__src"), col("__n").as("__dst"),
-          lit(k * h).as("__hops")) ++
-          carry.map(c => concat(col(c), col(s"__r$c")).as(c)): _*)
-        .localCheckpoint()
-      exhausted = guard(stepped, k)
-      if (!exhausted) {
-        all = all.unionByName(stepped)
-        level = stepped
-      }
-      k += 1
-    }
-    val ordCols = Seq("__nids", "__eids") ++
-      carry.filterNot(Set("__nids", "__eids"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__src"), col("__dst"))
-      .orderBy((col("__hops") +: ordCols.map(col)): _*)
-    all.withColumn("__kb_rk", row_number().over(w))
-      .filter(col("__kb_rk") <= kBest)
-      .drop("__kb_rk")
-  }
-
-  /** WEIGHTED shortestPath over a multi-hop quantified group (r16 —
-    * formerly a loud reject): a repetition's weight IS the sum of its
-    * inner edges' weight property (computed during composition, so
-    * the synthetic edge list carries `__w`), and the search is the
-    * repetition-level hop-bounded Bellman–Ford — the
-    * [[weightedShortestRelWalks]] relaxation with
-    * [[compositeShortestWalks]]' two composite changes: walk columns
-    * CONCAT per step and extensions whose edge-identity arrays
-    * overlap the standing walk are skipped (Cypher relationship
-    * uniqueness across repetitions). Candidate structs order
-    * (cost, node walk, identities, payloads); only STRICTLY cheaper
-    * candidates replace the standing best (ties keep fewer
-    * repetitions); positive weights keep recorded walks cycle-free at
-    * the juncture level by the shared argument. Returns the walk
-    * contract with `__wcost` (total edge weight) and `__hops` = k·h.
-    */
-  private def compositeWeightedWalks(reps: DataFrame, h: Int, hi: Int,
-      seed: Option[DataFrame],
-      composeFrom: Option[DataFrame => DataFrame] = None): DataFrame = {
-    val carry = reps.columns.filter(c => c == "__nids" || c == "__eids" ||
-      c.startsWith("__epls")).toSeq.sorted
-    require(carry.contains("__nids") && carry.contains("__eids") &&
-        reps.columns.contains("__w"),
-      s"weighted composite frame must carry __w/__nids/__eids, has: " +
-        s"${reps.columns.mkString(",")}")
-    val lazyMode = composeFrom.isDefined && seed.isDefined
-    val fullEdges: Option[DataFrame] =
-      if (lazyMode) None
-      else Some(reps.filter(col("__src") =!= col("__dst")).localCheckpoint())
-    def edgesFrom(starts: DataFrame): DataFrame =
-      composeFrom.get(starts).filter(col("__src") =!= col("__dst"))
-    val e0 =
-      if (lazyMode)
-        edgesFrom(seed.get.select(col("__seedid").as("__cstart")).distinct())
-      else seed match {
-        case Some(s) => fullEdges.get.join(s,
-          fullEdges.get("__src") === s("__seedid"), "left_semi")
-        case None => fullEdges.get
-      }
-    // cost-led struct: the min aggregate picks the cheapest candidate,
-    // ties broken by node walk then identities/payloads
-    val ordCols = Seq("__wcost", "__nids", "__eids") ++
-      carry.filterNot(Set("__nids", "__eids"))
-    var best = e0
-      .select(Seq(col("__src"), col("__dst"),
-        struct((col("__w").as("__wcost") +:
-          carry.map(col)): _*).as("__wk")): _*)
-      .groupBy(col("__src"), col("__dst"))
-      .agg(min(col("__wk")).as("__wk"))
-      .select(Seq(col("__src"), col("__dst"), lit(h).as("__hops")) ++
-        ordCols.map(c => col("__wk").getField(c).as(c)): _*)
-      .localCheckpoint()
-    var frontier = best
-    var k = 2
-    var exhausted = hi < 2 || frontier.isEmpty
-    while (k <= hi && !exhausted) {
-      val stepEdges =
-        if (lazyMode)
-          edgesFrom(frontier.select(col("__dst").as("__cstart")).distinct())
-        else fullEdges.get
-      val right = stepEdges.select(Seq(col("__src").as("__m"),
-        col("__dst").as("__n"), col("__w")) ++
-        carry.map(c => col(c).as(s"__r$c")): _*)
-      // deferred walk concat (r19, see weightedShortestRelWalks):
-      // every candidate extends a length-(k-1)·h prefix with a
-      // length-h repetition, so (prefix, tail) field pairs compare
-      // exactly like the concatenated arrays and the concat runs once
-      // per per-pair winner, not per candidate
-      val deferStruct = struct(
-        (col("__wcost") + col("__w")).as("__wcost") +:
-          carry.flatMap(c => Seq(col(c).as(s"__p$c"),
-            col(s"__r$c").as(s"__t$c"))): _*)
-      val stepped = frontier
-        .join(right, col("__dst") === col("__m"))
-        .filter(col("__src") =!= col("__n"))
-        .filter(!arrays_overlap(col("__eids"), col("__r__eids")))
-        .select(col("__src"), col("__n").as("__d2"), deferStruct.as("__wk"))
-        .groupBy(col("__src"), col("__d2"))
-        .agg(min(col("__wk")).as("__wk"))
-        .select(Seq(col("__src"), col("__d2").as("__dst"),
-          lit(k * h).as("__hops")) ++
-          ordCols.map {
-            case "__wcost" => col("__wk.__wcost").as("__wcost")
-            case c => concat(col(s"__wk.__p$c"), col(s"__wk.__t$c")).as(c)
-          }: _*)
-      val improved = stepped
-        .join(best.select(col("__src"), col("__dst"),
-          col("__wcost").as("__old")), Seq("__src", "__dst"), "left_outer")
-        .filter(col("__old").isNull || col("__wcost") < col("__old"))
-        .drop("__old")
-        .localCheckpoint()
-      exhausted = improved.isEmpty
-      if (!exhausted) {
-        best = best
-          .join(improved.select(col("__src"), col("__dst")),
-            Seq("__src", "__dst"), "left_anti")
-          .unionByName(improved)
-          .localCheckpoint()
-        frontier = improved
-      }
-      k += 1
-    }
-    best
-  }
-
-  /** WEIGHTED allShortestPaths over a multi-hop quantified group (r17
-    * — completes the weighted column of the composition matrix):
-    * [[weightedAllShortestWalks]]' capped cost-minimal enumeration
-    * with [[compositeShortestWalks]]' two composite changes — walk
-    * columns CONCAT per repetition and `arrays_overlap` relationship
-    * uniqueness across repetitions (within-repetition handled during
-    * composition; a repetition's weight is its inner edges' sum,
-    * `__w`). Prefix optimality holds at the repetition level by the
-    * same positive-weight cycle-cutting argument, so extending each
-    * round's at-or-below-standing-min walks generates every minimal
-    * walk; ties kept exactly (including across different repetition
-    * counts), per-round [[MaxAllShortestWalks]] loud guard, final
-    * per-pair min filter, `__np = 1` rows. Seeded searches compose
-    * repetitions lazily per round (`composeFrom`).
-    */
-  private def compositeWeightedAllWalks(reps: DataFrame, h: Int, hi: Int,
-      seed: Option[DataFrame],
-      composeFrom: Option[DataFrame => DataFrame] = None): DataFrame = {
-    val carry = reps.columns.filter(c => c == "__nids" || c == "__eids" ||
-      c.startsWith("__epls")).toSeq.sorted
-    require(carry.contains("__nids") && carry.contains("__eids") &&
-        reps.columns.contains("__w"),
-      s"weighted composite frame must carry __w/__nids/__eids, has: " +
-        s"${reps.columns.mkString(",")}")
-    val lazyMode = composeFrom.isDefined && seed.isDefined
-    val fullEdges: Option[DataFrame] =
-      if (lazyMode) None
-      else Some(reps.filter(col("__src") =!= col("__dst")).localCheckpoint())
-    def edgesFrom(starts: DataFrame): DataFrame =
-      composeFrom.get(starts).filter(col("__src") =!= col("__dst"))
-    val e0 =
-      if (lazyMode)
-        edgesFrom(seed.get.select(col("__seedid").as("__cstart")).distinct())
-      else seed match {
-        case Some(s) => fullEdges.get.join(s,
-          fullEdges.get("__src") === s("__seedid"), "left_semi")
-        case None => fullEdges.get
-      }
-    def guard(fresh: DataFrame, k: Int): Boolean = {
-      val top = fresh.groupBy(col("__src"), col("__dst"))
-        .agg(count(lit(1)).as("__m")).agg(max(col("__m"))).collect()(0)
-      if (!top.isNullAt(0) && top.getLong(0) > MaxAllShortestWalks)
-        throw new IllegalArgumentException(
-          s"weighted allShortestPaths over a quantified group: a pair " +
-            s"at repetition depth $k has ${top.getLong(0)} candidate " +
-            s"minimal walks, above the $MaxAllShortestWalks cap — bind " +
-            "tighter endpoints or lower the repetition bound")
-      top.isNullAt(0)
-    }
-    def keepMin(df: DataFrame): DataFrame = {
-      val mc = df.groupBy(col("__src"), col("__dst"))
-        .agg(min(col("__wcost")).as("__mc"))
-      df.join(mc, Seq("__src", "__dst"))
-        .filter(col("__wcost") === col("__mc")).drop("__mc")
-    }
-    var all = e0.select(Seq(col("__src"), col("__dst"),
-      col("__w").as("__wcost"), lit(h).as("__hops")) ++
-      carry.map(col): _*)
-      .distinct().localCheckpoint()
-    var frontier = keepMin(all).localCheckpoint()
-    val emptySeed = guard(frontier, 1)
-    var k = 2
-    var exhausted = hi < 2 || emptySeed
-    while (k <= hi && !exhausted) {
-      val stepEdges =
-        if (lazyMode)
-          edgesFrom(frontier.select(col("__dst").as("__cstart")).distinct())
-        else fullEdges.get
-      val right = stepEdges.select(Seq(col("__src").as("__m"),
-        col("__dst").as("__n"), col("__w")) ++
-        carry.map(c => col(c).as(s"__r$c")): _*)
-      val stepped = frontier.join(right, col("__dst") === col("__m"))
-        .filter(col("__src") =!= col("__n"))
-        .filter(!arrays_overlap(col("__eids"), col("__r__eids")))
-        .select(Seq(col("__src"), col("__n").as("__dst"),
-          (col("__wcost") + col("__w")).as("__wcost"),
-          lit(k * h).as("__hops")) ++
-          carry.map(c => concat(col(c), col(s"__r$c")).as(c)): _*)
-        .distinct()
-      val mc = all.groupBy(col("__src"), col("__dst"))
-        .agg(min(col("__wcost")).as("__mc"))
-      val fresh = stepped.join(mc, Seq("__src", "__dst"), "left_outer")
-        .filter(col("__mc").isNull || col("__wcost") <= col("__mc"))
-        .drop("__mc")
-        .localCheckpoint()
-      exhausted = guard(fresh, k)
-      if (!exhausted) {
-        all = all.unionByName(fresh).localCheckpoint()
-        frontier = fresh
-      }
-      k += 1
-    }
-    keepMin(all).withColumn("__np", lit(1L))
   }
 
   /** Statically string-valued expressions — drives `+`-as-concat

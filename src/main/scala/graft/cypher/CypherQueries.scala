@@ -807,7 +807,7 @@ object CypherQueries {
 
   /** `shortestPath` over the in-region nation chain: minimum hop
     * count per reachable (a, b) pair, planned as a level-synchronous
-    * BFS (never walk enumeration — see CypherPlanner.shortestRel).
+    * BFS (never walk enumeration — see CypherPlanner.frontierSearch).
     * Mirrors the reference surface's arbitrary-Cypher passthrough
     * (Neo4jInputFormat.java:60), where shortestPath is an everyday
     * server-side idiom.
@@ -823,7 +823,7 @@ object CypherQueries {
     * via apoc/GDS dijkstra): minimum total `qty` between low-key part
     * pairs through shared orders, ties broken to fewer hops. Planned
     * as hop-bounded Bellman–Ford relaxation seeded from the bound
-    * starts (CypherPlanner.weightedShortestRel) — pairs, never walks;
+    * starts (CypherPlanner.frontierSearch) — pairs, never walks;
     * `cost(p)` reads the accumulated weight, `length(p)` the hop
     * count of the cheapest walk.
     */
@@ -840,7 +840,7 @@ object CypherQueries {
     * per endpoint pair (parallel CONTAINS relationships are distinct
     * paths, exactly Neo4j's semantics), here the co-purchase strength
     * between part pairs through shared orders. Planned as a σ-counting
-    * BFS (CypherPlanner.shortestRelCounted): `count(p)` compiles to a
+    * BFS (CypherPlanner.frontierSearch): `count(p)` compiles to a
     * SUM of the pair's multiplicity — one row per PAIR ever exists;
     * paths are never enumerated. The pre-bound start (`MATCH (a:Part)
     * WHERE … MATCH p = allShortestPaths((a)-…)`) SEEDS the BFS — the
@@ -859,7 +859,7 @@ object CypherQueries {
 
   /** `nodes(p)` ON a shortestPath chain (r15 — formerly a loud
     * unbound-column failure: the BFS kept pair×depth only). The
-    * walk-carrying BFS (CypherPlanner.shortestRelWalks) materializes
+    * walk-carrying BFS (CypherPlanner.frontierSearch) materializes
     * ONE deterministic shortest walk per pair — pair-bounded, never
     * walk enumeration — and the path string folds it with Neo4j's
     * `+` string concatenation (also r15). NEXT_IN_REGION is a
@@ -937,7 +937,7 @@ object CypherQueries {
   /** shortestPath over a MULTI-hop quantified group (r16 — the former
     * loud reject): the composite repetition frame is a synthetic edge
     * list, consumed by the repetition-level walk-carrying BFS
-    * (`compositeShortestWalks`) — fewest repetitions = fewest edges,
+    * (`CypherPlanner.frontierSearch`) — fewest repetitions = fewest edges,
     * `length(p)` reports k·h. Per pair, the first-reach level equals
     * the minimum over the h·k union arms of the plain quantified
     * expansion (the oracle's spelling).
@@ -967,7 +967,7 @@ object CypherQueries {
   /** WEIGHTED shortestPath with walk materialization (r15 — the last
     * pairs-not-walks reject on the single-path forms): `nodes(p)` and
     * the named relationship list ride the hop-bounded Bellman–Ford
-    * relaxation (CypherPlanner.weightedShortestRelWalks), one
+    * relaxation (CypherPlanner.frontierSearch), one
     * deterministic cheapest walk per pair. The `price` weight makes
     * every pair's cheapest walk UNIQUE on this data (verified at
     * sf0.01/sf0.1), so the oracle's enumeration picks the same walk;
@@ -1019,7 +1019,7 @@ object CypherQueries {
 
   /** allShortestPaths over a MULTI-hop quantified group (r16 — the
     * composition matrix's last cell): the capped composite
-    * enumeration (`compositeAllShortestWalks`) emits one row per
+    * enumeration (`CypherPlanner.frontierSearch`) emits one row per
     * shortest repetition chain; on the unique-successor nation chains
     * σ = 1 everywhere, so `count(p)` pins exactly one enumerated row
     * per first-reach pair across BOTH k-arms.
@@ -1034,7 +1034,7 @@ object CypherQueries {
   /** WEIGHTED shortestPath over a MULTI-hop quantified group (r16 —
     * formerly a loud reject): a repetition's weight is the SUM of its
     * inner edges' `price`, and the repetition-level Bellman–Ford
-    * minimizes total walk cost (`CypherPlanner.compositeWeightedWalks`).
+    * minimizes total walk cost (`CypherPlanner.frontierSearch`).
     * On the bipartite CONTAINS graph every part-part walk has even
     * length, so the group spelling reaches exactly the plain weighted
     * pairs; `z` binds the per-repetition end nodes of the unique
@@ -1053,7 +1053,7 @@ object CypherQueries {
   /** WEIGHTED allShortestPaths (r17 — the last walk-introspection
     * cell; Neo4j reaches it only via apoc/GDS): ALL cost-minimal
     * walks per pair via the capped cost-minimal enumeration
-    * (`CypherPlanner.weightedAllShortestWalks`). On the bipartite
+    * (`CypherPlanner.frontierSearch`). On the bipartite
     * CONTAINS graph every part–part walk is exactly 2 hops, so the
     * per-pair answer is: the minimal qty-sum over (edge, edge) pairs
     * through a shared order, with `np` counting EXACT ties (qty is
@@ -1075,7 +1075,7 @@ object CypherQueries {
     * — completes the weighted column of the composition matrix): ALL
     * cost-minimal walks where a repetition's weight is its inner
     * edges' qty sum, enumerated at the repetition level
-    * (`CypherPlanner.compositeWeightedAllWalks`). Minima can tie
+    * (`CypherPlanner.frontierSearch`). Minima can tie
     * ACROSS repetition counts (a cheap 2-repetition walk can undercut
     * every 1-repetition one), so the oracle enumerates both arms with
     * the cross-repetition identity inequalities and counts exact ties
@@ -1095,7 +1095,7 @@ object CypherQueries {
   /** GQL `SHORTEST k` (k = 2) over a MULTI-hop quantified group (r17
     * — the k-best × groups composition cell r16 left open): the
     * capped composite TRAIL enumeration
-    * (`CypherPlanner.compositeKShortestWalks`) keeps the 2
+    * (`CypherPlanner.frontierSearch`) keeps the 2
     * length-least edge-unique trails per pair; trails may take MORE
     * repetitions than the shortest (no first-reach pruning), so a
     * pair with one 1-repetition trail and any 2-repetition trail
@@ -1189,7 +1189,7 @@ object CypherQueries {
     * `SHORTEST 2 shortestPath((a)-[:T*1..2]-(b), 'qty')`. The capped
     * trail enumeration accumulates weights and a per-pair window
     * keeps the 2 COST-least trails
-    * (`CypherPlanner.weightedKShortestWalks` — before r18 the planner
+    * (`CypherPlanner.frontierSearch` — before r18 the planner
     * silently dropped k on this spelling). The oracle enumerates the
     * 2-hop shared-order trails from lineitem and applies the same
     * per-pair cost-ordered top-2; aggregating to the (count, min,
@@ -1207,7 +1207,7 @@ object CypherQueries {
 
   /** Walk-CONSUMING allShortestPaths (r16 — formerly loud rejects):
     * nodes(p), named relationship lists and per-walk reduce() under
-    * the σ-capped enumeration (`CypherPlanner.allShortestWalks`).
+    * the σ-capped enumeration (`CypherPlanner.frontierSearch`).
     * Parallel CONTAINS edges are distinct paths sharing a node walk,
     * so count(p) = the pair's lineitem multiplicity and the per-walk
     * qty reduce sums to the pair's total quantity.
@@ -1215,7 +1215,7 @@ object CypherQueries {
   /** GROUP VARIABLES under unweighted `allShortestPaths` (r18 — the
     * last group-variable cell, formerly a loud reject): consumed
     * inner names force the capped shortest-walk enumeration
-    * (`CypherPlanner.allShortestWalks`), and each enumerated walk
+    * (`CypherPlanner.frontierSearch`), and each enumerated walk
     * binds its OWN per-repetition lists — `x` the repetition sources,
     * `y` the targets, in pattern order. On the bipartite CONTAINS
     * graph every part–part walk is exactly 2 repetitions through a

@@ -283,13 +283,30 @@ object JoinKeyRangePropagation extends Rule[LogicalPlan] {
     * family — while the entire win of this rule is scan-side row-group
     * pruning. No-op when an equal predicate is already present
     * anywhere in the subtree (fixpoint safety for the to-convergence
-    * user rule batch).
+    * user rule batch), and when a row-count-sensitive node (a limit,
+    * offset, tail or sample) lies between the side's root and the
+    * relation: filtering below it changes WHICH rows it keeps, not
+    * just drops rows the join would drop.
     */
   private def inject(side: LogicalPlan, base: Attribute,
       pred: Expression): LogicalPlan = {
     val already = side.collect { case Filter(c, _) => c }
       .flatMap(splitConjuncts).exists(_ semanticEquals pred)
     if (already) return side
+    // the root-to-relation path of the injection target
+    def pathTo(p: LogicalPlan): Option[List[LogicalPlan]] = p match {
+      case n: org.apache.spark.sql.execution.datasources.LogicalRelation
+          if n.outputSet.contains(base) => Some(List(n))
+      case _ => p.children.iterator.map(pathTo).collectFirst {
+        case Some(rest) => p :: rest
+      }
+    }
+    val rowCountSensitive = pathTo(side).exists(_.exists {
+      case _: GlobalLimit | _: LocalLimit | _: Offset | _: Tail |
+          _: Sample => true
+      case _ => false
+    })
+    if (rowCountSensitive) return side
     var done = false
     side.transformUp {
       case n: org.apache.spark.sql.execution.datasources.LogicalRelation

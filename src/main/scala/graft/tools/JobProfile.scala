@@ -1,23 +1,54 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 
-/** Per-query job/stage/task profile: how many Spark jobs a query
-  * submits, how many stages and tasks they expand to, and how wall
-  * time splits between plan construction (the `fn(spark, sfDir)`
-  * call) and execution (`count()`). Iterative operators are
-  * job-count-bound at bench scale — this is the tool that shows it.
+/** Per-query job/stage/task profile and result digest: how many Spark
+  * jobs a query submits, how many stages and tasks they expand to, how
+  * wall time splits between plan construction (the `fn(spark, sfDir)`
+  * call) and execution, and a SHA-256 of the query's sorted rows.
+  * Execution brings every row back with `collect()` — a `count()`
+  * would let Catalyst prune the projected work away. Iterative
+  * operators are job-count-bound at bench scale — this is the tool
+  * that shows it; running it on two checkouts compares per-key
+  * results and job counts before and after a change.
   *
   * Usage: runMain graft.tools.JobProfile <q1,q2,...> [reps]
+  * (SPARK_GRAFT_SF_DIR picks the data, SPARK_GRAFT_CPUS the local
+  * parallelism — default: every core of the machine)
   */
 object JobProfile {
+  /** Canonical text of one value: nested rows, lists and maps render
+    * element-wise (maps in key order), binary as hex — never an
+    * identity hash, so equal results give equal digests.
+    */
+  private def render(v: Any): String = v match {
+    case null => "null"
+    case r: Row => r.toSeq.map(render).mkString("{", ",", "}")
+    case b: Array[Byte] => b.map(x => f"$x%02x").mkString("0x", "", "")
+    case s: scala.collection.Seq[_] => s.map(render).mkString("[", ",", "]")
+    case m: scala.collection.Map[_, _] =>
+      m.toSeq.map { case (k, x) => render(k) -> render(x) }.sorted
+        .map { case (k, x) => s"$k:$x" }.mkString("<", ",", ">")
+    case x => x.toString
+  }
+
+  /** SHA-256 over the column names and the sorted rendered rows. */
+  private def digest(columns: Seq[String], rows: Array[Row]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    (columns.mkString(",") +: rows.map(render).sorted).foreach { line =>
+      md.update(line.getBytes("UTF-8")); md.update('\n'.toByte)
+    }
+    md.digest().map(x => f"$x%02x").mkString
+  }
+
   def main(args: Array[String]): Unit = {
     val names = args.headOption.getOrElse("graph_pagerank")
       .split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 1) args(1).toInt else 2
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -55,9 +86,11 @@ object JobProfile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    // warm once (JIT/codegen) at the tiny SF like Bench does
+    // warm once (JIT/codegen) at the tiny SF beside the profiled one,
+    // like Bench does
+    val warmDir = new java.io.File(sfDir).getParent + "/sf0.001"
     names.foreach { n =>
-      try graft.SparkEntry.queries(n)(spark, "/root/testdata/sf0.001").count()
+      try graft.SparkEntry.queries(n)(spark, warmDir).collect()
       catch { case _: Throwable => () }
     }
     def dropCaches(): Unit = {
@@ -75,7 +108,7 @@ object JobProfile {
         val t0 = System.nanoTime()
         val df = graft.SparkEntry.queries(n)(spark, sfDir)
         val tPlan = System.nanoTime()
-        val rows = df.count()
+        val rows = df.collect()
         val tExec = System.nanoTime()
         val cg1 = codegenStats()
         // listener bus is async: give it a beat to drain before
@@ -84,7 +117,8 @@ object JobProfile {
         println(f"[jobprofile] $n%-28s rep $r wall=${(tExec - t0) / 1e9}%6.2fs " +
           f"plan=${(tPlan - t0) / 1e9}%5.2fs exec=${(tExec - tPlan) / 1e9}%6.2fs " +
           f"jobs=$jobs%3d stages=$stages%3d tasks=$tasks%5d taskTime=${taskMs / 1e3}%7.1fs " +
-          f"cgN=${cg1._1 - cg0._1}%3d rows=$rows")
+          f"cgN=${cg1._1 - cg0._1}%3d rows=${rows.length} " +
+          s"sha256=${digest(df.columns.toSeq, rows)}")
         if (verbose && r == reps) {
           stageRows.forEach(s => println(s))
         }

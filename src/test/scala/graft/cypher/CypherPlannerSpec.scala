@@ -521,6 +521,22 @@ class CypherPlannerSpec extends AnyFunSuite {
       .map(r => (r.getLong(1), r.getLong(2))).toList ==
       List((1L, 2L), (2L, 4L)))
     assert(tie(0).getLong(3) == 2L)
+    // parallel edges with different payloads: the walk takes the
+    // payload-least one, and relationships(p) names that same edge
+    // (identity ranks order parallel edges by their properties)
+    val par = graft.graph.PropertyGraph(
+      nodes = Map("V" -> Seq((1L, "n1"), (2L, "n2"), (3L, "n3"))
+        .toDF("__id", "name")),
+      rels = Map("E" -> Seq((1L, 2L, 5L), (1L, 2L, 3L), (2L, 3L, 7L))
+        .toDF("__src", "__dst", "w")))
+    val pw = CypherPlanner.run(spark, par,
+      "MATCH p = shortestPath((a:V)-[rs:E*1..3]->(b:V)) " +
+        "WHERE id(a) = 1 AND id(b) = 3 " +
+        "RETURN [x IN rs | x.w] AS ws, relationships(p) AS res").collect()
+    assert(pw.length == 1 && pw(0).getSeq[Long](0).toList == List(3L, 7L))
+    assert(pw(0).getSeq[org.apache.spark.sql.Row](1)
+      .map(r => (r.getLong(1), r.getLong(2), r.getInt(3))).toList ==
+      List((1L, 2L, 1), (2L, 3L, 1)))
     // In-spelled pre-bound shortest with walks: the seeded flip
     // reverses node and payload arrays back into pattern order
     val chainG = graft.graph.PropertyGraph(
@@ -590,6 +606,20 @@ class CypherPlannerSpec extends AnyFunSuite {
     assert(gv.length == 1 && gv(0).getLong(0) == 4L)
     assert(gv(0).getSeq[Long](1).toList == List(9L, 6L)) // mid of each rep
     assert(gv(0).getLong(2) == 2L)
+    // a repetition may not reuse an edge of an earlier one: on the
+    // triangle 1→2→3→1, reaching 2 from 1 takes the repetitions
+    // 1→2→3 and 3→1→2, which re-traverses 1→2 — skipped, so only
+    // 1⇝3 has a path
+    val tri = graft.graph.PropertyGraph(
+      nodes = Map("V" -> (1L to 3L).map(i => (i, s"n$i")).toDF("__id", "name")),
+      rels = Map("E" -> Seq((1L, 2L), (2L, 3L), (3L, 1L))
+        .toDF("__src", "__dst")),
+      relEndpoints = Map("E" -> ("V", "V")))
+    val reuse = CypherPlanner.run(spark, tri,
+      "MATCH p = shortestPath((s:V) ((x)-[:E]->(y)-[:E]->(z)){1,2} (t:V)) " +
+        "WHERE id(s) = 1 RETURN id(t) AS t, length(p) AS hops").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toList
+    assert(reuse == List(3L -> 2L))
     // allShortestPaths over groups enumerates since r16 — on the
     // unique-successor chains it returns the same pairs as the
     // shortestPath spelling, one path each
@@ -2403,6 +2433,21 @@ class CypherPlannerSpec extends AnyFunSuite {
       assert(expected.contains(k) && math.abs(expected(k) - r.getDouble(3)) < 1e-9,
         s"pair $k: engine ${r.getDouble(3)} vs relational ${expected.get(k)}")
     }
+    // a cost tie keeps the fewer-hop walk: 1⇝3 costs 2.0 directly and
+    // 2.0 via 2 — an equal cost never replaces the standing best, on
+    // the pair-only search and the walk-carrying one alike
+    import spark.implicits._
+    val tg = graft.graph.PropertyGraph(
+      nodes = Map("V" -> (1L to 3L).map(i => (i, s"n$i")).toDF("__id", "name")),
+      rels = Map("E" -> Seq((1L, 2L, 1.0), (2L, 3L, 1.0), (1L, 3L, 2.0))
+        .toDF("__src", "__dst", "w")))
+    for (ret <- Seq("length(p) AS l, cost(p) AS c",
+        "length(p) AS l, cost(p) AS c, nodes(p) AS ns")) {
+      val t = CypherPlanner.run(spark, tg,
+        "MATCH p = shortestPath((a:V)-[:E*1..3]->(b:V), 'w') " +
+          s"WHERE id(a) = 1 AND id(b) = 3 RETURN $ret").collect()
+      assert(t.length == 1 && t(0).getLong(0) == 1L && t(0).getDouble(1) == 2.0)
+    }
     // cost(p) on an unweighted chain stays unbound and fails loudly
     intercept[Exception] {
       run("MATCH p = shortestPath((a:Nation)-[:NEXT_IN_REGION*1..3]->(b:Nation)) " +
@@ -3359,6 +3404,12 @@ class CypherPlannerSpec extends AnyFunSuite {
         "WHERE id(a) = 1 AND id(b) = 1 RETURN length(p) AS l ORDER BY l")
       .collect().map(_.getLong(0)).toList
     assert(closed == List(2L))
+    // ...while the BFS selectors never bind both ends to one node
+    for (pat <- Seq("SHORTEST 1 (a:V)-[:E]->{1,3}(b:V)",
+        "shortestPath((a:V)-[:E*1..3]->(b:V))"))
+      assert(CypherPlanner.run(spark, g, s"MATCH p = $pat " +
+        "WHERE id(a) = 1 AND id(b) = 1 RETURN length(p) AS l")
+        .collect().isEmpty, pat)
   }
 
   test("plain DELETE on a nodes-only graph succeeds (no edge tables, nothing attached)") {

@@ -87,4 +87,22 @@ class JoinKeyRangePropagationSpec extends AnyFunSuite {
       assert(joined.count() === 14L)
     } finally spark.conf.set("spark.graft.joinRangePushdown", "true")
   }
+
+  test("a derived bound never lands under a Limit on the other side") {
+    // top 5 customers by balance, then a key-range match against them:
+    // the c2.custkey range must not reach c's scan BELOW its LIMIT,
+    // which would pick the top 5 of the in-range customers instead
+    // (at sf0.01 none of the true top 5 is in range)
+    val sf = new java.io.File(TestSpark.sf).getParent + "/sf0.01"
+    val q = "MATCH (c:Customer) WITH c ORDER BY c.acctbal DESC LIMIT 5 " +
+      "MATCH (c2:Customer) WHERE c2.custkey < 50 AND c2 = c " +
+      "RETURN count(*) AS n"
+    def rows(): Long = graft.cypher.CypherPlanner.run(spark,
+      graft.graph.GraphLoader.tpch(spark, sf), q).collect()(0).getLong(0)
+    val on = rows()
+    spark.conf.set("spark.graft.joinRangePushdown", "false")
+    val off = try rows() finally
+      spark.conf.set("spark.graft.joinRangePushdown", "true")
+    assert(off === 0L && on === off)
+  }
 }
