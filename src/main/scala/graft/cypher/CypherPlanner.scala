@@ -2125,6 +2125,138 @@ object CypherPlanner {
     // materializes from the FIRST hop's edge source instead
     var pendingStart: Option[String] = None
 
+    /** Inline property map `{k: v}` on one table: equality filters
+      * on the table's own columns; a table without the property
+      * contributes nothing (Neo4j: null never equals). Union scans
+      * apply it per branch.
+      */
+    def propsFilter(t: DataFrame, props: Map[String, Any]): DataFrame =
+      props.foldLeft(t) { case (b, (k, v)) =>
+        if (b.columns.contains(k)) b.filter(col(k) === lit(v))
+        else b.filter(lit(false))
+      }
+
+    /** `keys(x)` / `properties(x)` of one table's rows: the sorted
+      * property-name list, and a key-sorted array<struct<key,val>>
+      * (val stringified — property types are heterogeneous) with null
+      * values dropped to match Neo4j's absent-key semantics. Both are
+      * literal-keyed, so Catalyst prunes them (and the columns they
+      * read) whenever neither is asked for. A property-less table
+      * still needs the TYPED empty array — a bare array() is
+      * array<void> and the null-dropping lambda cannot field-extract
+      * from it.
+      */
+    def keysAndProps(t: DataFrame, ids: Set[String]): (Column, Column) = {
+      val ks = t.columns.filterNot(ids).sorted.toSeq
+      val props =
+        if (ks.isEmpty) array().cast("array<struct<key:string,val:string>>")
+        else org.apache.spark.sql.functions.filter(
+          array(ks.map(k => struct(lit(k).as("key"),
+            col(k).cast("string").as("val"))): _*),
+          x => x.getField("val").isNotNull)
+      (array(ks.map(lit(_)): _*), props)
+    }
+
+    /** The edge tables a relationship pattern reads, in STORED
+      * orientation, name-sorted: a typed hop one table, `-[:A|B]->`
+      * the listed tables, a typeless hop every table minus the
+      * negated types `-[:!T]->` (a relationship has ONE type; unknown
+      * negated names exclude nothing) whose declared endpoint labels
+      * can match the hop's node labels `from` → `to` (pattern order).
+      * That static schema pruning means `(n:Nation)-[r]->(x)` never
+      * scans an order→part edge table — at 100 TB the difference
+      * between two small scans and every edge list in the graph.
+      * Types without a declared schema are kept.
+      */
+    def relTables(r: RelPattern, from: Option[String],
+        to: Option[String]): Seq[(String, DataFrame)] = r.relType match {
+      case Some(t) => (t +: r.altTypes).distinct.sorted
+        .map(tn => tn -> graph.relTable(tn))
+      case None =>
+        def fits(want: Option[String], have: String) = want.forall(_ == have)
+        graph.rels.toSeq.sortBy(_._1).filter { case (tn, _) =>
+          !r.negTypes.contains(tn) && (graph.relEndpoints.get(tn) match {
+            case None => true
+            case Some((sl, dl)) =>
+              val out = fits(from, sl) && fits(to, dl)
+              val in = fits(from, dl) && fits(to, sl)
+              r.direction match {
+                case Out  => out
+                case In   => in
+                case Both => out || in
+              }
+          })
+        }
+    }
+
+    /** Declared endpoint label(s) of a hop's relationship type(s) on
+      * its traversal source (`source`) or target side. An undirected
+      * hop traverses mirrored edge rows, so EITHER declared endpoint
+      * can be a step's source or target — both are included (ids are
+      * globally unique across labels, the union never duplicates a
+      * node); a one-sided lookup would null out a step predicate on
+      * mirrored rows of a heterogeneous-endpoint relationship and
+      * silently drop them.
+      */
+    def endpointLabels(r: RelPattern, source: Boolean): Seq[String] =
+      (r.relType.toSeq ++ r.altTypes).flatMap(graph.relEndpoints.get)
+        .flatMap { ep =>
+          r.direction match {
+            case Both => Seq(ep._1, ep._2)
+            case In   => Seq(if (source) ep._2 else ep._1)
+            case Out  => Seq(if (source) ep._1 else ep._2)
+          }
+        }.distinct
+
+    /** The edge frame with `__src` and `__dst` swapped — an In hop's
+      * traversal orientation, an undirected hop's mirror; everything
+      * else (identity, payload) rides along unchanged.
+      */
+    def swapEnds(e: DataFrame): DataFrame = e.select(e.columns.toSeq.map {
+      case "__src" => col("__dst").as("__src")
+      case "__dst" => col("__src").as("__dst")
+      case c       => col(c)
+    }: _*)
+
+    /** An In hop's walk node list `w` (stored orientation: the node
+      * entered by each step, ending at the walk's far node) in PATTERN
+      * order from `end`, the node the stored walk starts at: reverse
+      * of [end, all but the last of w]. A zero-hop walk stays empty.
+      */
+    def inWalk(w: Column, end: Column): Column =
+      when(size(w) === 0, w).otherwise(reverse(concat(array(end),
+        slice(w, lit(1), greatest(size(w) - 1, lit(0))))))
+
+    /** Edge identity `__eid` = (type, src, dst, rank among parallel
+      * edges) in the edge's ORIGINAL orientation, tagged BEFORE any
+      * mirroring — the mirror carries the struct through unchanged, so
+      * an undirected edge and its mirror share one identity while two
+      * distinct anti-parallel edges keep separate ones. The rank
+      * window is partitioned by the edge key (parallel, no global
+      * funnel) and ordered by the remaining columns — `@`-meta
+      * literals excluded, which keeps it off array-of-struct ordering —
+      * so it is deterministic up to fully-duplicate rows, which are
+      * interchangeable. It ranks across whatever frame it is given: a
+      * single hop's type union, or one table of a composite hop.
+      */
+    def withEid(t: DataFrame, tag: Column): DataFrame = {
+      val ordCols = t.columns.toSeq.filterNot(Set("__src", "__dst"))
+        .filterNot(_.startsWith("@")).sorted.map(col) match {
+        case Seq() => Seq(col("__src"))
+        case cs    => cs
+      }
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col("__src"), col("__dst")).orderBy(ordCols: _*)
+      t.withColumn("__eid", struct(tag.as("t"), col("__src").as("u"),
+        col("__dst").as("v"), row_number().over(w).as("k")))
+    }
+
+    /** Every node id, across all labels (a multi-label node
+      * contributes once) — the zero-length expansion branch's domain.
+      */
+    def nodeUniverse: DataFrame = graph.nodes.values
+      .map(_.select(col("__id"))).reduce(_.union(_)).distinct()
+
     /** Node-id frame satisfying a pattern's label/property
       * constraints, or None for a bare pattern — the semi-join side of
       * per-step group predicates (single- and multi-hop alike).
@@ -2140,14 +2272,9 @@ object CypherPlanner {
           // without the property contributes nothing), then the
           // post-union filter below is vacuous on the pre-filtered set
           case Some(l) if np.altLabels.nonEmpty =>
-            return Some((l +: np.altLabels).distinct.sorted.map { ln =>
-              var b = graph.nodeTable(ln)
-              np.props.foreach { case (k, v0) =>
-                b = if (b.columns.contains(k)) b.filter(col(k) === lit(v0))
-                    else b.filter(lit(false))
-              }
-              b.select(col("__id"))
-            }.reduce(_.unionByName(_)))
+            return Some((l +: np.altLabels).distinct.sorted.map(ln =>
+              propsFilter(graph.nodeTable(ln), np.props).select(col("__id")))
+              .reduce(_.unionByName(_)))
           case Some(l) =>
             np.moreLabels.distinct.filter(_ != l)
               .foldLeft(graph.nodeTable(l)) { (acc, l2) =>
@@ -2257,25 +2384,9 @@ object CypherPlanner {
       // sorted, excluding the hidden __id (Neo4j returns property
       // keys, not the internal id)
       def withMeta(nt: DataFrame, label: String): DataFrame = {
-        val ks = nt.columns.filter(_ != "__id").sorted
-        // properties(n): key-sorted array<struct<key,val>> (val
-        // stringified — property types are heterogeneous), null
-        // values dropped to match Neo4j's absent-key semantics.
-        // A literal-keyed struct array, so Catalyst prunes it (and
-        // the columns it reads) whenever properties(n) is not asked
-        // for.
-        // a property-less table (id-only CREATE) still needs the
-        // TYPED empty array — a bare array() is array<void> and the
-        // null-dropping lambda cannot field-extract from it
-        val props =
-          if (ks.isEmpty)
-            array().cast("array<struct<key:string,val:string>>")
-          else org.apache.spark.sql.functions.filter(
-            array(ks.map(k => struct(lit(k).as("key"),
-              col(k).cast("string").as("val"))): _*),
-            x => x.getField("val").isNotNull)
+        val (keys, props) = keysAndProps(nt, Set("__id"))
         nt.withColumn("@labels", array(lit(label)))
-          .withColumn("@keys", array(ks.map(lit(_)): _*))
+          .withColumn("@keys", keys)
           .withColumn("@props", props)
       }
       var t = np.label match {
@@ -2388,26 +2499,10 @@ object CypherPlanner {
     var curLabel: Option[String] = chain.start.soleLabel
     chain.hops.zipWithIndex.foreach { case ((rel, nextNode), hopIdx) =>
       // type-less relationship (`-->`, `-[r]->`): the union of every
-      // relationship table, edges only — properties are type-specific.
-      // Each table tags its rows with its type name so edge identities
-      // stay distinct across types inside the union.
-      // When the graph declares its schema (relEndpoints), branches
-      // whose endpoint labels cannot match the pattern's labels are
-      // pruned STATICALLY — expanding `(n:Nation)-[r]->(x)` never
-      // scans an order→part edge table. At 100 TB this is the
-      // difference between scanning two small tables and every edge
-      // list in the graph.
-      // inline property map on a multi-type / typeless hop (r14):
-      // each union branch filters on its OWN columns — a type without
-      // the property contributes nothing (Neo4j: null never equals)
-      def branchProps(t0: DataFrame): DataFrame = {
-        var b = t0
-        rel.props.foreach { case (k, v) =>
-          b = if (b.columns.contains(k)) b.filter(col(k) === lit(v))
-              else b.filter(lit(false))
-        }
-        b
-      }
+      // schema-compatible relationship table (relTables), edges only —
+      // properties are type-specific. Each table tags its rows with its
+      // type name so edge identities stay distinct across types inside
+      // the union.
       // a NAMED var-length hop over a union needs the branches to
       // carry the UNION property schema (null-filled per branch) so
       // its payload struct has one fixed shape and `r.prop` reads
@@ -2424,20 +2519,14 @@ object CypherPlanner {
         val schema =
           if (unionNeedsProps) unionPropSchema(tabs) else Seq.empty
         tabs.map { case (tn, t0) =>
-          val b = branchProps(t0)
+          // inline property map on a multi-type / typeless hop (r14):
+          // each union branch filters on its OWN columns
+          val b = propsFilter(t0, rel.props)
           val metaCols =
             if (!unionNeedsMeta) Seq.empty
             else {
-              val ks = b.columns.filterNot(Set("__src", "__dst")).sorted
-              val props =
-                if (ks.isEmpty)
-                  array().cast("array<struct<key:string,val:string>>")
-                else org.apache.spark.sql.functions.filter(
-                  array(ks.map(k => struct(lit(k).as("key"),
-                    col(k).cast("string").as("val"))).toSeq: _*),
-                  x => x.getField("val").isNotNull)
-              Seq(props.as("@props"),
-                array(ks.map(lit(_)).toSeq: _*).as("@keys"))
+              val (keys, props) = keysAndProps(b, Set("__src", "__dst"))
+              Seq(props.as("@props"), keys.as("@keys"))
             }
           b.select(Seq(col("__src"), col("__dst"),
             lit(tn).as("__rt")) ++
@@ -2446,38 +2535,17 @@ object CypherPlanner {
                else lit(null).cast(dt)).as(p) } ++ metaCols: _*)
         }.reduce(_.unionByName(_))
       }
-      val relBase = rel.relType match {
-        case Some(t) if rel.altTypes.isEmpty => graph.relTable(t)
-        // multi-type `-[:A|B]->`: union of exactly the listed edge
-        // tables, each branch tagged for type(r)/identity
-        case Some(t) =>
-          unionBranches((t +: rel.altTypes).distinct.sorted
-            .map(tn => tn -> graph.relTable(tn)))
-        case None =>
-          def fits(want: Option[String], have: String) = want.forall(_ == have)
-          val compatible = (tn: String) => graph.relEndpoints.get(tn) match {
-            case None => true // schema unknown for this type: keep
-            case Some((sl, dl)) => rel.direction match {
-              case Out => fits(curLabel, sl) && fits(nextNode.soleLabel, dl)
-              case In  => fits(curLabel, dl) && fits(nextNode.soleLabel, sl)
-              case Both =>
-                (fits(curLabel, sl) && fits(nextNode.soleLabel, dl)) ||
-                  (fits(curLabel, dl) && fits(nextNode.soleLabel, sl))
-            }
-          }
-          // `-[:!T]->` (r15): negated types drop out of the typeless
-          // union (set difference — a relationship has ONE type);
-          // unknown negated names exclude nothing
-          val negSet = rel.negTypes.toSet
-          val kept = graph.rels.toSeq.sortBy(_._1)
-            .filter { case (tn, _) => compatible(tn) && !negSet(tn) }
-          if (kept.isEmpty) {
-            // no relationship type connects these labels — statically
-            // empty, but keep the union's schema for downstream code
-            val (tn0, t0) = graph.rels.toSeq.sortBy(_._1).head
-            t0.select(col("__src"), col("__dst"), lit(tn0).as("__rt"))
-              .filter(lit(false))
-          } else unionBranches(kept)
+      val relBase = relTables(rel, curLabel, nextNode.soleLabel) match {
+        case Seq((_, t)) if rel.relType.isDefined && rel.altTypes.isEmpty => t
+        // no relationship type connects these labels — statically
+        // empty, but keep the union's schema for downstream code
+        case Seq() =>
+          val (tn0, t0) = graph.rels.toSeq.sortBy(_._1).head
+          t0.select(col("__src"), col("__dst"), lit(tn0).as("__rt"))
+            .filter(lit(false))
+        // multi-type `-[:A|B]->` / typeless: union of the tables, each
+        // branch tagged for type(r)/identity
+        case tabs => unionBranches(tabs)
       }
       // a named single-hop typed relationship binds its property
       // columns as `rv__prop` (Neo4j relationship properties);
@@ -2502,22 +2570,11 @@ object CypherPlanner {
       }
       // keys(r) / properties(r) for a named fixed single-hop typed
       // relationship — the same literal-keyed shapes node scans bind
-      // (@keys a per-type literal, @props a null-dropping key-sorted
-      // struct array with stringified values); Catalyst prunes both,
-      // and the columns they read, whenever neither is asked for
       val relMetaCols = rel.variable match {
         case Some(rv) if rel.varLength.isEmpty && rel.relType.isDefined &&
             rel.altTypes.isEmpty =>
-          val ks = relBase.columns.filterNot(Set("__src", "__dst")).sorted
-          val props =
-            if (ks.isEmpty)
-              array().cast("array<struct<key:string,val:string>>")
-            else org.apache.spark.sql.functions.filter(
-              array(ks.map(k => struct(lit(k).as("key"),
-                col(k).cast("string").as("val"))).toSeq: _*),
-              x => x.getField("val").isNotNull)
-          Seq(props.as(s"${rv}__@props"),
-            array(ks.map(lit(_)).toSeq: _*).as(s"${rv}__@keys"))
+          val (keys, props) = keysAndProps(relBase, Set("__src", "__dst"))
+          Seq(props.as(s"${rv}__@props"), keys.as(s"${rv}__@keys"))
         // union hops carry PER-BRANCH @keys/@props (each type's own
         // key set), tagged before the union in unionBranches
         case Some(rv) if rel.varLength.isEmpty &&
@@ -2554,20 +2611,12 @@ object CypherPlanner {
       // edge table, applied before any mirroring/expansion (multi-type
       // and typeless hops already filtered per union branch above —
       // their unions carry only __src/__dst/__rt)
-      var baseRel = relBase
-      if (rel.relType.isDefined && rel.altTypes.isEmpty)
-        rel.props.foreach { case (k, v) =>
-          baseRel = baseRel.filter(col(k) === lit(v)) }
-      // Edge identity, needed when a walk (var-length) or another hop
-      // of the same chain could rebind this relationship. The identity
-      // is (type, src, dst, rank-among-duplicates) in the edge's
-      // ORIGINAL orientation, tagged BEFORE mirroring — the mirror
-      // carries the struct through unchanged, so an undirected edge
-      // and its mirror share one identity while two distinct
-      // anti-parallel edges keep separate ones. The rank window is
-      // partitioned by the edge key (parallel, no global funnel) and
-      // ordered by the remaining columns, so it is deterministic up to
-      // fully-duplicate rows, which are interchangeable.
+      val baseRel =
+        if (rel.relType.isDefined && rel.altTypes.isEmpty)
+          propsFilter(relBase, rel.props)
+        else relBase
+      // Edge identity (withEid), needed when a walk (var-length) or
+      // another hop of the same chain could rebind this relationship.
       // shortestPath never enumerates walks, so no edge-identity
       // bookkeeping: a BFS first-reach cannot traverse an edge twice.
       // But when the query CONSUMES the path's walk — nodes(p),
@@ -2616,28 +2665,15 @@ object CypherPlanner {
       val needPathRels = chain.pathVar.isDefined &&
         (!chain.shortest || (spCarry && chain.pathVar.exists(wref.relsOf)) ||
           (aspCarry && chain.pathVar.exists(wref.relsOf)))
+      // the type tag of every edge row: the union's `__rt`, or the
+      // hop's one type
+      val typeTag =
+        if (baseRel.columns.contains("__rt")) col("__rt")
+        else lit(rel.relType.getOrElse(""))
       val relForExpand0 =
         if (needWalkEid || needChainEid || needPathRels || aspCarry ||
-            chain.kBest.exists(_ > 1)) {
-          val tagCol =
-            if (baseRel.columns.contains("__rt")) col("__rt")
-            else lit(rel.relType.getOrElse(""))
-          // @-meta columns (per-branch keys/props literals) are
-          // derived from the ordinary columns — excluding them keeps
-          // the rank window off array-of-struct ordering
-          val ordCols = baseRel.columns.toSeq
-            .filterNot(Set("__src", "__dst"))
-            .filterNot(_.startsWith("@")).sorted.map(col) match {
-            case Seq() => Seq(col("__src"))
-            case cs    => cs
-          }
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col("__src"), col("__dst"))
-            .orderBy(ordCols: _*)
-          baseRel.withColumn("__eid",
-            struct(tagCol.as("t"), col("__src").as("u"),
-              col("__dst").as("v"), row_number().over(w).as("k")))
-        } else baseRel
+            chain.kBest.exists(_ > 1)) withEid(baseRel, typeTag)
+        else baseRel
       // A NAMED var-length relationship (`-[rs:T*1..3]->`, or a named
       // single-hop group rel) binds rs as the walk's per-step
       // RELATIONSHIP LIST (Neo4j semantics). Each step carries a
@@ -2665,23 +2701,14 @@ object CypherPlanner {
           require(propCols.forall(c => !meta(c)),
             s"relationship property ${propCols.filter(meta).mkString(",")} " +
               s"collides with the walk payload's type/src/dst fields")
-          val tagCol =
-            if (relForExpand0.columns.contains("__rt")) col("__rt")
-            else lit(rel.relType.getOrElse(""))
           relForExpand0.withColumn("__epl",
-            struct((tagCol.as("type") +: col("__src").as("src") +:
+            struct((typeTag.as("type") +: col("__src").as("src") +:
               col("__dst").as("dst") +: propCols.map(col)): _*))
         }
       // undirected: the edge list mirrored once (props/identity ride
       // along), then planned exactly like an Out hop
       val orientedRel = rel.direction match {
-        case Both =>
-          val swapped = relForExpand.select(relForExpand.columns.map {
-            case "__src" => col("__dst").as("__src")
-            case "__dst" => col("__src").as("__dst")
-            case c       => col(c)
-          }.toSeq: _*)
-          relForExpand.unionByName(swapped)
+        case Both => relForExpand.unionByName(swapEnds(relForExpand))
         case _ => relForExpand
       }
       // Per-step inner node constraints of a quantified group
@@ -2696,11 +2723,11 @@ object CypherPlanner {
       // so its traversal source is the stored __dst. Zero-length
       // branches ({0,m}) are untouched — no step executes, so step
       // constraints are vacuous (GQL semantics).
+      val (sCol, dCol) =
+        if (rel.direction == In) ("__dst", "__src") else ("__src", "__dst")
       val endpointFiltered = rel.stepFilters match {
         case None => orientedRel
         case Some((aPat, bPat)) =>
-          val (sCol, dCol) =
-            if (rel.direction == In) ("__dst", "__src") else ("__src", "__dst")
           var e = orientedRel
           constraintIds(aPat).foreach(f =>
             e = e.join(f, e(sCol) === f("__id"), "left_semi"))
@@ -2710,36 +2737,78 @@ object CypherPlanner {
       }
       // Inline per-step WHERE (`((a)-[r:T]->(b) WHERE a.p < b.p){n,m}`):
       // evaluated once per repetition with the inner variables bound to
-      // that repetition's elements. A repetition is one edge, so the
-      // predicate compiles to a FILTER ON THE EDGE LIST, applied once
-      // before expansion: referenced node properties materialize as
-      // `v__p` columns via id-equi-joins against the (label-pruned)
-      // node tables, relationship properties alias in place, and the
-      // existing scalar compiler evaluates the predicate unchanged.
-      // Left joins + filter give Cypher's missing-property semantics
-      // (null predicate = row dropped). Zero-length branches stay
-      // untouched — no step executes, so the WHERE is vacuous.
+      // that repetition's elements. The predicate compiles to a FILTER
+      // ON THE REPETITION FRAME, applied once before repetitions chain
+      // (a single-hop group's repetition is one edge, so it filters the
+      // edge list; a multi-hop group's filters the composed frame):
+      // referenced node properties materialize as `v__p` columns via
+      // id-equi-joins against the (label-pruned) node tables,
+      // relationship properties alias in place, and the existing
+      // scalar compiler evaluates the predicate unchanged. Left joins +
+      // filter give Cypher's missing-property semantics (null predicate
+      // = row dropped). Zero-length branches stay untouched — no step
+      // executes, so the WHERE is vacuous.
       // Outer-scope variables referenced by a quantified-group WHERE
       // (`((a)-[r]->(b) WHERE a.p > x.q){n,m}` with x bound earlier):
       // decorrelated by embedding the DISTINCT outer-value tuples into
-      // the edge keys. The tuple frame (value domain, usually tiny) is
-      // broadcast-crossed into the edge list, the predicate filters
-      // per tuple, and __src/__dst become (id, tuple) structs — so the
-      // untouched var-expand machinery chains repetitions WITHIN one
-      // outer binding, and the final join matches walks back to the
-      // bound rows on start id + tuple equality. Per-repetition
-      // semantics are Neo4j's: the outer value is constant across a
-      // walk and every step's predicate saw it.
-      var qppOuterCols: Seq[String] = Nil
+      // the repetition keys. The tuple frame (value domain, usually
+      // tiny) is broadcast-crossed into the frame, the predicate
+      // filters per tuple, and __src/__dst become (id, tuple) structs —
+      // so the untouched expansion chains repetitions WITHIN one outer
+      // binding, and the final join matches walks back to the bound
+      // rows on start id + tuple equality. Per-repetition semantics are
+      // Neo4j's: the outer value is constant across a walk and every
+      // step's predicate saw it. The outer columns follow from the
+      // predicate alone, before any frame is built, so one seed shape
+      // serves both hop kinds.
+      val (propRefs, identRefs) = rel.stepWhere.fold(
+        (Map.empty[String, Set[String]], Set.empty[String]))(stepWhereRefs)
+      val qppOuterCols: Seq[String] =
+        if (rel.stepWhere.isEmpty) Nil
+        else {
+          val inScope = (rel.groupChain match {
+            case Some(ch) => (ch.start +: ch.hops.map(_._2)).flatMap(_.variable)
+            case None => rel.groupNodes.toSeq.flatMap { case (a, b) =>
+              a.toSeq ++ b.toSeq } ++ rel.variable.toSeq
+          }).toSet
+          val refs = propRefs.keySet ++ identRefs
+          val outerVars = (refs -- inScope).filter(bound.contains)
+          val unknown = refs -- inScope -- outerVars
+          require(unknown.isEmpty,
+            (if (rel.groupChain.isDefined)
+              "a multi-hop quantified-group WHERE may reference the " +
+                "group's inner node variables"
+            else "a quantified-group WHERE may reference the group's " +
+              "inner variables") +
+              s" (${inScope.mkString(", ")}) or previously bound ones; " +
+              s"unknown: ${unknown.mkString(", ")}")
+          // outer variables compose with shortestPath/allShortestPaths
+          // since r15: the BFS machinery is key-agnostic (joins,
+          // distincts and anti-joins on __src/__dst work on the
+          // (id, tuple) structs unchanged), so each outer binding gets
+          // its own per-tuple BFS for free — paths never cross tuples
+          // because struct equality requires the tuple to match.
+          val outerCols = outerVars.toSeq.sorted.flatMap { v =>
+            propRefs.getOrElse(v, Set.empty).toSeq.sorted
+              .map(p => s"${v}__$p") ++
+              (if (identRefs.contains(v)) Seq(s"${v}__id") else Seq.empty)
+          }.distinct
+          outerCols.foreach(c =>
+            require(df != null && df.columns.contains(c),
+              s"outer reference '$c' of the quantified-group WHERE is " +
+                s"not a column of the bound frame (is the property " +
+                s"carried by the variable's label table?)"))
+          outerCols
+        }
       // The decorrelation is a forced broadcast + cross-join: |domain|
-      // MULTIPLIES every edge-list row, and the broadcast hint
-      // overrides Spark's own size safety — so the distinct domain is
-      // counted first (one cheap action over a frame that is built
-      // anyway) and anything above the cap rejects loudly instead of
-      // going quadratic / OOMing the driver. A query whose outer
-      // variable ranges over millions of rows should aggregate or
-      // pre-filter that domain into a small one before correlating it
-      // into a per-step QPP predicate.
+      // MULTIPLIES every frame row, and the broadcast hint overrides
+      // Spark's own size safety — so the distinct domain is counted
+      // first (one cheap action over a frame that is built anyway) and
+      // anything above the cap rejects loudly instead of going
+      // quadratic / OOMing the driver. A query whose outer variable
+      // ranges over millions of rows should aggregate or pre-filter
+      // that domain into a small one before correlating it into a
+      // per-step QPP predicate.
       lazy val qppOuterTuples: DataFrame = {
         val t = df.select(qppOuterCols.map(col): _*).distinct()
         val n = t.limit(MaxQppOuterDomain + 1).count()
@@ -2752,128 +2821,81 @@ object CypherPlanner {
             s"to at most $MaxQppOuterDomain distinct values first")
         broadcast(t)
       }
-      val stepFiltered = rel.stepWhere match {
-        case None => endpointFiltered
+      // a node key under an outer-ref WHERE: the (id, outer tuple)
+      // struct that keeps every expansion within one outer binding
+      def outerKey(id: Column): Column =
+        if (qppOuterCols.isEmpty) id
+        else struct((id.as("i") +: qppOuterCols.map(col)): _*)
+      // The step WHERE on one repetition frame `e`. Each node position
+      // is (inner name, id column, pattern label, schema labels):
+      // referenced properties join in via propLookup (pattern label →
+      // declared endpoint labels → property-carrier union), id(v) and
+      // bare-identity uses read `v__id`; `rels` alias a single hop's
+      // relationship properties. Under outer references the keys
+      // become (id, tuple) structs; edge identity and the walk arrays
+      // stay plain (an edge is the same edge under every tuple).
+      def stepWhereFilter(e: DataFrame,
+          positions: Seq[(Option[String], Column, Option[String], Seq[String])],
+          rels: Seq[(String, Column)]): DataFrame = {
+        var f = if (qppOuterCols.isEmpty) e else e.crossJoin(qppOuterTuples)
+        positions.foreach {
+          case (Some(v), idCol, patLabel, labels) =>
+            if (propRefs.contains(v)) {
+              val pf = propLookup(v, propRefs(v).toSeq.sorted, patLabel, labels)
+              f = f.join(pf, idCol === pf(s"${v}__@pid"), "left_outer")
+            }
+            if (identRefs.contains(v)) f = f.withColumn(s"${v}__id", idCol)
+          case _ =>
+        }
+        rels.foreach { case (n, c) => f = f.withColumn(n, c) }
+        f.filter(toColumn(rel.stepWhere.get, Bindings.empty))
+          .select(e.columns.toSeq.map {
+            case k @ ("__src" | "__dst") => outerKey(col(k)).as(k)
+            case c => col(c)
+          }: _*)
+      }
+      val stepFiltered =
         // a multi-hop group's WHERE filters whole REPETITIONS of the
-        // composite frame — handled inside compositeExpand, where the
+        // composite frame — applied in compositeFrame, where the
         // per-position node ids exist
-        case Some(_) if rel.groupChain.isDefined => endpointFiltered
-        case Some(pred) =>
-          val aVar = rel.groupNodes.flatMap(_._1)
-          val bVar = rel.groupNodes.flatMap(_._2)
-          val rVar = rel.variable
-          val (propRefs, identRefs) = stepWhereRefs(pred)
-          val inScope = (aVar.toSeq ++ bVar.toSeq ++ rVar.toSeq).toSet
-          val refs = propRefs.keySet ++ identRefs
-          val outerVars = (refs -- inScope).filter(bound.contains)
-          val unknown = refs -- inScope -- outerVars
-          require(unknown.isEmpty,
-            s"a quantified-group WHERE may reference the group's inner " +
-              s"variables (${inScope.mkString(", ")}) or previously " +
-              s"bound ones; unknown: ${unknown.mkString(", ")}")
-          // outer variables compose with shortestPath/allShortestPaths
-          // since r15: the BFS machinery is key-agnostic (joins,
-          // distincts and anti-joins on __src/__dst work on the
-          // (id, tuple) structs unchanged), so each outer binding gets
-          // its own per-tuple BFS for free — paths never cross tuples
-          // because struct equality requires the tuple to match.
-          val outerCols: Seq[String] = outerVars.toSeq.sorted.flatMap { v =>
-            val pcols = propRefs.getOrElse(v, Set.empty).toSeq.sorted
-              .map(p => s"${v}__$p")
-            val icols =
-              if (identRefs.contains(v)) Seq(s"${v}__id") else Seq.empty
-            pcols ++ icols
-          }.distinct
-          outerCols.foreach(c =>
-            require(df != null && df.columns.contains(c),
-              s"outer reference '$c' of the quantified-group WHERE is " +
-                s"not a column of the bound frame (is the property " +
-                s"carried by the variable's label table?)"))
-          qppOuterCols = outerCols
-          val (sCol, dCol) =
-            if (rel.direction == In) ("__dst", "__src") else ("__src", "__dst")
-          // declared endpoint label(s) of this hop's relationship
-          // type(s). An undirected hop traverses mirrored edge rows,
-          // so EITHER declared endpoint can be a step's source or
-          // target — include both (ids are globally unique across
-          // labels, the union never duplicates a node); a one-sided
-          // lookup would null out the predicate on mirrored rows of a
-          // heterogeneous-endpoint relationship and silently drop them
-          def endpointLabels(isSource: Boolean): Seq[String] =
-            (rel.relType.toSeq ++ rel.altTypes)
-              .flatMap(graph.relEndpoints.get)
-              .flatMap { ep =>
-                if (rel.direction == Both) Seq(ep._1, ep._2)
-                else Seq(
-                  if (isSource == (rel.direction != In)) ep._1 else ep._2)
-              }
-              .distinct
-          var e = endpointFiltered
-          if (outerCols.nonEmpty) e = e.crossJoin(qppOuterTuples)
-          Seq((aVar, true, sCol), (bVar, false, dCol)).foreach {
-            case (Some(v), isSource, ec) if propRefs.contains(v) ||
-                identRefs.contains(v) =>
-              if (propRefs.contains(v)) {
-                val patLabel = rel.stepFilters.flatMap { case (ap, bp) =>
-                  (if (isSource) ap else bp).soleLabel
-                }
-                val pf = propLookup(v, propRefs(v).toSeq.sorted, patLabel,
-                  endpointLabels(isSource))
-                e = e.join(pf, e(ec) === pf(s"${v}__@pid"), "left_outer")
-              }
-              if (identRefs.contains(v)) {
-                // id(v) and bare-identity uses read v__id
-                e = e.withColumn(s"${v}__id", col(ec))
-              }
-            case _ =>
-          }
+        if (rel.stepWhere.isEmpty || rel.groupChain.isDefined) endpointFiltered
+        else {
+          val (aVar, bVar) = rel.groupNodes.getOrElse((None, None))
+          def patLabel(source: Boolean) = rel.stepFilters.flatMap {
+            case (ap, bp) => (if (source) ap else bp).soleLabel }
           // relationship property refs alias the edge frame's own
           // plain-named property columns
-          rVar.filter(propRefs.contains).foreach { v =>
-            propRefs(v).foreach { p =>
+          val rels = rel.variable.filter(propRefs.contains).toSeq.flatMap { v =>
+            propRefs(v).toSeq.map { p =>
               require(endpointFiltered.columns.contains(p),
                 s"relationship property '$p' referenced by the " +
                   s"quantified-group WHERE is not a property of :" +
                   s"${(rel.relType.toSeq ++ rel.altTypes).mkString("|")} " +
                   s"(have: ${endpointFiltered.columns
                     .filterNot(_.startsWith("__")).sorted.mkString(", ")})")
-              e = e.withColumn(s"${v}__$p", col(p))
+              s"${v}__$p" -> col(p)
             }
           }
-          val kept = e.filter(toColumn(pred, Bindings.empty))
-          if (outerCols.isEmpty)
-            kept.select(endpointFiltered.columns.map(col).toSeq: _*)
-          else
-            // composite keys: (id, outer tuple) structs keep the
-            // expansion within one outer binding; edge identity stays
-            // plain (an edge is the same edge under every tuple)
-            kept.select(endpointFiltered.columns.toSeq.map {
-              case "__src" => struct((col("__src").as("i") +:
-                outerCols.map(col)): _*).as("__src")
-              case "__dst" => struct((col("__dst").as("i") +:
-                outerCols.map(col)): _*).as("__dst")
-              case c => col(c)
-            }: _*)
-      }
+          stepWhereFilter(endpointFiltered,
+            Seq((aVar, col(sCol), patLabel(true), endpointLabels(rel, true)),
+              (bVar, col(dCol), patLabel(false), endpointLabels(rel, false))),
+            rels)
+        }
       // shortest-path chains seed the BFS with the start variable's
       // bound id set (the pre-bound MATCH spelling, or at least the
       // start label's scan): sources outside the binding can never
       // survive the later join, so expanding them is pure waste — the
       // difference between all-pairs BFS over the whole edge set and
       // a frontier proportional to the restriction (a 40-part seed
-      // touches ~1k edges where all-pairs touches millions)
+      // touches ~1k edges where all-pairs touches millions). Under an
+      // outer-ref WHERE the frame keys are (id, tuple) structs — the
+      // seed mirrors that shape, so each bound row seeds exactly its
+      // own tuple's BFS.
       val bfsSeed: Option[DataFrame] =
         if (chain.shortest && df != null &&
-            df.columns.contains(s"${cur}__id")) {
-          // under an outer-ref WHERE the edge keys are (id, tuple)
-          // structs — the seed mirrors that shape, so each bound row
-          // seeds exactly its own tuple's BFS
-          val sid =
-            if (qppOuterCols.isEmpty) col(s"${cur}__id").as("__seedid")
-            else struct((col(s"${cur}__id").as("i") +:
-              qppOuterCols.map(col)): _*).as("__seedid")
-          Some(df.select(sid).distinct())
-        } else None
+            df.columns.contains(s"${cur}__id"))
+          Some(df.select(outerKey(col(s"${cur}__id")).as("__seedid")).distinct())
+        else None
       // Plain var-length expansion gets the SAME pre-bound-start
       // seeding as the shortest-path BFS: whenever the hop's source
       // variable is already bound — the chain's first hop after an
@@ -2895,6 +2917,8 @@ object CypherPlanner {
             df.columns.contains(s"${cur}__id"))
           Some(df.select(col(s"${cur}__id").as("__seedid")).distinct())
         else None
+      def seededBy(f: DataFrame, key: String): DataFrame = varSeed.fold(f)(s =>
+        f.join(s, f(key) === s("__seedid"), "left_semi"))
       // An In-direction hop keeps its edge list in STORED orientation
       // (the join keys flip instead), so the bound variable `cur`
       // sits at the walk's far end — seeding stored __src with cur's
@@ -2908,12 +2932,7 @@ object CypherPlanner {
       // plan is already minimal.
       val inFlip = rel.direction == In && rel.groupChain.isEmpty &&
         (varSeed.isDefined || bfsSeed.isDefined)
-      def flipEdges(e: DataFrame): DataFrame = e.select(e.columns.map {
-        case "__src" => col("__dst").as("__src")
-        case "__dst" => col("__src").as("__dst")
-        case c       => col(c)
-      }.toSeq: _*)
-      val expandEdges = if (inFlip) flipEdges(stepFiltered) else stepFiltered
+      val expandEdges = if (inFlip) swapEnds(stepFiltered) else stepFiltered
       // Neo4j rejects shortestPath over a fixed-length relationship
       // ("requires a pattern with variable length") — fail the same
       // way instead of an opaque None.get below
@@ -2922,13 +2941,16 @@ object CypherPlanner {
         "shortestPath/allShortestPaths requires a variable-length " +
           "relationship pattern (e.g. -[:T*]->), got a fixed-length one")
       // Multi-hop quantified group: compose the inner chain into a
-      // composite edge frame — one row per full repetition, carrying
-      // the repetition's node-id list (pattern order after the start)
-      // and its edge-identity list (for whole-path uniqueness) — then
-      // var-expand repetitions exactly like single edges. Per-inner-
-      // node label/prop constraints semi-join each hop's endpoints
-      // ONCE, before composition.
-      def compositeExpand(ch: PatternChain, lo: Int, hi: Int): DataFrame = {
+      // composite REPETITION frame — one row per full repetition,
+      // carrying the repetition's node-id list (pattern order after the
+      // start) and its edge-identity list (for whole-path uniqueness)
+      // — which the expansion then chains exactly like single edges.
+      // Per-inner-node label/prop constraints semi-join each hop's
+      // endpoints ONCE, before composition. Returns the frame and, for
+      // a seeded search without outer references, the frame composed
+      // per round from a start set.
+      def compositeFrame(ch: PatternChain, lo: Int,
+          hi: Int): (DataFrame, Option[DataFrame => DataFrame]) = {
         // plain MATCH, shortestPath (r16), WEIGHTED shortestPath (r16
         // — a repetition's weight is the sum of its inner edges'
         // weights), allShortestPaths (r16 — the capped composite
@@ -2952,39 +2974,14 @@ object CypherPlanner {
         val h = ch.hops.size
         val nodePats = ch.start +: ch.hops.map(_._2)
         val hopFrames0 = ch.hops.zipWithIndex.map { case ((r, _), j) =>
-          // the hop's edge tables in STORED orientation: a typed hop
-          // reads one table; `-[:A|B]->` the listed tables; a typeless
-          // hop every table whose declared endpoints can match the
-          // inner node labels (static schema pruning, exactly like the
-          // single-hop typeless union — at 100 TB the difference
-          // between two small scans and every edge list in the graph)
+          // the hop's edge tables in STORED orientation, schema-pruned
+          // against the inner node labels exactly like a single hop;
           // a NAMED inner relationship binds a per-repetition payload
           // list; the payload struct gets ONE fixed schema by
           // null-filling each branch up to the union property schema
           // (r15 — replaces the former single-type require)
-          val (srcPat, dstPat) =
-            if (r.direction == In) (nodePats(j + 1), nodePats(j))
-            else (nodePats(j), nodePats(j + 1))
-          def fits(want: Option[String], have: String) = want.forall(_ == have)
-          val typed: Seq[(String, DataFrame)] = r.relType match {
-            case Some(t) if r.altTypes.isEmpty => Seq(t -> graph.relTable(t))
-            case Some(t) => (t +: r.altTypes).distinct.sorted
-              .map(tn => tn -> graph.relTable(tn))
-            case None => graph.rels.toSeq.sortBy(_._1)
-              .filterNot { case (tn, _) => r.negTypes.contains(tn) }
-              .filter { case (tn, _) =>
-              graph.relEndpoints.get(tn) match {
-                case None => true // schema unknown for this type: keep
-                case Some((sl, dl)) => r.direction match {
-                  case Both =>
-                    (fits(srcPat.soleLabel, sl) && fits(dstPat.soleLabel, dl)) ||
-                      (fits(srcPat.soleLabel, dl) && fits(dstPat.soleLabel, sl))
-                  case _ =>
-                    fits(srcPat.soleLabel, sl) && fits(dstPat.soleLabel, dl)
-                }
-              }
-            }
-          }
+          val typed = relTables(r, nodePats(j).soleLabel,
+            nodePats(j + 1).soleLabel)
           require(typed.nonEmpty,
             s"no relationship type connects the labels of quantified-" +
               s"group hop ${j + 1} (schema-pruned to nothing)")
@@ -2998,23 +2995,8 @@ object CypherPlanner {
           // stored orientation (the mirror carries it through, so an
           // undirected edge and its mirror share one identity)
           val tagged = typed.map { case (tn, t0) =>
-            // inline property maps filter per branch: a type without
-            // the property contributes nothing (null never equals)
-            var base = t0
-            r.props.foreach { case (k, v) =>
-              base =
-                if (base.columns.contains(k)) base.filter(col(k) === lit(v))
-                else base.filter(lit(false)) }
-            val ordCols = base.columns.toSeq
-              .filterNot(Set("__src", "__dst")).sorted.map(col) match {
-              case Seq() => Seq(col("__src"))
-              case cs    => cs
-            }
-            val w = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("__src"), col("__dst")).orderBy(ordCols: _*)
-            var out = base.withColumn("__eid",
-              struct(lit(tn).as("t"), col("__src").as("u"),
-                col("__dst").as("v"), row_number().over(w).as("k")))
+            val base = propsFilter(t0, r.props)
+            var out = withEid(base, lit(tn))
             // named hop: payload struct in stored orientation (type,
             // endpoints, the union property schema — branches
             // null-fill properties their type lacks) — same shape as
@@ -3038,7 +3020,7 @@ object CypherPlanner {
               require(base.columns.contains(wp),
                 s"weight property '$wp' is not a property of " +
                   s"quantified-group hop ${j + 1} (type $tn)")
-              out = out.withColumn("__hw", positiveWeightOrDie(wp,
+              out = out.withColumn("__hw", positiveWeightOrDie(col(wp), wp,
                 "weighted shortestPath over a quantified group"))
             }
             out.select(Seq(col("__src"), col("__dst"), col("__eid")) ++
@@ -3050,15 +3032,10 @@ object CypherPlanner {
           // orient into TRAVERSAL order: after this, __src is always
           // the step's source. An In hop walks stored edges backward;
           // an undirected hop both ways (mirrored, identity unchanged)
-          val swapped = tagged.select(tagged.columns.map {
-            case "__src" => col("__dst").as("__src")
-            case "__dst" => col("__src").as("__dst")
-            case c       => col(c)
-          }.toSeq: _*)
           var oriented = r.direction match {
             case Out  => tagged
-            case In   => swapped
-            case Both => tagged.unionByName(swapped)
+            case In   => swapEnds(tagged)
+            case Both => tagged.unionByName(swapEnds(tagged))
           }
           // per-inner-node constraints: hop j runs node j → node j+1
           // in traversal order
@@ -3113,9 +3090,9 @@ object CypherPlanner {
         // one-task stages over the reach-restricted rows, while
         // checkpoint blocks are probed at their materialized width by
         // every round. The recomputation IS the cheaper shape here.
-        val namedIdx = ch.hops.zipWithIndex.collect {
+        val named = ch.hops.zipWithIndex.collect {
           case ((r, _), j) if r.variable.isDefined => j
-        }.toSet
+        }
         val weighted = chain.weightProp.isDefined
         // Repetition composition as a FUNCTION of the allowed start
         // set (r16): a SEEDED composite search composes, per BFS
@@ -3127,272 +3104,143 @@ object CypherPlanner {
         // CONTAINS key took 181 s at sf1 eagerly; frontier-bounded
         // it tracks the plain weighted search).
         def composeRep(startIds: Option[DataFrame]): DataFrame = {
-        val head0 = hopFrames.head
-        val headF = startIds match {
-          case Some(sd) =>
-            head0.join(sd, head0("__src") === sd("__cstart"), "left_semi")
-          case None => head0
-        }
-        val oneRep = hopFrames.tail.zipWithIndex
-          .foldLeft(headF.select(Seq(col("__src"), col("__dst"),
-            array(col("__eid")).as("__nes"),
-            array(col("__dst")).as("__snids")) ++
-            (if (namedIdx(0)) Seq(col("__epl").as("__epl_0"))
-             else Seq.empty) ++
-            (if (weighted) Seq(col("__hw").as("__wsum"))
-             else Seq.empty): _*)) { case (acc, (hf, j)) =>
-            val right = hf.select(Seq(col("__src").as(s"__g$j"),
-              col("__dst").as("__gd"), col("__eid").as("__ge")) ++
-              (if (namedIdx(j + 1)) Seq(col("__epl").as("__ge_epl"))
+          val head0 = hopFrames.head
+          val headF = startIds match {
+            case Some(sd) =>
+              head0.join(sd, head0("__src") === sd("__cstart"), "left_semi")
+            case None => head0
+          }
+          val oneRep = hopFrames.tail.zipWithIndex
+            .foldLeft(headF.select(Seq(col("__src"), col("__dst"),
+              array(col("__eid")).as("__eids"),
+              array(col("__dst")).as("__nids")) ++
+              (if (named.contains(0)) Seq(col("__epl").as("__epl_0"))
                else Seq.empty) ++
-              (if (weighted) Seq(col("__hw").as("__ge_hw"))
-               else Seq.empty): _*)
-            val keepEpls = acc.columns.filter(_.startsWith("__epl_"))
-              .toSeq.map(acc(_))
-            acc.join(right, acc("__dst") === right(s"__g$j") &&
-                !array_contains(acc("__nes"), right("__ge")))
-              .select(Seq(acc("__src"), col("__gd").as("__dst"),
-                concat(acc("__nes"), array(col("__ge"))).as("__nes"),
-                concat(acc("__snids"), array(col("__gd"))).as("__snids")) ++
-                keepEpls ++
-                (if (namedIdx(j + 1))
-                  Seq(col("__ge_epl").as(s"__epl_${j + 1}"))
-                else Seq.empty) ++
-                (if (weighted)
-                  Seq((acc("__wsum") + col("__ge_hw")).as("__wsum"))
-                else Seq.empty): _*)
-          }
-        // Inline WHERE on a multi-hop group: the predicate relates one
-        // REPETITION's nodes to each other, so it filters the composite
-        // frame once, before repetitions chain. Node position j of the
-        // inner chain is __src (j = 0) or __snids[j-1]; referenced
-        // properties join in via the shared propLookup (pattern label →
-        // schema-derived adjacent-hop endpoint labels → prop-carrier
-        // union), and the scalar compiler evaluates the predicate
-        // unchanged. Zero-length branches never ran a repetition, so
-        // they stay untouched (same vacuous-WHERE rule as single-hop).
-        rel.stepWhere match {
-          case None => oneRep
-          case Some(pred) =>
-            val names = nodePats.map(_.variable)
-            val (propRefs, identRefs) = stepWhereRefs(pred)
-            val inScope = names.flatten.toSet
-            val refs = propRefs.keySet ++ identRefs
-            val outerVars = (refs -- inScope).filter(bound.contains)
-            val unknown = refs -- inScope -- outerVars
-            require(unknown.isEmpty,
-              s"a multi-hop quantified-group WHERE may reference the " +
-                s"group's inner node variables " +
-                s"(${inScope.mkString(", ")}) or previously bound " +
-                s"ones; unknown: ${unknown.mkString(", ")}")
-            // outer-scope references decorrelate exactly like the
-            // single-hop path: distinct outer tuples broadcast-cross
-            // into the repetition frame, the keys embed the tuple so
-            // chaining stays within one binding (walk node/edge
-            // arrays stay plain — they never join)
-            val outerCols: Seq[String] = outerVars.toSeq.sorted.flatMap { v =>
-              val pcols = propRefs.getOrElse(v, Set.empty).toSeq.sorted
-                .map(p => s"${v}__$p")
-              val icols =
-                if (identRefs.contains(v)) Seq(s"${v}__id") else Seq.empty
-              pcols ++ icols
-            }.distinct
-            outerCols.foreach(c =>
-              require(df != null && df.columns.contains(c),
-                s"outer reference '$c' of the quantified-group WHERE " +
-                  s"is not a column of the bound frame"))
-            qppOuterCols = outerCols
-            // candidate labels for position j, from the declared
-            // endpoints of the adjacent hop (traversal orientation)
-            def posLabels(j: Int): Seq[String] = {
-              def epLabels(r: RelPattern, source: Boolean): Seq[String] =
-                (r.relType.toSeq ++ r.altTypes)
-                  .flatMap(graph.relEndpoints.get).flatMap { ep =>
-                    r.direction match {
-                      case Both => Seq(ep._1, ep._2)
-                      case In   => Seq(if (source) ep._2 else ep._1)
-                      case Out  => Seq(if (source) ep._1 else ep._2)
-                    }
-                  }
-              (if (j == 0) epLabels(ch.hops.head._1, source = true)
-               else epLabels(ch.hops(j - 1)._1, source = false)).distinct
+              (if (weighted) Seq(col("__hw").as("__w"))
+               else Seq.empty): _*)) { case (acc, (hf, j)) =>
+              val right = hf.select(Seq(col("__src").as(s"__g$j"),
+                col("__dst").as("__gd"), col("__eid").as("__ge")) ++
+                (if (named.contains(j + 1)) Seq(col("__epl").as("__ge_epl"))
+                 else Seq.empty) ++
+                (if (weighted) Seq(col("__hw").as("__ge_hw"))
+                 else Seq.empty): _*)
+              val keepEpls = acc.columns.filter(_.startsWith("__epl_"))
+                .toSeq.map(acc(_))
+              acc.join(right, acc("__dst") === right(s"__g$j") &&
+                  !array_contains(acc("__eids"), right("__ge")))
+                .select(Seq(acc("__src"), col("__gd").as("__dst"),
+                  concat(acc("__eids"), array(col("__ge"))).as("__eids"),
+                  concat(acc("__nids"), array(col("__gd"))).as("__nids")) ++
+                  keepEpls ++
+                  (if (named.contains(j + 1))
+                    Seq(col("__ge_epl").as(s"__epl_${j + 1}"))
+                  else Seq.empty) ++
+                  (if (weighted)
+                    Seq((acc("__w") + col("__ge_hw")).as("__w"))
+                  else Seq.empty): _*)
             }
-            var e = oneRep
-            if (outerCols.nonEmpty) e = e.crossJoin(qppOuterTuples)
-            names.zipWithIndex.foreach {
-              case (Some(v), j) if propRefs.contains(v) ||
-                  identRefs.contains(v) =>
-                val idCol =
-                  if (j == 0) col("__src")
-                  else element_at(col("__snids"), j)
-                if (identRefs.contains(v))
-                  e = e.withColumn(s"${v}__id", idCol)
-                if (propRefs.contains(v)) {
-                  val pf = propLookup(v, propRefs(v).toSeq.sorted,
-                    nodePats(j).soleLabel, posLabels(j))
-                  e = e.join(pf, idCol === pf(s"${v}__@pid"), "left_outer")
-                }
-              case _ =>
-            }
-            val kept = e.filter(toColumn(pred, Bindings.empty))
-            if (outerCols.isEmpty)
-              kept.select(oneRep.columns.map(col).toSeq: _*)
-            else
-              kept.select(oneRep.columns.toSeq.map {
-                case "__src" => struct((col("__src").as("i") +:
-                  outerCols.map(col)): _*).as("__src")
-                case "__dst" => struct((col("__dst").as("i") +:
-                  outerCols.map(col)): _*).as("__dst")
-                case c => col(c)
-              }: _*)
-        }
-        }
-        val named = namedIdx.toSeq.sorted
-        def baseOf(startIds: Option[DataFrame]): DataFrame =
-          composeRep(startIds).select(Seq(col("__src"), col("__dst"),
-            col("__nes").as("__eids"), col("__snids").as("__nids")) ++
+          // Inline WHERE on a multi-hop group: the predicate relates
+          // one REPETITION's nodes to each other, so it filters the
+          // composite frame once, before repetitions chain. Node
+          // position j of the inner chain is __src (j = 0) or
+          // __nids[j-1]; its schema labels come from the adjacent
+          // hop's declared endpoints (traversal orientation).
+          val filtered =
+            if (rel.stepWhere.isEmpty) oneRep
+            else stepWhereFilter(oneRep, nodePats.zipWithIndex.map {
+              case (np, 0) => (np.variable, col("__src"), np.soleLabel,
+                endpointLabels(ch.hops.head._1, source = true))
+              case (np, j) => (np.variable, element_at(col("__nids"), j),
+                np.soleLabel, endpointLabels(ch.hops(j - 1)._1, source = false))
+            }, Nil)
+          filtered.select(Seq(col("__src"), col("__dst"), col("__eids"),
+            col("__nids")) ++
             named.map(j => array(col(s"__epl_$j")).as(s"__epls_$j")) ++
-            (if (weighted) Seq(col("__wsum").as("__w")) else Seq.empty): _*)
-        // an outer-ref repetition WHERE composite-keys the frame, so
-        // the lazy start restriction (plain long keys) cannot apply
-        val hasOuterWhere = rel.stepWhere.exists { pred =>
-          val (pr, ir) = stepWhereRefs(pred)
-          ((pr.keySet ++ ir) -- nodePats.flatMap(_.variable).toSet).nonEmpty
+            (if (weighted) Seq(col("__w")) else Seq.empty): _*)
         }
-        // shortest-path selectors over the composite frame: the
-        // frontier kernel steps one repetition per level (fewest
-        // repetitions = fewest edges, k·h monotone in k; the weighted
-        // spelling relaxes on the summed repetition weight, k·h-
-        // bounded). Seed rebuilt HERE because an
-        // outer-ref repetition WHERE composite-keys the frame only
-        // during composeRep above — the chain-level bfsSeed predates
-        // that. A SEEDED search with plain keys composes lazily, per
-        // round, from its frontier.
-        if (chain.shortest) {
-          // an outer-ref WHERE populates qppOuterCols during
-          // composition — run one (lazy, plan-only) compose before
-          // choosing the seed's key shape
-          if (hasOuterWhere) composeRep(None)
-          val spSeed: Option[DataFrame] =
-            if (df != null && df.columns.contains(s"${cur}__id")) {
-              val sidCol =
-                if (qppOuterCols.isEmpty) col(s"${cur}__id").as("__seedid")
-                else struct((col(s"${cur}__id").as("i") +:
-                  qppOuterCols.map(col)): _*).as("__seedid")
-              Some(df.select(sidCol).distinct())
-            } else None
-          val composeFrom: Option[DataFrame => DataFrame] =
-            if (spSeed.isDefined && !hasOuterWhere)
-              Some((starts: DataFrame) => baseOf(Some(starts)))
-            else None
-          return frontierSearch(baseOf(None), pathSel, Walks, lo, hi, spSeed,
-            chain.weightProp, h, composeFrom)
-        }
-        // (r19, measured: checkpointing this once for the k-fold
-        // chaining below — which re-references it per k — made the qpp
-        // family SLOWER, e.g. qpp_multihop4 0.72→0.82 s at 11→24
-        // jobs; the lazy re-derivations fuse and coalesce better)
-        val repFiltered = composeRep(None)
-        val base = repFiltered.select(Seq(col("__src"), col("__dst"),
-          col("__nes").as("__eids"), col("__snids").as("__nids")) ++
-          named.map(j => array(col(s"__epl_$j")).as(s"__epls_$j")) ++
-          (if (weighted) Seq(col("__wsum").as("__w")) else Seq.empty): _*)
-        def kRep(k: Int): DataFrame =
-          (2 to k).foldLeft(base) { (acc, step) =>
-            val right = repFiltered.select(Seq(col("__src").as(s"__m$step"),
-              col("__dst").as("__nd"), col("__nes").as("__ne2"),
-              col("__snids").as("__nn2")) ++
-              named.map(j => col(s"__epl_$j").as(s"__ne_epl_$j")): _*)
-            acc.join(right, acc("__dst") === right(s"__m$step") &&
-                !arrays_overlap(acc("__eids"), right("__ne2")))
-              .select(Seq(acc("__src"), col("__nd").as("__dst"),
-                concat(acc("__eids"), col("__ne2")).as("__eids"),
-                concat(acc("__nids"), col("__nn2")).as("__nids")) ++
-                named.map(j => concat(acc(s"__epls_$j"),
-                  array(col(s"__ne_epl_$j"))).as(s"__epls_$j")): _*)
-          }
-        // `__hops` counts RELATIONSHIPS (length(p)): k repetitions
-        // of an h-hop chain traverse k·h edges
-        val pos =
-          if (hi == 0) None
-          else Some((math.max(lo, 1) to hi)
-            .map(k => kRep(k).select(Seq(col("__src"), col("__dst"),
-              col("__eids"), lit(k * h).as("__hops"), col("__nids")) ++
-              named.map(j => col(s"__epls_$j")): _*))
-            .reduce(_.unionByName(_)))
-        if (lo > 0) pos.get
-        else {
-          val universe0 = graph.nodes.values.map(_.select(col("__id")))
-            .reduce(_.union(_)).distinct()
-          // under an outer-ref WHERE the zero branch exists for every
-          // outer tuple (vacuous WHERE — single-hop rule applies)
-          val universe =
-            if (qppOuterCols.isEmpty) universe0
-            else universe0.crossJoin(qppOuterTuples)
-              .select(struct((col("__id").as("i") +:
-                qppOuterCols.map(col)): _*).as("__id"))
-          val zero0 = universe.select(col("__id").as("__src"),
-            col("__id").as("__dst"), lit(0).as("__hops"))
-          val proto = pos.getOrElse(base.select(Seq(col("__src"),
-            col("__dst"), col("__eids"), lit(0).as("__hops"),
-            col("__nids")) ++ named.map(j => col(s"__epls_$j")): _*))
-          val zero = proto.schema.fields.foldLeft(zero0) { (z, f) =>
-            if (f.name == "__eids" || f.name == "__nids" ||
-                f.name.startsWith("__epls"))
-              z.withColumn(f.name, array().cast(f.dataType))
-            else z
-          }
-          pos match {
-            case None    => zero.select(proto.columns.map(col).toSeq: _*)
-            case Some(p) =>
-              zero.unionByName(p).select(p.columns.map(col).toSeq: _*)
-          }
-        }
+        // a SEEDED search with plain keys composes lazily, per round,
+        // from its frontier (an outer-ref WHERE composite-keys the
+        // frame, which the plain-id start restriction cannot key)
+        (composeRep(None),
+          if (bfsSeed.isDefined && qppOuterCols.isEmpty)
+            Some((starts: DataFrame) => composeRep(Some(starts)))
+          else None)
       }
-      val expanded =
-        if (rel.groupChain.isDefined) {
-          val (lo, hi) = rel.varLength.get
-          require(hi <= CypherParser.MaxVarHops,
-            s"quantified group bound {$lo,$hi} above the shared " +
-              s"var-length cap *..${CypherParser.MaxVarHops}")
-          compositeExpand(rel.groupChain.get, lo, hi)
-        } else if (chain.shortest) {
-          chain.weightProp.foreach { wp =>
-            require(expandEdges.columns.contains(wp),
-              s"weight property '$wp' is not a property of this relationship " +
-                s"(have: ${expandEdges.columns.filterNot(_.startsWith("__"))
-                  .sorted.mkString(", ")})")
-            require(chain.kBest.forall(_ <= 1) || !chain.allShortest,
-              "SHORTEST k (k > 1) does not compose with weighted " +
-                "allShortestPaths (no GQL spelling; see README \"Path " +
-                "selector semantics and permanent carve-outs\")")
+      // The hop's REPETITION FRAME, built once: `__src`, `__dst`, the
+      // node ids each repetition enters (`__nids`), its edge
+      // identities (`__eids`), payload lists (`__epls`, or `__epls_j`
+      // per named inner hop of a group) and weight (`__w`) where the
+      // hop needs them. A single relationship is the h = 1 frame
+      // (`__nids = [dst]`, `__eids = [eid]`, `__epls = [epl]`, the raw
+      // weight), in STORED orientation with the seeded In flip; a
+      // multi-hop group is its composed frame. The shortest-path
+      // selectors search it (frontierSearch), everything else
+      // enumerates it (repetitions).
+      val payload =
+        if (pathSel == AllMinimal && !aspCarry) Sigma
+        else if (pathSel == FirstReach && !spCarry) PairsOnly
+        else Walks
+      val expanded = rel.varLength match {
+        case None => expandEdges
+        case Some((lo, hi)) =>
+          // `first`: the frame of a walk's FIRST repetition — a seeded
+          // plain expansion starts at a bound id, semi-joined BELOW the
+          // frame's array projection, where Catalyst can still push it
+          // under the step-WHERE lookups (a projection of computed
+          // aliases stops that pushdown)
+          val (frame, first, h, composeFrom) = rel.groupChain match {
+            case Some(ch) =>
+              require(hi <= CypherParser.MaxVarHops,
+                s"quantified group bound {$lo,$hi} above the shared " +
+                  s"var-length cap *..${CypherParser.MaxVarHops}")
+              val (f, c) = compositeFrame(ch, lo, hi)
+              (f, f, ch.hops.size, c)
+            case None =>
+              if (chain.shortest) chain.weightProp.foreach { wp =>
+                require(expandEdges.columns.contains(wp),
+                  s"weight property '$wp' is not a property of this " +
+                    s"relationship (have: ${expandEdges.columns
+                      .filterNot(_.startsWith("__")).sorted.mkString(", ")})")
+                require(chain.kBest.forall(_ <= 1) || !chain.allShortest,
+                  "SHORTEST k (k > 1) does not compose with weighted " +
+                    "allShortestPaths (no GQL spelling; see README \"Path " +
+                    "selector semantics and permanent carve-outs\")")
+              }
+              else require((lo == 0 && hi == 0) ||
+                  (hi >= math.max(lo, 1) && hi <= CypherParser.MaxVarHops),
+                s"variable-length bounds *${math.max(lo, 1)}..$hi out of " +
+                  s"supported range (shared cap *..${CypherParser.MaxVarHops})")
+              // a seeded search restricts the scan (and any __eid
+              // identity window) to the seeds' reachable edges; the
+              // weighted walk-free relaxation reads the raw frame
+              val e =
+                if (chain.shortest && (chain.weightProp.isEmpty || payload == Walks))
+                  seedRestrictEdges(expandEdges, bfsSeed, hi)
+                else expandEdges
+              def oneHop(e: DataFrame): DataFrame = e.select(Seq(col("__src"),
+                col("__dst"), array(col("__dst")).as("__nids")) ++
+                Seq("__eid", "__epl").filter(e.columns.contains)
+                  .map(c => array(col(c)).as(c + "s")) ++
+                chain.weightProp.filter(_ => chain.shortest)
+                  .map(wp => col(wp).as("__w")): _*)
+              (oneHop(e), oneHop(seededBy(e, "__src")), 1, None)
           }
-          val payload =
-            if (pathSel == AllMinimal && !aspCarry) Sigma
-            else if (pathSel == FirstReach && !spCarry) PairsOnly
-            else Walks
-          frontierSearch(expandEdges, pathSel, payload, rel.varLength.get._1,
-            rel.varLength.get._2, bfsSeed, chain.weightProp)
-        }
-        else {
-          // zero-lower-bound expansion needs the node universe for
-          // its k=0 branch: every node id, across all labels (a
-          // multi-label node contributes once)
-          val zeroUniverse =
-            if (rel.varLength.exists(_._1 == 0)) {
-              val u = graph.nodes.values.map(_.select(col("__id")))
-                .reduce(_.union(_)).distinct()
-              // under an outer-ref WHERE the k=0 branch must exist for
-              // EVERY outer tuple (zero repetitions = vacuous WHERE,
-              // including null-valued tuples) — composite-key it too
-              Some(
-                if (qppOuterCols.isEmpty) u
-                else u.crossJoin(qppOuterTuples)
-                  .select(struct((col("__id").as("i") +:
-                    qppOuterCols.map(col)): _*).as("__id")))
-            } else None
-          varLengthRel(expandEdges, rel.varLength, zeroUniverse, varSeed)
-        }
+          if (chain.shortest)
+            frontierSearch(frame, pathSel, payload, lo, hi, bfsSeed,
+              chain.weightProp, h, composeFrom)
+          else {
+            // the zero-length branch's domain: every node — per outer
+            // tuple under an outer-ref WHERE (zero repetitions = vacuous
+            // WHERE, null-valued tuples included); the seeded starts
+            // only under a seed (cur = dst there)
+            val universe =
+              if (lo > 0) None
+              else if (qppOuterCols.isEmpty) Some(seededBy(nodeUniverse, "__id"))
+              else Some(nodeUniverse.crossJoin(qppOuterTuples)
+                .select(outerKey(col("__id")).as("__id")))
+            repetitions(frame, first, lo, hi, h, universe)
+          }
+      }
       // flip a seeded In hop's expansion back to the STORED contract
       // every downstream consumer expects: endpoints swap, the walk's
       // node suffix re-derives (stored order = reverse of [traversal
@@ -3404,16 +3252,12 @@ object CypherPlanner {
         else {
           var out = expanded
           if (out.columns.contains("__nids"))
-            out = out.withColumn("__nids",
-              when(size(col("__nids")) === 0, col("__nids")).otherwise(
-                reverse(concat(array(col("__src")),
-                  slice(col("__nids"), lit(1),
-                    greatest(size(col("__nids")) - 1, lit(0)))))))
+            out = out.withColumn("__nids", inWalk(col("__nids"), col("__src")))
           if (out.columns.contains("__eids"))
             out = out.withColumn("__eids", reverse(col("__eids")))
           if (out.columns.contains("__epls"))
             out = out.withColumn("__epls", reverse(col("__epls")))
-          flipEdges(out)
+          swapEnds(out)
         }
       // unpack composite (id, outer-tuple) keys after expansion: the
       // tuple columns surface as __oc_* for the join back to the
@@ -3615,11 +3459,7 @@ object CypherPlanner {
           require(!df.columns.contains(n),
             s"group variable '$n' collides with an existing binding"))
         val walk =
-          if (rel.direction == In)
-            when(size(col("__r_nids")) === 0, col("__r_nids")).otherwise(
-              reverse(concat(array(col(s"${nv}__id")),
-                slice(col("__r_nids"), lit(1),
-                  greatest(size(col("__r_nids")) - 1, lit(0))))))
+          if (rel.direction == In) inWalk(col("__r_nids"), col(s"${nv}__id"))
           else col("__r_nids")
         // zero repetitions (a {0,m} group's k=0 branch) bind BOTH
         // group variables to the empty list — no step executed, so
@@ -3691,13 +3531,10 @@ object CypherPlanner {
         // with its endpoint swapped in for the pattern source
         val contrib =
           if (rel.varLength.isEmpty) array(col(s"${nv}__id"))
+          // a zero-hop walk contributes nothing (start = end, the
+          // seeded start already covers the path's one node)
           else if (rel.direction == In)
-            // a zero-hop walk contributes nothing (start = end, the
-            // seeded start already covers the path's one node)
-            when(size(col("__r_nids")) === 0, col("__r_nids")).otherwise(
-              reverse(concat(array(col(s"${nv}__id")),
-                slice(col("__r_nids"), lit(1),
-                  greatest(size(col("__r_nids")) - 1, lit(0))))))
+            inWalk(col("__r_nids"), col(s"${nv}__id"))
           else col("__r_nids")
         df =
           if (df.columns.contains("__path_nids"))
@@ -3763,134 +3600,63 @@ object CypherPlanner {
     (df, bound)
   }
 
-  /** Expands `-[:T*lo..hi]->` into a union of k-hop compositions of
-    * the relationship table (one row per distinct path, Cypher
-    * multiplicity semantics). Each k-hop is a chain of equi-joins —
-    * Catalyst/AQE picks broadcast vs shuffle per step; at 100 TB the
-    * intermediate frontier is keyed on node id throughout, so the
-    * partitioning is reused between steps.
+  /** Non-shortest expansion of a var-length hop — `-[:T*lo..hi]->`,
+    * a single-hop group `((a)-[:T]->(b)){lo,hi}` or a multi-hop group —
+    * from its repetition frame (`__src`, `__dst`, `__nids`, and
+    * `__eids` / `__epls` / `__epls_j` where the hop needs them; h
+    * relationships per repetition): the union over k in lo..hi of the
+    * k-fold repetition join, one row per distinct walk (Cypher
+    * multiplicity semantics). A walk's lists concatenate per
+    * repetition and `__hops` counts k·h relationships (`length(p)`).
+    * Cypher relationship uniqueness: a repetition whose identities
+    * overlap the walk's is joined away (≤ hi·h small structs per row —
+    * bounded); without it an undirected *2 hop would return every
+    * node as its own neighbor via a-x-a (the mirrored edge reused
+    * backward). A frame without identities (a single hop whose walk
+    * needs no uniqueness bookkeeping) only ever expands k ≤ 1.
+    * Each k-fold is a chain of equi-joins — Catalyst/AQE picks
+    * broadcast vs shuffle per step; at 100 TB the intermediate
+    * frontier is keyed on node id throughout, so the partitioning is
+    * reused between steps. `first` is the frame of a walk's first
+    * repetition: the frame itself, or its restriction to a seed's
+    * bound start ids — only the FIRST repetition is restricted, later
+    * steps roam freely (the final join back to the bound frame
+    * re-checks the start anyway).
     *
-    * lo = 0 (GQL `{0,m}` / `*0..m`) adds the ZERO-LENGTH branch:
-    * one (n, n) row per node in `zeroUniverse` (the graph's full node
-    * id set — isolated nodes have zero-length paths to themselves
-    * too), zero hops, empty edge/node lists. The surrounding joins
-    * apply both endpoints' constraints to the SAME node, exactly
-    * GQL's start-equals-end semantics; `length(p)` sees 0 and
-    * `nodes(p)` the single-node path. |V| extra rows keyed on node
-    * id — no fanout, broadcast/shuffle-join like any other branch.
+    * lo = 0 (GQL `{0,m}` / `*0..m`) adds the ZERO-LENGTH branch: one
+    * (n, n) row per node of `universe` (the graph's full node id set —
+    * isolated nodes have zero-length paths to themselves too — its
+    * (id, outer tuple) keys, or a seed's bound ids), zero hops, typed
+    * empty lists. The surrounding joins apply both endpoints'
+    * constraints to the SAME node, exactly GQL's start-equals-end
+    * semantics; `length(p)` sees 0, `nodes(p)` the single-node path and
+    * group variables the empty list. |V| extra rows keyed on node id —
+    * no fanout, broadcast/shuffle-join like any other branch.
     */
-  private def varLengthRel(rel: DataFrame, varLength: Option[(Int, Int)],
-      zeroUniverse: Option[DataFrame] = None,
-      seed: Option[DataFrame] = None): DataFrame =
-    varLength match {
-      case None => rel
-      case Some((0, hi)) =>
-        val universe0 = zeroUniverse.getOrElse(throw new IllegalStateException(
-          "zero-lower-bound expansion needs the node universe"))
-        // the zero branch exists only for seeded starts too (cur = dst
-        // there, and cur is exactly the seeded variable)
-        val universe = seed match {
-          case Some(sd) => universe0.join(sd,
-            universe0("__id") === sd("__seedid"), "left_semi")
-          case None => universe0
-        }
-        val pos =
-          if (hi == 0) None // `{0}` / `{0,0}`: only the empty path
-          else Some(varLengthRel(rel, Some((1, hi)), None, seed))
-        val zero0 = universe.select(col("__id").as("__src"),
-          col("__id").as("__dst"), lit(0).as("__hops"))
-        val zero = pos match {
-          case None =>
-            // element type follows the universe's id type (plain long,
-            // or an (id, outer-tuple) struct under an outer-ref WHERE)
-            var z = zero0.withColumn("__nids",
-              array().cast(org.apache.spark.sql.types.ArrayType(
-                universe.schema("__id").dataType)))
-            // an eid-tagged hop ({0} under chain-uniqueness or a path
-            // variable) still exposes the (empty) edge-identity list;
-            // a named rel's payload list is empty the same way
-            if (rel.columns.contains("__eid"))
-              z = z.withColumn("__eids", array().cast(
-                org.apache.spark.sql.types.ArrayType(
-                  rel.schema("__eid").dataType)))
-            if (rel.columns.contains("__epl"))
-              z = z.withColumn("__epls", array().cast(
-                org.apache.spark.sql.types.ArrayType(
-                  rel.schema("__epl").dataType)))
-            z
-          case Some(p) =>
-            // typed empty lists matching the positive branches' walk
-            // schema (edge-identity struct type is derived, not spelled)
-            p.schema.fields.foldLeft(zero0) { (z, f) =>
-              if (f.name == "__eids" || f.name == "__nids" ||
-                  f.name == "__epls")
-                z.withColumn(f.name, array().cast(f.dataType))
-              else z
-            }
-        }
-        pos match {
-          case None    => zero
-          case Some(p) => zero.unionByName(p).select(p.columns.map(col).toSeq: _*)
-        }
-      case Some((lo, hi)) =>
-        require(lo >= 1 && hi >= lo && hi <= CypherParser.MaxVarHops,
-          s"variable-length bounds *$lo..$hi out of supported range " +
-            s"(shared cap *..${CypherParser.MaxVarHops})")
-        // `__hops` reports each row's walk length for `length(p)`;
-        // `__nids` the walk's node ids AFTER the source (each step's
-        // destination, in order) for `nodes(p)`
-        val hasEpl = rel.columns.contains("__epl")
-        val eplBase: Seq[Column] =
-          if (hasEpl) Seq(array(col("__epl")).as("__epls")) else Seq.empty
-        // seeded start: only the FIRST step is restricted — every walk
-        // begins at a bound id, later steps roam freely (the final
-        // join back to the bound frame re-checks the start anyway)
-        val first = seed match {
-          case Some(sd) => rel.join(sd,
-            rel("__src") === sd("__seedid"), "left_semi")
-          case None => rel
-        }
-        if (!rel.columns.contains("__eid"))
-          first.select(Seq(col("__src"), col("__dst"), lit(1).as("__hops"),
-            array(col("__dst")).as("__nids")) ++ eplBase: _*)
-        else if (hi <= 1)
-          first.select(Seq(col("__src"), col("__dst"),
-            array(col("__eid")).as("__eids"),
-            lit(1).as("__hops"), array(col("__dst")).as("__nids")) ++
-            eplBase: _*)
-        else {
-          // Cypher relationship uniqueness: a walk may not traverse
-          // the same relationship twice. Each step carries the walk's
-          // edge identities (≤ hi small structs — bounded) and joins
-          // away any edge already used. Without this, an undirected
-          // *2 hop would return every node as its own neighbor via
-          // a-x-a (the mirrored edge reused backward).
-          val base = first.select(Seq(col("__src"), col("__dst"),
-            array(col("__eid")).as("__eids"),
-            array(col("__dst")).as("__nids")) ++ eplBase: _*)
-          def kHop(k: Int): DataFrame =
-            (2 to k).foldLeft(base) { (acc, step) =>
-              val right = rel.select(Seq(col("__src").as(s"__m$step"),
-                col("__dst").as("__nd"), col("__eid").as("__ne")) ++
-                (if (hasEpl) Seq(col("__epl").as("__nepl"))
-                 else Seq.empty): _*)
-              acc.join(right, acc("__dst") === right(s"__m$step") &&
-                  !array_contains(acc("__eids"), right("__ne")))
-                .select(Seq(acc("__src"), col("__nd").as("__dst"),
-                  concat(acc("__eids"), array(col("__ne"))).as("__eids"),
-                  concat(acc("__nids"), array(col("__nd"))).as("__nids")) ++
-                  (if (hasEpl)
-                    Seq(concat(acc("__epls"),
-                      array(col("__nepl"))).as("__epls"))
-                  else Seq.empty): _*)
-            }
-          (lo to hi)
-            .map(k => kHop(k).select(Seq(col("__src"), col("__dst"),
-              col("__eids"), lit(k).as("__hops"), col("__nids")) ++
-              (if (hasEpl) Seq(col("__epls")) else Seq.empty): _*))
-            .reduce(_.unionByName(_))
-        }
+  private def repetitions(frame: DataFrame, first: DataFrame, lo: Int,
+      hi: Int, h: Int, universe: Option[DataFrame]): DataFrame = {
+    val lists = frame.columns.toSeq.filter(c =>
+      c == "__nids" || c == "__eids" || c.startsWith("__epls"))
+    def kRep(k: Int): DataFrame = (2 to k).foldLeft(first) { (acc, step) =>
+      val right = frame.select(col("__src").as(s"__m$step") +:
+        col("__dst").as("__nd") +: lists.map(c => col(c).as(s"__r$c")): _*)
+      acc.join(right, acc("__dst") === right(s"__m$step") &&
+          !arrays_overlap(acc("__eids"), right("__r__eids")))
+        .select(acc("__src") +: col("__nd").as("__dst") +:
+          lists.map(c => concat(acc(c), col(s"__r$c")).as(c)): _*)
     }
+    val pos = (math.max(lo, 1) to hi).map(k => kRep(k).select(
+      Seq(col("__src"), col("__dst"), lit(k * h).as("__hops")) ++
+        lists.map(col): _*)).reduceOption(_.unionByName(_))
+    if (lo > 0) pos.get
+    else {
+      val zero = universe.get.select(
+        Seq(col("__id").as("__src"), col("__id").as("__dst"),
+          lit(0).as("__hops")) ++
+          lists.map(c => array().cast(frame.schema(c).dataType).as(c)): _*)
+      pos.fold(zero)(zero.unionByName(_))
+    }
+  }
 
   /** Selector axis of [[frontierSearch]]. */
   private sealed trait PathSelector
@@ -3929,11 +3695,12 @@ object CypherPlanner {
     * or the strictly positive `weightProp` — Bellman–Ford relaxation
     * bounded by `hi` steps) and payload.
     *
-    * The step frame is a set of REPETITIONS: `rel` is either a single
-    * relationship (h = 1 — it enters as `__nids = [dst]`, `__eids =
-    * [eid]`, `__epls = [epl]`) or the composite frame of an h-hop
-    * quantified group, which already carries those arrays per
-    * repetition (and its summed weight `__w`). Every level extends the
+    * The step frame is the hop's repetition frame (the one
+    * [[repetitions]] enumerates): a single relationship (h = 1 —
+    * `__nids = [dst]`, `__eids = [eid]`, `__epls = [epl]` and its raw
+    * weight `__w`, checked here) or the composite frame of an h-hop
+    * quantified group, which carries those arrays per repetition (and
+    * its summed, already checked weight `__w`). Every level extends the
     * frontier by one repetition — walk arrays concatenate, `__hops`
     * counts k·h relationships — and merges by selector:
     *  - FirstReach, hops: collapse per pair, anti-join the pairs
@@ -4004,20 +3771,16 @@ object CypherPlanner {
     def composeAt(from: DataFrame, idCol: String): DataFrame =
       stepFrame(composeFrom.get(
         from.select(col(idCol).as("__cstart")).distinct()))
+    val carry = (if (walks) rel.columns.toSeq else Nil)
+      .filter(c => c == "__nids" || c == "__eids" || c.startsWith("__epls"))
+      .sorted
     val edges: DataFrame =
       if (composeFrom.isDefined) null
       else if (composite) stepFrame(rel).localCheckpoint()
       else {
-        // the seeded reachable-set scan restriction shrinks the scan
-        // and any __eid identity window to the touched edges
-        val scanned =
-          if (weighted && !walks) rel else seedRestrictEdges(rel, seed, hi)
-        val e = stepFrame(scanned.select(pairCols ++
-          weightProp.map(wp => positiveWeightOrDie(wp, what).as("__w")) ++
-          (if (!walks) Nil
-           else array(col("__dst")).as("__nids") +:
-             Seq("__eid", "__epl").filter(rel.columns.contains)
-               .map(c => array(col(c)).as(c + "s"))): _*))
+        val e = stepFrame(rel.select(pairCols ++ weightProp.map(wp =>
+          positiveWeightOrDie(col("__w"), wp, what).as("__w")) ++
+          carry.map(col): _*))
         // weighted: the walk-free relaxation reads the raw frame (the
         // per-round min collapses parallel edges on the stepped set);
         // the walk searches materialize it at session parallelism
@@ -4035,9 +3798,6 @@ object CypherPlanner {
           case _ => e
         }).localCheckpoint()
       }
-    val carry = (if (composite) rel else edges).columns
-      .filter(c => c == "__nids" || c == "__eids" || c.startsWith("__epls"))
-      .toSeq.sorted
     val order = Seq("__nids", "__eids").filter(carry.contains) ++
       carry.filterNot(Set("__nids", "__eids"))
     val tieOrder = if (composite && weighted) carry else order
@@ -4313,8 +4073,9 @@ object CypherPlanner {
     * (r18, ADVICE: the r17 guards silently accepted w <= 0, yielding a
     * possibly incomplete or wrong cost-minimal set.)
     */
-  private def positiveWeightOrDie(weightProp: String, ctx: String): Column = {
-    val w = col(weightProp).cast("double")
+  private def positiveWeightOrDie(weight: Column, weightProp: String,
+      ctx: String): Column = {
+    val w = weight.cast("double")
     when(w.isNull, raise_error(lit(
       s"$ctx: relationship property '$weightProp' is null or " +
         "non-numeric on at least one relationship — every edge must " +

@@ -979,6 +979,12 @@ object Algorithms {
     labels
   }
 
+  /** Lineage cut of the PageRank / personalized PageRank / HITS
+    * loops: an eager checkpoint every this many iterations (and after
+    * the last one). Measured in [[pageRank]].
+    */
+  private val CheckpointStride = 2
+
   /** PageRank, fixed iteration count (deterministic), damping 0.85.
     * Dangling mass redistributed uniformly.
     *
@@ -993,8 +999,7 @@ object Algorithms {
     * `has_out` (no anti-join). One shuffle per iteration total.
     */
   def pageRank(spark: SparkSession, edges: DataFrame, iterations: Int = 10,
-      damping: Double = 0.85, checkpointStride: Int = 2,
-      eagerCheckpoint: Boolean = true): DataFrame = {
+      damping: Double = 0.85): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
     val edgesDeg = e.join(outDeg, "src")
@@ -1028,7 +1033,7 @@ object Algorithms {
         .select(col("id"), col("has_out"),
           (lit((1.0 - damping) / n) + lit(damping) *
             (coalesce(col("received"), lit(0.0)) + col("dmass") / n)).as("rank"))
-      // materialize every `checkpointStride`-th iteration: each
+      // materialize every `CheckpointStride`-th iteration: each
       // un-checkpointed round triples the plan (ranks feeds contribs,
       // dangling, and the final join), so a small stride keeps the
       // plan bounded (~3^stride scans of the last materialization)
@@ -1040,8 +1045,8 @@ object Algorithms {
       // dominates and loses at sf1 where the deferred write lands on
       // the next iteration's critical path, so eager stride 2 is the
       // scale-robust default.
-      if (i % checkpointStride == checkpointStride - 1 || i == iterations - 1)
-        ranks = ranks.localCheckpoint(eagerCheckpoint)
+      if (i % CheckpointStride == CheckpointStride - 1 || i == iterations - 1)
+        ranks = ranks.localCheckpoint(true)
       i += 1
     }
     ranks.select(col("id"), col("rank"))
@@ -1061,8 +1066,8 @@ object Algorithms {
     * via the same broadcast 1-row aggregate.
     */
   def personalizedPageRank(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, iterations: Int = 10, damping: Double = 0.85,
-      checkpointStride: Int = 2): DataFrame = {
+      seeds: DataFrame, iterations: Int = 10,
+      damping: Double = 0.85): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
     val edgesDeg = e.join(outDeg, "src")
@@ -1099,7 +1104,7 @@ object Algorithms {
           (lit(1.0 - damping) * col("p") + lit(damping) *
             (coalesce(col("received"), lit(0.0)) + col("dmass") * col("p")))
             .as("rank"))
-      if (i % checkpointStride == checkpointStride - 1 || i == iterations - 1)
+      if (i % CheckpointStride == CheckpointStride - 1 || i == iterations - 1)
         ranks = ranks.localCheckpoint(true)
       i += 1
     }
@@ -1137,8 +1142,8 @@ object Algorithms {
     * init, non-negative updates), so no norm is ever zero on a graph
     * with edges. The oracle unrolls this exact fused arithmetic.
     */
-  def hits(spark: SparkSession, edges: DataFrame, iterations: Int = 8,
-      checkpointStride: Int = 2): DataFrame = {
+  def hits(spark: SparkSession, edges: DataFrame,
+      iterations: Int = 8): DataFrame = {
     val e = edges.select(col("src"), col("dst"))
       .repartition(col("src")).localCheckpoint(true)
     // second copy partitioned on dst: the hub-sum join keys on e.dst,
@@ -1188,7 +1193,7 @@ object Algorithms {
         .groupBy(col("src")).agg(sum(col("rawa")).as("rawh"))
         .select(col("src").as("id"), col("rawh").as("hub"))
       hub = rawH
-      if (i % checkpointStride == checkpointStride - 1 || i == iterations - 1) {
+      if (i % CheckpointStride == CheckpointStride - 1 || i == iterations - 1) {
         // only hub is checkpointed mid-loop (r18 optimization round):
         // authRaw re-derives from the hub checkpoint in ONE join+agg,
         // so its lineage stays shallow without paying a second

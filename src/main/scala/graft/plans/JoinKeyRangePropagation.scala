@@ -219,27 +219,29 @@ object JoinKeyRangePropagation extends Rule[LogicalPlan] {
     */
   private def resolveAffine(side: LogicalPlan,
       key: Expression): Option[(Attribute, Long, LogicalPlan)] = {
-    // the defining alias for `a`, plus the subplan beneath it
-    def defOf(a: Attribute): Option[(Expression, LogicalPlan)] = {
-      var found: Option[(Expression, LogicalPlan)] = None
-      side.foreach {
-        case p: Project if found.isEmpty =>
-          p.projectList.foreach {
-            case al @ Alias(child, _) if al.exprId == a.exprId =>
-              found = Some((child, p.child))
-            case _ => ()
-          }
-        case agg: Aggregate if found.isEmpty =>
-          agg.aggregateExpressions.foreach {
-            case al @ Alias(child, _) if al.exprId == a.exprId =>
-              // an aggregate-produced value is not affine over its
-              // input rows — mark unresolvable via a non-affine expr
-              found = Some((child, agg.child))
-            case _ => ()
-          }
-        case _ => ()
+    // the defining alias for `a` inside `scope`, plus the subplan
+    // beneath it. The search follows a's liveness chain down from the
+    // scope's root and stops at a Union, exactly like soundFilters: a
+    // union's output reuses its FIRST child's exprIds, so an alias
+    // found inside branch 1 defines only that branch's rows.
+    def defOf(a: Attribute,
+        scope: LogicalPlan): Option[(Expression, LogicalPlan)] = {
+      def aliasIn(exprs: Seq[NamedExpression], under: LogicalPlan) =
+        exprs.collectFirst {
+          case al @ Alias(child, _) if al.exprId == a.exprId => (child, under)
+        }
+      def below(p: LogicalPlan) = p.children.iterator
+        .filter(_.outputSet.contains(a)).map(defOf(a, _))
+        .collectFirst { case Some(d) => d }
+      scope match {
+        case _: Union => None
+        case p: Project => aliasIn(p.projectList, p.child).orElse(below(p))
+        // an aggregate-produced value is not affine over its input
+        // rows — it resolves to a non-affine expr, so `a` stays base
+        case agg: Aggregate =>
+          aliasIn(agg.aggregateExpressions, agg.child).orElse(below(agg))
+        case other => below(other)
       }
-      found
     }
     def go(e: Expression, off: Long, scope: LogicalPlan,
         depth: Int): Option[(Attribute, Long, LogicalPlan)] = {
@@ -256,7 +258,7 @@ object JoinKeyRangePropagation extends Rule[LogicalPlan] {
           checked(Math.subtractExact(off, k))
             .flatMap(go(l, _, scope, depth + 1))
         case a: Attribute =>
-          defOf(a) match {
+          defOf(a, scope) match {
             case Some((d, under)) =>
               go(d, off, under, depth + 1) match {
                 case s @ Some(_) => s

@@ -11,7 +11,9 @@ import org.apache.spark.sql.{Row, SparkSession}
   * would let Catalyst prune the projected work away. Iterative
   * operators are job-count-bound at bench scale — this is the tool
   * that shows it; running it on two checkouts compares per-key
-  * results and job counts before and after a change.
+  * results and job counts before and after a change. A key that fails,
+  * in the warm-up or the timed runs, prints `[jobprofile] <key> FAILED
+  * <message>` and the run goes on with the next key.
   *
   * Usage: runMain graft.tools.JobProfile <q1,q2,...> [reps]
   * (SPARK_GRAFT_SF_DIR picks the data, SPARK_GRAFT_CPUS the local
@@ -86,12 +88,15 @@ object JobProfile {
     }
     spark.sparkContext.addSparkListener(listener)
 
+    def failed(n: String, e: Throwable): Unit =
+      println(s"[jobprofile] $n FAILED " +
+        String.valueOf(e.getMessage).takeWhile(_ != '\n'))
     // warm once (JIT/codegen) at the tiny SF beside the profiled one,
     // like Bench does
     val warmDir = new java.io.File(sfDir).getParent + "/sf0.001"
     names.foreach { n =>
       try graft.SparkEntry.queries(n)(spark, warmDir).collect()
-      catch { case _: Throwable => () }
+      catch { case e: Exception => failed(n, e) }
     }
     def dropCaches(): Unit = {
       spark.sharedState.cacheManager.clearCache()
@@ -101,7 +106,7 @@ object JobProfile {
     }
     dropCaches()
     names.foreach { n =>
-      (1 to reps).foreach { r =>
+      try (1 to reps).foreach { r =>
         System.gc()
         jobs = 0; stages = 0; tasks = 0; taskMs = 0L
         val cg0 = codegenStats()
@@ -124,6 +129,11 @@ object JobProfile {
         }
         stageRows.clear()
         dropCaches()
+      } catch {
+        case e: Exception =>
+          failed(n, e)
+          stageRows.clear()
+          dropCaches()
       }
     }
     spark.stop()

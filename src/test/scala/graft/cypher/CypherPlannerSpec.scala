@@ -2999,6 +2999,16 @@ class CypherPlannerSpec extends AnyFunSuite {
         "RETURN id(s) AS sid, id(t) AS tid, length(p) AS l")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(zero == (1L to 4L).map(i => (i, i, 0L)).toSet)
+    // the same on a composite group: its zero-length rows survive the
+    // null cut with empty group and inner-relationship lists
+    val zeroMh = CypherPlanner.run(spark, g,
+      "MATCH (x:C) MATCH p = (s:V) " +
+        "((a)-[r1:E]->(b)-[r2:E]->(c) WHERE c.v > x.cut){0,2} (t:V) " +
+        "WHERE id(x) = 300 RETURN id(s) AS sid, id(t) AS tid, " +
+        "length(p) AS l, size(a) AS na, size(c) AS nc, size(r2) AS nr")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5))).toSet
+    assert(zeroMh == (1L to 4L).map(i => (i, i, 0L, 0L, 0L, 0L)).toSet)
     // the group's own juncture start is an outer binding too — the
     // round-13 divergence ((a)-[r]->(b) WHERE s.v < b.v) now plans
     val sv = CypherPlanner.run(spark, g,
@@ -3620,6 +3630,27 @@ class CypherPlannerSpec extends AnyFunSuite {
     assert(mh == Set(
       (1L, 3L, List(10L), List("yy")),
       (2L, 4L, List(null), List(null))))
+    // parallel edges of two types: relationships(p) reports each
+    // edge's rank k — a single-hop union ranks across its types, a
+    // composite hop ranks per type
+    val par = graft.graph.PropertyGraph(
+      nodes = Map("V" -> (1L to 3L).map(Tuple1(_)).toDF("__id")),
+      rels = Map(
+        "X" -> Seq((1L, 2L, 10L), (1L, 2L, 20L)).toDF("__src", "__dst", "w"),
+        "Y" -> Seq((1L, 2L, "p"), (2L, 3L, "q")).toDF("__src", "__dst", "z")),
+      relEndpoints = Map("X" -> ("V", "V"), "Y" -> ("V", "V")))
+    def ranks(q: String): Set[List[(String, Int)]] =
+      CypherPlanner.run(spark, par, q).collect().map(_.getSeq[
+        org.apache.spark.sql.Row](0).map(e => (e.getString(0), e.getInt(3)))
+        .toList).toSet
+    assert(ranks("MATCH p = (a:V)-[:X|Y*2..2]->(b:V) WHERE id(a) = 1 " +
+      "RETURN relationships(p) AS rs") == Set(
+      List(("X", 1), ("Y", 1)), List(("X", 2), ("Y", 1)),
+      List(("Y", 3), ("Y", 1))))
+    assert(ranks("MATCH p = (a:V) ((u)-[:X|Y]->(v)-[:X|Y]->(w)){1,1} (b:V) " +
+      "WHERE id(a) = 1 RETURN relationships(p) AS rs") == Set(
+      List(("X", 1), ("Y", 1)), List(("X", 2), ("Y", 1)),
+      List(("Y", 1), ("Y", 1))))
   }
 
   test("outer-scope QPP WHERE composes with shortestPath (per-tuple BFS)") {
@@ -3736,6 +3767,16 @@ class CypherPlannerSpec extends AnyFunSuite {
         "RETURN id(b) AS bid, length(p) AS l, nodes(p) AS ns").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toList)).toSet
     assert(unseeded == vl)
+    // unseeded In hop: the named list and nodes(p) are in pattern
+    // order as well
+    val rlUnseeded = CypherPlanner.run(spark, g(),
+      "MATCH p = (a:V)<-[rs:E*1..3]-(b:V) WHERE id(a) = 4 " +
+        "RETURN id(b) AS bid, [r IN rs | r.w] AS ws, nodes(p) AS ns")
+      .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toList,
+        r.getSeq[Long](2).toList)).toSet
+    assert(rlUnseeded == Set((3L, List(34L), List(4L, 3L)),
+      (2L, List(34L, 23L), List(4L, 3L, 2L)),
+      (1L, List(34L, 23L, 12L), List(4L, 3L, 2L, 1L))))
     // group variables through a seeded In group hop
     val gv = CypherPlanner.run(spark, g(),
       "MATCH (s:V) WHERE id(s) = 4 " +

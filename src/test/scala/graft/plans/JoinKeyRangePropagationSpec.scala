@@ -88,6 +88,26 @@ class JoinKeyRangePropagationSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.graft.joinRangePushdown", "true")
   }
 
+  test("a bound inside one union branch never restricts the other side") {
+    // the union's output reuses branch 1's exprIds, so branch 1's
+    // okey < 8 must not read as a bound on every union row: branch 2's
+    // keys 500..502 match too (7·2 + 3·2 = 20 line rows)
+    def unioned: DataFrame = {
+      def branch(lo: Long, hi: Long) = orders
+        .filter(col("okey") >= lo && col("okey") <= hi)
+        .select((col("okey") + 1000000000L).as("__id"))
+      val l = lines
+        .select((col("lkey") + 1000000000L).as("__src"), col("v"))
+      branch(1L, 7L).union(branch(500L, 502L))
+        .join(l, col("__id") === col("__src"))
+    }
+    val on = unioned.count()
+    spark.conf.set("spark.graft.joinRangePushdown", "false")
+    val off = try unioned.count() finally
+      spark.conf.set("spark.graft.joinRangePushdown", "true")
+    assert(off === 20L && on === off)
+  }
+
   test("a derived bound never lands under a Limit on the other side") {
     // top 5 customers by balance, then a key-range match against them:
     // the c2.custkey range must not reach c's scan BELOW its LIMIT,
