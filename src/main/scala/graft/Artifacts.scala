@@ -9,9 +9,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Why it exists: artifacts are `localCheckpoint(true)`-materialized,
   * which truncates lineage — an unpersist makes the frame
-  * unrecomputable. Bench's per-query hygiene (unpersist every
-  * persistent RDD between timed queries) must therefore SKIP pinned
-  * ids; everything else about the isolation discipline stays.
+  * unrecomputable. The tools' per-query hygiene ([[dropUnpinned]]:
+  * unpersist every persistent RDD between timed queries) must
+  * therefore SKIP pinned ids; everything else about the isolation
+  * discipline stays.
   */
 object Artifacts {
   private val pinned = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
@@ -47,6 +48,20 @@ object Artifacts {
       sc.getPersistentRDDs.foreach { case (id, rdd) =>
         if (pinned.remove(id)) rdd.unpersist(blocking = false)
       }
+  }
+
+  /** Per-query cache hygiene for the harness tools: clears the
+    * session's cached data and unpersists every persistent RDD EXCEPT
+    * pinned artifacts — unpersisting a localCheckpointed artifact
+    * would leave every later consumer of it a dead frame, and
+    * cross-query artifact reuse is the production shape the tools
+    * measure.
+    */
+  def dropUnpinned(spark: SparkSession): Unit = {
+    spark.sharedState.cacheManager.clearCache()
+    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!isPinned(id)) rdd.unpersist(false)
+    }
   }
 
   /** Runs `materialize`, pinning every persistent RDD it registers

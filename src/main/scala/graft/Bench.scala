@@ -88,17 +88,8 @@ object Bench {
     // drop EVERYTHING warmup built — artifacts, memoized frames,
     // cached data — so the timed region starts from parquet
     Artifacts.resetSession(spark)
-    // per-query hygiene, EXCEPT pinned artifacts: a localCheckpointed
-    // artifact has no lineage, so unpersisting it would zombie every
-    // later consumer — and cross-query artifact reuse is exactly the
-    // production shape the bench should measure
-    def dropCaches(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!Artifacts.isPinned(id)) rdd.unpersist(false)
-      }
-    }
-    dropCaches()
+    // per-query hygiene, EXCEPT pinned artifacts
+    Artifacts.dropUnpinned(spark)
     val failed = scala.collection.mutable.LinkedHashSet[String]()
     def timed(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Double = {
@@ -119,7 +110,7 @@ object Bench {
       val dt = (System.nanoTime() - t0) / 1e9
       // isolate queries: drop any DataFrame/RDD caches an operator
       // created so later queries aren't fighting stale storage memory
-      dropCaches()
+      Artifacts.dropUnpinned(spark)
       dt
     }
     val firstPass = benchQueries.toSeq.sortBy(_._1).map { case (name, fn) =>

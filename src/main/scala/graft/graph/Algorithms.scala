@@ -1,6 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Graph algorithms over the generic (src, dst) edge list — the
@@ -24,9 +25,7 @@ object Algorithms {
     */
   def degreesQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val g = GraphLoader.tpch(spark, sfDir)
-    val edges = Seq("PLACED_BY", "FROM_NATION", "IN_REGION")
-      .map(t => g.relTable(t).select(col("__src").as("src"), col("__dst").as("dst")))
-      .reduce(_.unionByName(_))
+    val edges = g.edges("PLACED_BY", "FROM_NATION", "IN_REGION")
     degrees(edges).orderBy(col("id"))
   }
 
@@ -42,9 +41,7 @@ object Algorithms {
     */
   def degreeDistQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val g = GraphLoader.tpch(spark, sfDir)
-    val edges = Seq("PLACED_BY", "FROM_NATION", "IN_REGION")
-      .map(t => g.relTable(t).select(col("__src").as("src"), col("__dst").as("dst")))
-      .reduce(_.unionByName(_))
+    val edges = g.edges("PLACED_BY", "FROM_NATION", "IN_REGION")
     val d = degrees(edges)
     Seq(("out", col("out_degree")), ("in", col("in_degree"))).map {
       case (dir, deg) =>
@@ -95,6 +92,29 @@ object Algorithms {
       .select(col("src").as("id"), col("deg"))
   }
 
+  /** Customers in custkey order within their nation — the order the
+    * synthetic per-nation graphs below link along.
+    */
+  private val byNation =
+    Window.partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
+
+  /** The per-nation consecutive-customer graph as (src, dst): an edge
+    * from each customer to the one `k` places after it in its nation,
+    * for every offset `k` in `leads` (null ends dropped). Offsets 1, 2
+    * give the cyclic two-band graph of the community, triangle and
+    * k-core operators; 1, 2, 3 the denser k-truss band; 1, 2, 8 the
+    * forward-only log-spaced skip links of the path and walk operators.
+    */
+  private def customerChain(spark: SparkSession, sfDir: String,
+      leads: Int*): DataFrame = {
+    val nbr = graft.Tables.customer(spark, sfDir).select(
+      col("c_custkey").as("src") +:
+        leads.map(k => lead(col("c_custkey"), k).over(byNation).as(s"d$k")): _*)
+    leads.map(k => nbr.select(col("src"), col(s"d$k").as("dst"))
+      .filter(col("dst").isNotNull))
+      .reduce(_.unionByName(_))
+  }
+
   /** k-core peeling over the per-nation consecutive-customer graph
     * (the same cyclic synthetic graph as [[triangleCountQuery]] — the
     * TPC-H hierarchy itself is a forest, whose every k≥2 core is
@@ -102,16 +122,7 @@ object Algorithms {
     */
   def kcoreQuery(spark: SparkSession, sfDir: String, k: Int = 3,
       rounds: Int = 4): DataFrame = {
-    val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").as("src"),
-      lead(col("c_custkey"), 1).over(w).as("d1"),
-      lead(col("c_custkey"), 2).over(w).as("d2"))
-    val edges = nbr.select(col("src"), col("d1").as("dst"))
-      .filter(col("dst").isNotNull)
-      .unionByName(nbr.select(col("src"), col("d2").as("dst"))
-        .filter(col("dst").isNotNull))
+    val edges = customerChain(spark, sfDir, 1, 2)
     kcorePeel(edges, k, rounds).orderBy(col("id"))
   }
 
@@ -172,90 +183,56 @@ object Algorithms {
     */
   def ktrussQuery(spark: SparkSession, sfDir: String, k: Int = 4,
       rounds: Int = 2): DataFrame = {
-    val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").as("src"),
-      lead(col("c_custkey"), 1).over(w).as("d1"),
-      lead(col("c_custkey"), 2).over(w).as("d2"),
-      lead(col("c_custkey"), 3).over(w).as("d3"))
-    val edges = Seq("d1", "d2", "d3").map(d =>
-      nbr.select(col("src"), col(d).as("dst")).filter(col("dst").isNotNull))
-      .reduce(_.unionByName(_))
-    ktruss(edges, k, rounds).orderBy(col("u"), col("v"))
+    ktruss(customerChain(spark, sfDir, 1, 2, 3), k, rounds)
+      .orderBy(col("u"), col("v"))
   }
 
-  /** Synchronous label propagation (community detection): every node
-    * starts as its own label; each round a node adopts its neighbors'
-    * MOST FREQUENT label with ties to the smallest (a total order, so
-    * the rounds-bounded synchronous variant is DETERMINISTIC — the
-    * async/random-order LPA of the literature is not
-    * oracle-checkable); isolated nodes keep their label.
+  /** Label propagation (community detection): every node starts as
+    * its own label; each round a node adopts its neighbors' MOST
+    * FREQUENT label with ties to the smallest (a total order, so the
+    * rounds-bounded variant is DETERMINISTIC — the random-order LPA of
+    * the literature is not oracle-checkable); isolated nodes keep
+    * their label.
+    *
+    * Schedule: synchronous by default — every node updates each round
+    * from the previous round's labels. With `alternating` it is
+    * semi-synchronous (coloring-scheduled, Cordasco & Gargano
+    * 2011/2012) — the deterministic fix for synchronous LPA's
+    * oscillation class (update one color class at a time and the
+    * two-colorable label oscillation — e.g. a single edge swapping
+    * labels forever — cannot form). Nodes are 2-colored by id parity;
+    * round j updates ONLY color j % 2, reading every other node's
+    * CURRENT label (Gauss–Seidel order). The argmax is the same total
+    * order either way, so every round is deterministic and the DuckDB
+    * oracle unrolls it exactly.
     *
     * 100 TB notes: per round, one (node, label)-keyed partial
     * aggregate (map-side combine collapses repeated neighbor labels),
     * one per-node argmax window on the same partitioning, and a
     * labels join — all keyed on node id, so the edge table's
-    * partitioning is reused and nothing quadratic forms.
-    * localCheckpoint per round bounds the plan like pageRank's.
+    * partitioning is reused and nothing quadratic forms. The parity
+    * filter halves an alternating round's aggregate input — a full
+    * sweep costs the same total work as one synchronous round, just
+    * split in two. localCheckpoint per round bounds the plan like
+    * pageRank's.
     */
-  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int,
+      alternating: Boolean = false): DataFrame = {
     val sym = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(col("src")).localCheckpoint()
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
       .repartition(col("id")).localCheckpoint(true)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("cnt").desc, col("label"))
-    for (_ <- 1 to rounds) {
-      val best = sym
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src"), col("label")).agg(count(lit(1)).as("cnt"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("src").as("id"), col("label").as("new_label"))
-      labels = labels.join(best, Seq("id"), "left_outer")
-        .select(col("id"),
-          coalesce(col("new_label"), col("label")).as("label"))
-        .localCheckpoint(true)
-    }
-    labels
-  }
-
-  /** Semi-synchronous (coloring-scheduled) label propagation — the
-    * deterministic fix for synchronous LPA's oscillation class
-    * (Cordasco & Gargano 2011/2012, "semi-synchronous" LPA: update
-    * one color class of a proper-ish schedule at a time and the
-    * two-colorable label oscillation — e.g. a single edge swapping
-    * labels forever — cannot form). Nodes are 2-colored by id parity;
-    * round j updates ONLY color j % 2, reading every other node's
-    * CURRENT label (Gauss–Seidel order). The argmax is the same
-    * most-frequent/ties-to-smallest total order as
-    * [[labelPropagation]], so every round is deterministic and the
-    * DuckDB oracle unrolls it exactly.
-    *
-    * 100 TB notes: identical per-round shape to [[labelPropagation]]
-    * (one (node, label)-keyed partial aggregate + per-node argmax
-    * window on the same partitioning + a labels join); the parity
-    * filter halves each round's aggregate input — a full sweep costs
-    * the same total work as one synchronous round, just split in two.
-    */
-  def labelPropagationAsync(edges: DataFrame, rounds: Int): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src")).localCheckpoint()
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .repartition(col("id")).localCheckpoint(true)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("cnt").desc, col("label"))
+    val w = Window.partitionBy(col("src")).orderBy(col("cnt").desc, col("label"))
     for (j <- 1 to rounds) {
-      val best = sym
-        // pmod, not %: Spark's % yields -1 for negative odd ids, which
-        // would match neither color class and freeze those vertices'
-        // labels on general (possibly negative-id) edge lists.
-        .filter(pmod(col("src"), lit(2)) === lit(j % 2))
+      // pmod, not %: Spark's % yields -1 for negative odd ids, which
+      // would match neither color class and freeze those vertices'
+      // labels on general (possibly negative-id) edge lists.
+      val movers =
+        if (alternating) sym.filter(pmod(col("src"), lit(2)) === lit(j % 2))
+        else sym
+      val best = movers
         .join(labels.withColumnRenamed("id", "dst"), "dst")
         .groupBy(col("src"), col("label")).agg(count(lit(1)).as("cnt"))
         .withColumn("rk", row_number().over(w))
@@ -269,22 +246,13 @@ object Algorithms {
     labels
   }
 
-  /** [[labelPropagationAsync]] over the per-nation
+  /** Alternating-schedule [[labelPropagation]] over the per-nation
     * consecutive-customer graph — 4 parity rounds = two full sweeps.
     */
   def labelPropAsyncQuery(spark: SparkSession, sfDir: String,
       rounds: Int = 4): DataFrame = {
-    val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").as("src"),
-      lead(col("c_custkey"), 1).over(w).as("d1"),
-      lead(col("c_custkey"), 2).over(w).as("d2"))
-    val edges = nbr.select(col("src"), col("d1").as("dst"))
-      .filter(col("dst").isNotNull)
-      .unionByName(nbr.select(col("src"), col("d2").as("dst"))
-        .filter(col("dst").isNotNull))
-    labelPropagationAsync(edges, rounds)
+    val edges = customerChain(spark, sfDir, 1, 2)
+    labelPropagation(edges, rounds, alternating = true)
       .select(col("id"), col("label").as("community"))
       .orderBy(col("id"))
   }
@@ -294,16 +262,7 @@ object Algorithms {
     */
   def labelPropQuery(spark: SparkSession, sfDir: String,
       rounds: Int = 3): DataFrame = {
-    val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").as("src"),
-      lead(col("c_custkey"), 1).over(w).as("d1"),
-      lead(col("c_custkey"), 2).over(w).as("d2"))
-    val edges = nbr.select(col("src"), col("d1").as("dst"))
-      .filter(col("dst").isNotNull)
-      .unionByName(nbr.select(col("src"), col("d2").as("dst"))
-        .filter(col("dst").isNotNull))
+    val edges = customerChain(spark, sfDir, 1, 2)
     labelPropagation(edges, rounds)
       .select(col("id"), col("label").as("community"))
       .orderBy(col("id"))
@@ -328,17 +287,10 @@ object Algorithms {
     */
   def modularityQuery(spark: SparkSession, sfDir: String,
       rounds: Int = 3): DataFrame = {
-    val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").as("src"),
-      lead(col("c_custkey"), 1).over(w).as("d1"),
-      lead(col("c_custkey"), 2).over(w).as("d2"))
-    val edges = nbr.select(col("src"), col("d1").as("dst"))
-      .filter(col("dst").isNotNull)
-      .unionByName(nbr.select(col("src"), col("d2").as("dst"))
-        .filter(col("dst").isNotNull))
-      .localCheckpoint()
+    // louvainReport's tail, but the edge count rides in as a broadcast
+    // 1-row aggregate: louvainBase's collected count would cost this
+    // query two more Spark jobs
+    val edges = customerChain(spark, sfDir, 1, 2).localCheckpoint()
     val labels = labelPropagation(edges, rounds)
       .select(col("id"), col("label").as("community"))
     val mRow = edges.agg(count(lit(1)).as("m"))
@@ -501,7 +453,7 @@ object Algorithms {
       // (was: a separate distinct().count() probe job, then the same
       // community groupBy again on acceptance — r19, one job fewer
       // per level and no duplicate exchange)
-      val cNodes = roundLeaf(cand.groupBy(col("comm"))
+      val cNodes = graft.Frames.leaf(cand.groupBy(col("comm"))
         .agg(sum(col("deg")).as("deg"))
         .select(col("comm").as("id"), col("comm"), col("deg")))
       val nComm = cNodes.count()
@@ -520,7 +472,7 @@ object Algorithms {
               .select(proj("id"), col("__c").as("comm"), proj("deg"))
           }
         val cl = cand.select(col("id"), col("comm"))
-        sym = roundLeaf(sym
+        sym = graft.Frames.leaf(sym
           .join(cl.select(col("id").as("src"), col("comm").as("ca")), Seq("src"))
           .join(cl.select(col("id").as("dst"), col("comm").as("cb")), Seq("dst"))
           .filter(col("ca") =!= col("cb"))
@@ -533,7 +485,7 @@ object Algorithms {
     louvainReport(edges,
       if (proj == null) nodes
       else if (projJoins == 0) proj // single level: already a leaf
-      else roundLeaf(proj), m)
+      else graft.Frames.leaf(proj), m)
   }
 
   /** Degree-assortativity coefficient (Newman 2002) over the
@@ -587,38 +539,12 @@ object Algorithms {
     */
   private def louvainBase(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame, Long) = {
-    val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").as("src"),
-      lead(col("c_custkey"), 1).over(w).as("d1"),
-      lead(col("c_custkey"), 2).over(w).as("d2"))
-    val edges = nbr.select(col("src"), col("d1").as("dst"))
-      .filter(col("dst").isNotNull)
-      .unionByName(nbr.select(col("src"), col("d2").as("dst"))
-        .filter(col("dst").isNotNull))
+    val edges = customerChain(spark, sfDir, 1, 2)
       .localCheckpoint()
     val sym = edges.unionByName(
       edges.select(col("dst").as("src"), col("src").as("dst")))
     (edges, sym, edges.count())
   }
-
-  /** Materializes an iterative-loop frame as a TRUE optimizer leaf:
-    * eager localCheckpoint (computes once, truncates lineage), then a
-    * fresh-DataFrame wrap that DROPS the checkpoint's inherited
-    * statistics. Why the wrap: Spark carries the origin plan's
-    * ESTIMATED stats into the checkpoint leaf
-    * (`LogicalRDD.originStats`), and a round plan that joins the
-    * previous leaf against itself MULTIPLIES size estimates — k
-    * compositions give an estimate with ~3^k digits, and Catalyst
-    * then spends minutes in BigInteger multiplication just VISITING
-    * stats (observed hanging louvain3's level loop; plain persist()
-    * instead leaves the analyzed tree un-truncated and tree-string
-    * generation explodes the same way). The wrap costs one
-    * InternalRow↔Row conversion per read of a node-cardinality frame
-    * — noise next to the exchanges it sits between.
-    */
-  private def roundLeaf(df: DataFrame): DataFrame = graft.Frames.leaf(df)
 
   /** The synchronous local-moving loop shared by [[louvainQuery]] and
     * [[louvain2Query]]: `sym` is the symmetrized edge list (with a
@@ -678,13 +604,14 @@ object Algorithms {
           when((col("src") + lit(j.toLong)) % 2 === 0, col("best.nc"))
             .otherwise(col("oc")).as("comm"),
           col("ki").as("deg"))
-      comm = roundLeaf(comm)
+      comm = graft.Frames.leaf(comm)
     }
     comm
   }
 
   /** Per-community modularity report over a (id, comm, deg) frame —
-    * the shared tail of the Louvain family and [[modularityQuery]].
+    * the shared tail of the Louvain family ([[modularityQuery]] spells
+    * the same columns over a broadcast edge count).
     */
   private def louvainReport(edges: DataFrame, comm: DataFrame,
       m: Long): DataFrame = {
@@ -758,16 +685,7 @@ object Algorithms {
     */
   def triangleCountQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").as("src"),
-      lead(col("c_custkey"), 1).over(w).as("d1"),
-      lead(col("c_custkey"), 2).over(w).as("d2"))
-    val edges = nbr.select(col("src"), col("d1").as("dst"))
-      .filter(col("dst").isNotNull)
-      .unionByName(nbr.select(col("src"), col("d2").as("dst"))
-        .filter(col("dst").isNotNull))
-    triangles(edges)
+    triangles(customerChain(spark, sfDir, 1, 2))
       .join(c.select(col("c_custkey").as("n1"), col("c_nationkey")), "n1")
       .join(graft.Tables.nation(spark, sfDir),
         col("c_nationkey") === col("n_nationkey"))
@@ -786,9 +704,7 @@ object Algorithms {
     */
   def connectedComponentsQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val g = GraphLoader.tpch(spark, sfDir)
-    val edges = Seq("FROM_NATION", "IN_REGION")
-      .map(t => g.relTable(t).select(col("__src").as("src"), col("__dst").as("dst")))
-      .reduce(_.unionByName(_))
+    val edges = g.edges("FROM_NATION", "IN_REGION")
     connectedComponents(edges).orderBy(col("id"))
   }
 
@@ -802,9 +718,7 @@ object Algorithms {
     */
   def componentSizesQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val g = GraphLoader.tpch(spark, sfDir)
-    val edges = Seq("FROM_NATION", "IN_REGION")
-      .map(t => g.relTable(t).select(col("__src").as("src"), col("__dst").as("dst")))
-      .reduce(_.unionByName(_))
+    val edges = g.edges("FROM_NATION", "IN_REGION")
     connectedComponents(edges)
       .groupBy(col("comp")).agg(count(lit(1)).as("sz"))
       .groupBy(col("sz").as("component_size"))
@@ -820,42 +734,67 @@ object Algorithms {
     */
   def pageRankQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val g = GraphLoader.tpch(spark, sfDir)
-    val edges = Seq("PLACED_BY", "FROM_NATION", "IN_REGION")
-      .map(t => g.relTable(t).select(col("__src").as("src"), col("__dst").as("dst")))
-      .reduce(_.unionByName(_))
-    pageRank(spark, edges, iterations = 10)
+    val edges = g.edges("PLACED_BY", "FROM_NATION", "IN_REGION")
+    pageRank(spark, edges)
       .select(col("id"), round(col("rank"), 6).as("rank"))
       .orderBy(col("id"))
   }
 
-  /** BFS hop distance from a set of source nodes along directed
-    * edges. Classic frontier expansion: each round joins the frontier
-    * against the (pre-partitioned, checkpointed) edge list, anti-joins
-    * already-visited nodes, and stops when the frontier drains —
-    * O(depth) rounds, every shuffle keyed on node id.
+  /** `edges` as (src, dst), hash-partitioned by src and materialized
+    * once — the loop-invariant side of every frontier join keyed on
+    * src, so no round re-exchanges the edge list.
     */
-  def bfsDepths(edges: DataFrame, sources: DataFrame, maxDepth: Int = 30)
-      : DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
+  private def bySrc(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"))
       .repartition(col("src")).localCheckpoint(true)
-    var labels = sources.select(col("id")).distinct()
-      .withColumn("depth", lit(0L)).localCheckpoint(true)
-    var frontier = labels
-    var d = 0L
+
+  /** First-reach BFS, the frontier loop behind [[bfsDepths]],
+    * [[landmarkDistances]] and [[brandesForward]]: from `seeds`
+    * (key columns `keys`, the last one `id`) at depth 0, each round
+    * joins the frontier against the [[bySrc]] edge list `e`, keeps the
+    * reached (key…, id) rows not seen at any earlier depth (anti-join
+    * on the keys) and stamps them with the next `depth`. With `sigma`
+    * each row also carries its shortest-path count — σ = 1 at the
+    * seeds, σ(v) = Σ σ(u) over its frontier predecessors u. Every
+    * level is checkpointed once and the result is their union, so the
+    * accumulated frame has flat lineage without re-materializing it
+    * each round. Returns (levels, deepest level reached, whether the
+    * frontier drained within `maxDepth`).
+    */
+  private def firstReach(e: DataFrame, seeds: DataFrame, keys: Seq[String],
+      maxDepth: Int, sigma: Boolean = false): (DataFrame, Int, Boolean) = {
+    val start = seeds.select(keys.map(col): _*).distinct()
+      .withColumn("depth", lit(0L))
+    var levels = (if (sigma) start.withColumn("sigma", lit(1L)) else start)
+      .localCheckpoint(true)
+    val reach = keys.init.map(col) :+ col("dst").as("id")
+    var frontier = levels
+    var d = 0
     var drained = false
     while (d < maxDepth && !drained) {
-      val next = e.join(frontier, e("src") === frontier("id"))
-        .select(col("dst").as("id")).distinct()
-        .join(labels, Seq("id"), "left_anti")
+      val hop = e.join(frontier, e("src") === frontier("id"))
+      val reached =
+        if (sigma) hop.groupBy(reach: _*).agg(sum(col("sigma")).as("sigma"))
+        else hop.select(reach: _*).distinct()
+      val next = reached
+        .join(levels.select(keys.map(col): _*), keys, "left_anti")
         .withColumn("depth", lit(d + 1L))
         .localCheckpoint(true)
       if (next.isEmpty) drained = true
-      else {
-        labels = labels.unionByName(next).localCheckpoint(true)
-        frontier = next
-        d += 1
-      }
+      else { levels = levels.unionByName(next); frontier = next; d += 1 }
     }
+    (levels, d, drained)
+  }
+
+  /** BFS hop distance from a set of source nodes along directed
+    * edges: the [[firstReach]] frontier expansion keyed on node id,
+    * stopping when the frontier drains — O(depth) rounds, every
+    * shuffle keyed on node id.
+    */
+  def bfsDepths(edges: DataFrame, sources: DataFrame, maxDepth: Int = 30)
+      : DataFrame = {
+    val (labels, _, drained) = firstReach(bySrc(edges), sources, Seq("id"),
+      maxDepth)
     // truncating with a live frontier would silently misreport every
     // deeper node as unreachable — same non-negotiable as the CC
     // convergence check
@@ -872,9 +811,8 @@ object Algorithms {
     */
   def bfsQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val g = GraphLoader.tpch(spark, sfDir)
-    val edges = Seq("PLACED_BY", "FROM_NATION", "IN_REGION")
-      .map(t => g.relTable(t).select(col("__dst").as("src"), col("__src").as("dst")))
-      .reduce(_.unionByName(_))
+    val edges = g.edges("PLACED_BY", "FROM_NATION", "IN_REGION")
+      .select(col("dst").as("src"), col("src").as("dst"))
     val sources = g.nodeTable("Region").select(col("__id").as("id"))
     bfsDepths(edges, sources).orderBy(col("id"))
   }
@@ -893,15 +831,8 @@ object Algorithms {
     * propagation silently returns WRONG components, which is never
     * acceptable.
     */
-  /** @param jumpAfter iteration index from which the pointer-jump step
-    *   is added. Plain propagation converges in O(diameter) rounds at
-    *   one shuffle each — optimal for the shallow graphs that dominate
-    *   in practice; the jump join (two extra shuffles/round) only pays
-    *   for itself on deep chains, so it switches on adaptively once
-    *   the iteration count reveals the graph IS deep.
-    */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 50,
-      jumpAfter: Int = 8, localEdgeCap: Int = 0): DataFrame = {
+  def connectedComponents(edges: DataFrame, localEdgeCap: Int = 0)
+      : DataFrame = {
     // Size-gated driver union-find (opt-in, default OFF): when the
     // caller KNOWS the edge list is orders of magnitude smaller than
     // the data it came from — duplicate-PAIR graphs after candidate
@@ -947,7 +878,7 @@ object Algorithms {
       .localCheckpoint(true)
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < CcMaxIter && !converged) {
       val propagated = und
         .join(labels, und("src") === labels("id"))
         .select(col("dst").as("id"), col("comp"))
@@ -961,7 +892,7 @@ object Algorithms {
       // the self-join two independent LogicalRDD scans of one
       // materialized result.
       val next =
-        if (iter < jumpAfter) hop
+        if (iter < CcJumpAfter) hop
         else hop.as("a")
           .join(hop.select(col("id").as("cid"), col("comp").as("ccomp")),
             col("a.comp") === col("cid"), "left")
@@ -974,48 +905,115 @@ object Algorithms {
       iter += 1
     }
     if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge in $maxIter iterations - " +
-        "results would be wrong; raise maxIter for graphs of this diameter")
+      s"connectedComponents did not converge in $CcMaxIter iterations - " +
+        "results would be wrong; the graph's diameter exceeds the budget")
     labels
   }
 
+  /** Iteration budget of [[connectedComponents]]. */
+  private val CcMaxIter = 50
+
+  /** Iteration index from which [[connectedComponents]] adds the
+    * pointer-jump step. Plain propagation converges in O(diameter)
+    * rounds at one shuffle each — optimal for the shallow graphs that
+    * dominate in practice; the jump join (two extra shuffles/round)
+    * only pays for itself on deep chains, so it switches on adaptively
+    * once the iteration count reveals the graph IS deep.
+    */
+  private val CcJumpAfter = 8
+
   /** Lineage cut of the PageRank / personalized PageRank / HITS
     * loops: an eager checkpoint every this many iterations (and after
-    * the last one). Measured in [[pageRank]].
+    * the last one). Measured in [[rankLoop]].
     */
   private val CheckpointStride = 2
 
-  /** PageRank, fixed iteration count (deterministic), damping 0.85.
-    * Dangling mass redistributed uniformly.
-    *
-    * Shuffle discipline (the part that matters at 100 TB): the static
-    * structures — edges pre-joined with out-degrees and hash-
-    * partitioned by src, vertices carrying a `has_out` flag and
-    * partitioned by id — are materialized ONCE (localCheckpoint
-    * preserves outputPartitioning). Each iteration then shuffles only
-    * the contribution aggregation: the edge×rank join co-locates on
-    * existing partitioning, the vertices×received join reuses the
-    * aggregation's id-partitioning, and dangling mass is a filter on
-    * `has_out` (no anti-join). One shuffle per iteration total.
+  /** Damping factor and fixed iteration count of [[pageRank]] and
+    * [[personalizedPageRank]] (the oracle unrolls the same 10).
     */
-  def pageRank(spark: SparkSession, edges: DataFrame, iterations: Int = 10,
-      damping: Double = 0.85): DataFrame = {
+  private val Damping = 0.85
+  private val RankIterations = 10
+
+  /** PageRank, fixed iteration count (deterministic), damping 0.85.
+    * Dangling mass redistributed uniformly:
+    * rank_v = (1−d)/n + d·(received_v + dmass/n).
+    */
+  def pageRank(spark: SparkSession, edges: DataFrame): DataFrame = {
+    val (edgesDeg, vertices) = rankGraph(edges, None)
+    val n = vertices.count().toDouble
+    rankLoop(edgesDeg, vertices,
+      vertices.withColumn("rank", lit(1.0 / n)).localCheckpoint(true),
+      lit((1.0 - Damping) / n) + lit(Damping) *
+        (coalesce(col("received"), lit(0.0)) + col("dmass") / n))
+  }
+
+  /** Personalized PageRank: teleport mass goes to a SEED set instead
+    * of uniformly — rank_v = (1−d)·p_v + d·(received_v + dmass·p_v)
+    * with p_v = 1/|S| for seeds, 0 elsewhere. The standard
+    * random-walk-with-restart relevance score for recommendation /
+    * related-entity queries, converging to mass concentrated around
+    * the seeds. The seed indicator rides the vertex frame, and
+    * dangling mass restarts at the seeds.
+    */
+  def personalizedPageRank(spark: SparkSession, edges: DataFrame,
+      seeds: DataFrame): DataFrame = {
+    val (edgesDeg, vertices) = rankGraph(edges, Some(seeds))
+    val nSeeds = vertices.agg(
+      sum(col("is_seed").cast("long")).as("ns"))
+    val withP = vertices.crossJoin(broadcast(nSeeds))
+      .select(col("id"), col("has_out"),
+        when(col("is_seed"), lit(1.0) / col("ns")).otherwise(lit(0.0)).as("p"))
+      .localCheckpoint(true)
+    rankLoop(edgesDeg, withP, withP.withColumn("rank", col("p")),
+      lit(1.0 - Damping) * col("p") + lit(Damping) *
+        (coalesce(col("received"), lit(0.0)) + col("dmass") * col("p")))
+  }
+
+  /** The static structures of [[pageRank]] and
+    * [[personalizedPageRank]], materialized ONCE (localCheckpoint
+    * preserves outputPartitioning): edges pre-joined with their
+    * source's out-degree and hash-partitioned by src, and the vertex
+    * frame partitioned by id, carrying a `has_out` flag (and an
+    * `is_seed` flag when `seeds` is given).
+    */
+  private def rankGraph(edges: DataFrame, seeds: Option[DataFrame])
+      : (DataFrame, DataFrame) = {
     val e = edges.select(col("src"), col("dst"))
     val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
     val edgesDeg = e.join(outDeg, "src")
       .repartition(col("src")).localCheckpoint(true)
-    val vertices = e.select(col("src").as("id"))
+    val flagged = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id")))
       .distinct()
       .join(outDeg.select(col("src").as("id"), lit(true).as("has_out")),
         Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("has_out"), lit(false)).as("has_out"))
+    val vertices = seeds.fold(flagged)(s => flagged.join(
+        s.select(col("id")).distinct().withColumn("is_seed", lit(true)),
+        Seq("id"), "left_outer"))
+      .select(Seq(col("id"), coalesce(col("has_out"), lit(false)).as("has_out")) ++
+        seeds.map(_ => coalesce(col("is_seed"), lit(false)).as("is_seed")): _*)
       .repartition(col("id")).localCheckpoint(true)
-    val n = vertices.count().toDouble
+    (edgesDeg, vertices)
+  }
 
-    var ranks = vertices.withColumn("rank", lit(1.0 / n)).localCheckpoint(true)
+  /** The power iteration of [[pageRank]] and [[personalizedPageRank]]:
+    * from `init`, each round rebuilds the ranks from the vertex frame
+    * `base` (whose columns carry through) with `update`, an expression
+    * over those columns, `received` (the contribution sum) and `dmass`
+    * (the rank mass of nodes without out-edges).
+    *
+    * Shuffle discipline (the part that matters at 100 TB): each
+    * iteration shuffles only the contribution aggregation — the
+    * edge×rank join co-locates on the [[rankGraph]] partitioning, the
+    * vertices×received join reuses the aggregation's id-partitioning,
+    * and dangling mass is a filter on `has_out` (no anti-join). One
+    * shuffle per iteration total.
+    */
+  private def rankLoop(edgesDeg: DataFrame, base: DataFrame,
+      init: DataFrame, update: Column): DataFrame = {
+    var ranks = init
     var i = 0
-    while (i < iterations) {
+    while (i < RankIterations) {
       val contribs = edgesDeg
         .join(ranks, edgesDeg("src") === ranks("id"))
         .select(col("dst").as("id"), (col("rank") / col("out_deg")).as("contrib"))
@@ -1028,11 +1026,9 @@ object Algorithms {
       // the separate rank-frame scan stays.)
       val dangling = ranks.filter(!col("has_out"))
         .agg(coalesce(sum(col("rank")), lit(0.0)).as("dmass"))
-      ranks = vertices.join(summed, Seq("id"), "left_outer")
+      ranks = base.join(summed, Seq("id"), "left_outer")
         .crossJoin(broadcast(dangling))
-        .select(col("id"), col("has_out"),
-          (lit((1.0 - damping) / n) + lit(damping) *
-            (coalesce(col("received"), lit(0.0)) + col("dmass") / n)).as("rank"))
+        .select(base.columns.map(col) :+ update.as("rank"): _*)
       // materialize every `CheckpointStride`-th iteration: each
       // un-checkpointed round triples the plan (ranks feeds contribs,
       // dangling, and the final join), so a small stride keeps the
@@ -1045,66 +1041,7 @@ object Algorithms {
       // dominates and loses at sf1 where the deferred write lands on
       // the next iteration's critical path, so eager stride 2 is the
       // scale-robust default.
-      if (i % CheckpointStride == CheckpointStride - 1 || i == iterations - 1)
-        ranks = ranks.localCheckpoint(true)
-      i += 1
-    }
-    ranks.select(col("id"), col("rank"))
-  }
-
-  /** Personalized PageRank: teleport mass goes to a SEED set instead
-    * of uniformly — rank_v = (1−d)·p_v + d·(received_v + dmass·p_v)
-    * with p_v = 1/|S| for seeds, 0 elsewhere. The standard
-    * random-walk-with-restart relevance score for recommendation /
-    * related-entity queries, converging to mass concentrated around
-    * the seeds.
-    *
-    * Same per-iteration shuffle discipline as [[pageRank]] (whose
-    * static structures and checkpoint-stride policy this reuses):
-    * one contribution aggregation per round; the seed indicator
-    * rides the vertex frame, and dangling mass restarts at the seeds
-    * via the same broadcast 1-row aggregate.
-    */
-  def personalizedPageRank(spark: SparkSession, edges: DataFrame,
-      seeds: DataFrame, iterations: Int = 10,
-      damping: Double = 0.85): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("out_deg"))
-    val edgesDeg = e.join(outDeg, "src")
-      .repartition(col("src")).localCheckpoint(true)
-    val seedFlag = seeds.select(col("id")).distinct()
-      .withColumn("is_seed", lit(true))
-    val vertices = e.select(col("src").as("id"))
-      .unionByName(e.select(col("dst").as("id")))
-      .distinct()
-      .join(outDeg.select(col("src").as("id"), lit(true).as("has_out")),
-        Seq("id"), "left_outer")
-      .join(seedFlag, Seq("id"), "left_outer")
-      .select(col("id"), coalesce(col("has_out"), lit(false)).as("has_out"),
-        coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .repartition(col("id")).localCheckpoint(true)
-    val nSeeds = vertices.agg(
-      sum(col("is_seed").cast("long")).as("ns"))
-    val withP = vertices.crossJoin(broadcast(nSeeds))
-      .select(col("id"), col("has_out"),
-        when(col("is_seed"), lit(1.0) / col("ns")).otherwise(lit(0.0)).as("p"))
-      .localCheckpoint(true)
-    var ranks = withP.withColumn("rank", col("p"))
-    var i = 0
-    while (i < iterations) {
-      val contribs = edgesDeg
-        .join(ranks, edgesDeg("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("rank") / col("out_deg")).as("contrib"))
-      val summed = contribs.groupBy(col("id")).agg(sum(col("contrib")).as("received"))
-      val dangling = ranks.filter(!col("has_out"))
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dmass"))
-      ranks = withP.join(summed, Seq("id"), "left_outer")
-        .crossJoin(broadcast(dangling))
-        .select(col("id"), col("has_out"), col("p"),
-          (lit(1.0 - damping) * col("p") + lit(damping) *
-            (coalesce(col("received"), lit(0.0)) + col("dmass") * col("p")))
-            .as("rank"))
-      if (i % CheckpointStride == CheckpointStride - 1 || i == iterations - 1)
+      if (i % CheckpointStride == CheckpointStride - 1 || i == RankIterations - 1)
         ranks = ranks.localCheckpoint(true)
       i += 1
     }
@@ -1118,13 +1055,11 @@ object Algorithms {
     */
   def pprQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val g = GraphLoader.tpch(spark, sfDir)
-    val edges = Seq("PLACED_BY", "FROM_NATION", "IN_REGION")
-      .map(t => g.relTable(t).select(col("__src").as("src"), col("__dst").as("dst")))
-      .reduce(_.unionByName(_))
+    val edges = g.edges("PLACED_BY", "FROM_NATION", "IN_REGION")
     val seeds = graft.Tables.customer(spark, sfDir)
       .filter(col("c_custkey") <= 5)
       .select((lit(2000000000L) + col("c_custkey")).as("id"))
-    personalizedPageRank(spark, edges, seeds, iterations = 10)
+    personalizedPageRank(spark, edges, seeds)
       .select(col("id"), (round(col("rank"), 9) + lit(0.0)).as("rank"))
       .orderBy(col("id"))
   }
@@ -1142,10 +1077,8 @@ object Algorithms {
     * init, non-negative updates), so no norm is ever zero on a graph
     * with edges. The oracle unrolls this exact fused arithmetic.
     */
-  def hits(spark: SparkSession, edges: DataFrame,
-      iterations: Int = 8): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).localCheckpoint(true)
+  def hits(spark: SparkSession, edges: DataFrame): DataFrame = {
+    val e = bySrc(edges)
     // second copy partitioned on dst: the hub-sum join keys on e.dst,
     // so without it every iteration re-exchanges the FULL edge list
     // dst-ward (the aggregation exchanges are inherent, this one is
@@ -1180,7 +1113,7 @@ object Algorithms {
     // spill the frames the LIVE iteration needs).
     var prevCks: Seq[DataFrame] = Seq(hub)
     var i = 0
-    while (i < iterations) {
+    while (i < HitsIterations) {
       // authority raw: sum of in-neighbor raw hub scores
       val rawA = e.join(hub.select(col("id"), col("hub")),
           e("src") === col("id"))
@@ -1193,7 +1126,7 @@ object Algorithms {
         .groupBy(col("src")).agg(sum(col("rawa")).as("rawh"))
         .select(col("src").as("id"), col("rawh").as("hub"))
       hub = rawH
-      if (i % CheckpointStride == CheckpointStride - 1 || i == iterations - 1) {
+      if (i % CheckpointStride == CheckpointStride - 1 || i == HitsIterations - 1) {
         // only hub is checkpointed mid-loop (r18 optimization round):
         // authRaw re-derives from the hub checkpoint in ONE join+agg,
         // so its lineage stays shallow without paying a second
@@ -1201,9 +1134,9 @@ object Algorithms {
         // iteration still checkpoints authRaw — the final assembly
         // reads it twice (norm + projection).
         hub = hub.localCheckpoint(true)
-        if (i == iterations - 1) authRaw = authRaw.localCheckpoint(true)
+        if (i == HitsIterations - 1) authRaw = authRaw.localCheckpoint(true)
         prevCks.foreach(graft.Frames.free)
-        prevCks = if (i == iterations - 1) Seq(hub, authRaw) else Seq(hub)
+        prevCks = if (i == HitsIterations - 1) Seq(hub, authRaw) else Seq(hub)
       }
       i += 1
     }
@@ -1220,6 +1153,9 @@ object Algorithms {
         coalesce(col("auth"), lit(0.0)).as("auth"))
   }
 
+  /** Fixed iteration count of [[hits]] (the oracle unrolls the same 8). */
+  private val HitsIterations = 8
+
   /** The declared `graph_hits` query: hubs/authorities over the
     * order→customer→nation→region hierarchy, 6-dp rounded (the same
     * ulp-absorption contract as `graph_pagerank` — the oracle unrolls
@@ -1227,9 +1163,7 @@ object Algorithms {
     */
   def hitsQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val g = GraphLoader.tpch(spark, sfDir)
-    val edges = Seq("PLACED_BY", "FROM_NATION", "IN_REGION")
-      .map(t => g.relTable(t).select(col("__src").as("src"), col("__dst").as("dst")))
-      .reduce(_.unionByName(_))
+    val edges = g.edges("PLACED_BY", "FROM_NATION", "IN_REGION")
     hits(spark, edges)
       .select(col("id"), round(col("hub"), 6).as("hub"),
         round(col("auth"), 6).as("auth"))
@@ -1247,17 +1181,7 @@ object Algorithms {
     */
   def neighborSimQuery(spark: SparkSession, sfDir: String, k: Int = 20,
       hubCap: Int = 500): DataFrame = {
-    val g = GraphLoader.tpch(spark, sfDir)
-    // materialized once (same reasoning as [[adamicAdarQuery]]): four
-    // consumers — partDeg, deg, and both pair-join sides — otherwise
-    // each re-scan the raw table and re-pay the distinct exchange;
-    // partitioned by the pair key at session shuffle parallelism so
-    // the Σ_p pdeg² enumeration stage runs on every core
-    val e = g.relTable("SUPPLIES")
-      .select(col("__src").as("supp"), col("__dst").as("part")).distinct()
-      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
-        col("part"))
-      .localCheckpoint(true)
+    val e = suppliesByPart(spark, sfDir)
     // candidate pairs form through the PART side, whose supplier
     // fanout is bounded by the catalog shape (≈ suppliers-per-part, a
     // constant as the data grows) — pairing through the supplier side
@@ -1283,6 +1207,23 @@ object Algorithms {
       .orderBy(col("jaccard").desc, col("supp_a"), col("supp_b"))
       .limit(k)
   }
+
+  /** The deduped SUPPLIES edge list `(supp, part)` of
+    * [[neighborSimQuery]] and [[adamicAdarQuery]], materialized once:
+    * it feeds the degree aggregates AND both sides of the pair join,
+    * and each consumer would otherwise re-scan the raw table and
+    * re-pay the distinct exchange (4 full scans observed in the
+    * un-checkpointed plan). Partitioned by the pair key at the
+    * session's shuffle parallelism: the Σ_p pdeg² pair enumeration
+    * downstream is the expensive stage, and a checkpoint left at the
+    * AQE-coalesced width would run it on that many cores.
+    */
+  private def suppliesByPart(spark: SparkSession, sfDir: String): DataFrame =
+    GraphLoader.tpch(spark, sfDir).relTable("SUPPLIES")
+      .select(col("__src").as("supp"), col("__dst").as("part")).distinct()
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("part"))
+      .localCheckpoint(true)
 
   /** MinHash-APPROXIMATED neighborhood similarity (SparkEntry
     * `graph_neighbor_sim_approx`) — the scale path past
@@ -1431,16 +1372,7 @@ object Algorithms {
     * `graph_clustering_coeff` query.
     */
   def clusteringCoeffQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").as("src"),
-      lead(col("c_custkey"), 1).over(w).as("d1"),
-      lead(col("c_custkey"), 2).over(w).as("d2"))
-    val edges = nbr.select(col("src"), col("d1").as("dst"))
-      .filter(col("dst").isNotNull)
-      .unionByName(nbr.select(col("src"), col("d2").as("dst"))
-        .filter(col("dst").isNotNull))
+    val edges = customerChain(spark, sfDir, 1, 2)
     localClustering(edges).orderBy(col("id"))
   }
 
@@ -1502,6 +1434,22 @@ object Algorithms {
     dist
   }
 
+  /** The weighted per-nation skip-link graph of [[ssspQuery]] and
+    * [[waspQuery]] — the lead 1, 2, 8 edges with the deterministic
+    * cost `w = 1 + (src + dst) mod 7` — and its sources, each nation's
+    * minimum custkey.
+    */
+  private def weightedSkipLinks(spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame) = {
+    val edges = customerChain(spark, sfDir, 1, 2, 8)
+      .withColumn("w", lit(1L) + (col("src") + col("dst")) % 7)
+    val sources = graft.Tables.customer(spark, sfDir)
+      .groupBy(col("c_nationkey"))
+      .agg(min(col("c_custkey")).as("id"))
+      .select(col("id"))
+    (edges, sources)
+  }
+
   /** SSSP over the per-nation proximity graph with log-spaced skip
     * links (lead 1, 2, 8) and the deterministic edge cost
     * `1 + (src + dst) mod 7`; one source per nation (its minimum
@@ -1513,23 +1461,9 @@ object Algorithms {
     */
   def ssspQuery(spark: SparkSession, sfDir: String,
       rounds: Int = 14): DataFrame = {
-    val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").as("src"),
-      lead(col("c_custkey"), 1).over(w).as("d1"),
-      lead(col("c_custkey"), 2).over(w).as("d2"),
-      lead(col("c_custkey"), 8).over(w).as("d8"))
-    val edges = Seq("d1", "d2", "d8")
-      .map(d => nbr.select(col("src"), col(d).as("dst"))
-        .filter(col("dst").isNotNull))
-      .reduce(_.unionByName(_))
-      .withColumn("w", lit(1L) + (col("src") + col("dst")) % 7)
-    val sources = c.groupBy(col("c_nationkey"))
-      .agg(min(col("c_custkey")).as("id"))
-      .select(col("id"))
+    val (edges, sources) = weightedSkipLinks(spark, sfDir)
     val dist = ssspBoundedHops(edges, sources, rounds)
-    c.select(col("c_custkey").as("id"))
+    graft.Tables.customer(spark, sfDir).select(col("c_custkey").as("id"))
       .join(dist, Seq("id"), "left_outer")
       .select(col("id"), col("cost"))
       .orderBy(col("id"))
@@ -1566,22 +1500,8 @@ object Algorithms {
     */
   def waspQuery(spark: SparkSession, sfDir: String,
       rounds: Int = 14): DataFrame = {
-    val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").as("src"),
-      lead(col("c_custkey"), 1).over(w).as("d1"),
-      lead(col("c_custkey"), 2).over(w).as("d2"),
-      lead(col("c_custkey"), 8).over(w).as("d8"))
-    val edges = Seq("d1", "d2", "d8")
-      .map(d => nbr.select(col("src"), col(d).as("dst"))
-        .filter(col("dst").isNotNull))
-      .reduce(_.unionByName(_))
-      .withColumn("w", lit(1L) + (col("src") + col("dst")) % 7)
-      .localCheckpoint(true)
-    val sources = c.groupBy(col("c_nationkey"))
-      .agg(min(col("c_custkey")).as("id"))
-      .select(col("id"))
+    val (graph, sources) = weightedSkipLinks(spark, sfDir)
+    val edges = graph.localCheckpoint(true)
     val dist = ssspBoundedHops(edges, sources, rounds)
     val tight = edges
       .join(dist.select(col("id").as("src"), col("cost").as("__cs")), Seq("src"))
@@ -1601,7 +1521,7 @@ object Algorithms {
       // materialization trades 2/3 of the driver actions for nothing
       if (k % 3 == 0 || k == rounds) sig = sig.localCheckpoint(true)
     }
-    c.select(col("c_custkey").as("id"))
+    graft.Tables.customer(spark, sfDir).select(col("c_custkey").as("id"))
       .join(dist, Seq("id"), "left_outer")
       .join(sig, Seq("id"), "left_outer")
       .select(col("id"), col("cost"),
@@ -1620,52 +1540,17 @@ object Algorithms {
     * absent from a landmark's profile.
     *
     * 100 TB notes: state is k·|reached| rows for k landmarks — k is a
-    * design constant (tens), so state is O(k·V), never V². Per round:
-    * one src-keyed join (edges pre-partitioned and checkpointed once)
-    * and one (lm, id) anti-join against the accumulated labels; both
+    * design constant (tens), so state is O(k·V), never V². Per
+    * [[firstReach]] round: one src-keyed join (edges pre-partitioned
+    * and checkpointed once) and one (lm, id) anti-join against the
+    * accumulated levels; both
     * exchanges are on node-id-dominated keys, no skew amplification
     * beyond the graph's own hub structure.
     */
   def landmarkDistances(edges: DataFrame, landmarks: DataFrame,
-      maxDepth: Int = 16): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).localCheckpoint(true)
-    var labels = landmarks.select(col("lm"), col("id")).distinct()
-      .withColumn("depth", lit(0L)).localCheckpoint(true)
-    var frontier = labels
-    var d = 0L
-    var drained = false
-    while (d < maxDepth && !drained) {
-      val next = e.join(frontier, e("src") === frontier("id"))
-        .select(col("lm"), col("dst").as("id")).distinct()
-        .join(labels, Seq("lm", "id"), "left_anti")
-        .withColumn("depth", lit(d + 1L))
-        .localCheckpoint(true)
-      if (next.isEmpty) drained = true
-      else {
-        // every frontier increment is checkpointed above, so the
-        // accumulated union has flat lineage — re-materializing the
-        // whole labels frame each round would add an O(|labels|)
-        // write per round for nothing
-        labels = labels.unionByName(next)
-        frontier = next
-        d += 1
-      }
-    }
-    labels
-  }
+      maxDepth: Int = 16): DataFrame =
+    firstReach(bySrc(edges), landmarks, Seq("lm", "id"), maxDepth)._1
 
-  /** Landmark closeness profile over the per-nation proximity graph
-    * (the [[ssspQuery]] skip-link edges, unit hop cost): landmarks =
-    * each nation's 1st and 10th smallest custkeys, distances bounded
-    * at 16 hops, and per customer the profile aggregate
-    * `(reached, dist_sum)` — the closeness-centrality estimate a
-    * distance sketch serves. Forward-only skip links make the graph a
-    * DAG, so the oracle's recursive CTE terminates on the same bound.
-    * Unreached customers report `reached = 0, dist_sum NULL` — the
-    * documented bounded-hop semantic (same family as
-    * `graph_sssp_weighted`). The SparkEntry `graph_closeness` query.
-    */
   /** The per-nation skip-link proximity DAG shared by
     * [[closenessQuery]] and [[betweennessQuery]] (forward-only d1/d2/
     * d8 leads ⇒ acyclic, unit-cost, no parallel edges), plus its
@@ -1674,22 +1559,11 @@ object Algorithms {
     */
   private def skipLinkGraph(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame) = {
-    val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").as("src"),
-      lead(col("c_custkey"), 1).over(w).as("d1"),
-      lead(col("c_custkey"), 2).over(w).as("d2"),
-      lead(col("c_custkey"), 8).over(w).as("d8"))
-    val edges = Seq("d1", "d2", "d8")
-      .map(d => nbr.select(col("src"), col(d).as("dst"))
-        .filter(col("dst").isNotNull))
-      .reduce(_.unionByName(_))
-    val ranked = c.select(col("c_custkey"),
-      row_number().over(w).as("rn"))
-    val landmarks = ranked.filter(col("rn") === 1 || col("rn") === 10)
+    val landmarks = graft.Tables.customer(spark, sfDir)
+      .select(col("c_custkey"), row_number().over(byNation).as("rn"))
+      .filter(col("rn") === 1 || col("rn") === 10)
       .select(col("c_custkey").as("lm"), col("c_custkey").as("id"))
-    (edges, landmarks)
+    (customerChain(spark, sfDir, 1, 2, 8), landmarks)
   }
 
   /** Landmark eccentricity profile + diameter lower bound — the
@@ -1732,6 +1606,17 @@ object Algorithms {
   private val lmDistCache =
     new graft.Artifacts.Cache[(SparkSession, String, Int), DataFrame]()
 
+  /** Landmark closeness profile over the per-nation proximity graph
+    * (the [[ssspQuery]] skip-link edges, unit hop cost): landmarks =
+    * each nation's 1st and 10th smallest custkeys, distances bounded
+    * at 16 hops, and per customer the profile aggregate
+    * `(reached, dist_sum)` — the closeness-centrality estimate a
+    * distance sketch serves. Forward-only skip links make the graph a
+    * DAG, so the oracle's recursive CTE terminates on the same bound.
+    * Unreached customers report `reached = 0, dist_sum NULL` — the
+    * documented bounded-hop semantic (same family as
+    * `graph_sssp_weighted`). The SparkEntry `graph_closeness` query.
+    */
   def closenessQuery(spark: SparkSession, sfDir: String,
       maxDepth: Int = 16): DataFrame = {
     val c = graft.Tables.customer(spark, sfDir)
@@ -1793,38 +1678,21 @@ object Algorithms {
     brandesBackward(levels, brandesPairs(levels, e), deepest)
   }
 
-  /** Forward Brandes σ BFS: `(levels(lm, id, dist, sigma), edges,
-    * deepest-reached-level)`. First-reach only, so `levels` is
-    * PREFIX-STABLE in the depth bound — the frame computed at bound D
-    * filtered to `dist <= d` IS the bound-d frame, which is what lets
+  /** Forward Brandes σ BFS ([[firstReach]] with σ): `(levels(lm, id,
+    * depth, sigma), edges, deepest-reached-level)`. First-reach only,
+    * so `levels` is PREFIX-STABLE in the depth bound — the frame
+    * computed at bound D filtered to `depth <= d` IS the bound-d frame,
+    * which is what lets
     * [[centralityDepthTuningQuery]] feed every grid depth from ONE
     * forward pass.
     */
   private[graft] def brandesForward(spark: SparkSession, sfDir: String,
       maxDepth: Int): (DataFrame, DataFrame, Int) = {
     val (edges, landmarks) = skipLinkGraph(spark, sfDir)
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).localCheckpoint(true)
-    // forward sigma BFS: levels (lm, id, dist, sigma), first-reach only
-    var levels = landmarks.select(col("lm"), col("id")).distinct()
-      .withColumn("dist", lit(0)).withColumn("sigma", lit(1L))
-      .localCheckpoint(true)
-    var frontier = levels
-    var d = 0
-    var drained = false
-    while (d < maxDepth && !drained) {
-      val next = frontier.join(e, frontier("id") === e("src"))
-        .groupBy(col("lm"), col("dst"))
-        .agg(sum(col("sigma")).as("sigma"))
-        .withColumnRenamed("dst", "id")
-        .join(levels.select(col("lm"), col("id")), Seq("lm", "id"), "left_anti")
-        .withColumn("dist", lit(d + 1))
-        .select(col("lm"), col("id"), col("dist"), col("sigma"))
-        .localCheckpoint(true)
-      if (next.isEmpty) drained = true
-      else { levels = levels.unionByName(next); frontier = next; d += 1 }
-    }
-    (levels, e, d)
+    val e = bySrc(edges)
+    val (levels, deepest, _) = firstReach(e, landmarks, Seq("lm", "id"),
+      maxDepth, sigma = true)
+    (levels, e, deepest)
   }
 
   /** The Brandes successor-pair frame `(lm, vid, vdist, vsig, wid,
@@ -1840,9 +1708,9 @@ object Algorithms {
     */
   private def brandesPairs(levels: DataFrame, e: DataFrame): DataFrame = {
     val v = levels.select(col("lm"), col("id").as("vid"),
-      col("dist").as("vdist"), col("sigma").as("vsig"))
+      col("depth").as("vdist"), col("sigma").as("vsig"))
     val w = levels.select(col("lm").as("w_lm"), col("id").as("wid"),
-      col("dist").as("wdist"), col("sigma").as("wsig"))
+      col("depth").as("wdist"), col("sigma").as("wsig"))
     v.join(e, v("vid") === e("src"))
       .join(w, col("lm") === col("w_lm") && col("dst") === col("wid") &&
         col("wdist") === col("vdist") + 1)
@@ -1851,21 +1719,21 @@ object Algorithms {
       .localCheckpoint(true)
   }
 
-  /** Backward dependency accumulation of the depth-`depth`-bounded
+  /** Backward dependency accumulation of the depth-`bound`-bounded
     * Brandes over the forward `levels` frame and its [[brandesPairs]]
-    * frame (both computed at a bound ≥ `depth`): nodes AT the horizon
+    * frame (both computed at a bound ≥ `bound`): nodes AT the horizon
     * seed delta 0, each shallower level sums σ-ratio terms from its
     * successors. Returns the per-(landmark, node) dependency frame
-    * `(lm, id, delta)`, `1 <= dist <= depth` rows only.
+    * `(lm, id, delta)`, `1 <= depth <= bound` rows only.
     */
   private def brandesBackward(levels: DataFrame, pairs: DataFrame,
-      depth: Int): DataFrame = {
+      bound: Int): DataFrame = {
     // nodes at the horizon have no successors inside the bound → 0
-    var withDelta = levels.filter(col("dist") === depth)
+    var withDelta = levels.filter(col("depth") === bound)
       .withColumn("delta", lit(0.0)).localCheckpoint(true)
     val acc = Seq.newBuilder[DataFrame]
-    acc += withDelta.select(col("lm"), col("id"), col("dist"), col("delta"))
-    for (l <- (depth - 1) to 1 by -1) {
+    acc += withDelta.select(col("lm"), col("id"), col("depth"), col("delta"))
+    for (l <- (bound - 1) to 1 by -1) {
       val wSide = withDelta.select(col("lm"), col("id").as("wid"),
         col("delta").as("w_delta"))
       val contrib = pairs.filter(col("vdist") === l)
@@ -1875,15 +1743,15 @@ object Algorithms {
             * (lit(1.0) + col("w_delta")), 12).as("t"))
         .groupBy(col("lm"), col("id"))
         .agg(sum(col("t").cast("decimal(38,12)")).cast("double").as("delta"))
-      withDelta = levels.filter(col("dist") === l)
+      withDelta = levels.filter(col("depth") === l)
         .join(contrib, Seq("lm", "id"), "left_outer")
-        .select(col("lm"), col("id"), col("dist"), col("sigma"),
+        .select(col("lm"), col("id"), col("depth"), col("sigma"),
           coalesce(col("delta"), lit(0.0)).as("delta"))
         .localCheckpoint(true)
-      acc += withDelta.select(col("lm"), col("id"), col("dist"), col("delta"))
+      acc += withDelta.select(col("lm"), col("id"), col("depth"), col("delta"))
     }
     acc.result().reduce(_.unionByName(_))
-      .filter(col("dist") >= 1)
+      .filter(col("depth") >= 1)
       .select(col("lm"), col("id"), col("delta"))
   }
 
@@ -1907,8 +1775,7 @@ object Algorithms {
       .localCheckpoint(true)
     val lmRank = deltas.select(col("lm")).distinct()
       .select(col("lm"),
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .orderBy(col("lm"))).as("r"))
+        row_number().over(Window.orderBy(col("lm"))).as("r"))
     val ranked = deltas.join(broadcast(lmRank), Seq("lm"))
     val byK = ks.map { k =>
       ranked.filter(col("r") <= k)
@@ -1916,36 +1783,46 @@ object Algorithms {
         .agg((round(sum(col("delta").cast("decimal(38,12)"))
           .cast("double"), 6) + lit(0.0)).as("bc"),
           count(lit(1)).as("np"))
-        .select(lit(k).as("k"), col("id"), col("bc"), col("np"))
+        .select(lit(k).as("cell"), col("id"), col("bc"), col("np"))
     }.reduce(_.unionByName(_))
-    // per-k top-N as the mergeable bounded aggregate
-    // ([[graft.functions.TopKAggregate]], same (bc DESC, id ASC)
-    // order as the former row_number window): with 4 k-values the
-    // window plan made 4 node-cardinality partitions whose map-side
-    // bounding leaned on the unpinned WindowGroupLimit rescue — the
-    // aggregate bounds every map task to ≤ topN rows per k by
-    // construction, so the exchange carries ≤ topN·|ks|·tasks rows
+    topNAgreement(byK, ks.max, topN, "n_landmarks", "n_pairs")
+  }
+
+  /** The agreement tail of the centrality tuning grids: per grid cell
+    * of `cells(cell, id, bc, np)`, the overlap of the cell's top-`topN`
+    * ids by (bc DESC, id ASC) with the reference cell `ref`'s, its
+    * `topN` fraction, and the cell's state volume Σ np — reported as
+    * (`cellOut`, `volOut`, top<topN>_overlap, agreement).
+    *
+    * Per-cell top-N is the mergeable bounded aggregate
+    * ([[graft.functions.TopKAggregate]], same order as the former
+    * row_number window): with 4 cells the window plan made 4
+    * node-cardinality partitions whose map-side bounding leaned on the
+    * unpinned WindowGroupLimit rescue — the aggregate bounds every map
+    * task to ≤ topN rows per cell by construction, so the exchange
+    * carries ≤ topN·cells·tasks rows.
+    */
+  private def topNAgreement(cells: DataFrame, ref: Int, topN: Int,
+      cellOut: String, volOut: String): DataFrame = {
     val topkAgg = udaf(new graft.functions.TopKAggregate(topN))
-    val tops = byK.groupBy(col("k"))
+    val tops = cells.groupBy(col("cell"))
       .agg(topkAgg(col("id"), col("bc")).as("top"))
-      .select(col("k"), explode(col("top")).as("row"))
-      .select(col("k"), col("row._1").as("id"))
+      .select(col("cell"), explode(col("top")).as("row"))
+      .select(col("cell"), col("row._1").as("id"))
       .localCheckpoint(true)
-    val kMax = ks.max
-    val ref = tops.filter(col("k") === kMax)
+    val inRef = tops.filter(col("cell") === ref)
       .select(col("id"), lit(1L).as("in_ref"))
-    val pairs = byK.groupBy(col("k"))
-      .agg(sum(col("np")).as("n_pairs"))
-    tops.join(broadcast(ref), Seq("id"), "left_outer")
-      .groupBy(col("k"))
+    val volume = cells.groupBy(col("cell")).agg(sum(col("np")).as("vol"))
+    tops.join(broadcast(inRef), Seq("id"), "left_outer")
+      .groupBy(col("cell"))
       .agg(coalesce(sum(col("in_ref")), lit(0L)).as("overlap"))
-      .join(pairs, Seq("k"))
-      .select(col("k").cast("long").as("n_landmarks"),
-        col("n_pairs").cast("long").as("n_pairs"),
+      .join(volume, Seq("cell"))
+      .select(col("cell").cast("long").as(cellOut),
+        col("vol").cast("long").as(volOut),
         col("overlap").cast("long").as(s"top${topN}_overlap"),
         (round(col("overlap").cast("double") / topN, 6) + lit(0.0))
           .as("agreement"))
-      .orderBy(col("n_landmarks"))
+      .orderBy(col(cellOut))
   }
 
   /** Depth-bound tuning curve for sampled betweenness — the OTHER
@@ -1975,28 +1852,17 @@ object Algorithms {
         .agg((round(sum(col("delta").cast("decimal(38,12)"))
           .cast("double"), 6) + lit(0.0)).as("bc"),
           count(lit(1)).as("np"))
-        .select(lit(dep).as("dep"), col("id"), col("bc"), col("np"))
+        .select(lit(dep).as("cell"), col("id"), col("bc"), col("np"))
     }.reduce(_.unionByName(_))
-    val topkAgg = udaf(new graft.functions.TopKAggregate(topN))
-    val tops = byD.groupBy(col("dep"))
-      .agg(topkAgg(col("id"), col("bc")).as("top"))
-      .select(col("dep"), explode(col("top")).as("row"))
-      .select(col("dep"), col("row._1").as("id"))
-      .localCheckpoint(true)
-    val ref = tops.filter(col("dep") === maxD)
-      .select(col("id"), lit(1L).as("in_ref"))
-    val state = byD.groupBy(col("dep")).agg(sum(col("np")).as("n_state"))
-    tops.join(broadcast(ref), Seq("id"), "left_outer")
-      .groupBy(col("dep"))
-      .agg(coalesce(sum(col("in_ref")), lit(0L)).as("overlap"))
-      .join(state, Seq("dep"))
-      .select(col("dep").cast("long").as("max_depth"),
-        col("n_state").cast("long").as("n_state"),
-        col("overlap").cast("long").as(s"top${topN}_overlap"),
-        (round(col("overlap").cast("double") / topN, 6) + lit(0.0))
-          .as("agreement"))
-      .orderBy(col("max_depth"))
+    topNAgreement(byD, maxD, topN, "max_depth", "n_state")
   }
+
+  /** Budgets of [[stronglyConnectedComponents]]: trim peels, FW-BW
+    * coloring rounds, and iterations per [[minLabelFixpoint]].
+    */
+  private val SccMaxTrim = 20
+  private val SccMaxRounds = 10
+  private val SccMaxProp = 50
 
   /** Directed min-label propagation to fixpoint over `edges`
     * restricted to `verts` (id column): label(v) = min{id(u) : u ⇝ v
@@ -2005,13 +1871,13 @@ object Algorithms {
     * iteration, `limit(1).count()` change probe, lineage cut per
     * round.
     */
-  private def minLabelFixpoint(edges: DataFrame, verts: DataFrame,
-      maxIter: Int): DataFrame = {
+  private def minLabelFixpoint(edges: DataFrame, verts: DataFrame)
+      : DataFrame = {
     var labels = verts.select(col("id"), col("id").as("lbl"))
       .localCheckpoint(true)
     var iter = 0
     var converged = false
-    while (iter < maxIter && !converged) {
+    while (iter < SccMaxProp && !converged) {
       val propagated = edges.join(labels, edges("src") === labels("id"))
         .select(col("dst").as("id"), col("lbl"),
           lit(null).cast(labels.schema("lbl").dataType).as("old"))
@@ -2031,7 +1897,7 @@ object Algorithms {
       iter += 1
     }
     if (!converged) throw new IllegalStateException(
-      s"minLabelFixpoint did not converge in $maxIter iterations")
+      s"minLabelFixpoint did not converge in $SccMaxProp iterations")
     labels
   }
 
@@ -2061,8 +1927,7 @@ object Algorithms {
     * per-round count probes. Rounds are bounded and convergence is
     * ASSERTED — a silent partial answer is never returned.
     */
-  def stronglyConnectedComponents(edges: DataFrame, maxTrim: Int = 20,
-      maxRounds: Int = 10, maxProp: Int = 50): DataFrame = {
+  def stronglyConnectedComponents(edges: DataFrame): DataFrame = {
     var rem = edges.select(col("src"), col("dst")).distinct()
       .repartition(col("src")).localCheckpoint(true)
     var verts = rem.select(col("src").as("id"))
@@ -2083,7 +1948,7 @@ object Algorithms {
     var peel = 0
     var trimDone = false
     var nVerts = verts.count()
-    while (peel < maxTrim && !trimDone) {
+    while (peel < SccMaxTrim && !trimDone) {
       val core = rem.select(col("dst").as("id")).distinct()
         .join(rem.select(col("src").as("id")).distinct(),
           Seq("id"), "left_semi")
@@ -2106,12 +1971,12 @@ object Algorithms {
     // ---- color: FW-BW rounds on the cycle-bearing remainder ----
     var round = 0
     var remaining = nVerts // known from the trim loop — no probe job
-    while (remaining > 0 && round < maxRounds) {
-      val fwd = minLabelFixpoint(rem, verts, maxProp)
+    while (remaining > 0 && round < SccMaxRounds) {
+      val fwd = minLabelFixpoint(rem, verts)
         .withColumnRenamed("lbl", "fwd")
       val bwd = minLabelFixpoint(
-        rem.select(col("dst").as("src"), col("src").as("dst")),
-        verts, maxProp).withColumnRenamed("lbl", "bwd")
+        rem.select(col("dst").as("src"), col("src").as("dst")), verts)
+        .withColumnRenamed("lbl", "bwd")
       val resolved = fwd.join(bwd, Seq("id"))
         .filter(col("fwd") === col("bwd"))
         .select(col("id"), col("fwd").as("scc"))
@@ -2127,7 +1992,7 @@ object Algorithms {
       round += 1
     }
     if (remaining > 0) throw new IllegalStateException(
-      s"stronglyConnectedComponents did not resolve in $maxRounds rounds")
+      s"stronglyConnectedComponents did not resolve in $SccMaxRounds rounds")
     if (acc.isEmpty) verts.select(col("id"), col("id").as("scc"))
     else acc.result().reduce(_.unionByName(_))
   }
@@ -2143,9 +2008,7 @@ object Algorithms {
     */
   def sccQuery(spark: SparkSession, sfDir: String): DataFrame = {
     val g = GraphLoader.tpch(spark, sfDir)
-    val dag = Seq("PLACED_BY", "FROM_NATION", "NEXT_IN_REGION")
-      .map(t => g.relTable(t).select(col("__src").as("src"), col("__dst").as("dst")))
-      .reduce(_.unionByName(_))
+    val dag = g.edges("PLACED_BY", "FROM_NATION", "NEXT_IN_REGION")
     val wrap = graft.Tables.nation(spark, sfDir)
       .groupBy(col("n_regionkey"))
       .agg(max(col("n_nationkey")).as("mx"), min(col("n_nationkey")).as("mn"))
@@ -2176,19 +2039,8 @@ object Algorithms {
   def randomWalkQuery(spark: SparkSession, sfDir: String,
       steps: Int = 8): DataFrame = {
     val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").cast("long").as("src"),
-      lead(col("c_custkey"), 1).over(w).cast("long").as("d1"),
-      lead(col("c_custkey"), 2).over(w).cast("long").as("d2"),
-      lead(col("c_custkey"), 8).over(w).cast("long").as("d8"))
-    val edges = Seq("d1", "d2", "d8")
-      .map(d => nbr.select(col("src"), col(d).as("dst"))
-        .filter(col("dst").isNotNull))
-      .reduce(_.unionByName(_))
-    val iw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("src")).orderBy(col("dst"))
-    val idx = edges.withColumn("idx", row_number().over(iw) - lit(1))
+    val iw = Window.partitionBy(col("src")).orderBy(col("dst"))
+    val idx = customerChain(spark, sfDir, 1, 2, 8).withColumn("idx", row_number().over(iw) - lit(1))
       .localCheckpoint(true)
     val deg = idx.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .localCheckpoint(true)
@@ -2243,18 +2095,9 @@ object Algorithms {
   def biasedWalkQuery(spark: SparkSession, sfDir: String,
       steps: Int = 6): DataFrame = {
     val c = graft.Tables.customer(spark, sfDir)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("c_nationkey")).orderBy(col("c_custkey"))
-    val nbr = c.select(col("c_custkey").cast("long").as("src"),
-      lead(col("c_custkey"), 1).over(w).cast("long").as("d1"),
-      lead(col("c_custkey"), 2).over(w).cast("long").as("d2"),
-      lead(col("c_custkey"), 8).over(w).cast("long").as("d8"))
     // symmetrized so walks can RETURN (the node2vec p-dial is
     // meaningless on a DAG): forward proximity edges + their reverses
-    val fwd = Seq("d1", "d2", "d8")
-      .map(d => nbr.select(col("src"), col(d).as("dst"))
-        .filter(col("dst").isNotNull))
-      .reduce(_.unionByName(_))
+    val fwd = customerChain(spark, sfDir, 1, 2, 8)
     val edges = fwd.unionByName(
         fwd.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)
@@ -2265,10 +2108,8 @@ object Algorithms {
     var state = seeds.localCheckpoint(true)
     val acc = scala.collection.mutable.ArrayBuffer[DataFrame](
       state.select(col("walker"), col("step"), col("node")))
-    val pw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("walker")).orderBy(col("dst"))
-    val tw = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("walker"))
+    val pw = Window.partitionBy(col("walker")).orderBy(col("dst"))
+    val tw = Window.partitionBy(col("walker"))
     for (s <- 1 to steps) {
       // walker-state broadcast, edge frames streamed — same
       // no-per-step-shuffle discipline as [[randomWalkQuery]]
@@ -2360,20 +2201,7 @@ object Algorithms {
     */
   def adamicAdarQuery(spark: SparkSession, sfDir: String, k: Int = 20,
       hubCap: Int = 500): DataFrame = {
-    val g = GraphLoader.tpch(spark, sfDir)
-    // materialize the deduped edge list once: it feeds the degree
-    // aggregate AND both sides of the pair join, and each consumer
-    // would otherwise re-scan the raw table and re-pay the distinct
-    // exchange (4 full scans observed in the un-checkpointed plan).
-    // Partition by the pair key at the session's shuffle parallelism:
-    // the Σ_p pdeg² pair enumeration downstream is the expensive
-    // stage, and a checkpoint left at the AQE-coalesced width (4
-    // partitions here) would run it on that many cores.
-    val npart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val e = g.relTable("SUPPLIES")
-      .select(col("__src").as("supp"), col("__dst").as("part")).distinct()
-      .repartition(npart, col("part"))
-      .localCheckpoint(true)
+    val e = suppliesByPart(spark, sfDir)
     val partDeg = e.groupBy(col("part")).agg(count(lit(1)).as("pdeg"))
     // pdeg >= 2 is implied by pair formation; the weight ln(pdeg) is
     // therefore never zero

@@ -32,8 +32,8 @@ final case class PropertyGraph(
     rels.getOrElse(relType, throw new IllegalArgumentException(
       s"unknown relationship type :$relType (have ${rels.keys.mkString(", ")})"))
 
-  /** All relationships as a single (src, dst) edge list. */
-  def edges: DataFrame =
-    rels.values.map(_.select(col("__src").as("src"), col("__dst").as("dst")))
+  /** The relationships of `types` as one (src, dst) edge list. */
+  def edges(types: String*): DataFrame =
+    types.map(t => relTable(t).select(col("__src").as("src"), col("__dst").as("dst")))
       .reduce(_.unionByName(_))
 }

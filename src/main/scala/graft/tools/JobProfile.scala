@@ -98,13 +98,7 @@ object JobProfile {
       try graft.SparkEntry.queries(n)(spark, warmDir).collect()
       catch { case e: Exception => failed(n, e) }
     }
-    def dropCaches(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!graft.Artifacts.isPinned(id)) rdd.unpersist(false)
-      }
-    }
-    dropCaches()
+    graft.Artifacts.dropUnpinned(spark)
     names.foreach { n =>
       try (1 to reps).foreach { r =>
         System.gc()
@@ -128,12 +122,12 @@ object JobProfile {
           stageRows.forEach(s => println(s))
         }
         stageRows.clear()
-        dropCaches()
+        graft.Artifacts.dropUnpinned(spark)
       } catch {
         case e: Exception =>
           failed(n, e)
           stageRows.clear()
-          dropCaches()
+          graft.Artifacts.dropUnpinned(spark)
       }
     }
     spark.stop()

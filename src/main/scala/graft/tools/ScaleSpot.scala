@@ -21,12 +21,6 @@ object ScaleSpot {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.plans.GraftOptimizations.install(spark)
-    def dropCaches(): Unit = {
-      spark.sharedState.cacheManager.clearCache()
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!graft.Artifacts.isPinned(id)) rdd.unpersist(false)
-      }
-    }
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val times = (1 to reps).map { _ =>
@@ -36,10 +30,10 @@ object ScaleSpot {
           case e: Throwable =>
             System.err.println(s"[scalespot] $name failed: $e"); -1L
         }
-        // stop the clock BEFORE the cache sweep: dropCaches() is
+        // stop the clock BEFORE the cache sweep: the sweep is
         // harness hygiene, not query cost
         val dt = (System.nanoTime() - t0) / 1e9
-        dropCaches()
+        graft.Artifacts.dropUnpinned(spark)
         (dt, n)
       }
       // best/rows over SUCCESSFUL reps only — a failed rep returns

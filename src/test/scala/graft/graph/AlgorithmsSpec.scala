@@ -30,16 +30,31 @@ class AlgorithmsSpec extends AnyFunSuite {
     val depths = Algorithms.bfsDepths(edges, Seq(1L).toDF("id"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(depths == Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 2L))
+    // a live frontier at the hop bound is loud, never a silent
+    // truncation that drops the deeper nodes
+    val chain = edgeDf(Seq((1L, 2L), (2L, 3L), (3L, 4L)))
+    intercept[IllegalStateException] {
+      Algorithms.bfsDepths(chain, Seq(1L).toDF("id"), maxDepth = 1)
+    }
   }
 
   test("pagerank mass is conserved and favors high in-degree") {
     // star: everyone points at 1
     val edges = edgeDf(Seq((2L, 1L), (3L, 1L), (4L, 1L), (5L, 1L)))
-    val pr = Algorithms.pageRank(spark, edges, iterations = 10)
+    val pr = Algorithms.pageRank(spark, edges)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(math.abs(pr.values.sum - 1.0) < 1e-6, s"mass=${pr.values.sum}")
     assert(pr(1L) > pr(2L) * 2)
     assert(Seq(2L, 3L, 4L, 5L).map(pr).distinct.size == 1) // symmetric leaves
+    // seeded at every vertex, the personalized teleport is uniform:
+    // personalized PageRank is PageRank
+    import spark.implicits._
+    val ppr = Algorithms.personalizedPageRank(spark, edges,
+        Seq(1L, 2L, 3L, 4L, 5L).toDF("id"))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(ppr.keySet == pr.keySet)
+    assert(pr.forall { case (id, r) => math.abs(ppr(id) - r) < 1e-12 },
+      s"pr=$pr ppr=$ppr")
   }
 
   test("triangles finds each triangle once regardless of orientation") {
@@ -147,10 +162,10 @@ class AlgorithmsSpec extends AnyFunSuite {
     // the parity schedule updates one endpoint at a time: node 1
     // (color 1) adopts 2, then node 2 reads the UPDATED label and
     // keeps 2 — a stable fixpoint after one full sweep
-    val async2 = Algorithms.labelPropagationAsync(edge, rounds = 2)
+    val async2 = Algorithms.labelPropagation(edge, rounds = 2, alternating = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(async2 == Map(1L -> 2L, 2L -> 2L), "async converges on the edge")
-    val async6 = Algorithms.labelPropagationAsync(edge, rounds = 6)
+    val async6 = Algorithms.labelPropagation(edge, rounds = 6, alternating = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(async6 == async2, "the fixpoint is stable under more rounds")
     // on the bridged triangles it finds the same communities as the
@@ -159,7 +174,7 @@ class AlgorithmsSpec extends AnyFunSuite {
       (1L, 2L), (2L, 3L), (1L, 3L),
       (10L, 11L), (11L, 12L), (10L, 12L),
       (3L, 10L)))
-    val lp = Algorithms.labelPropagationAsync(edges, rounds = 8)
+    val lp = Algorithms.labelPropagation(edges, rounds = 8, alternating = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(Seq(1L, 2L, 3L).map(lp).toSet.size == 1)
     assert(Seq(10L, 11L, 12L).map(lp).toSet.size == 1)
@@ -171,7 +186,7 @@ class AlgorithmsSpec extends AnyFunSuite {
     // pmod puts every id in {0,1}, so both endpoints of an all-negative
     // edge participate and the pair converges to one label.
     val edge = edgeDf(Seq((-1L, -2L)))
-    val lp = Algorithms.labelPropagationAsync(edge, rounds = 4)
+    val lp = Algorithms.labelPropagation(edge, rounds = 4, alternating = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(lp.values.toSet.size == 1,
       s"negative-id endpoints must converge to one label, got $lp")

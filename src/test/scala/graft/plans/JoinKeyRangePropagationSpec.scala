@@ -108,6 +108,22 @@ class JoinKeyRangePropagationSpec extends AnyFunSuite {
     assert(off === 20L && on === off)
   }
 
+  test("a bound from the non-preserved side never filters an outer join's preserved side") {
+    // lkey < 5 holds on the line side only; every order row must
+    // survive the outer join (4 matched orders x 2 lines + 996
+    // unmatched orders), in both orientations
+    val o = orders.select((col("okey") + 1000000000L).as("__id"), col("otag"))
+    val l = lines.filter(col("lkey") < 5)
+      .select((col("lkey") + 1000000000L).as("__src"), col("v"))
+    def left: DataFrame = o.join(l, col("__id") === col("__src"), "left_outer")
+    def right: DataFrame = l.join(o, col("__src") === col("__id"), "right_outer")
+    val on = Seq(left.count(), right.count())
+    spark.conf.set("spark.graft.joinRangePushdown", "false")
+    val off = try Seq(left.count(), right.count()) finally
+      spark.conf.set("spark.graft.joinRangePushdown", "true")
+    assert(off === Seq(1004L, 1004L) && on === off)
+  }
+
   test("a derived bound never lands under a Limit on the other side") {
     // top 5 customers by balance, then a key-range match against them:
     // the c2.custkey range must not reach c's scan BELOW its LIMIT,
