@@ -318,8 +318,8 @@ object CypherPlanner {
         val sharesVar = chain.nodeVars.exists(s.nodeVars.contains)
         val prevDf =
           if (s.df != null && s.tiny && !sharesVar) broadcast(s.df) else s.df
-        val (cdf, cvars) = planChain(graph, chain, s.nodeVars, prevDf,
-          needs = Some(needs), wref = wref)
+        val (cdf, cvars) = new ChainPlanner(graph, chain, s.nodeVars, prevDf,
+          needs = Some(needs), wref = wref).plan()
         // GQL group variables surface as LIST-valued scalar bindings
         // (UNWIND/size/indexing consume them like any WITH-bound list)
         val gvars = groupListVars(chain)
@@ -336,8 +336,8 @@ object CypherPlanner {
         // left-outer join on the shared variables' ids. The attached
         // WHERE filters the optional side BEFORE the join — unmatched
         // outer rows keep their nulls (Cypher semantics).
-        var (odf, ovars) = planChain(graph, chain, Set.empty, null, shared.toSet,
-          needs = Some(needs), wref = wref)
+        var (odf, ovars) = new ChainPlanner(graph, chain, Set.empty, null,
+          shared.toSet, needs = Some(needs), wref = wref).plan()
         where.foreach(e => odf = odf.filter(toColumn(e, s.binds)))
         val keys = shared.map(v => s"${v}__id")
         // drop the optional side's duplicate copies of shared-var props
@@ -1219,12 +1219,7 @@ object CypherPlanner {
               keys, "left")
             ColRef(coalesce(col(alias), lit(false)))
           case ExistsPattern(chain, w) =>
-            val shared = chain.nodeVars.filter(s.nodeVars.contains).distinct
-            require(shared.nonEmpty,
-              "EXISTS pattern must share at least one variable with the outer MATCH")
-            val (odf0, _) = planChain(graph, chain, Set.empty, null, shared.toSet)
-            val odf = w.map(p => odf0.filter(toColumn(p, s.binds))).getOrElse(odf0)
-            val keys = shared.map(v => s"${v}__id")
+            val (odf, keys) = patternMatches(graph, s, chain, w, "EXISTS pattern")
             val alias = s"__graft_ex_$idx"
             idx += 1
             flags += alias
@@ -1407,15 +1402,26 @@ object CypherPlanner {
   private def existsJoin(graph: PropertyGraph, s: Scope,
       chain: PatternChain, joinType: String,
       where: Option[CExpr] = None): DataFrame = {
+    val (odf, keys) = patternMatches(graph, s, chain, where, "EXISTS pattern")
+    s.df.join(odf.select(keys.map(col): _*), keys, joinType)
+  }
+
+  /** A pattern subquery's matches — the chain planned standalone (the
+    * outer variables it shares bind through the relationship join
+    * keys, no second node scan), restricted by its inner WHERE (which
+    * sees the pattern's own variables) — and the shared variables' id
+    * columns it joins back on.
+    */
+  private def patternMatches(graph: PropertyGraph, s: Scope,
+      chain: PatternChain, where: Option[CExpr],
+      what: String): (DataFrame, Seq[String]) = {
     val shared = chain.nodeVars.filter(s.nodeVars.contains).distinct
     require(shared.nonEmpty,
-      "EXISTS pattern must share at least one variable with the outer MATCH")
-    val (odf0, _) = planChain(graph, chain, Set.empty, null, shared.toSet)
-    // the inner WHERE restricts the SUBQUERY's matches (it sees the
-    // pattern's own variables) before the semi/anti join
-    val odf = where.map(p => odf0.filter(toColumn(p, s.binds))).getOrElse(odf0)
-    val keys = shared.map(v => s"${v}__id")
-    s.df.join(odf.select(keys.map(col): _*), keys, joinType)
+      s"$what must share at least one variable with the outer MATCH")
+    val (odf, _) = new ChainPlanner(graph, chain, Set.empty, null,
+      shared.toSet).plan()
+    (where.fold(odf)(p => odf.filter(toColumn(p, s.binds))),
+      shared.map(v => s"${v}__id"))
   }
 
   /** Materializes `COUNT { pattern }` subqueries wherever they appear
@@ -1430,57 +1436,39 @@ object CypherPlanner {
   private def bindCounts(graph: PropertyGraph, s0: Scope, e0: CExpr)
       : (Scope, CExpr) = {
     var scope = s0
+    // one aggregate per outer binding, left-joined back under an alias
+    // unique in this scope; rows without a match read 0 or the empty
+    // list (`list` — the value is then list-valued)
+    def joinBack(rows: DataFrame, keys: Seq[String], prefix: String,
+        agg: Column, list: Boolean): CExpr = {
+      val alias = Iterator.from(0).map(i => s"${prefix}_$i")
+        .find(a => !scope.df.columns.contains(a)).get
+      val per = rows.groupBy(keys.map(col): _*).agg(agg.as(alias))
+      val none =
+        if (list) array().cast(per.schema(alias).dataType) else lit(0L)
+      val joined = scope.df.join(per, keys, "left")
+        .withColumn(alias, coalesce(col(alias), none))
+      scope = Scope(joined, scope.nodeVars, scope.scalars + alias,
+        if (list) scope.lists + alias else scope.lists)
+      Ident(alias)
+    }
     def rw(e: CExpr): CExpr = e match {
       case CountPattern(chain, w) =>
-        val shared = chain.nodeVars.filter(scope.nodeVars.contains).distinct
-        require(shared.nonEmpty,
-          "COUNT { } pattern must share at least one variable with the outer MATCH")
-        val (odf0, _) = planChain(graph, chain, Set.empty, null, shared.toSet)
-        val odf = w.map(p => odf0.filter(toColumn(p, scope.binds))).getOrElse(odf0)
-        val keys = shared.map(v => s"${v}__id")
-        // unique alias against everything already bound in this scope
-        val alias = Iterator.from(0).map(i => s"__graft_psq_$i")
-          .find(a => !scope.df.columns.contains(a)).get
-        val cnts = odf.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as(alias))
-        val joined = scope.df.join(cnts, keys, "left")
-          .withColumn(alias, coalesce(col(alias), lit(0L)))
-        scope = Scope(joined, scope.nodeVars, scope.scalars + alias, scope.lists)
-        Ident(alias)
+        val (odf, keys) = patternMatches(graph, scope, chain, w, "COUNT { } pattern")
+        joinBack(odf, keys, "__graft_psq", count(lit(1)), list = false)
       case PatternComp(chain, w, proj) =>
         // the list-valued sibling of COUNT { }: collect the projected
-        // values per shared binding (SORTED — deterministic), left
-        // join back, empty list for zero-match rows
-        val shared = chain.nodeVars.filter(scope.nodeVars.contains).distinct
-        require(shared.nonEmpty,
-          "pattern comprehension must share at least one variable with the outer MATCH")
-        val (odf0, _) = planChain(graph, chain, Set.empty, null, shared.toSet)
-        val odf = w.map(p => odf0.filter(toColumn(p, scope.binds))).getOrElse(odf0)
-        val keys = shared.map(v => s"${v}__id")
-        val alias = Iterator.from(0).map(i => s"__graft_pc_$i")
-          .find(a => !scope.df.columns.contains(a)).get
-        val lists = odf.groupBy(keys.map(col): _*)
-          .agg(sort_array(collect_list(toColumn(proj, scope.binds))).as(alias))
-        val dt = lists.schema(alias).dataType
-        val joined = scope.df.join(lists, keys, "left")
-          .withColumn(alias,
-            coalesce(col(alias), array().cast(dt)))
-        scope = Scope(joined, scope.nodeVars, scope.scalars + alias,
-          scope.lists + alias)
-        Ident(alias)
+        // values per shared binding (SORTED — deterministic)
+        val (odf, keys) = patternMatches(graph, scope, chain, w,
+          "pattern comprehension")
+        joinBack(odf, keys, "__graft_pc",
+          sort_array(collect_list(toColumn(proj, scope.binds))), list = true)
       case CountSubquery(body) =>
         // full-body COUNT (r15): rows per outer binding, trailing
         // RETURN honored (DISTINCT = per-binding distinct)
         val (keys, rows, _) =
           subqueryBodyRows(graph, scope, body, keepReturn = true, "COUNT")
-        val alias = Iterator.from(0).map(i => s"__graft_psq_$i")
-          .find(a => !scope.df.columns.contains(a)).get
-        val cnts = rows.groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as(alias))
-        val joined = scope.df.join(cnts, keys, "left")
-          .withColumn(alias, coalesce(col(alias), lit(0L)))
-        scope = Scope(joined, scope.nodeVars, scope.scalars + alias, scope.lists)
-        Ident(alias)
+        joinBack(rows, keys, "__graft_psq", count(lit(1)), list = false)
       case CollectSubquery(body) =>
         // full-body COLLECT (r15): the single RETURN column collected
         // per outer binding (sorted — deterministic)
@@ -1493,16 +1481,8 @@ object CypherPlanner {
         }
         val (keys, rows, Some(valName)) =
           subqueryBodyRows(graph, scope, body, keepReturn = true, "COLLECT")
-        val alias = Iterator.from(0).map(i => s"__graft_pc_$i")
-          .find(a => !scope.df.columns.contains(a)).get
-        val lists = rows.groupBy(keys.map(col): _*)
-          .agg(sort_array(collect_list(col(valName))).as(alias))
-        val dt = lists.schema(alias).dataType
-        val joined = scope.df.join(lists, keys, "left")
-          .withColumn(alias, coalesce(col(alias), array().cast(dt)))
-        scope = Scope(joined, scope.nodeVars, scope.scalars + alias,
-          scope.lists + alias)
-        Ident(alias)
+        joinBack(rows, keys, "__graft_pc",
+          sort_array(collect_list(col(valName))), list = true)
       case Cmp(op, l, r)   => Cmp(op, rw(l), rw(r))
       case Arith(op, l, r) => Arith(op, rw(l), rw(r))
       case And(l, r)       => And(rw(l), rw(r))
@@ -1911,7 +1891,7 @@ object CypherPlanner {
     * column, so it does NOT put its variable here — only property
     * access `v.p`, `labels(v)`, and a bare `v` as a RETURN/WITH item
     * (whole-node expansion) do. Everything else is identity-only and
-    * eligible for scan elision in [[planChain]].
+    * eligible for scan elision in [[ChainPlanner]].
     */
   private def colsNeeded(q: CypherQuery): Set[String] = {
     val out = scala.collection.mutable.Set[String]()
@@ -2097,20 +2077,92 @@ object CypherPlanner {
     WalkRefs(nodesOf.toSet, relsOf.toSet, idents.toSet)
   }
 
-  /** Plans one linear pattern chain. Returns (df, node variables
-    * bound). `prev` (with `prevBound` vars) is the accumulated plan
-    * from earlier clauses; a chain that starts from an already-bound
-    * variable extends it, otherwise the chains are cross-joined (per
-    * Cypher cartesian-product semantics).
+  /** Plans one linear pattern chain, one pattern element at a time,
+    * over one shared state: the accumulated frame `df` (which also
+    * carries the `__chain_eids` and `__path_*` accumulators), the bound
+    * node variables, the current node `cur` and its label, and a
+    * deferred start scan. `prev` (with `prevBound` vars) is the
+    * accumulated plan from earlier clauses; a chain that starts from an
+    * already-bound variable extends it, otherwise the chains are
+    * cross-joined (per Cypher cartesian-product semantics). `plan()`
+    * returns (df, node variables bound).
+    *
+    * Every hop is planned in TRAVERSAL orientation: `__src` is the
+    * hop's pattern-left node and `__dst` its pattern-right node (an Out
+    * hop reads its edges as stored, an In hop swapped, an undirected
+    * hop mirrored). Seeds, join keys, walk lists and step constraints
+    * therefore never depend on the spelled direction; only
+    * startNode(r)/endNode(r) read the stored endpoints, bound before
+    * orientation.
     */
-  private def planChain(graph: PropertyGraph, chain: PatternChain,
+  private final class ChainPlanner(graph: PropertyGraph, chain: PatternChain,
       prevBound: Set[String], prev: DataFrame,
       virtualVars: Set[String] = Set.empty,
       needs: Option[Set[String]] = None,
-      wref: WalkRefs = WalkRefs.empty): (DataFrame, Set[String]) = {
+      wref: WalkRefs = WalkRefs.empty) {
 
-    var bound = prevBound
-    var df = prev
+    private var df = prev
+    private var bound = prevBound
+    private var cur = ""
+    // the CURRENT node's pattern label, tracked through the hops —
+    // drives static schema pruning of type-less relationship unions
+    private var curLabel: Option[String] = None
+    // the chain start's scan elision is deferred: its id column
+    // materializes from the FIRST hop's edge source instead
+    private var pendingStart: Option[String] = None
+
+    // Cypher relationship uniqueness (isomorphism) spans ALL
+    // relationships bound by one MATCH pattern, not just one
+    // var-length walk. Relationships of different types can never be
+    // equal, so a hop needs an edge identity only when another hop of
+    // the same chain could bind the same edge: same type, or either
+    // hop type-less.
+    private val chainEidAt: Seq[Boolean] = {
+      val hopTypes: Seq[Option[Set[String]]] = chain.hops.map { h =>
+        h._1.groupChain match {
+          // a composite group binds every inner hop's type; a typeless
+          // inner hop can bind ANY type (None = overlaps everything)
+          case Some(ch) =>
+            if (ch.hops.exists(_._1.relType.isEmpty)) None
+            else Some(ch.hops.flatMap(ih =>
+              ih._1.relType.toSeq ++ ih._1.altTypes).toSet)
+          case None =>
+            if (h._1.relType.isEmpty) None
+            else Some((h._1.relType.toSeq ++ h._1.altTypes).toSet)
+        }
+      }
+      def overlap(a: Option[Set[String]], b: Option[Set[String]]): Boolean =
+        a.isEmpty || b.isEmpty || a.get.intersect(b.get).nonEmpty
+      hopTypes.zipWithIndex.map { case (t, i) =>
+        hopTypes.zipWithIndex.exists { case (u, j) => j != i && overlap(t, u) }
+      }
+    }
+
+    def plan(): (DataFrame, Set[String]) = {
+      if (chain.shortest) {
+        // a NAMED hop binds the walk's relationship list — legal on
+        // plain shortestPath since the walk-carrying BFS (r15), and on
+        // allShortestPaths since the capped walk enumeration (r16); the
+        // hop-level needEpl logic enforces the remaining carve-outs
+        require(chain.hops.size == 1 &&
+            chain.hops.head._1.varLength.exists(_._1 == 1),
+          "shortestPath supports a single var-length hop starting at *1")
+      }
+      cur = bindStart(chain.start)
+      curLabel = chain.start.soleLabel
+      chain.hops.zipWithIndex.foreach { case ((rel, next), i) =>
+        val h = new Hop(rel, next, i)
+        joinHop(h, rel.varLength match {
+          case None => hopFrame(h)
+          case Some((lo, hi)) => expandVar(h, lo, hi)
+        })
+        bindWalk(h)
+        cur = h.nv
+        curLabel = next.soleLabel
+      }
+      finish()
+    }
+
     // identity-only scan elision: a label-less, prop-less pattern
     // variable whose property columns are never read anywhere in the
     // query (per colsNeeded) binds its id straight off the edge
@@ -2118,19 +2170,16 @@ object CypherPlanner {
     // endpoint is a node by construction) and is dropped from the
     // plan. At 100 TB this removes entire table scans from
     // existence-only patterns like `(n:Nation)-[r]->(x)` or `-->()`.
-    def idOnly(np: NodePattern, v: String): Boolean =
+    private def idOnly(np: NodePattern, v: String): Boolean =
       needs.exists(n => np.label.isEmpty && np.props.isEmpty &&
         np.negLabels.isEmpty && !n(v))
-    // the chain start's scan elision is deferred: its id column
-    // materializes from the FIRST hop's edge source instead
-    var pendingStart: Option[String] = None
 
     /** Inline property map `{k: v}` on one table: equality filters
       * on the table's own columns; a table without the property
       * contributes nothing (Neo4j: null never equals). Union scans
       * apply it per branch.
       */
-    def propsFilter(t: DataFrame, props: Map[String, Any]): DataFrame =
+    private def propsFilter(t: DataFrame, props: Map[String, Any]): DataFrame =
       props.foldLeft(t) { case (b, (k, v)) =>
         if (b.columns.contains(k)) b.filter(col(k) === lit(v))
         else b.filter(lit(false))
@@ -2146,7 +2195,7 @@ object CypherPlanner {
       * array<void> and the null-dropping lambda cannot field-extract
       * from it.
       */
-    def keysAndProps(t: DataFrame, ids: Set[String]): (Column, Column) = {
+    private def keysAndProps(t: DataFrame, ids: Set[String]): (Column, Column) = {
       val ks = t.columns.filterNot(ids).sorted.toSeq
       val props =
         if (ks.isEmpty) array().cast("array<struct<key:string,val:string>>")
@@ -2168,7 +2217,7 @@ object CypherPlanner {
       * between two small scans and every edge list in the graph.
       * Types without a declared schema are kept.
       */
-    def relTables(r: RelPattern, from: Option[String],
+    private def relTables(r: RelPattern, from: Option[String],
         to: Option[String]): Seq[(String, DataFrame)] = r.relType match {
       case Some(t) => (t +: r.altTypes).distinct.sorted
         .map(tn => tn -> graph.relTable(tn))
@@ -2198,7 +2247,7 @@ object CypherPlanner {
       * mirrored rows of a heterogeneous-endpoint relationship and
       * silently drop them.
       */
-    def endpointLabels(r: RelPattern, source: Boolean): Seq[String] =
+    private def endpointLabels(r: RelPattern, source: Boolean): Seq[String] =
       (r.relType.toSeq ++ r.altTypes).flatMap(graph.relEndpoints.get)
         .flatMap { ep =>
           r.direction match {
@@ -2212,20 +2261,11 @@ object CypherPlanner {
       * traversal orientation, an undirected hop's mirror; everything
       * else (identity, payload) rides along unchanged.
       */
-    def swapEnds(e: DataFrame): DataFrame = e.select(e.columns.toSeq.map {
+    private def swapEnds(e: DataFrame): DataFrame = e.select(e.columns.toSeq.map {
       case "__src" => col("__dst").as("__src")
       case "__dst" => col("__src").as("__dst")
       case c       => col(c)
     }: _*)
-
-    /** An In hop's walk node list `w` (stored orientation: the node
-      * entered by each step, ending at the walk's far node) in PATTERN
-      * order from `end`, the node the stored walk starts at: reverse
-      * of [end, all but the last of w]. A zero-hop walk stays empty.
-      */
-    def inWalk(w: Column, end: Column): Column =
-      when(size(w) === 0, w).otherwise(reverse(concat(array(end),
-        slice(w, lit(1), greatest(size(w) - 1, lit(0))))))
 
     /** Edge identity `__eid` = (type, src, dst, rank among parallel
       * edges) in the edge's ORIGINAL orientation, tagged BEFORE any
@@ -2237,9 +2277,9 @@ object CypherPlanner {
       * literals excluded, which keeps it off array-of-struct ordering —
       * so it is deterministic up to fully-duplicate rows, which are
       * interchangeable. It ranks across whatever frame it is given: a
-      * single hop's type union, or one table of a composite hop.
+      * single hop's type union, or one table of a group's inner hop.
       */
-    def withEid(t: DataFrame, tag: Column): DataFrame = {
+    private def withEid(t: DataFrame, tag: Column): DataFrame = {
       val ordCols = t.columns.toSeq.filterNot(Set("__src", "__dst"))
         .filterNot(_.startsWith("@")).sorted.map(col) match {
         case Seq() => Seq(col("__src"))
@@ -2251,56 +2291,114 @@ object CypherPlanner {
         col("__dst").as("v"), row_number().over(w).as("k")))
     }
 
+    /** The type tag of every edge row: a union's `__rt`, or the hop's
+      * one type.
+      */
+    private def typeTag(e: DataFrame, r: RelPattern): Column =
+      if (e.columns.contains("__rt")) col("__rt")
+      else lit(r.relType.getOrElse(""))
+
     /** Every node id, across all labels (a multi-label node
       * contributes once) — the zero-length expansion branch's domain.
       */
-    def nodeUniverse: DataFrame = graph.nodes.values
+    private def nodeUniverse: DataFrame = graph.nodes.values
       .map(_.select(col("__id"))).reduce(_.union(_)).distinct()
+
+    /** The rows of the nodes a pattern matches: its label — one table,
+      * the union of the alternatives `(n:A|B)` (each table contributes
+      * its own property columns, missing ones null out; two pruned
+      * scans, never the whole catalog), the conjunction `(n:A:B)` (the
+      * first label's table narrowed by an id semi-join per further
+      * label), or, label-less, the union of every label table — then
+      * the inline property map per table on the table's own columns,
+      * and an id anti-join per negated label `(n:!A)` (an unknown
+      * negated label excludes nothing, per Neo4j). With `meta` every
+      * row carries its label list, property keys and properties as the
+      * hidden literals `@labels` / `@keys` / `@props` (Catalyst prunes
+      * them when unused); the id-only matcher leaves them and the
+      * property columns out.
+      */
+    private def nodeMatch(np: NodePattern, meta: Boolean): DataFrame = {
+      def branch(label: String, t: DataFrame): DataFrame = {
+        val b = propsFilter(t, np.props)
+        if (!meta) b.select(col("__id"))
+        else {
+          // keys(n): the property-name list, sorted, excluding the
+          // hidden __id (Neo4j returns property keys, not the id)
+          val (keys, props) = keysAndProps(t, Set("__id"))
+          b.withColumn("@labels", array(lit(label)))
+            .withColumn("@keys", keys)
+            .withColumn("@props", props)
+        }
+      }
+      def union(labels: Seq[String]): DataFrame = labels
+        .map(l => branch(l, graph.nodeTable(l)))
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+      var t = np.label match {
+        case Some(l) if np.altLabels.nonEmpty =>
+          union((l +: np.altLabels).distinct.sorted)
+        case Some(l) if np.moreLabels.nonEmpty =>
+          // property columns come from the FIRST label's table (one
+          // node, one property set — the write family copies rows on
+          // SET n:Label, so tables agree)
+          val conj = branch(l, np.moreLabels.distinct.filter(_ != l)
+            .foldLeft(graph.nodeTable(l)) { (acc, l2) =>
+              acc.join(graph.nodeTable(l2).select(col("__id")),
+                Seq("__id"), "left_semi")
+            })
+          if (!meta) conj
+          else {
+            // labels(n) of a multi-label scan is the per-id label SET:
+            // @labels joins the id→sorted-label-set catalog (Neo4j's
+            // getLabels equivalent)
+            val catalog = graph.nodes.toSeq.sortBy(_._1)
+              .map { case (ln, t0) => t0.select(col("__id"), lit(ln).as("__l")) }
+              .reduce(_.union(_))
+              .groupBy(col("__id"))
+              .agg(sort_array(collect_set(col("__l"))).as("__dynlabels"))
+            conj.join(catalog, Seq("__id"), "left_outer")
+              .withColumn("@labels", col("__dynlabels")).drop("__dynlabels")
+          }
+        case Some(l) => branch(l, graph.nodeTable(l))
+        case None => union(graph.nodes.keys.toSeq.sorted)
+      }
+      np.negLabels.distinct.foreach { nl =>
+        graph.nodes.get(nl).foreach(nt =>
+          t = t.join(nt.select(col("__id")), Seq("__id"), "left_anti"))
+      }
+      t
+    }
 
     /** Node-id frame satisfying a pattern's label/property
       * constraints, or None for a bare pattern — the semi-join side of
-      * per-step group predicates (single- and multi-hop alike).
+      * per-step group constraints.
       */
-    def constraintIds(np: NodePattern): Option[DataFrame] = {
+    private def constraintIds(np: NodePattern): Option[DataFrame] =
       if (np.label.isEmpty && np.props.isEmpty && np.moreLabels.isEmpty &&
-          np.negLabels.isEmpty)
-        None
-      else {
-        var t = np.label match {
-          // disjunction: any alternative's ids qualify; inline props
-          // filter per branch on the branch's own columns (a label
-          // without the property contributes nothing), then the
-          // post-union filter below is vacuous on the pre-filtered set
-          case Some(l) if np.altLabels.nonEmpty =>
-            return Some((l +: np.altLabels).distinct.sorted.map(ln =>
-              propsFilter(graph.nodeTable(ln), np.props).select(col("__id")))
-              .reduce(_.unionByName(_)))
-          case Some(l) =>
-            np.moreLabels.distinct.filter(_ != l)
-              .foldLeft(graph.nodeTable(l)) { (acc, l2) =>
-                acc.join(graph.nodeTable(l2).select(col("__id")),
-                  Seq("__id"), "left_semi")
-              }
-          case None =>
-            // props-only constraint: any label whose table carries
-            // every named property can satisfy it
-            val cands = graph.nodes.values.toSeq
-              .filter(t0 => np.props.keys.forall(t0.columns.contains))
-              .map(t0 => t0.select(col("__id") +:
-                np.props.keys.toSeq.sorted.map(col): _*))
-            cands.reduceOption(_.unionByName(_)).getOrElse(
-              graph.nodes.values.head.sparkSession.range(0)
-                .select(col("id").as("__id") +:
-                  np.props.keys.toSeq.sorted.map(k =>
-                    lit(null).as(k)): _*))
-        }
-        // negated labels: same id anti-join as the scan path
-        np.negLabels.distinct.foreach { nl =>
-          graph.nodes.get(nl).foreach(nt =>
-            t = t.join(nt.select(col("__id")), Seq("__id"), "left_anti"))
-        }
-        np.props.foreach { case (k, v) => t = t.filter(col(k) === lit(v)) }
-        Some(t.select(col("__id")))
+          np.negLabels.isEmpty) None
+      else Some(nodeMatch(np, meta = false))
+
+    /** A node pattern's scan, its columns renamed to `v__id` / `v__p`. */
+    private def nodeDf(np: NodePattern): (DataFrame, String) = {
+      val v = np.variable.getOrElse(s"__anon${np.hashCode.abs}")
+      val t = nodeMatch(np, meta = true)
+      (t.select(t.columns.toSeq.map(c =>
+        if (c == "__id") col(c).as(s"${v}__id") else col(c).as(s"${v}__$c")): _*), v)
+    }
+
+    /** Node step: binds the chain's start node. */
+    private def bindStart(np: NodePattern): String = {
+      val v = np.variable.getOrElse("__start")
+      if (bound.contains(v)) v // already in df — extend from it
+      else if (chain.hops.nonEmpty && idOnly(np, v)) {
+        pendingStart = Some(v)
+        bound += v
+        v
+      } else {
+        val (ndf, vv) = nodeDf(np)
+        df = if (df == null) ndf else df.crossJoin(ndf)
+        bound += vv
+        vv
       }
     }
 
@@ -2310,7 +2408,7 @@ object CypherPlanner {
       * appear in a per-step predicate (pattern subqueries,
       * comprehensions) loudly.
       */
-    def stepWhereRefs(pred: CExpr): (Map[String, Set[String]], Set[String]) = {
+    private def stepWhereRefs(pred: CExpr): (Map[String, Set[String]], Set[String]) = {
       val propRefs = scala.collection.mutable.Map.empty[String, Set[String]]
       val identRefs = scala.collection.mutable.Set.empty[String]
       def walk(e: CExpr): Unit = e match {
@@ -2347,7 +2445,7 @@ object CypherPlanner {
       * across labels, so the union never duplicates a node. Missing
       * properties null out (Cypher semantics).
       */
-    def propLookup(v: String, props: Seq[String], patLabel: Option[String],
+    private def propLookup(v: String, props: Seq[String], patLabel: Option[String],
         schemaLabels: Seq[String]): DataFrame = {
       val tables: Seq[DataFrame] = patLabel match {
         case Some(l) => Seq(graph.nodeTable(l))
@@ -2370,397 +2468,91 @@ object CypherPlanner {
       }.reduce(_.unionByName(_))
     }
 
-    def nodeDf(np: NodePattern): (DataFrame, String) = {
-      val v = np.variable.getOrElse(s"__anon${np.hashCode.abs}")
-      // label-less node (`MATCH (a)-->(b)`): the scan is the
-      // schema-reconciled union of every label table — each table
-      // contributes its own property columns, missing ones null out.
-      // Column pruning still reaches each parquet scan, so a query
-      // touching only ids reads one column per table.
-      // every scan carries the node's label list as a hidden `@labels`
-      // column (a literal — Catalyst prunes it when labels(n) is never
-      // asked for); the union branch tags each table with its own label
-      // keys(n): the property-name list is a per-table literal too —
-      // sorted, excluding the hidden __id (Neo4j returns property
-      // keys, not the internal id)
-      def withMeta(nt: DataFrame, label: String): DataFrame = {
-        val (keys, props) = keysAndProps(nt, Set("__id"))
-        nt.withColumn("@labels", array(lit(label)))
-          .withColumn("@keys", keys)
-          .withColumn("@props", props)
-      }
-      var t = np.label match {
-        // label disjunction `(n:A|B)` (r15): the union of exactly the
-        // listed label tables, schema-reconciled like the label-less
-        // scan (each table contributes its own property columns,
-        // missing ones null out; @labels/@keys/@props stay per-branch
-        // literals) — two pruned scans, never the whole node catalog
-        case Some(label) if np.altLabels.nonEmpty =>
-          (label +: np.altLabels).distinct.sorted
-            .map(ln => withMeta(graph.nodeTable(ln), ln))
-            .reduce(_.unionByName(_, allowMissingColumns = true))
-        case Some(label) if np.moreLabels.nonEmpty =>
-          // multi-label conjunction `(n:A:B)`: the first label's table
-          // narrowed by an id semi-join per additional label — only
-          // 8-byte ids cross those joins (broadcastable when a label
-          // is small). Property columns come from the FIRST label's
-          // table (one node, one property set — the write family
-          // copies rows on SET n:Label, so tables agree). A
-          // multi-label scan is the one place labels(n) must see the
-          // per-id label SET rather than the scan's own tag, so
-          // @labels joins the id→sorted-label-set catalog (id-keyed,
-          // ids only; Neo4j's getLabels equivalent).
-          val conj = np.moreLabels.distinct.filter(_ != label)
-            .foldLeft(graph.nodeTable(label)) { (acc, l2) =>
-              acc.join(graph.nodeTable(l2).select(col("__id")),
-                Seq("__id"), "left_semi")
-            }
-          val catalog = graph.nodes.toSeq.sortBy(_._1)
-            .map { case (ln, t0) => t0.select(col("__id"), lit(ln).as("__l")) }
-            .reduce(_.union(_))
-            .groupBy(col("__id"))
-            .agg(sort_array(collect_set(col("__l"))).as("__dynlabels"))
-          withMeta(conj, label)
-            .join(catalog, Seq("__id"), "left_outer")
-            .withColumn("@labels", col("__dynlabels")).drop("__dynlabels")
-        case Some(label) => withMeta(graph.nodeTable(label), label)
-        case None => graph.nodes.toSeq.sortBy(_._1)
-          .map { case (ln, nt) => withMeta(nt, ln) }
-          .reduce(_.unionByName(_, allowMissingColumns = true))
-      }
-      // label negation `(n:!A)` / `(n:B&!A)` (r15): ids carrying any
-      // negated label anti-join out — id-only probes (broadcastable),
-      // correct under multi-label writes (a SET n:Label copy in
-      // another table still excludes by id); an unknown negated label
-      // excludes nothing, per Neo4j
-      np.negLabels.distinct.foreach { nl =>
-        graph.nodes.get(nl).foreach(nt =>
-          t = t.join(nt.select(col("__id")), Seq("__id"), "left_anti"))
-      }
-      np.props.foreach { case (k, value) => t = t.filter(col(k) === lit(value)) }
-      val renamed = t.select(t.columns.toSeq.map(c =>
-        if (c == "__id") col(c).as(s"${v}__id") else col(c).as(s"${v}__$c")): _*)
-      (renamed, v)
-    }
-
-    def bindStart(np: NodePattern): String = {
-      val v = np.variable.getOrElse("__start")
-      if (bound.contains(v)) v // already in df — extend from it
-      else if (chain.hops.nonEmpty && idOnly(np, v)) {
-        pendingStart = Some(v)
-        bound += v
-        v
-      } else {
-        val (ndf, vv) = nodeDf(np)
-        df = if (df == null) ndf else df.crossJoin(ndf)
-        bound += vv
-        vv
-      }
-    }
-
-    // Cypher relationship uniqueness (isomorphism) spans ALL
-    // relationships bound by one MATCH pattern, not just one
-    // var-length walk. Relationships of different types can never be
-    // equal, so a hop needs an edge identity only when another hop of
-    // the same chain could bind the same edge: same type, or either
-    // hop type-less.
-    val hopTypes: Seq[Option[Set[String]]] = chain.hops.map { h =>
-      h._1.groupChain match {
-        // a composite group binds every inner hop's type; a typeless
-        // inner hop can bind ANY type (None = overlaps everything)
-        case Some(ch) =>
-          if (ch.hops.exists(_._1.relType.isEmpty)) None
-          else Some(ch.hops.flatMap(ih =>
-            ih._1.relType.toSeq ++ ih._1.altTypes).toSet)
-        case None =>
-          if (h._1.relType.isEmpty) None
-          else Some((h._1.relType.toSeq ++ h._1.altTypes).toSet)
-      }
-    }
-    def typesOverlap(a: Option[Set[String]], b: Option[Set[String]]): Boolean =
-      a.isEmpty || b.isEmpty || a.get.intersect(b.get).nonEmpty
-    val chainEidAt: Seq[Boolean] = hopTypes.zipWithIndex.map { case (t, i) =>
-      hopTypes.zipWithIndex.exists { case (u, j) => j != i && typesOverlap(t, u) }
-    }
-
-    if (chain.shortest) {
-      // a NAMED hop binds the walk's relationship list — legal on
-      // plain shortestPath since the walk-carrying BFS (r15), and on
-      // allShortestPaths since the capped walk enumeration (r16); the
-      // hop-level needEpl logic enforces the remaining carve-outs
-      require(chain.hops.size == 1 &&
-          chain.hops.head._1.varLength.exists(_._1 == 1),
-        "shortestPath supports a single var-length hop starting at *1")
-    }
-
-    var cur = bindStart(chain.start)
-    // the CURRENT node's pattern label, tracked through the hops —
-    // drives static schema pruning of type-less relationship unions
-    var curLabel: Option[String] = chain.start.soleLabel
-    chain.hops.zipWithIndex.foreach { case ((rel, nextNode), hopIdx) =>
-      // type-less relationship (`-->`, `-[r]->`): the union of every
-      // schema-compatible relationship table (relTables), edges only —
-      // properties are type-specific. Each table tags its rows with its
-      // type name so edge identities stay distinct across types inside
-      // the union.
-      // a NAMED var-length hop over a union needs the branches to
-      // carry the UNION property schema (null-filled per branch) so
-      // its payload struct has one fixed shape and `r.prop` reads
-      // Neo4j's null on steps of a type without the property (r15 —
-      // previously the payload silently held only type/src/dst and
-      // property access failed with an opaque getField error); plain
-      // unions stay edges-only, nothing widens when nothing is named
-      val unionNeedsProps = rel.variable.isDefined
-      // a named FIXED hop additionally binds keys(r)/properties(r) —
-      // PER-BRANCH literals (each type's OWN key set, not the union
-      // schema), tagged before the union exactly like node scans
-      val unionNeedsMeta = rel.variable.isDefined && rel.varLength.isEmpty
-      def unionBranches(tabs: Seq[(String, DataFrame)]): DataFrame = {
-        val schema =
-          if (unionNeedsProps) unionPropSchema(tabs) else Seq.empty
-        tabs.map { case (tn, t0) =>
-          // inline property map on a multi-type / typeless hop (r14):
-          // each union branch filters on its OWN columns
-          val b = propsFilter(t0, rel.props)
-          val metaCols =
-            if (!unionNeedsMeta) Seq.empty
-            else {
-              val (keys, props) = keysAndProps(b, Set("__src", "__dst"))
-              Seq(props.as("@props"), keys.as("@keys"))
-            }
-          b.select(Seq(col("__src"), col("__dst"),
-            lit(tn).as("__rt")) ++
-            schema.map { case (p, dt) =>
-              (if (b.columns.contains(p)) col(p)
-               else lit(null).cast(dt)).as(p) } ++ metaCols: _*)
-        }.reduce(_.unionByName(_))
-      }
-      val relBase = relTables(rel, curLabel, nextNode.soleLabel) match {
-        case Seq((_, t)) if rel.relType.isDefined && rel.altTypes.isEmpty => t
-        // no relationship type connects these labels — statically
-        // empty, but keep the union's schema for downstream code
-        case Seq() =>
-          val (tn0, t0) = graph.rels.toSeq.sortBy(_._1).head
-          t0.select(col("__src"), col("__dst"), lit(tn0).as("__rt"))
-            .filter(lit(false))
-        // multi-type `-[:A|B]->` / typeless: union of the tables, each
-        // branch tagged for type(r)/identity
-        case tabs => unionBranches(tabs)
-      }
-      // a named single-hop typed relationship binds its property
-      // columns as `rv__prop` (Neo4j relationship properties);
-      // var-length paths have no single edge to take properties from
-      val relPropCols = rel.variable match {
-        case Some(rv) if rel.varLength.isEmpty && rel.relType.isDefined &&
-            rel.altTypes.isEmpty =>
-          relBase.columns.toSeq
-            .filterNot(Set("__src", "__dst"))
-            .map(c => col(c).as(s"${rv}__$c"))
-        // named fixed hop over a multi-type/typeless UNION (r15): the
-        // union carries the union property schema (null-filled per
-        // branch), so r.prop reads Neo4j's null where the step's type
-        // lacks the property; __rt and the per-branch @-meta bind
-        // through their own paths below
-        case Some(rv) if rel.varLength.isEmpty =>
-          relBase.columns.toSeq
-            .filterNot(Set("__src", "__dst", "__rt"))
-            .filterNot(_.startsWith("@"))
-            .map(c => col(c).as(s"${rv}__$c"))
-        case _ => Seq.empty
-      }
-      // keys(r) / properties(r) for a named fixed single-hop typed
-      // relationship — the same literal-keyed shapes node scans bind
-      val relMetaCols = rel.variable match {
-        case Some(rv) if rel.varLength.isEmpty && rel.relType.isDefined &&
-            rel.altTypes.isEmpty =>
-          val (keys, props) = keysAndProps(relBase, Set("__src", "__dst"))
-          Seq(props.as(s"${rv}__@props"), keys.as(s"${rv}__@keys"))
-        // union hops carry PER-BRANCH @keys/@props (each type's own
-        // key set), tagged before the union in unionBranches
-        case Some(rv) if rel.varLength.isEmpty &&
-            relBase.columns.contains("@keys") =>
-          Seq(col("@props").as(s"${rv}__@props"),
-            col("@keys").as(s"${rv}__@keys"))
-        case _ => Seq.empty
-      }
-      // a named single-hop relationship also binds its type name for
-      // `type(r)`: a plan-time literal when the hop is typed, the
-      // union's `__rt` tag when type-less
-      val relTypeCol = rel.variable match {
-        case Some(rv) if rel.varLength.isEmpty =>
-          rel.relType match {
-            case Some(t) if rel.altTypes.isEmpty =>
-              Seq(lit(t).as(s"${rv}__@type"))
-            case _ => Seq(col("__rt").as(s"${rv}__@type"))
-          }
-        case _ => Seq.empty
-      }
-      // startNode(r)/endNode(r) identity for DIRECTED single hops:
-      // the stored edge orientation is intrinsic there (an In-hop
-      // flips join keys, not the edge), so __src/__dst ARE the
-      // relationship's start/end. Undirected hops mirror the edge
-      // list before expansion, losing the intrinsic orientation —
-      // no endpoint columns bind and resolution fails loudly.
-      val relEndpointCols = rel.variable match {
-        case Some(rv) if rel.varLength.isEmpty && rel.direction != Both =>
-          Seq(col("__src").as(s"${rv}__@src"),
-            col("__dst").as(s"${rv}__@dst"))
-        case _ => Seq.empty
-      }
-      // inline relationship property map → equality filters on the
-      // edge table, applied before any mirroring/expansion (multi-type
-      // and typeless hops already filtered per union branch above —
-      // their unions carry only __src/__dst/__rt)
-      val baseRel =
-        if (rel.relType.isDefined && rel.altTypes.isEmpty)
-          propsFilter(relBase, rel.props)
-        else relBase
-      // Edge identity (withEid), needed when a walk (var-length) or
-      // another hop of the same chain could rebind this relationship.
-      // shortestPath never enumerates walks, so no edge-identity
-      // bookkeeping: a BFS first-reach cannot traverse an edge twice.
-      // But when the query CONSUMES the path's walk — nodes(p),
-      // relationships(p), a named relationship list, group variables —
-      // the BFS carries ONE deterministic walk per pair alongside the
-      // frontier (min node-id sequence; still pair-bounded, never walk
-      // enumeration — see frontierSearch). allShortestPaths and weighted
-      // searches keep their pair-level aggregates (multiplicity /
-      // cost) and stay walk-free.
-      val spCarry = chain.shortest && !chain.allShortest &&
-        rel.varLength.isDefined && (
-          // a multi-hop quantified group's repetition-level BFS (r16)
-          // always carries the composite walk arrays — they double as
-          // the relationship-uniqueness bookkeeping
-          rel.groupChain.isDefined ||
-          // SHORTEST k (k > 1) enumerates trails, which always carry
-          chain.kBest.exists(_ > 1) ||
-          chain.pathVar.exists(wref.walksOf) ||
-          rel.variable.exists(wref.idents) ||
-          rel.groupNodes.exists { case (a, b) =>
-            (a.toSeq ++ b.toSeq).exists(wref.idents) })
-      // allShortestPaths whose WALKS the query consumes (r16):
-      // enumerate shortest walks under the per-pair σ cap instead of
-      // rejecting — the pair-aggregate plan stays for count(p)-only
-      // consumers
-      val aspCarry = chain.allShortest && rel.varLength.isDefined && (
-          // composite groups always enumerate (the σ recurrence
-          // cannot express cross-repetition edge uniqueness, r16);
-          // weighted allShortestPaths (r17) also always enumerates —
-          // the dispatch below routes it to the cost-minimal
-          // enumeration whether or not walks are consumed
-          rel.groupChain.isDefined ||
-          chain.weightProp.isDefined ||
-          chain.pathVar.exists(wref.walksOf) ||
-          rel.variable.exists(wref.idents) ||
-          rel.groupNodes.exists { case (a, b) =>
-            (a.toSeq ++ b.toSeq).exists(wref.idents) })
-      // the frontier kernel's selector for a shortest-path chain
+    /** One hop's decisions, taken when the chain reaches it: what the
+      * query consumes of its walk, which search runs, which edge
+      * columns the frame carries, the seeds from the bound frame, and
+      * the outer references of a quantified-group WHERE.
+      */
+    private final class Hop(val rel: RelPattern, val next: NodePattern, idx: Int) {
+      val nv: String = next.variable.getOrElse(s"__anon${next.hashCode.abs}")
+      val varLen: Boolean = rel.varLength.isDefined
+      // the query consumes the walk: nodes(p)/relationships(p), the
+      // named relationship list or a group variable
+      private val walkUsed = chain.pathVar.exists(wref.walksOf) ||
+        rel.variable.exists(wref.idents) ||
+        rel.groupNodes.exists { case (a, b) =>
+          (a.toSeq ++ b.toSeq).exists(wref.idents) }
+      // shortestPath never enumerates walks, so it needs no edge
+      // identities: a BFS first-reach cannot traverse an edge twice.
+      // When the query CONSUMES the walk, the BFS carries ONE
+      // deterministic walk per pair alongside the frontier (still
+      // pair-bounded, never walk enumeration — see frontierSearch). A
+      // multi-hop group's repetition-level BFS always carries (the walk
+      // arrays double as its uniqueness bookkeeping), and SHORTEST k
+      // (k > 1) enumerates trails, which always carry.
+      val spCarry: Boolean = chain.shortest && !chain.allShortest &&
+        (rel.groupChain.isDefined || chain.kBest.exists(_ > 1) || walkUsed)
+      // allShortestPaths whose walks are consumed enumerates shortest
+      // walks under the per-pair σ cap; composite groups (the σ
+      // recurrence cannot express cross-repetition edge uniqueness) and
+      // weighted allShortestPaths always enumerate. The pair-aggregate
+      // plan stays for count(p)-only consumers.
+      val aspCarry: Boolean = chain.allShortest &&
+        (rel.groupChain.isDefined || chain.weightProp.isDefined || walkUsed)
+      // a shortest-path search that carries walks
+      val carry: Boolean = spCarry || aspCarry
       val pathSel: PathSelector =
         if (chain.allShortest) AllMinimal
         else chain.kBest.filter(_ > 1).fold[PathSelector](FirstReach)(KBest)
-      val needWalkEid = !chain.shortest && rel.varLength.exists(_._2 > 1)
-      val needChainEid = !chain.shortest && chainEidAt(hopIdx)
+      val payload: PathPayload =
+        if (pathSel == AllMinimal && !aspCarry) Sigma
+        else if (pathSel == FirstReach && !spCarry) PairsOnly
+        else Walks
+      val needChainEid: Boolean = !chain.shortest && chainEidAt(idx)
       // `relationships(p)` needs every hop's edge identity, even on
       // single-hop chains that need no uniqueness bookkeeping
-      val needPathRels = chain.pathVar.isDefined &&
-        (!chain.shortest || (spCarry && chain.pathVar.exists(wref.relsOf)) ||
-          (aspCarry && chain.pathVar.exists(wref.relsOf)))
-      // the type tag of every edge row: the union's `__rt`, or the
-      // hop's one type
-      val typeTag =
-        if (baseRel.columns.contains("__rt")) col("__rt")
-        else lit(rel.relType.getOrElse(""))
-      val relForExpand0 =
-        if (needWalkEid || needChainEid || needPathRels || aspCarry ||
-            chain.kBest.exists(_ > 1)) withEid(baseRel, typeTag)
-        else baseRel
+      val needPathRels: Boolean = chain.pathVar.isDefined &&
+        (!chain.shortest || (carry && chain.pathVar.exists(wref.relsOf)))
+      // Edge identity: a walk (var-length) or another hop of the chain
+      // could rebind this relationship, or the query lists it
+      val needEid: Boolean = (!chain.shortest && rel.varLength.exists(_._2 > 1)) ||
+        needChainEid || needPathRels || aspCarry || chain.kBest.exists(_ > 1)
       // A NAMED var-length relationship (`-[rs:T*1..3]->`, or a named
       // single-hop group rel) binds rs as the walk's per-step
-      // RELATIONSHIP LIST (Neo4j semantics). Each step carries a
-      // payload struct — type, stored endpoints, and every property —
-      // tagged BEFORE mirroring (intrinsic orientation, like __eid),
-      // accumulated alongside the walk arrays, and surfaced as a
-      // list-valued scalar binding: size(rs), UNWIND, list
-      // comprehensions and reduce all consume it, with per-element
-      // property access via struct fields. The payload widens this
-      // hop's shuffles ONLY when the variable is actually named.
-      val needEpl = rel.variable.isDefined && rel.varLength.isDefined &&
-        (!chain.shortest || (spCarry && rel.variable.exists(wref.idents)) ||
-          (aspCarry && rel.variable.exists(wref.idents)))
-      require(rel.variable.isEmpty || rel.varLength.isEmpty ||
-          !chain.allShortest || aspCarry,
+      // RELATIONSHIP LIST (Neo4j semantics): each step carries a
+      // payload struct accumulated alongside the walk arrays and
+      // surfaced as a list-valued scalar binding (size(rs), UNWIND,
+      // comprehensions, reduce, per-element property access). The
+      // payload widens this hop's shuffles ONLY when it is named.
+      val needEpl: Boolean = rel.variable.isDefined && varLen &&
+        (!chain.shortest || (carry && rel.variable.exists(wref.idents)))
+      require(rel.variable.isEmpty || !varLen || !chain.allShortest || aspCarry,
         "a named variable-length relationship inside allShortestPaths " +
           "must be consumed (unused names keep the pair-aggregate " +
           "plan, which carries no walks)")
-      val relForExpand =
-        if (!needEpl) relForExpand0
-        else {
-          val propCols = relForExpand0.columns.toSeq
-            .filterNot(Set("__src", "__dst", "__rt", "__eid")).sorted
-          val meta = Set("type", "src", "dst")
-          require(propCols.forall(c => !meta(c)),
-            s"relationship property ${propCols.filter(meta).mkString(",")} " +
-              s"collides with the walk payload's type/src/dst fields")
-          relForExpand0.withColumn("__epl",
-            struct((typeTag.as("type") +: col("__src").as("src") +:
-              col("__dst").as("dst") +: propCols.map(col)): _*))
-        }
-      // undirected: the edge list mirrored once (props/identity ride
-      // along), then planned exactly like an Out hop
-      val orientedRel = rel.direction match {
-        case Both => relForExpand.unionByName(swapEnds(relForExpand))
-        case _ => relForExpand
-      }
-      // Per-step inner node constraints of a quantified group
-      // (`((a:L {p: v})-[:T]->(b:M)){n,m}`): every repetition's source
-      // must satisfy the inner start pattern and its target the inner
-      // end pattern. A repetition IS one edge of the walk, so the
-      // per-step constraint is an edge-endpoint constraint — two id
-      // semi-joins applied ONCE, before expansion (shrinking the edge
-      // list every k-hop join composes, instead of re-checking nodes
-      // per repetition). Orientation: in TRAVERSAL order the step
-      // source is the inner start; an In hop traverses edges backward,
-      // so its traversal source is the stored __dst. Zero-length
-      // branches ({0,m}) are untouched — no step executes, so step
-      // constraints are vacuous (GQL semantics).
-      val (sCol, dCol) =
-        if (rel.direction == In) ("__dst", "__src") else ("__src", "__dst")
-      val endpointFiltered = rel.stepFilters match {
-        case None => orientedRel
-        case Some((aPat, bPat)) =>
-          var e = orientedRel
-          constraintIds(aPat).foreach(f =>
-            e = e.join(f, e(sCol) === f("__id"), "left_semi"))
-          constraintIds(bPat).foreach(f =>
-            e = e.join(f, e(dCol) === f("__id"), "left_semi"))
-          e
-      }
+
       // Inline per-step WHERE (`((a)-[r:T]->(b) WHERE a.p < b.p){n,m}`):
       // evaluated once per repetition with the inner variables bound to
       // that repetition's elements. The predicate compiles to a FILTER
-      // ON THE REPETITION FRAME, applied once before repetitions chain
-      // (a single-hop group's repetition is one edge, so it filters the
-      // edge list; a multi-hop group's filters the composed frame):
+      // ON THE REPETITION FRAME, applied once before repetitions chain:
       // referenced node properties materialize as `v__p` columns via
       // id-equi-joins against the (label-pruned) node tables,
-      // relationship properties alias in place, and the existing
-      // scalar compiler evaluates the predicate unchanged. Left joins +
-      // filter give Cypher's missing-property semantics (null predicate
-      // = row dropped). Zero-length branches stay untouched — no step
+      // relationship properties alias in place, and the scalar compiler
+      // evaluates the predicate unchanged. Left joins + filter give
+      // Cypher's missing-property semantics (null predicate = row
+      // dropped). Zero-length branches stay untouched — no step
       // executes, so the WHERE is vacuous.
-      // Outer-scope variables referenced by a quantified-group WHERE
-      // (`((a)-[r]->(b) WHERE a.p > x.q){n,m}` with x bound earlier):
+      // Outer-scope variables referenced by the WHERE (`x` bound
+      // earlier in `((a)-[r]->(b) WHERE a.p > x.q){n,m}`) are
       // decorrelated by embedding the DISTINCT outer-value tuples into
-      // the repetition keys. The tuple frame (value domain, usually
+      // the repetition keys: the tuple frame (value domain, usually
       // tiny) is broadcast-crossed into the frame, the predicate
       // filters per tuple, and __src/__dst become (id, tuple) structs —
       // so the untouched expansion chains repetitions WITHIN one outer
       // binding, and the final join matches walks back to the bound
       // rows on start id + tuple equality. Per-repetition semantics are
       // Neo4j's: the outer value is constant across a walk and every
-      // step's predicate saw it. The outer columns follow from the
-      // predicate alone, before any frame is built, so one seed shape
-      // serves both hop kinds.
+      // step's predicate saw it.
       val (propRefs, identRefs) = rel.stepWhere.fold(
         (Map.empty[String, Set[String]], Set.empty[String]))(stepWhereRefs)
       val qppOuterCols: Seq[String] =
@@ -2782,12 +2574,11 @@ object CypherPlanner {
               "inner variables") +
               s" (${inScope.mkString(", ")}) or previously bound ones; " +
               s"unknown: ${unknown.mkString(", ")}")
-          // outer variables compose with shortestPath/allShortestPaths
-          // since r15: the BFS machinery is key-agnostic (joins,
-          // distincts and anti-joins on __src/__dst work on the
-          // (id, tuple) structs unchanged), so each outer binding gets
-          // its own per-tuple BFS for free — paths never cross tuples
-          // because struct equality requires the tuple to match.
+          // outer variables compose with shortestPath/allShortestPaths:
+          // the BFS machinery is key-agnostic (joins, distincts and
+          // anti-joins work on the (id, tuple) structs unchanged), so
+          // each outer binding gets its own per-tuple BFS — paths never
+          // cross tuples because struct equality requires the tuple.
           val outerCols = outerVars.toSeq.sorted.flatMap { v =>
             propRefs.getOrElse(v, Set.empty).toSeq.sorted
               .map(p => s"${v}__$p") ++
@@ -2854,275 +2645,372 @@ object CypherPlanner {
             case c => col(c)
           }: _*)
       }
-      val stepFiltered =
-        // a multi-hop group's WHERE filters whole REPETITIONS of the
-        // composite frame — applied in compositeFrame, where the
-        // per-position node ids exist
-        if (rel.stepWhere.isEmpty || rel.groupChain.isDefined) endpointFiltered
-        else {
-          val (aVar, bVar) = rel.groupNodes.getOrElse((None, None))
-          def patLabel(source: Boolean) = rel.stepFilters.flatMap {
-            case (ap, bp) => (if (source) ap else bp).soleLabel }
-          // relationship property refs alias the edge frame's own
-          // plain-named property columns
-          val rels = rel.variable.filter(propRefs.contains).toSeq.flatMap { v =>
-            propRefs(v).toSeq.map { p =>
-              require(endpointFiltered.columns.contains(p),
-                s"relationship property '$p' referenced by the " +
-                  s"quantified-group WHERE is not a property of :" +
-                  s"${(rel.relType.toSeq ++ rel.altTypes).mkString("|")} " +
-                  s"(have: ${endpointFiltered.columns
-                    .filterNot(_.startsWith("__")).sorted.mkString(", ")})")
-              s"${v}__$p" -> col(p)
-            }
-          }
-          stepWhereFilter(endpointFiltered,
-            Seq((aVar, col(sCol), patLabel(true), endpointLabels(rel, true)),
-              (bVar, col(dCol), patLabel(false), endpointLabels(rel, false))),
-            rels)
-        }
+
       // shortest-path chains seed the BFS with the start variable's
       // bound id set (the pre-bound MATCH spelling, or at least the
       // start label's scan): sources outside the binding can never
       // survive the later join, so expanding them is pure waste — the
       // difference between all-pairs BFS over the whole edge set and
-      // a frontier proportional to the restriction (a 40-part seed
-      // touches ~1k edges where all-pairs touches millions). Under an
+      // a frontier proportional to the restriction. Under an
       // outer-ref WHERE the frame keys are (id, tuple) structs — the
       // seed mirrors that shape, so each bound row seeds exactly its
       // own tuple's BFS.
       val bfsSeed: Option[DataFrame] =
-        if (chain.shortest && df != null &&
-            df.columns.contains(s"${cur}__id"))
+        if (chain.shortest && df != null && df.columns.contains(s"${cur}__id"))
           Some(df.select(outerKey(col(s"${cur}__id")).as("__seedid")).distinct())
         else None
       // Plain var-length expansion gets the SAME pre-bound-start
-      // seeding as the shortest-path BFS: whenever the hop's source
-      // variable is already bound — the chain's first hop after an
-      // earlier MATCH (`MATCH (a:L) WHERE … MATCH (a)-[rs:T*..]-(b)`)
-      // OR any LATER hop of a chain (the accumulated frame binds
-      // `cur` there by construction) — the bound id set semi-joins
-      // the FIRST step's edge base, so walks that cannot survive the
-      // later start join never expand. On an undirected 12M-row
-      // mirrored edge list restricted to 3 bound starts this is the
-      // difference between a full 2-hop blowup and a handful of rows.
-      // Composite-keyed outer-WHERE frames are excluded (struct
-      // keys). In hops seed too, via the traversal flip below.
+      // seeding whenever the hop's source variable is already bound —
+      // the chain's first hop after an earlier MATCH, or any LATER hop
+      // of a chain (the accumulated frame binds `cur` there by
+      // construction): the bound id set semi-joins the FIRST step's
+      // edges, so walks that cannot survive the later start join never
+      // expand. On an undirected 12M-row mirrored edge list restricted
+      // to 3 bound starts this is the difference between a full 2-hop
+      // blowup and a handful of rows. Composite-keyed outer-WHERE
+      // frames are excluded (struct keys).
       val varSeed: Option[DataFrame] =
-        if (!chain.shortest &&
-            !chain.allShortest && chain.weightProp.isEmpty &&
-            rel.varLength.isDefined && rel.groupChain.isEmpty &&
+        if (!chain.shortest && varLen && rel.groupChain.isEmpty &&
             qppOuterCols.isEmpty && df != null &&
-            !pendingStart.contains(cur) &&
-            df.columns.contains(s"${cur}__id"))
+            !pendingStart.contains(cur) && df.columns.contains(s"${cur}__id"))
           Some(df.select(col(s"${cur}__id").as("__seedid")).distinct())
         else None
       def seededBy(f: DataFrame, key: String): DataFrame = varSeed.fold(f)(s =>
         f.join(s, f(key) === s("__seedid"), "left_semi"))
-      // An In-direction hop keeps its edge list in STORED orientation
-      // (the join keys flip instead), so the bound variable `cur`
-      // sits at the walk's far end — seeding stored __src with cur's
-      // ids would restrict the WRONG end and silently drop every
-      // walk. Seeded In hops therefore expand over the FLIPPED edge
-      // list (traversal orientation, cur = __src) and the result
-      // flips back to the stored contract afterwards: endpoints swap,
-      // walk arrays reverse (the node suffix re-anchors on the
-      // traversal start), scalar outputs (__hops/__np/__wcost) are
-      // orientation-free. Without a seed nothing flips — the stored
-      // plan is already minimal.
-      val inFlip = rel.direction == In && rel.groupChain.isEmpty &&
-        (varSeed.isDefined || bfsSeed.isDefined)
-      val expandEdges = if (inFlip) swapEnds(stepFiltered) else stepFiltered
-      // Neo4j rejects shortestPath over a fixed-length relationship
-      // ("requires a pattern with variable length") — fail the same
-      // way instead of an opaque None.get below
-      require(rel.varLength.isDefined ||
-          (!chain.shortest && !chain.allShortest && chain.weightProp.isEmpty),
-        "shortestPath/allShortestPaths requires a variable-length " +
-          "relationship pattern (e.g. -[:T*]->), got a fixed-length one")
-      // Multi-hop quantified group: compose the inner chain into a
-      // composite REPETITION frame — one row per full repetition,
-      // carrying the repetition's node-id list (pattern order after the
-      // start) and its edge-identity list (for whole-path uniqueness)
-      // — which the expansion then chains exactly like single edges.
-      // Per-inner-node label/prop constraints semi-join each hop's
-      // endpoints ONCE, before composition. Returns the frame and, for
-      // a seeded search without outer references, the frame composed
-      // per round from a start set.
-      def compositeFrame(ch: PatternChain, lo: Int,
-          hi: Int): (DataFrame, Option[DataFrame => DataFrame]) = {
-        // plain MATCH, shortestPath (r16), WEIGHTED shortestPath (r16
-        // — a repetition's weight is the sum of its inner edges'
-        // weights), allShortestPaths (r16 — the capped composite
-        // enumeration) and SHORTEST k (r17 — the capped composite
-        // TRAIL enumeration) all consume the composite frame; the
-        // remaining rejects are the k-best combinations with
-        // weighted / allShortestPaths, which have no GQL spelling
-        require(chain.kBest.forall(_ <= 1) ||
-            (!chain.allShortest && chain.weightProp.isEmpty),
-          "SHORTEST k (k > 1) over quantified groups composes only " +
-            "with the plain (unweighted, single-selector) search — " +
-            "the weighted/allShortest combinations have no GQL " +
-            "spelling (permanent documented carve-out; see README " +
-            "\"Path selector semantics and permanent carve-outs\")")
-        // lower bound pinned to 1 under shortestPath (first-reach BFS
-        // = fewest repetitions; a {2,…} floor would need post-floor
-        // re-search) — same restriction as the single-edge search
-        require(!chain.shortest || lo == 1,
-          "shortestPath over a quantified group requires lower bound " +
-            s"exactly 1 (got {$lo,$hi})")
-        val h = ch.hops.size
-        val nodePats = ch.start +: ch.hops.map(_._2)
-        val hopFrames0 = ch.hops.zipWithIndex.map { case ((r, _), j) =>
-          // the hop's edge tables in STORED orientation, schema-pruned
-          // against the inner node labels exactly like a single hop;
-          // a NAMED inner relationship binds a per-repetition payload
-          // list; the payload struct gets ONE fixed schema by
-          // null-filling each branch up to the union property schema
-          // (r15 — replaces the former single-type require)
-          val typed = relTables(r, nodePats(j).soleLabel,
-            nodePats(j + 1).soleLabel)
-          require(typed.nonEmpty,
-            s"no relationship type connects the labels of quantified-" +
-              s"group hop ${j + 1} (schema-pruned to nothing)")
-          // the named hop's fixed payload shape: the union property
-          // schema across every contributing table (null-filled per
-          // branch below)
-          val pSchema =
-            if (r.variable.isDefined) unionPropSchema(typed)
-            else Seq.empty
-          // per-branch: prop filters, then the edge-identity struct in
-          // stored orientation (the mirror carries it through, so an
-          // undirected edge and its mirror share one identity)
-          val tagged = typed.map { case (tn, t0) =>
-            val base = propsFilter(t0, r.props)
-            var out = withEid(base, lit(tn))
-            // named hop: payload struct in stored orientation (type,
-            // endpoints, the union property schema — branches
-            // null-fill properties their type lacks) — same shape as
-            // the single-hop named var-length payload
-            if (r.variable.isDefined) {
-              val meta = Set("type", "src", "dst")
-              require(pSchema.forall { case (c, _) => !meta(c) },
-                s"relationship property " +
-                  s"${pSchema.map(_._1).filter(meta).mkString(",")} " +
-                  s"collides with the payload's type/src/dst fields")
-              out = out.withColumn("__epl",
-                struct((lit(tn).as("type") +: col("__src").as("src") +:
-                  col("__dst").as("dst") +: pSchema.map { case (p, dt) =>
-                    (if (base.columns.contains(p)) col(p)
-                     else lit(null).cast(dt)).as(p) }): _*))
-            }
-            // weighted composite search: every inner hop's edges must
-            // carry the weight property, strictly positive (null or
-            // w <= 0 → loud error, the shared weighted-search guard)
-            chain.weightProp.foreach { wp =>
-              require(base.columns.contains(wp),
-                s"weight property '$wp' is not a property of " +
-                  s"quantified-group hop ${j + 1} (type $tn)")
-              out = out.withColumn("__hw", positiveWeightOrDie(col(wp), wp,
-                "weighted shortestPath over a quantified group"))
-            }
-            out.select(Seq(col("__src"), col("__dst"), col("__eid")) ++
-              (if (r.variable.isDefined) Seq(col("__epl"))
-               else Seq.empty) ++
-              (if (chain.weightProp.isDefined) Seq(col("__hw"))
-               else Seq.empty): _*)
+    }
+
+    /** One hop's edge frame in TRAVERSAL orientation — a single
+      * relationship hop's and every inner hop's of a quantified group.
+      * From `tables` (the hop's schema-pruned edge tables, relTables;
+      * empty = statically no edge) it builds, in order:
+      *  - the inline property map, per table on the table's own columns;
+      *  - one typed table as it is, or the union of several, each
+      *    branch tagged with its type (`__rt`, for type(r) and
+      *    identity) and, with `props`, null-filled to the union
+      *    property schema (one payload shape; `r.prop` reads Neo4j's
+      *    null where a type lacks it); with `meta`, each branch's own
+      *    `@keys` / `@props` literals;
+      *  - the identity `__eid` and the payload struct `__epl` (type,
+      *    stored endpoints, the properties), both in stored
+      *    orientation, so an undirected edge and its mirror share them.
+      *    A union ranks parallel edges across its types, or, with
+      *    `rankPerType` (a group's inner hop), each type on its own;
+      *  - the strictly positive weight `__w` of `weight` (property,
+      *    search name for the error);
+      *  - with `storedEnds`, the stored endpoints `@src` / `@dst` for
+      *    startNode(r) / endNode(r);
+      *  - the orientation: Out as stored, In swapped, Both mirrored;
+      *  - with `ends`, id semi-joins of each step's source and target
+      *    against a group's inner node patterns. A repetition of a
+      *    single-hop group IS one edge, so its per-step constraints are
+      *    edge-endpoint constraints, applied once before expansion.
+      *    Zero-length branches ({0,m}) are untouched: no step executes,
+      *    so step constraints are vacuous (GQL semantics).
+      */
+    private def hopEdges(r: RelPattern, tables: Seq[(String, DataFrame)],
+        what: String, props: Boolean, eid: Boolean, epl: Boolean,
+        weight: Option[(String, String)], rankPerType: Boolean = false,
+        meta: Boolean = false, storedEnds: Boolean = false,
+        ends: Option[(NodePattern, NodePattern)] = None): DataFrame = {
+      def weighable(tn: String, t: DataFrame): Unit = weight.foreach { case (wp, _) =>
+        require(t.columns.contains(wp),
+          s"weight property '$wp' is not a property of $what (type $tn)")
+      }
+      def metaCols(t: DataFrame): Seq[Column] =
+        if (!meta) Nil
+        else {
+          val (keys, ps) = keysAndProps(t, Set("__src", "__dst"))
+          Seq(ps.as("@props"), keys.as("@keys"))
+        }
+      val base = tables match {
+        case Seq((tn, t)) if r.relType.isDefined && r.altTypes.isEmpty =>
+          weighable(tn, t)
+          val b = propsFilter(t, r.props)
+          b.select(b.columns.toSeq.map(col) ++ metaCols(t): _*)
+        // no relationship type connects these labels — statically
+        // empty, but keep the union's schema for downstream code
+        case Seq() =>
+          val (tn, t) = graph.rels.toSeq.minBy(_._1)
+          val e = t.select(col("__src"), col("__dst"), lit(tn).as("__rt"))
+            .filter(lit(false))
+          weighable(tn, e)
+          e
+        case tabs =>
+          val schema = if (props) unionPropSchema(tabs) else Seq.empty
+          val extra = weight.map(_._1).filterNot(schema.map(_._1).contains)
+          tabs.map { case (tn, t) =>
+            weighable(tn, t)
+            val b0 = propsFilter(t, r.props)
+            val b = if (eid && rankPerType) withEid(b0, lit(tn)) else b0
+            b.select(Seq(col("__src"), col("__dst"), lit(tn).as("__rt")) ++
+              schema.map { case (p, dt) =>
+                (if (b.columns.contains(p)) col(p)
+                 else lit(null).cast(dt)).as(p) } ++
+              extra.map(col) ++ metaCols(b0) ++
+              Seq("__eid").filter(b.columns.contains).map(col): _*)
           }.reduce(_.unionByName(_))
-          // orient into TRAVERSAL order: after this, __src is always
-          // the step's source. An In hop walks stored edges backward;
-          // an undirected hop both ways (mirrored, identity unchanged)
-          var oriented = r.direction match {
-            case Out  => tagged
-            case In   => swapEnds(tagged)
-            case Both => tagged.unionByName(swapEnds(tagged))
+      }
+      val tag = typeTag(base, r)
+      var e = if (eid && !base.columns.contains("__eid")) withEid(base, tag) else base
+      if (epl) {
+        val propCols = base.columns.toSeq
+          .filterNot(c => c.startsWith("__") || c.startsWith("@")).sorted
+        val fields = Set("type", "src", "dst")
+        require(propCols.forall(c => !fields(c)),
+          s"relationship property ${propCols.filter(fields).mkString(",")} " +
+            s"collides with the walk payload's type/src/dst fields")
+        e = e.withColumn("__epl", struct((tag.as("type") +:
+          col("__src").as("src") +: col("__dst").as("dst") +:
+          propCols.map(col)): _*))
+      }
+      weight.foreach { case (wp, ctx) =>
+        e = e.withColumn("__w", positiveWeightOrDie(col(wp), wp, ctx))
+      }
+      if (storedEnds)
+        e = e.withColumn("@src", col("__src")).withColumn("@dst", col("__dst"))
+      e = r.direction match {
+        case Out  => e
+        case In   => swapEnds(e)
+        case Both => e.unionByName(swapEnds(e))
+      }
+      ends.foreach { case (a, b) =>
+        constraintIds(a).foreach(f =>
+          e = e.join(f, e("__src") === f("__id"), "left_semi"))
+        constraintIds(b).foreach(f =>
+          e = e.join(f, e("__dst") === f("__id"), "left_semi"))
+      }
+      e
+    }
+
+    /** A relationship hop's edge frame (fixed, or one step of a
+      * var-length hop), filtered by a single-hop group's step WHERE.
+      */
+    private def hopFrame(h: Hop): DataFrame = {
+      val rel = h.rel
+      val named = rel.variable.isDefined
+      val edges = hopEdges(rel, relTables(rel, curLabel, h.next.soleLabel),
+        "this relationship", props = named, eid = h.needEid, epl = h.needEpl,
+        weight = chain.weightProp.map(wp =>
+          (wp, searchName(h.pathSel, weighted = true, composite = false))),
+        meta = named && !h.varLen,
+        storedEnds = named && !h.varLen && rel.direction != Both,
+        ends = rel.stepFilters)
+      if (rel.stepWhere.isEmpty) edges
+      else {
+        val (aVar, bVar) = rel.groupNodes.getOrElse((None, None))
+        def patLabel(source: Boolean) = rel.stepFilters.flatMap {
+          case (ap, bp) => (if (source) ap else bp).soleLabel }
+        // relationship property refs alias the edge frame's own
+        // plain-named property columns
+        val rels = rel.variable.filter(h.propRefs.contains).toSeq.flatMap { v =>
+          h.propRefs(v).toSeq.map { p =>
+            require(edges.columns.contains(p),
+              s"relationship property '$p' referenced by the " +
+                s"quantified-group WHERE is not a property of :" +
+                s"${(rel.relType.toSeq ++ rel.altTypes).mkString("|")} " +
+                s"(have: ${edges.columns
+                  .filterNot(c => c.startsWith("__") || c.startsWith("@"))
+                  .sorted.mkString(", ")})")
+            s"${v}__$p" -> col(p)
           }
-          // per-inner-node constraints: hop j runs node j → node j+1
-          // in traversal order
-          constraintIds(nodePats(j)).foreach(f =>
-            oriented = oriented.join(f,
-              oriented("__src") === f("__id"), "left_semi"))
-          constraintIds(nodePats(j + 1)).foreach(f =>
-            oriented = oriented.join(f,
-              oriented("__dst") === f("__id"), "left_semi"))
-          oriented
         }
-        // r18: a seeded composite SHORTEST-family search restricts
-        // every hop frame to the seeds' reachable neighborhood
-        // (≤ hi·h traversal steps over the union pair view) — the IN
-        // filter on __src pushes below each branch's __eid identity
-        // window and into the scans, exactly the seedRestrictEdges
-        // discipline. Stands down on small tables or a tripped reach
-        // cap (an optimization, never a semantic gate).
-        val hopFrames = {
-          val seedable = chain.shortest && df != null &&
-            df.columns.contains(s"${cur}__id")
-          if (!seedable) hopFrames0
-          else {
-            val unionPairs = hopFrames0
-              .map(_.select(col("__src"), col("__dst")))
-              .reduce(_.unionByName(_))
-            if (unionPairs.queryExecution.optimizedPlan.stats.sizeInBytes <
-                ReachRestrictMinBytes) hopFrames0
-            else reachableWithin(unionPairs,
-                df.select(col(s"${cur}__id").cast("long")).distinct(),
-                hi * h) match {
-              case None => hopFrames0
-              case Some(reach) if reach.isEmpty =>
-                hopFrames0.map(_.filter(lit(false)))
-              case Some(reach) =>
-                hopFrames0.map(
-                  _.filter(col("__src").isInCollection(reach.toSeq)))
-            }
+        h.stepWhereFilter(edges,
+          Seq((aVar, col("__src"), patLabel(true), endpointLabels(rel, true)),
+            (bVar, col("__dst"), patLabel(false), endpointLabels(rel, false))),
+          rels)
+      }
+    }
+
+    /** Var-length hop: the hop's REPETITION FRAME, built once —
+      * `__src`, `__dst`, the node ids each repetition enters
+      * (`__nids`), its edge identities (`__eids`), payload lists
+      * (`__epls`, or `__epls_j` per named inner hop of a group) and
+      * weight (`__w`) where the hop needs them. A single relationship
+      * is the h = 1 frame (`__nids = [dst]`, `__eids = [eid]`,
+      * `__epls = [epl]`, the edge's weight); a multi-hop group is its
+      * composed frame. The shortest-path selectors search it
+      * (frontierSearch), everything else enumerates it (repetitions).
+      */
+    private def expandVar(h: Hop, lo: Int, hi: Int): DataFrame = {
+      val (frame, first, reps, composeFrom) = h.rel.groupChain match {
+        case Some(ch) =>
+          require(hi <= CypherParser.MaxVarHops,
+            s"quantified group bound {$lo,$hi} above the shared " +
+              s"var-length cap *..${CypherParser.MaxVarHops}")
+          val (f, c) = compositeFrame(h, ch, lo, hi)
+          (f, f, ch.hops.size, c)
+        case None =>
+          val edges = hopFrame(h)
+          if (chain.shortest)
+            require(chain.weightProp.isEmpty || chain.kBest.forall(_ <= 1) ||
+                !chain.allShortest,
+              "SHORTEST k (k > 1) does not compose with weighted " +
+                "allShortestPaths (no GQL spelling; see README \"Path " +
+                "selector semantics and permanent carve-outs\")")
+          else require((lo == 0 && hi == 0) ||
+              (hi >= math.max(lo, 1) && hi <= CypherParser.MaxVarHops),
+            s"variable-length bounds *${math.max(lo, 1)}..$hi out of " +
+              s"supported range (shared cap *..${CypherParser.MaxVarHops})")
+          // a seeded search restricts the scan (and any __eid identity
+          // window) to the seeds' reachable edges; the weighted
+          // walk-free relaxation reads the raw frame
+          val e =
+            if (chain.shortest && (chain.weightProp.isEmpty || h.payload == Walks))
+              seedRestrictEdges(edges, h.bfsSeed, hi)
+            else edges
+          // `first`: the frame of a walk's FIRST repetition — a seeded
+          // plain expansion starts at a bound id, semi-joined BELOW the
+          // frame's array projection, where Catalyst can still push it
+          // under the step-WHERE lookups (a projection of computed
+          // aliases stops that pushdown)
+          def oneHop(e: DataFrame): DataFrame = e.select(Seq(col("__src"),
+            col("__dst"), array(col("__dst")).as("__nids")) ++
+            Seq("__eid", "__epl").filter(e.columns.contains)
+              .map(c => array(col(c)).as(c + "s")) ++
+            Seq("__w").filter(e.columns.contains).map(col): _*)
+          (oneHop(e), oneHop(h.seededBy(e, "__src")), 1, None)
+      }
+      if (chain.shortest)
+        frontierSearch(frame, h.pathSel, h.payload, lo, hi, h.bfsSeed,
+          chain.weightProp.isDefined, reps, composeFrom)
+      else {
+        // the zero-length branch's domain: every node — per outer
+        // tuple under an outer-ref WHERE (zero repetitions = vacuous
+        // WHERE, null-valued tuples included); the seeded starts
+        // only under a seed
+        val universe =
+          if (lo > 0) None
+          else if (h.qppOuterCols.isEmpty) Some(h.seededBy(nodeUniverse, "__id"))
+          else Some(nodeUniverse.crossJoin(h.qppOuterTuples)
+            .select(h.outerKey(col("__id")).as("__id")))
+        repetitions(frame, first, lo, hi, reps, universe)
+      }
+    }
+
+    /** Multi-hop quantified group: composes the inner chain into a
+      * composite REPETITION frame — one row per full repetition,
+      * carrying the repetition's node-id list (pattern order after the
+      * start) and its edge-identity list (for whole-path uniqueness)
+      * — which the expansion then chains exactly like single edges.
+      * Every inner hop's frame is a hop edge frame (hopEdges) whose
+      * endpoints are semi-joined against the inner node patterns.
+      * Returns the frame and, for a seeded search without outer
+      * references, the frame composed per round from a start set.
+      */
+    private def compositeFrame(h: Hop, ch: PatternChain, lo: Int,
+        hi: Int): (DataFrame, Option[DataFrame => DataFrame]) = {
+      // plain MATCH, shortestPath, WEIGHTED shortestPath (a
+      // repetition's weight is the sum of its inner edges' weights),
+      // allShortestPaths (the capped composite enumeration) and
+      // SHORTEST k (the capped composite TRAIL enumeration) all consume
+      // the composite frame; the remaining rejects are the k-best
+      // combinations with weighted / allShortestPaths, which have no
+      // GQL spelling
+      require(chain.kBest.forall(_ <= 1) ||
+          (!chain.allShortest && chain.weightProp.isEmpty),
+        "SHORTEST k (k > 1) over quantified groups composes only " +
+          "with the plain (unweighted, single-selector) search — " +
+          "the weighted/allShortest combinations have no GQL " +
+          "spelling (permanent documented carve-out; see README " +
+          "\"Path selector semantics and permanent carve-outs\")")
+      // lower bound pinned to 1 under shortestPath (first-reach BFS
+      // = fewest repetitions; a {2,…} floor would need post-floor
+      // re-search) — same restriction as the single-edge search
+      require(!chain.shortest || lo == 1,
+        "shortestPath over a quantified group requires lower bound " +
+          s"exactly 1 (got {$lo,$hi})")
+      val n = ch.hops.size
+      val nodePats = ch.start +: ch.hops.map(_._2)
+      val weighted = chain.weightProp.isDefined
+      val hopFrames0 = ch.hops.zipWithIndex.map { case ((r, _), j) =>
+        val typed = relTables(r, nodePats(j).soleLabel,
+          nodePats(j + 1).soleLabel)
+        require(typed.nonEmpty,
+          s"no relationship type connects the labels of quantified-" +
+            s"group hop ${j + 1} (schema-pruned to nothing)")
+        // a NAMED inner relationship binds a per-repetition payload
+        // list; a weighted search sums the inner edges' weights
+        val e = hopEdges(r, typed, s"quantified-group hop ${j + 1}",
+          props = r.variable.isDefined, eid = true, epl = r.variable.isDefined,
+          weight = chain.weightProp.map(wp =>
+            (wp, searchName(h.pathSel, weighted = true, composite = true))),
+          rankPerType = true, ends = Some((nodePats(j), nodePats(j + 1))))
+        e.select(Seq("__src", "__dst", "__eid", "__epl", "__w")
+          .filter(e.columns.contains).map(col): _*)
+      }
+      // a seeded composite SHORTEST-family search restricts every hop
+      // frame to the seeds' reachable neighborhood (≤ hi·n traversal
+      // steps over the union pair view) — the IN filter on __src
+      // pushes below each branch's __eid identity window and into the
+      // scans, exactly the seedRestrictEdges discipline. Stands down on
+      // small tables or a tripped reach cap (an optimization, never a
+      // semantic gate).
+      val hopFrames = {
+        val seedable = chain.shortest && df != null &&
+          df.columns.contains(s"${cur}__id")
+        if (!seedable) hopFrames0
+        else {
+          val unionPairs = hopFrames0
+            .map(_.select(col("__src"), col("__dst")))
+            .reduce(_.unionByName(_))
+          if (unionPairs.queryExecution.optimizedPlan.stats.sizeInBytes <
+              ReachRestrictMinBytes) hopFrames0
+          else reachableWithin(unionPairs,
+              df.select(col(s"${cur}__id").cast("long")).distinct(),
+              hi * n) match {
+            case None => hopFrames0
+            case Some(reach) if reach.isEmpty =>
+              hopFrames0.map(_.filter(lit(false)))
+            case Some(reach) =>
+              hopFrames0.map(
+                _.filter(col("__src").isInCollection(reach.toSeq)))
           }
         }
-        // one repetition = the h hops joined through their junctures,
-        // no edge reused INSIDE a repetition either. Named hops carry
-        // their payload as per-hop scalars (__epl_j) — each repetition
-        // contributes exactly one element to each named hop's list.
-        //
-        // NOT materialized (r19, measured): checkpointing each hop
-        // frame once (narrow or loopEdgeFrame-widened) so the
-        // frontier-bounded rounds stop re-running the __eid identity
-        // windows REGRESSED the family — weighted_mh_group 2.99→4.42 s
-        // narrow / 5.72 s widened (taskTime 36→55/88 s): the lazy
-        // per-round plans fuse scan+window+joins into AQE-coalesced
-        // one-task stages over the reach-restricted rows, while
-        // checkpoint blocks are probed at their materialized width by
-        // every round. The recomputation IS the cheaper shape here.
-        val named = ch.hops.zipWithIndex.collect {
-          case ((r, _), j) if r.variable.isDefined => j
+      }
+      // one repetition = the n hops joined through their junctures,
+      // no edge reused INSIDE a repetition either. Named hops carry
+      // their payload as per-hop scalars (__epl_j) — each repetition
+      // contributes exactly one element to each named hop's list.
+      //
+      // NOT materialized (measured): checkpointing each hop frame once
+      // so the frontier-bounded rounds stop re-running the __eid
+      // identity windows REGRESSED the family — weighted_mh_group
+      // 2.99→4.42 s narrow / 5.72 s widened (taskTime 36→55/88 s): the
+      // lazy per-round plans fuse scan+window+joins into AQE-coalesced
+      // one-task stages over the reach-restricted rows, while
+      // checkpoint blocks are probed at their materialized width by
+      // every round. The recomputation IS the cheaper shape here.
+      val named = ch.hops.zipWithIndex.collect {
+        case ((r, _), j) if r.variable.isDefined => j
+      }
+      // Repetition composition as a FUNCTION of the allowed start set:
+      // a SEEDED composite search composes, per BFS round, only the
+      // repetitions its frontier can actually enter — the first hop
+      // semi-joins the round's start ids, so every downstream hop join
+      // shrinks with it. Without the restriction the synthetic frame
+      // is corpus × degree^n rows BEFORE the seed prunes anything
+      // (measured: the weighted CONTAINS key took 181 s at sf1 eagerly;
+      // frontier-bounded it tracks the plain weighted search).
+      def composeRep(startIds: Option[DataFrame]): DataFrame = {
+        val head0 = hopFrames.head
+        val headF = startIds match {
+          case Some(sd) =>
+            head0.join(sd, head0("__src") === sd("__cstart"), "left_semi")
+          case None => head0
         }
-        val weighted = chain.weightProp.isDefined
-        // Repetition composition as a FUNCTION of the allowed start
-        // set (r16): a SEEDED composite search composes, per BFS
-        // round, only the repetitions its frontier can actually
-        // enter — the first hop semi-joins the round's start ids, so
-        // every downstream hop join shrinks with it. Without the
-        // restriction the synthetic frame is corpus × degree^h rows
-        // BEFORE the seed prunes anything (measured: the weighted
-        // CONTAINS key took 181 s at sf1 eagerly; frontier-bounded
-        // it tracks the plain weighted search).
-        def composeRep(startIds: Option[DataFrame]): DataFrame = {
-          val head0 = hopFrames.head
-          val headF = startIds match {
-            case Some(sd) =>
-              head0.join(sd, head0("__src") === sd("__cstart"), "left_semi")
-            case None => head0
-          }
-          val oneRep = hopFrames.tail.zipWithIndex
-            .foldLeft(headF.select(Seq(col("__src"), col("__dst"),
-              array(col("__eid")).as("__eids"),
-              array(col("__dst")).as("__nids")) ++
-              (if (named.contains(0)) Seq(col("__epl").as("__epl_0"))
-               else Seq.empty) ++
-              (if (weighted) Seq(col("__hw").as("__w"))
-               else Seq.empty): _*)) { case (acc, (hf, j)) =>
+        val oneRep = hopFrames.tail.zipWithIndex
+          .foldLeft(headF.select(Seq(col("__src"), col("__dst"),
+            array(col("__eid")).as("__eids"),
+            array(col("__dst")).as("__nids")) ++
+            (if (named.contains(0)) Seq(col("__epl").as("__epl_0"))
+             else Seq.empty) ++
+            (if (weighted) Seq(col("__w")) else Seq.empty): _*)) {
+            case (acc, (hf, j)) =>
               val right = hf.select(Seq(col("__src").as(s"__g$j"),
                 col("__dst").as("__gd"), col("__eid").as("__ge")) ++
                 (if (named.contains(j + 1)) Seq(col("__epl").as("__ge_epl"))
                  else Seq.empty) ++
-                (if (weighted) Seq(col("__hw").as("__ge_hw"))
+                (if (weighted) Seq(col("__w").as("__ge_hw"))
                  else Seq.empty): _*)
               val keepEpls = acc.columns.filter(_.startsWith("__epl_"))
                 .toSeq.map(acc(_))
@@ -3138,135 +3026,52 @@ object CypherPlanner {
                   (if (weighted)
                     Seq((acc("__w") + col("__ge_hw")).as("__w"))
                   else Seq.empty): _*)
-            }
-          // Inline WHERE on a multi-hop group: the predicate relates
-          // one REPETITION's nodes to each other, so it filters the
-          // composite frame once, before repetitions chain. Node
-          // position j of the inner chain is __src (j = 0) or
-          // __nids[j-1]; its schema labels come from the adjacent
-          // hop's declared endpoints (traversal orientation).
-          val filtered =
-            if (rel.stepWhere.isEmpty) oneRep
-            else stepWhereFilter(oneRep, nodePats.zipWithIndex.map {
-              case (np, 0) => (np.variable, col("__src"), np.soleLabel,
-                endpointLabels(ch.hops.head._1, source = true))
-              case (np, j) => (np.variable, element_at(col("__nids"), j),
-                np.soleLabel, endpointLabels(ch.hops(j - 1)._1, source = false))
-            }, Nil)
-          filtered.select(Seq(col("__src"), col("__dst"), col("__eids"),
-            col("__nids")) ++
-            named.map(j => array(col(s"__epl_$j")).as(s"__epls_$j")) ++
-            (if (weighted) Seq(col("__w")) else Seq.empty): _*)
-        }
-        // a SEEDED search with plain keys composes lazily, per round,
-        // from its frontier (an outer-ref WHERE composite-keys the
-        // frame, which the plain-id start restriction cannot key)
-        (composeRep(None),
-          if (bfsSeed.isDefined && qppOuterCols.isEmpty)
-            Some((starts: DataFrame) => composeRep(Some(starts)))
-          else None)
-      }
-      // The hop's REPETITION FRAME, built once: `__src`, `__dst`, the
-      // node ids each repetition enters (`__nids`), its edge
-      // identities (`__eids`), payload lists (`__epls`, or `__epls_j`
-      // per named inner hop of a group) and weight (`__w`) where the
-      // hop needs them. A single relationship is the h = 1 frame
-      // (`__nids = [dst]`, `__eids = [eid]`, `__epls = [epl]`, the raw
-      // weight), in STORED orientation with the seeded In flip; a
-      // multi-hop group is its composed frame. The shortest-path
-      // selectors search it (frontierSearch), everything else
-      // enumerates it (repetitions).
-      val payload =
-        if (pathSel == AllMinimal && !aspCarry) Sigma
-        else if (pathSel == FirstReach && !spCarry) PairsOnly
-        else Walks
-      val expanded = rel.varLength match {
-        case None => expandEdges
-        case Some((lo, hi)) =>
-          // `first`: the frame of a walk's FIRST repetition — a seeded
-          // plain expansion starts at a bound id, semi-joined BELOW the
-          // frame's array projection, where Catalyst can still push it
-          // under the step-WHERE lookups (a projection of computed
-          // aliases stops that pushdown)
-          val (frame, first, h, composeFrom) = rel.groupChain match {
-            case Some(ch) =>
-              require(hi <= CypherParser.MaxVarHops,
-                s"quantified group bound {$lo,$hi} above the shared " +
-                  s"var-length cap *..${CypherParser.MaxVarHops}")
-              val (f, c) = compositeFrame(ch, lo, hi)
-              (f, f, ch.hops.size, c)
-            case None =>
-              if (chain.shortest) chain.weightProp.foreach { wp =>
-                require(expandEdges.columns.contains(wp),
-                  s"weight property '$wp' is not a property of this " +
-                    s"relationship (have: ${expandEdges.columns
-                      .filterNot(_.startsWith("__")).sorted.mkString(", ")})")
-                require(chain.kBest.forall(_ <= 1) || !chain.allShortest,
-                  "SHORTEST k (k > 1) does not compose with weighted " +
-                    "allShortestPaths (no GQL spelling; see README \"Path " +
-                    "selector semantics and permanent carve-outs\")")
-              }
-              else require((lo == 0 && hi == 0) ||
-                  (hi >= math.max(lo, 1) && hi <= CypherParser.MaxVarHops),
-                s"variable-length bounds *${math.max(lo, 1)}..$hi out of " +
-                  s"supported range (shared cap *..${CypherParser.MaxVarHops})")
-              // a seeded search restricts the scan (and any __eid
-              // identity window) to the seeds' reachable edges; the
-              // weighted walk-free relaxation reads the raw frame
-              val e =
-                if (chain.shortest && (chain.weightProp.isEmpty || payload == Walks))
-                  seedRestrictEdges(expandEdges, bfsSeed, hi)
-                else expandEdges
-              def oneHop(e: DataFrame): DataFrame = e.select(Seq(col("__src"),
-                col("__dst"), array(col("__dst")).as("__nids")) ++
-                Seq("__eid", "__epl").filter(e.columns.contains)
-                  .map(c => array(col(c)).as(c + "s")) ++
-                chain.weightProp.filter(_ => chain.shortest)
-                  .map(wp => col(wp).as("__w")): _*)
-              (oneHop(e), oneHop(seededBy(e, "__src")), 1, None)
           }
-          if (chain.shortest)
-            frontierSearch(frame, pathSel, payload, lo, hi, bfsSeed,
-              chain.weightProp, h, composeFrom)
-          else {
-            // the zero-length branch's domain: every node — per outer
-            // tuple under an outer-ref WHERE (zero repetitions = vacuous
-            // WHERE, null-valued tuples included); the seeded starts
-            // only under a seed (cur = dst there)
-            val universe =
-              if (lo > 0) None
-              else if (qppOuterCols.isEmpty) Some(seededBy(nodeUniverse, "__id"))
-              else Some(nodeUniverse.crossJoin(qppOuterTuples)
-                .select(outerKey(col("__id")).as("__id")))
-            repetitions(frame, first, lo, hi, h, universe)
-          }
+        // Inline WHERE on a multi-hop group: the predicate relates one
+        // REPETITION's nodes to each other, so it filters the
+        // composite frame once, before repetitions chain. Node
+        // position j of the inner chain is __src (j = 0) or
+        // __nids[j-1]; its schema labels come from the adjacent hop's
+        // declared endpoints (traversal orientation).
+        val filtered =
+          if (h.rel.stepWhere.isEmpty) oneRep
+          else h.stepWhereFilter(oneRep, nodePats.zipWithIndex.map {
+            case (np, 0) => (np.variable, col("__src"), np.soleLabel,
+              endpointLabels(ch.hops.head._1, source = true))
+            case (np, j) => (np.variable, element_at(col("__nids"), j),
+              np.soleLabel, endpointLabels(ch.hops(j - 1)._1, source = false))
+          }, Nil)
+        filtered.select(Seq(col("__src"), col("__dst"), col("__eids"),
+          col("__nids")) ++
+          named.map(j => array(col(s"__epl_$j")).as(s"__epls_$j")) ++
+          (if (weighted) Seq(col("__w")) else Seq.empty): _*)
       }
-      // flip a seeded In hop's expansion back to the STORED contract
-      // every downstream consumer expects: endpoints swap, the walk's
-      // node suffix re-derives (stored order = reverse of [traversal
-      // start, all but the walk's last node]), edge-identity and
-      // payload arrays simply reverse (their structs were tagged in
-      // intrinsic orientation, untouched by the flip)
-      val expandedStored =
-        if (!inFlip) expanded
-        else {
-          var out = expanded
-          if (out.columns.contains("__nids"))
-            out = out.withColumn("__nids", inWalk(col("__nids"), col("__src")))
-          if (out.columns.contains("__eids"))
-            out = out.withColumn("__eids", reverse(col("__eids")))
-          if (out.columns.contains("__epls"))
-            out = out.withColumn("__epls", reverse(col("__epls")))
-          swapEnds(out)
-        }
+      // a SEEDED search with plain keys composes lazily, per round,
+      // from its frontier (an outer-ref WHERE composite-keys the
+      // frame, which the plain-id start restriction cannot key)
+      (composeRep(None),
+        if (h.bfsSeed.isDefined && h.qppOuterCols.isEmpty)
+          Some((starts: DataFrame) => composeRep(Some(starts)))
+        else None)
+    }
+
+    /** Joins a hop's frame (the fixed hop's edges or the var-length
+      * hop's walks, `__src` = the current node) into the chain: the
+      * hop's bindings and walk columns, the join on `cur` (or the
+      * deferred start), chain-wide relationship uniqueness, the
+      * path length and cost, and the far endpoint's binding.
+      */
+    private def joinHop(h: Hop, expanded: DataFrame): Unit = {
+      val rel = h.rel
+      val outer = h.qppOuterCols
       // unpack composite (id, outer-tuple) keys after expansion: the
       // tuple columns surface as __oc_* for the join back to the
       // bound frame; node ids (keys and walks) revert to plain longs
-      val expandedPlain =
-        if (qppOuterCols.isEmpty) expandedStored
+      val e =
+        if (outer.isEmpty) expanded
         else {
-          var e2 = expandedStored
-          qppOuterCols.foreach(c =>
+          var e2 = expanded
+          outer.foreach(c =>
             e2 = e2.withColumn(s"__oc_$c", col("__src").getField(c)))
           e2 = e2.withColumn("__src", col("__src").getField("i"))
             .withColumn("__dst", col("__dst").getField("i"))
@@ -3281,68 +3086,55 @@ object CypherPlanner {
               transform(col("__nids"), x => x.getField("i")))
           e2
         }
+      val has = e.columns.toSet
+      // a named fixed hop binds its properties (`rv__prop`; a union
+      // carries the union property schema, null-filled per branch),
+      // keys(r)/properties(r), type(r) and — directed hops only, an
+      // undirected hop has no intrinsic orientation — the stored
+      // endpoints for startNode(r)/endNode(r)
+      val relCols = rel.variable.filter(_ => !h.varLen).toSeq.flatMap { rv =>
+        e.columns.toSeq.filterNot(c => c.startsWith("__") || c.startsWith("@"))
+          .map(c => col(c).as(s"${rv}__$c")) ++
+          (if (has("@keys"))
+            Seq(col("@props").as(s"${rv}__@props"), col("@keys").as(s"${rv}__@keys"))
+          else Nil) ++
+          Seq(typeTag(e, rel).as(s"${rv}__@type")) ++
+          (if (has("@src"))
+            Seq(col("@src").as(s"${rv}__@src"), col("@dst").as(s"${rv}__@dst"))
+          else Nil)
+      }
       // the edge identities this hop consumed, exposed only when some
       // other hop of the chain must be kept from reusing them
       val hopEids: Option[Column] =
-        if (!needChainEid) None
-        else if (expandedPlain.columns.contains("__eids")) Some(col("__eids"))
+        if (!h.needChainEid) None
+        else if (has("__eids")) Some(col("__eids"))
         else Some(array(col("__eid")))
-      // hop count for `length(p)`: var-length hops report their walk
-      // length (`__hops`), fixed hops contribute 1
-      val hopLenCols =
-        if (chain.pathVar.isDefined && rel.varLength.isDefined)
-          Seq(col("__hops").as("__r_hops"))
-        else Seq.empty
-      // node ids for `nodes(p)`: a var-length hop reports its walk's
-      // node sequence (`__nids`); fixed hops contribute the bound
-      // endpoint below. A shortest chain carries node sequences only
-      // when the query consumes them (spCarry — the walk-carrying
-      // BFS); otherwise the column is absent and nodes(p) on a
-      // shortest chain fails loudly at resolution.
-      val hopNidCols =
-        if ((chain.pathVar.isDefined || rel.groupNodes.isDefined ||
-            rel.groupChain.isDefined) &&
-            (!chain.shortest || spCarry || aspCarry) &&
-            rel.varLength.isDefined && expandedPlain.columns.contains("__nids"))
-          Seq(col("__nids").as("__r_nids"))
-        else Seq.empty
-      // edge identities for `relationships(p)`, in walk order: a
-      // var-length hop reports its walk's edge list (`__eids`), a
-      // fixed hop its one tagged edge
-      val hopReidCols =
-        if (!needPathRels) Seq.empty
-        else if (expandedPlain.columns.contains("__eids"))
-          Seq(col("__eids").as("__r_reids"))
-        else Seq(array(col("__eid")).as("__r_reids"))
-      // shortest-path multiplicity for `count(p)` on allShortestPaths
-      val hopNpCols =
-        if (chain.allShortest) Seq(col("__np").as("__r_np")) else Seq.empty
-      // accumulated weight for `cost(p)` on weighted shortest chains
-      val hopWcostCols =
-        if (chain.weightProp.isDefined && chain.pathVar.isDefined)
-          Seq(col("__wcost").as("__r_wcost"))
-        else Seq.empty
-      // a named var-length rel's per-step payload list rides along;
-      // multi-hop groups carry one list per named inner hop
-      val hopEplCols =
-        (if (expandedPlain.columns.contains("__epls"))
-          Seq(col("__epls").as("__r_epls"))
-        else Seq.empty) ++
-          expandedPlain.columns.filter(_.startsWith("__epls_"))
-            .toSeq.map(col)
-      val r = expandedPlain
-        .select(col("__src").as("__r_src") +: col("__dst").as("__r_dst") +:
-          (relPropCols ++ relMetaCols ++ relTypeCol ++ relEndpointCols ++
-            hopLenCols ++
-            hopNidCols ++ hopReidCols ++ hopNpCols ++ hopWcostCols ++
-            hopEplCols ++ qppOuterCols.map(c => col(s"__oc_$c")) ++
-            hopEids.map(_.as("__r_eids")).toSeq): _*)
-      val nv = nextNode.variable.getOrElse(s"__anon${nextNode.hashCode.abs}")
-
-      val (joinKeyCur, joinKeyNext) = rel.direction match {
-        case In => ("__r_dst", "__r_src")
-        case _  => ("__r_src", "__r_dst")
-      }
+      // the walk, in pattern order: hop count for `length(p)`, node
+      // ids (its last element IS the endpoint) for `nodes(p)` and
+      // group variables — a shortest chain carries them only when the
+      // query consumes them, otherwise nodes(p) fails loudly at
+      // resolution — edge identities for `relationships(p)` (a fixed
+      // hop its one edge), the allShortestPaths multiplicity for
+      // `count(p)`, the weighted cost for `cost(p)`, and the named
+      // relationship payload lists
+      val walkCols =
+        (if (chain.pathVar.isDefined && h.varLen)
+          Seq(col("__hops").as("__r_hops")) else Nil) ++
+        (if ((chain.pathVar.isDefined || rel.groupNodes.isDefined ||
+            rel.groupChain.isDefined) && (!chain.shortest || h.carry) &&
+            has("__nids"))
+          Seq(col("__nids").as("__r_nids")) else Nil) ++
+        (if (!h.needPathRels) Nil
+        else if (has("__eids")) Seq(col("__eids").as("__r_reids"))
+        else Seq(array(col("__eid")).as("__r_reids"))) ++
+        (if (chain.allShortest) Seq(col("__np").as("__r_np")) else Nil) ++
+        (if (chain.weightProp.isDefined && chain.pathVar.isDefined)
+          Seq(col("__wcost").as("__r_wcost")) else Nil) ++
+        (if (has("__epls")) Seq(col("__epls").as("__r_epls")) else Nil) ++
+        e.columns.filter(_.startsWith("__epls_")).toSeq.map(col)
+      val r = e.select(col("__src").as("__r_src") +: col("__dst").as("__r_dst") +:
+        (relCols ++ walkCols ++ outer.map(c => col(s"__oc_$c")) ++
+          hopEids.map(_.as("__r_eids")).toSeq): _*)
       // chain-wide uniqueness: this hop may not bind an edge identity
       // already consumed by an earlier hop of the same MATCH pattern
       val hasAcc = df != null && df.columns.contains("__chain_eids")
@@ -3350,24 +3142,23 @@ object CypherPlanner {
         // elided start scan: the first hop's edge source IS the
         // start id; disconnected prior clauses cross-join as usual
         pendingStart = None
-        val r2 = r.withColumnRenamed(joinKeyCur, s"${cur}__id")
+        val r2 = r.withColumnRenamed("__r_src", s"${cur}__id")
         df = if (df == null) r2 else df.crossJoin(r2)
         // outer-ref WHERE: keep only walks computed under THIS row's
         // outer values (null-safe: zero-length rows must survive a
         // null outer value — no step ran, the WHERE never evaluated)
-        qppOuterCols.foreach(c =>
-          df = df.filter(col(c) <=> col(s"__oc_$c")))
+        outer.foreach(c => df = df.filter(col(c) <=> col(s"__oc_$c")))
       } else {
-        var joinCond = col(s"${cur}__id") === col(joinKeyCur)
+        var joinCond = col(s"${cur}__id") === col("__r_src")
         if (hasAcc && hopEids.isDefined)
           joinCond = joinCond &&
             !arrays_overlap(col("__chain_eids"), col("__r_eids"))
-        qppOuterCols.foreach(c =>
+        outer.foreach(c =>
           joinCond = joinCond && (col(c) <=> col(s"__oc_$c")))
         df = df.join(r, joinCond)
       }
-      if (qppOuterCols.nonEmpty)
-        df = df.drop(qppOuterCols.map(c => s"__oc_$c"): _*)
+      if (outer.nonEmpty)
+        df = df.drop(outer.map(c => s"__oc_$c"): _*)
       if (hopEids.isDefined)
         df =
           if (hasAcc)
@@ -3376,228 +3167,161 @@ object CypherPlanner {
           else df.withColumnRenamed("__r_eids", "__chain_eids")
       if (chain.pathVar.isDefined) {
         val contrib =
-          if (rel.varLength.isDefined) col("__r_hops").cast("long") else lit(1L)
+          if (h.varLen) col("__r_hops").cast("long") else lit(1L)
         df =
           if (df.columns.contains("__path_len"))
             df.withColumn("__path_len", col("__path_len") + contrib)
           else df.withColumn("__path_len", contrib)
-        if (rel.varLength.isDefined) df = df.drop("__r_hops")
+        if (h.varLen) df = df.drop("__r_hops")
       }
       // accumulated weight for `cost(p)`: weighted chains carry one
-      // var-length hop (enforced above), so the first contribution is
-      // the whole path's cost
+      // var-length hop, so the first contribution is the whole cost
       if (df.columns.contains("__r_wcost"))
         df = df.withColumnRenamed("__r_wcost", "__path_wcost")
+      val nv = h.nv
       if (bound.contains(nv)) {
         // closing a cycle back onto an already-bound variable
-        df = df.filter(col(s"${nv}__id") === col(joinKeyNext))
-        df = df.drop("__r_src", "__r_dst")
-      } else if (virtualVars.contains(nv)) {
-        // variable is bound in an earlier clause: expose its id via the
-        // join key; the outer left-join constrains it, no scan needed
-        df = df.withColumnRenamed(joinKeyNext, s"${nv}__id")
-          .drop(joinKeyCur)
-        bound += nv
-      } else if (idOnly(nextNode, nv)) {
-        // identity-only endpoint: the edge's far end IS the node id —
-        // no node-table scan, same row multiplicity (node join is 1:1)
-        df = df.withColumnRenamed(joinKeyNext, s"${nv}__id")
-          .drop(joinKeyCur)
+        df = df.filter(col(s"${nv}__id") === col("__r_dst"))
+          .drop("__r_src", "__r_dst")
+      } else if (virtualVars.contains(nv) || idOnly(h.next, nv)) {
+        // bound in an earlier clause (the outer left-join constrains
+        // it), or identity-only: the edge's far end IS the node id —
+        // no node-table scan, same row multiplicity
+        df = df.withColumnRenamed("__r_dst", s"${nv}__id").drop("__r_src")
         bound += nv
       } else {
-        val (ndf, _) = nodeDf(nextNode.copy(variable = Some(nv)))
-        df = df.join(ndf, col(joinKeyNext) === col(s"${nv}__id"))
+        val (ndf, _) = nodeDf(h.next.copy(variable = Some(nv)))
+        df = df.join(ndf, col("__r_dst") === col(s"${nv}__id"))
+          .drop("__r_src", "__r_dst")
         bound += nv
-        df = df.drop("__r_src", "__r_dst")
       }
-      // GQL group variables — the quantified group's inner node names
-      // bind PER-STEP node-id lists, derived from the walk the
-      // var-expand already carries: pattern-order nodes are
-      // [src, x1, …, dst] over k steps, so the inner-source list is
-      // everything but the last and the inner-target list everything
-      // but the first (= the walk suffix `__r_nids` itself, reversed
-      // into pattern order for In hops like the nodes(p) path below).
-      // bind the named var-length relationship list (payload structs
-      // in walk order — Neo4j's `-[rs:T*1..3]->` list semantics)
-      rel.variable.filter(_ => df.columns.contains("__r_epls"))
-        .foreach { rv =>
-          require(!df.columns.contains(rv),
-            s"relationship list variable '$rv' collides with an " +
-              s"existing binding")
-          // an In hop plans the walk in STORED orientation with
-          // flipped join keys, so its payload list reverses into path
-          // order — exactly like the nodes(p)/group-variable walks
-          val lst =
-            if (rel.direction == In) reverse(col("__r_epls"))
-            else col("__r_epls")
-          df = df.withColumn(rv, lst).drop("__r_epls")
-        }
-      rel.groupNodes.foreach { case (aName, bName) =>
-        // Named inner nodes inside shortestPath: the BFS keeps
-        // pair×depth, not walks, so group LISTS cannot bind — but a
-        // group whose inner names are consumed only by its own WHERE
-        // (`shortestPath((s) ((a)-[:T]->(b) WHERE b.p > s.q){1,3} (t))`,
-        // r15) needs no lists: the predicate filtered the edge set
-        // before the search. Skip the binding there; a downstream
-        // consumer of the unbound name fails at column resolution.
-        if (((chain.shortest && !spCarry) || chain.allShortest) &&
-            !aspCarry) {
-          // names consumed nowhere (or only by the group's own WHERE)
-          // need no lists — the walk-free search stands. A name the
-          // query DOES consume forces spCarry on plain AND weighted
-          // shortestPath (r15/r16) and aspCarry on allShortestPaths
-          // (r18 — the formerly-rejected cell: the kernel's AllMinimal
-          // walk search enumerates every shortest walk under the
-          // per-pair cap, so group lists bind per path below), so
-          // reaching here means the names are unconsumed by
-          // construction.
-          val consumed = (aName.toSeq ++ bName.toSeq).exists(wref.idents)
-          assert(!consumed, "internal: consumed group variables must " +
-            "ride a walk-carrying search (spCarry/aspCarry)")
+    }
+
+    /** Binds what the hop's walk names — the relationship list, GQL
+      * group variables — and accumulates `nodes(p)` /
+      * `relationships(p)`. Every walk list is already in pattern
+      * order (traversal orientation).
+      */
+    private def bindWalk(h: Hop): Unit = {
+      val rel = h.rel
+      val nv = h.nv
+      // the named relationship lists: a var-length relationship's
+      // payload structs in walk order (Neo4j's `-[rs:T*1..3]->` list
+      // semantics), or a multi-hop group's per-repetition list for each
+      // named inner relationship
+      val relLists = rel.groupChain match {
+        case Some(ch) => ch.hops.zipWithIndex.flatMap { case ((ir, _), j) =>
+          ir.variable.map(_ -> s"__epls_$j") }
+        case None => rel.variable.filter(_ => df.columns.contains("__r_epls"))
+          .map(_ -> "__r_epls").toSeq
+      }
+      relLists.foreach { case (rv, c) =>
+        require(!df.columns.contains(rv),
+          s"relationship list variable '$rv' collides with an " +
+            s"existing binding")
+        df = df.withColumn(rv, col(c)).drop(c)
+      }
+      // GQL group variables: a group's inner node names bind node-id
+      // lists stride-sliced from the walk (pattern-order node ids after
+      // the chain source, n per repetition of an n-hop group): inner
+      // node j ≥ 1 occupies walk indices ≡ j-1 (mod n), and the inner
+      // START list is the chain source followed by every repetition end
+      // but the last. Zero repetitions (a {0,m} group's k=0 branch) bind
+      // empty lists throughout — no step executed (GQL semantics).
+      val (names, n) = rel.groupChain match {
+        case Some(ch) => ((ch.start +: ch.hops.map(_._2)).map(_.variable), ch.hops.size)
+        case None => (rel.groupNodes.toSeq.flatMap { case (a, b) => Seq(a, b) }, 1)
+      }
+      if (rel.groupChain.isDefined || rel.groupNodes.isDefined) {
+        if (chain.shortest && !h.carry) {
+          // a walk-free search binds no lists: names consumed nowhere
+          // (or only by the group's own WHERE, which filtered the edge
+          // set before the search) need none, and a consumed name
+          // forces the walk-carrying search (spCarry/aspCarry)
+          assert(!names.flatten.exists(wref.idents), "internal: consumed " +
+            "group variables must ride a walk-carrying search (spCarry/aspCarry)")
         } else {
-        (aName.toSeq ++ bName.toSeq).foreach(n =>
-          require(!df.columns.contains(n),
-            s"group variable '$n' collides with an existing binding"))
-        val walk =
-          if (rel.direction == In) inWalk(col("__r_nids"), col(s"${nv}__id"))
-          else col("__r_nids")
-        // zero repetitions (a {0,m} group's k=0 branch) bind BOTH
-        // group variables to the empty list — no step executed, so
-        // no per-step sources either (GQL group-variable semantics)
-        bName.foreach(b => df = df.withColumn(b, walk))
-        aName.foreach(a => df = df.withColumn(a,
-          when(size(walk) === 0, walk).otherwise(
-            concat(array(col(s"${cur}__id")),
-              slice(walk, lit(1), greatest(size(walk) - 1, lit(0)))))))
-        if (chain.pathVar.isEmpty ||
-            (chain.shortest && !spCarry && !aspCarry))
-          df = df.drop("__r_nids")
-        }
-      }
-      // Multi-hop group variables: named inner nodes of a composite
-      // group bind per-REPETITION node-id lists by stride-slicing the
-      // walk (pattern-order node ids after the chain source, h per
-      // repetition): inner node j ≥ 1 occupies walk indices ≡ j-1
-      // (mod h); the inner START list is the chain source followed by
-      // every repetition end but the last. Zero repetitions bind
-      // empty lists throughout.
-      rel.groupChain.foreach { ch =>
-        val h = ch.hops.size
-        val names = (ch.start +: ch.hops.map(_._2)).map(_.variable)
-        if (names.exists(_.isDefined)) {
           val walk = col("__r_nids")
+          def stride(j: Int): Column =
+            if (n == 1) walk
+            else org.apache.spark.sql.functions.filter(walk, (_, i) => (i % n) === j)
           names.zipWithIndex.foreach {
-            case (Some(n), j) =>
-              require(!df.columns.contains(n),
-                s"group variable '$n' collides with an existing binding")
-              val listCol =
-                if (j == 0) {
-                  val ends = org.apache.spark.sql.functions.filter(
-                    walk, (_, i) => (i % h) === (h - 1))
-                  when(size(walk) === 0, walk).otherwise(
-                    concat(array(col(s"${cur}__id")),
-                      slice(ends, lit(1), greatest(size(ends) - 1, lit(0)))))
-                } else
-                  org.apache.spark.sql.functions.filter(
-                    walk, (_, i) => (i % h) === (j - 1))
-              df = df.withColumn(n, listCol)
+            case (Some(name), j) =>
+              require(!df.columns.contains(name),
+                s"group variable '$name' collides with an existing binding")
+              val ends = stride(n - 1)
+              df = df.withColumn(name,
+                if (j > 0) stride(j - 1)
+                else when(size(walk) === 0, walk).otherwise(
+                  concat(array(col(s"${cur}__id")),
+                    slice(ends, lit(1), greatest(size(ends) - 1, lit(0))))))
             case _ => ()
           }
+          if (chain.pathVar.isEmpty) df = df.drop("__r_nids")
         }
-        // named inner relationships bind their per-repetition payload
-        // lists (one element per repetition, already in walk order —
-        // the composite frames were oriented before composition)
-        ch.hops.zipWithIndex.foreach { case ((ir, _), j) =>
-          ir.variable.foreach { rv =>
-            require(!df.columns.contains(rv),
-              s"relationship list variable '$rv' collides with an " +
-                s"existing binding")
-            df = df.withColumnRenamed(s"__epls_$j", rv)
-          }
-        }
-        if (chain.pathVar.isEmpty) df = df.drop("__r_nids")
       }
-      // `nodes(p)` accumulation — after the endpoint is bound so
-      // `${nv}__id` resolves in every binding shape. A var-length hop
-      // contributed its whole walk suffix (`__r_nids`, whose last
-      // element IS the endpoint); a fixed hop contributes the
-      // endpoint id. The chain's start node seeds the array on the
-      // first hop (`cur` still names the hop's source here).
-      if (chain.pathVar.isDefined &&
-          (!chain.shortest || spCarry || aspCarry)) {
-        // an In hop's walk runs opposite to pattern order: the edge
-        // orientation's node list [b, x, …, a] must surface as
-        // [x, …, b] after the already-seeded a — reverse the walk
-        // with its endpoint swapped in for the pattern source
+      // `nodes(p)`: a var-length hop contributes its walk's node ids
+      // (a zero-hop walk nothing: start = end), a fixed hop its
+      // endpoint; the chain's start node seeds the array on the first
+      // hop (`cur` still names the hop's source here)
+      if (chain.pathVar.isDefined && (!chain.shortest || h.carry)) {
         val contrib =
-          if (rel.varLength.isEmpty) array(col(s"${nv}__id"))
-          // a zero-hop walk contributes nothing (start = end, the
-          // seeded start already covers the path's one node)
-          else if (rel.direction == In)
-            inWalk(col("__r_nids"), col(s"${nv}__id"))
-          else col("__r_nids")
+          if (h.varLen) col("__r_nids") else array(col(s"${nv}__id"))
         df =
           if (df.columns.contains("__path_nids"))
             df.withColumn("__path_nids", concat(col("__path_nids"), contrib))
           else
             df.withColumn("__path_nids",
               concat(array(col(s"${cur}__id")), contrib))
-        if (rel.varLength.isDefined) df = df.drop("__r_nids")
+        if (h.varLen) df = df.drop("__r_nids")
       }
-      // `relationships(p)` accumulation — edge identities in pattern
-      // order. An In hop traverses its walk opposite to the edge
-      // orientation, so its edge list reverses; Both-direction hops
-      // expand in traversal order already.
-      if (needPathRels) {
-        val contribR =
-          if (rel.direction == In) reverse(col("__r_reids"))
-          else col("__r_reids")
+      // `relationships(p)`: edge identities in pattern order
+      if (h.needPathRels) {
         df =
           if (df.columns.contains("__path_reids"))
-            df.withColumn("__path_reids", concat(col("__path_reids"), contribR))
-          else df.withColumn("__path_reids", contribR)
+            df.withColumn("__path_reids",
+              concat(col("__path_reids"), col("__r_reids")))
+          else df.withColumn("__path_reids", col("__r_reids"))
         df = df.drop("__r_reids")
       }
-      cur = nv
-      curLabel = nextNode.soleLabel
     }
-    // uniqueness is scoped to ONE MATCH pattern (Cypher semantics);
-    // the accumulated identities don't leak into later clauses
-    if (df != null && df.columns.contains("__chain_eids"))
-      df = df.drop("__chain_eids")
-    // unnamed allShortestPaths: the multiplicity has no consumer
-    if (chain.pathVar.isEmpty && df != null && df.columns.contains("__r_np"))
-      df = df.drop("__r_np")
-    chain.pathVar.foreach { pv =>
-      // shortest-path multiplicity: `count(p)` sums this per group
-      df =
-        if (df.columns.contains("__r_np"))
-          df.withColumnRenamed("__r_np", s"${pv}__@npaths")
-        else df
-      df =
-        if (df.columns.contains("__path_len"))
-          df.withColumnRenamed("__path_len", s"${pv}__@len")
-        else df.withColumn(s"${pv}__@len", lit(0L)) // zero-hop path `p = (a)`
-      df =
-        if (df.columns.contains("__path_nids"))
-          df.withColumnRenamed("__path_nids", s"${pv}__@nodes")
-        else if (!chain.shortest) // zero-hop: the path is its one node
-          df.withColumn(s"${pv}__@nodes", array(col(s"${cur}__id")))
-        else df // shortest chains don't carry node sequences
-      // zero-hop paths have no relationships; the column stays unbound
-      // there (a relationships(p) reference fails loudly rather than
-      // fabricating an empty array of unknown element type)
-      df =
-        if (df.columns.contains("__path_reids"))
-          df.withColumnRenamed("__path_reids", s"${pv}__@rels")
-        else df
-      // accumulated weight of a weighted shortest chain → `cost(p)`
-      df =
-        if (df.columns.contains("__path_wcost"))
-          df.withColumnRenamed("__path_wcost", s"${pv}__@wcost")
-        else df
+
+    /** Path finish: drops the chain-scoped accumulators and binds the
+      * named path's length, nodes, relationships, multiplicity and
+      * cost.
+      */
+    private def finish(): (DataFrame, Set[String]) = {
+      // uniqueness is scoped to ONE MATCH pattern (Cypher semantics);
+      // the accumulated identities don't leak into later clauses
+      if (df != null && df.columns.contains("__chain_eids"))
+        df = df.drop("__chain_eids")
+      // unnamed allShortestPaths: the multiplicity has no consumer
+      if (chain.pathVar.isEmpty && df != null && df.columns.contains("__r_np"))
+        df = df.drop("__r_np")
+      chain.pathVar.foreach { pv =>
+        def rename(from: String, to: String): Unit =
+          if (df.columns.contains(from)) df = df.withColumnRenamed(from, to)
+        // shortest-path multiplicity: `count(p)` sums this per group
+        rename("__r_np", s"${pv}__@npaths")
+        df =
+          if (df.columns.contains("__path_len"))
+            df.withColumnRenamed("__path_len", s"${pv}__@len")
+          else df.withColumn(s"${pv}__@len", lit(0L)) // zero-hop path `p = (a)`
+        df =
+          if (df.columns.contains("__path_nids"))
+            df.withColumnRenamed("__path_nids", s"${pv}__@nodes")
+          else if (!chain.shortest) // zero-hop: the path is its one node
+            df.withColumn(s"${pv}__@nodes", array(col(s"${cur}__id")))
+          else df // shortest chains don't carry node sequences
+        // zero-hop paths have no relationships; the column stays unbound
+        // there (a relationships(p) reference fails loudly rather than
+        // fabricating an empty array of unknown element type)
+        rename("__path_reids", s"${pv}__@rels")
+        // accumulated weight of a weighted shortest chain → `cost(p)`
+        rename("__path_wcost", s"${pv}__@wcost")
+      }
+      (df, bound)
     }
-    (df, bound)
   }
 
   /** Non-shortest expansion of a var-length hop — `-[:T*lo..hi]->`,
@@ -3688,19 +3412,30 @@ object CypherPlanner {
     */
   private case object Walks extends PathPayload
 
+  /** A search's name in its errors: `weighted shortestPath`,
+    * `allShortestPaths over a quantified group`, `SHORTEST 3`, …
+    */
+  private def searchName(sel: PathSelector, weighted: Boolean,
+      composite: Boolean): String =
+    (if (weighted) "weighted " else "") + (sel match {
+      case FirstReach => "shortestPath"
+      case AllMinimal => "allShortestPaths"
+      case KBest(k)   => s"SHORTEST $k"
+    }) + (if (composite) " over a quantified group" else "")
+
   /** The shortest-path / walk search behind `shortestPath`,
     * `allShortestPaths`, GQL `SHORTEST k`, their weighted forms and
     * their multi-hop quantified-group spellings: one level-synchronous
     * multi-source frontier loop, parameterised by selector, cost (hops,
-    * or the strictly positive `weightProp` — Bellman–Ford relaxation
-    * bounded by `hi` steps) and payload.
+    * or, `weighted`, the frame's strictly positive weight `__w` —
+    * Bellman–Ford relaxation bounded by `hi` steps) and payload.
     *
     * The step frame is the hop's repetition frame (the one
     * [[repetitions]] enumerates): a single relationship (h = 1 —
-    * `__nids = [dst]`, `__eids = [eid]`, `__epls = [epl]` and its raw
-    * weight `__w`, checked here) or the composite frame of an h-hop
-    * quantified group, which carries those arrays per repetition (and
-    * its summed, already checked weight `__w`). Every level extends the
+    * `__nids = [dst]`, `__eids = [eid]`, `__epls = [epl]` and its
+    * weight `__w`) or the composite frame of an h-hop quantified group,
+    * which carries those arrays per repetition (and its summed weight
+    * `__w`); the hop edge frames checked every weight. Every level extends the
     * frontier by one repetition — walk arrays concatenate, `__hops`
     * counts k·h relationships — and merges by selector:
     *  - FirstReach, hops: collapse per pair, anti-join the pairs
@@ -3749,17 +3484,12 @@ object CypherPlanner {
     */
   private def frontierSearch(rel: DataFrame, sel: PathSelector,
       payload: PathPayload, lo: Int, hi: Int, seed: Option[DataFrame],
-      weightProp: Option[String] = None, h: Int = 1,
+      weighted: Boolean = false, h: Int = 1,
       composeFrom: Option[DataFrame => DataFrame] = None): DataFrame = {
     val composite = h > 1
-    val weighted = weightProp.isDefined
     val walks = payload == Walks
     val trail = sel.isInstanceOf[KBest]
-    val what = (if (weighted) "weighted " else "") + (sel match {
-      case FirstReach => "shortestPath"
-      case AllMinimal => "allShortestPaths"
-      case KBest(k)   => s"SHORTEST $k"
-    }) + (if (composite) " over a quantified group" else "")
+    val what = searchName(sel, weighted, composite)
     require(lo == 1 && hi >= lo && hi <= CypherParser.MaxVarHops,
       s"$what var-length bounds *$lo..$hi out of supported range")
     val pair = Seq("__src", "__dst")
@@ -3778,9 +3508,8 @@ object CypherPlanner {
       if (composeFrom.isDefined) null
       else if (composite) stepFrame(rel).localCheckpoint()
       else {
-        val e = stepFrame(rel.select(pairCols ++ weightProp.map(wp =>
-          positiveWeightOrDie(col("__w"), wp, what).as("__w")) ++
-          carry.map(col): _*))
+        val e = stepFrame(rel.select(pairCols ++
+          (if (weighted) Seq(col("__w")) else Nil) ++ carry.map(col): _*))
         // weighted: the walk-free relaxation reads the raw frame (the
         // per-round min collapses parallel edges on the stepped set);
         // the walk searches materialize it at session parallelism
@@ -4686,7 +4415,7 @@ object CypherPlanner {
         case other => throw new IllegalArgumentException(
           s"bad list predicate $other")
       }
-    // type(r): the relationship's type name — planChain binds it as a
+    // type(r): the relationship's type name — ChainPlanner binds it as a
     // hidden `r__@type` column (a literal for typed hops, the union's
     // `__rt` tag for type-less ones; "@" keeps it out of the
     // property namespace and whole-node expansion)
@@ -4704,7 +4433,7 @@ object CypherPlanner {
     // bound per scan as the hidden `n__@props` column, null-valued
     // properties filtered out like Neo4j's absent keys
     case FnCall("properties", Some(Ident(v)), _, _) => col(s"${v}__@props")
-    // length(p): relationship count of the named path — planChain
+    // length(p): relationship count of the named path — ChainPlanner
     // accumulates it while joining the chain's hops
     case FnCall("length", Some(Ident(p)), _, _) => col(s"${p}__@len")
     // cost(p): accumulated weight of a weighted shortestPath chain

@@ -509,7 +509,7 @@ object Algorithms {
     * final exchange.
     */
   def assortativityQuery(spark: SparkSession, sfDir: String): DataFrame = {
-    val (_, sym, _) = louvainBase(spark, sfDir)
+    val (_, sym) = louvainEdges(spark, sfDir)
     val deg = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
     val withDegs = sym
       .join(deg.select(col("id").as("src"), col("deg").as("dx")), Seq("src"))
@@ -539,11 +539,19 @@ object Algorithms {
     */
   private def louvainBase(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame, Long) = {
+    val (edges, sym) = louvainEdges(spark, sfDir)
+    (edges, sym, edges.count())
+  }
+
+  /** [[louvainBase]] without the edge count, for a query that never
+    * reads m (the count costs two Spark jobs).
+    */
+  private def louvainEdges(spark: SparkSession, sfDir: String)
+      : (DataFrame, DataFrame) = {
     val edges = customerChain(spark, sfDir, 1, 2)
       .localCheckpoint()
-    val sym = edges.unionByName(
-      edges.select(col("dst").as("src"), col("src").as("dst")))
-    (edges, sym, edges.count())
+    (edges, edges.unionByName(
+      edges.select(col("dst").as("src"), col("src").as("dst"))))
   }
 
   /** The synchronous local-moving loop shared by [[louvainQuery]] and

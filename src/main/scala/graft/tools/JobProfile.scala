@@ -103,6 +103,7 @@ object JobProfile {
       try (1 to reps).foreach { r =>
         System.gc()
         jobs = 0; stages = 0; tasks = 0; taskMs = 0L
+        stageRows.clear() // the warm-up's or the previous rep's stages
         val cg0 = codegenStats()
         val t0 = System.nanoTime()
         val df = graft.SparkEntry.queries(n)(spark, sfDir)
@@ -121,12 +122,10 @@ object JobProfile {
         if (verbose && r == reps) {
           stageRows.forEach(s => println(s))
         }
-        stageRows.clear()
         graft.Artifacts.dropUnpinned(spark)
       } catch {
         case e: Exception =>
           failed(n, e)
-          stageRows.clear()
           graft.Artifacts.dropUnpinned(spark)
       }
     }

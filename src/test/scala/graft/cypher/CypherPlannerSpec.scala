@@ -537,8 +537,9 @@ class CypherPlannerSpec extends AnyFunSuite {
     assert(pw(0).getSeq[org.apache.spark.sql.Row](1)
       .map(r => (r.getLong(1), r.getLong(2), r.getInt(3))).toList ==
       List((1L, 2L, 1), (2L, 3L, 1)))
-    // In-spelled pre-bound shortest with walks: the seeded flip
-    // reverses node and payload arrays back into pattern order
+    // In-spelled pre-bound shortest with walks: the hop is planned in
+    // traversal orientation, so node and payload arrays come out in
+    // pattern order
     val chainG = graft.graph.PropertyGraph(
       nodes = Map("V" -> Seq((1L, "n1"), (2L, "n2"), (3L, "n3"), (4L, "n4"))
         .toDF("__id", "name")),
@@ -3737,17 +3738,17 @@ class CypherPlannerSpec extends AnyFunSuite {
       rels = Map("E" -> Seq((1L, 2L, 12L), (2L, 3L, 23L), (3L, 4L, 34L))
         .toDF("__src", "__dst", "w")),
       relEndpoints = Map("E" -> ("V", "V")))
-    // shortestPath with an In hop and a PRE-BOUND start: before the
-    // flip, the BFS seeded the stored-src end (the walk's FAR end)
-    // and silently returned nothing
+    // shortestPath with an In hop and a PRE-BOUND start: the seed
+    // must restrict the walk's start, not its far end (seeding the
+    // stored-src end silently returned nothing)
     val sp = CypherPlanner.run(spark, g(),
       "MATCH (a:V) WHERE id(a) = 4 " +
         "MATCH p = shortestPath((a)<-[:E*1..3]-(b:V)) " +
         "RETURN id(b) AS bid, length(p) AS l").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(sp == Set((3L, 1L), (2L, 2L), (1L, 3L)))
-    // plain var-length: nodes(p) stays in pattern order through the
-    // flip-back (walk arrays reverse, re-anchored on the start)
+    // plain var-length: nodes(p) in pattern order, anchored on the
+    // start
     val vl = CypherPlanner.run(spark, g(),
       "MATCH (a:V) WHERE id(a) = 4 " +
         "MATCH p = (a)<-[:E*1..2]-(b:V) " +
@@ -3797,6 +3798,57 @@ class CypherPlannerSpec extends AnyFunSuite {
         "RETURN id(b) AS bid, length(p) AS l").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(z == Set((4L, 0L), (3L, 1L)))
+    // a fixed In hop: startNode/endNode keep the stored endpoints
+    val se = CypherPlanner.run(spark, g(),
+      "MATCH (a:V)<-[r:E]-(b:V) WHERE id(a) = 4 " +
+        "RETURN id(startNode(r)) AS s, id(endNode(r)) AS e").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(se == Set((3L, 4L)))
+    // relationships(p) in pattern order on a seeded In var-length hop
+    // and on an unseeded one (label-less start: the scan is elided)
+    def relEnds(q: String) = CypherPlanner.run(spark, g(), q).collect()
+      .map(r => (r.getLong(0), r.getSeq[org.apache.spark.sql.Row](1)
+        .map(e => (e.getLong(1), e.getLong(2))).toList)).toSet
+    val wantRels = Set((3L, List((3L, 4L))), (2L, List((3L, 4L), (2L, 3L))))
+    assert(relEnds("MATCH (a:V) WHERE id(a) = 4 " +
+      "MATCH p = (a)<-[:E*1..2]-(b:V) " +
+      "RETURN id(b) AS bid, relationships(p) AS rs") == wantRels)
+    assert(relEnds("MATCH p = (a)<-[:E*1..2]-(b:V) WHERE id(a) = 4 " +
+      "RETURN id(b) AS bid, relationships(p) AS rs") == wantRels)
+    // an unseeded In shortestPath (label-less start, scan elided)
+    // breaks a tie between equal walks like the seeded spelling: the
+    // least node walk read from the start, 1 <- 4 <- 3 <- 6
+    val tieG = graft.graph.PropertyGraph(
+      nodes = Map("V" -> (1L to 6L).map(i => (i, i)).toDF("__id", "v")),
+      rels = Map("E" -> Seq((6L, 2L), (2L, 5L), (5L, 1L), (6L, 3L),
+        (3L, 4L), (4L, 1L)).toDF("__src", "__dst")),
+      relEndpoints = Map("E" -> ("V", "V")))
+    def tieWalk(start: String) = CypherPlanner.run(spark, tieG,
+      s"MATCH p = shortestPath(($start)<-[:E*1..3]-(b:V)) " +
+        "WHERE id(a) = 1 AND id(b) = 6 RETURN nodes(p) AS ns")
+      .collect().map(_.getSeq[Long](0).toList).toList
+    assert(tieWalk("a") == List(List(1L, 4L, 3L, 6L)))
+    assert(tieWalk("a") == tieWalk("a:V"))
+  }
+
+  test("an In shortestPath picks between equal-length walks by the least node walk from its start") {
+    import spark.implicits._
+    // two 3-hop walks 1 <- 4 <- 3 <- 6 and 1 <- 5 <- 2 <- 6: read from
+    // the pattern's start (1) the least node walk is [4, 3, 6]; read
+    // in stored edge order from 6 it would be [2, 5, 1]
+    val g = graft.graph.PropertyGraph(
+      nodes = Map("V" -> (1L to 6L).map(i => (i, i)).toDF("__id", "v")),
+      rels = Map("E" -> Seq((6L, 2L), (2L, 5L), (5L, 1L), (6L, 3L),
+        (3L, 4L), (4L, 1L)).toDF("__src", "__dst")),
+      relEndpoints = Map("E" -> ("V", "V")))
+    val rows = CypherPlanner.run(spark, g,
+      "MATCH p = shortestPath((a:V)<-[:E*1..3]-(b:V)) " +
+        "WHERE id(a) = 1 AND id(b) = 6 " +
+        "RETURN nodes(p) AS ns, relationships(p) AS rs").collect()
+    assert(rows.length == 1)
+    assert(rows(0).getSeq[Long](0).toList == List(1L, 4L, 3L, 6L))
+    assert(rows(0).getSeq[org.apache.spark.sql.Row](1).map(e => (e.getLong(1), e.getLong(2)))
+      .toList == List((4L, 1L), (3L, 4L), (6L, 3L)))
   }
 
   test("mid-chain var-length hops seed from the accumulated frame") {
