@@ -25,7 +25,72 @@ package graft.cypher
   */
 object Ast {
 
-  sealed trait CExpr
+  /** An expression node. Its children are written once, in
+    * [[mapChildren]]; walks over the whole tree go through it:
+    * [[transform]], [[exists]] and [[foreach]] take a partial function
+    * that answers a node (and decides on its subtree itself), and
+    * descend into the children of every node it does not answer.
+    * Lambda bodies, a pattern subquery's WHERE / projection and the
+    * expressions of a subquery body's clauses are children; pattern
+    * property maps are literals, and a quantified group's inline WHERE
+    * belongs to its pattern, not to the tree.
+    */
+  sealed trait CExpr {
+    /** This node with `f` applied to each direct child, in source order. */
+    def mapChildren(f: CExpr => CExpr): CExpr = this match {
+      case ListLit(xs)                => ListLit(xs.map(f))
+      case Cmp(op, l, r)              => Cmp(op, f(l), f(r))
+      case Arith(op, l, r)            => Arith(op, f(l), f(r))
+      case IsNull(x)                  => IsNull(f(x))
+      case InList(x, l)               => InList(f(x), f(l))
+      case And(l, r)                  => And(f(l), f(r))
+      case Or(l, r)                   => Or(f(l), f(r))
+      case Not(x)                     => Not(f(x))
+      case c: FnCall                  => c.copy(arg = c.arg.map(f))
+      case ExistsPattern(ch, w)       => ExistsPattern(ch, w.map(f))
+      case ExistsSubquery(body)       => ExistsSubquery(body.map(_.mapExprs(f)))
+      case CountSubquery(body)        => CountSubquery(body.map(_.mapExprs(f)))
+      case CollectSubquery(body)      => CollectSubquery(body.map(_.mapExprs(f)))
+      case CountPattern(ch, w)        => CountPattern(ch, w.map(f))
+      case PatternComp(ch, w, p)      => PatternComp(ch, w.map(f), f(p))
+      case PercentileCont(a, p)       => PercentileCont(f(a), p)
+      case PercentileDisc(a, p)       => PercentileDisc(f(a), p)
+      case RangeList(a, b, s)         => RangeList(f(a), f(b), f(s))
+      case ListComp(v, l, w, p)       => ListComp(v, f(l), w.map(f), p.map(f))
+      case ReduceExpr(a, i, v, l, s)  => ReduceExpr(a, f(i), v, f(l), f(s))
+      case CaseExpr(ws, o)            =>
+        CaseExpr(ws.map { case (c, v) => (f(c), f(v)) }, o.map(f))
+      case StrPred(op, l, r)          => StrPred(op, f(l), f(r))
+      case Coalesce(xs)               => Coalesce(xs.map(f))
+      case FnCallN(n, as)             => FnCallN(n, as.map(f))
+      case ListPred(k, v, l, p)       => ListPred(k, v, f(l), f(p))
+      case _: Prop | _: Ident | _: LitV | _: Param | _: ColRef => this
+    }
+
+    def children: Seq[CExpr] = {
+      val out = Seq.newBuilder[CExpr]
+      mapChildren { c => out += c; c }
+      out.result()
+    }
+
+    /** Top-down rewrite: `pf`'s answer replaces a node it is defined
+      * at; elsewhere the rewrite descends into the children.
+      */
+    def transform(pf: PartialFunction[CExpr, CExpr]): CExpr =
+      pf.applyOrElse(this, (e: CExpr) => e.mapChildren(_.transform(pf)))
+
+    def exists(pf: PartialFunction[CExpr, Boolean]): Boolean =
+      pf.applyOrElse(this, (e: CExpr) => e.children.exists(_.exists(pf)))
+
+    def foreach(pf: PartialFunction[CExpr, Unit]): Unit =
+      pf.applyOrElse(this, (e: CExpr) => e.children.foreach(_.foreach(pf)))
+  }
+
+  /** An expression planned as its own subquery over its own pattern or
+    * clause body: EXISTS / COUNT / COLLECT and pattern comprehensions.
+    */
+  sealed trait Subquery extends CExpr
+
   final case class Prop(variable: String, prop: String) extends CExpr
   final case class Ident(name: String) extends CExpr
   final case class LitV(value: Any) extends CExpr
@@ -60,7 +125,7 @@ object Ast {
     * (or anti-join under NOT) over the filtered subquery frame.
     */
   final case class ExistsPattern(chain: PatternChain,
-      where: Option[CExpr] = None) extends CExpr
+      where: Option[CExpr] = None) extends Subquery
 
   /** `EXISTS { <full clause pipeline> }` (Neo4j 5, r15): multi-clause
     * bodies — MATCH/WHERE/WITH/UNWIND chains; an optional trailing
@@ -68,7 +133,7 @@ object Ast {
     * unaffected by the subquery's RETURN). The common single-pattern
     * form stays the lighter [[ExistsPattern]].
     */
-  final case class ExistsSubquery(body: Seq[Clause]) extends CExpr
+  final case class ExistsSubquery(body: Seq[Clause]) extends Subquery
 
   /** `COUNT { <full clause pipeline> }` (r15): the number of rows the
     * body yields per outer binding. A trailing RETURN is honored
@@ -77,20 +142,20 @@ object Ast {
     * decorrelated plan cannot express. The single-pattern form stays
     * [[CountPattern]].
     */
-  final case class CountSubquery(body: Seq[Clause]) extends CExpr
+  final case class CountSubquery(body: Seq[Clause]) extends Subquery
 
   /** `COLLECT { <full clause pipeline> RETURN expr }` (r15): the
     * body's single RETURN column collected per outer binding (sorted —
     * deterministic). The single-pattern form stays [[PatternComp]].
     */
-  final case class CollectSubquery(body: Seq[Clause]) extends CExpr
+  final case class CollectSubquery(body: Seq[Clause]) extends Subquery
 
   /** `COUNT { (MATCH)? pattern (WHERE pred)? }` subquery expression
     * (openCypher): the number of pattern matches (after the optional
     * inner predicate) for the row's bindings of the shared variables.
     */
   final case class CountPattern(chain: PatternChain,
-      where: Option[CExpr] = None) extends CExpr
+      where: Option[CExpr] = None) extends Subquery
 
   /** Pattern comprehension `[(a)-[:R]->(b) (WHERE pred)? | proj]` —
     * the per-row list of `proj` values over the pattern's matches.
@@ -98,7 +163,7 @@ object Ast {
     * unspecified, so any order-insensitive consumer agrees).
     */
   final case class PatternComp(chain: PatternChain,
-      where: Option[CExpr], proj: CExpr) extends CExpr
+      where: Option[CExpr], proj: CExpr) extends Subquery
 
   /** `percentileCont(expr, p)` — continuous (interpolated) percentile
     * aggregate; `p` must be a literal in [0, 1].
@@ -276,7 +341,45 @@ object Ast {
       (start +: hops.map(_._2)).flatMap(_.variable)
   }
 
-  sealed trait Clause
+  /** A pipeline clause. The expressions it holds are enumerated once,
+    * in [[mapExprs]] (nested CALL / FOREACH bodies included).
+    */
+  sealed trait Clause {
+    /** This clause with `f` applied to every expression it holds. */
+    def mapExprs(f: CExpr => CExpr): Clause = {
+      def items(is: Seq[ReturnItem]) = is.map(i => i.copy(expr = f(i.expr)))
+      def sorts(ss: Seq[SortItem]) = ss.map(s => s.copy(expr = f(s.expr)))
+      def entries(es: Seq[(String, CExpr)]) = es.map { case (k, e) => (k, f(e)) }
+      def body(cs: Seq[Clause]) = cs.map(_.mapExprs(f))
+      this match {
+        case m: MatchClause      => m.copy(where = m.where.map(f))
+        case FilterClause(e)     => FilterClause(f(e))
+        case w: WithClause       => w.copy(items = items(w.items),
+          where = w.where.map(f), orderBy = sorts(w.orderBy))
+        case u: UnwindClause     => u.copy(list = f(u.list))
+        case c: CallClause       => c.copy(inner = body(c.inner))
+        case c: CallInTxClause   => c.copy(body = body(c.body))
+        case w: WriteRelClause   =>
+          w.copy(onCreate = entries(w.onCreate), onMatch = entries(w.onMatch))
+        case c: CreateNodeClause => c.copy(props = entries(c.props),
+          onCreate = entries(c.onCreate), onMatch = entries(c.onMatch))
+        case SetPropClause(as)   =>
+          SetPropClause(as.map { case (v, p, e) => (v, p, f(e)) })
+        case s: SetMapClause     => s.copy(entries = entries(s.entries))
+        case fe: ForeachClause   => fe.copy(list = f(fe.list), body = body(fe.body))
+        case r: ReturnClause     =>
+          r.copy(items = items(r.items), orderBy = sorts(r.orderBy))
+        case _: CatalogCallClause | _: DeleteRelClause | _: DetachDeleteClause |
+             _: RemovePropClause | _: SetLabelClause => this
+      }
+    }
+
+    def exprs: Seq[CExpr] = {
+      val out = Seq.newBuilder[CExpr]
+      mapExprs { e => out += e; e }
+      out.result()
+    }
+  }
   /** `where` holds a WHERE attached to an OPTIONAL MATCH: per Cypher
     * semantics it filters the optional pattern BEFORE the left join
     * (unmatched outer rows survive with nulls). A WHERE after a plain

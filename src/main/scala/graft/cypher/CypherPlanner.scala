@@ -71,59 +71,15 @@ object CypherPlanner {
     else dfs.reduce(_.union(_)).distinct()
   }
 
-  /** Replaces every [[Param]] in the query with its literal value. */
-  def bindParams(q: CypherQuery, params: Map[String, Any]): CypherQuery = {
-    def bx(e: CExpr): CExpr = e match {
+  /** Replaces every [[Param]] in the query with its literal value —
+    * wherever an expression of a clause appears, subquery bodies
+    * included.
+    */
+  def bindParams(q: CypherQuery, params: Map[String, Any]): CypherQuery =
+    CypherQuery(q.clauses.map(_.mapExprs(_.transform {
       case Param(n) => LitV(params.getOrElse(n,
         throw new IllegalArgumentException(s"unbound query parameter $$$n")))
-      case Cmp(op, l, r)   => Cmp(op, bx(l), bx(r))
-      case Arith(op, l, r) => Arith(op, bx(l), bx(r))
-      case And(l, r)       => And(bx(l), bx(r))
-      case Or(l, r)        => Or(bx(l), bx(r))
-      case Not(x)          => Not(bx(x))
-      case IsNull(x)       => IsNull(bx(x))
-      case InList(x, l)    => InList(bx(x), bx(l))
-      case ListLit(items)  => ListLit(items.map(bx))
-      case FnCall(n, a, s, d) => FnCall(n, a.map(bx), s, d)
-      case FnCallN(n, as)    => FnCallN(n, as.map(bx))
-      case ListPred(k, v, l, p) => ListPred(k, v, bx(l), bx(p))
-      case StrPred(op, l, r) => StrPred(op, bx(l), bx(r))
-      case Coalesce(args)  => Coalesce(args.map(bx))
-      case CaseExpr(ws, o) => CaseExpr(ws.map { case (c, v) => (bx(c), bx(v)) }, o.map(bx))
-      case other           => other
-    }
-    def bi(i: ReturnItem): ReturnItem = i.copy(expr = bx(i.expr))
-    def bc(c: Clause): Clause = c match {
-      case m: MatchClause   => m.copy(where = m.where.map(bx))
-      case FilterClause(e)  => FilterClause(bx(e))
-      case w: WithClause    => w.copy(items = w.items.map(bi), where = w.where.map(bx))
-      case UnwindClause(l, a) => UnwindClause(bx(l), a)
-      case CallClause(imp, inner) =>
-        CallClause(imp, bindParams(CypherQuery(inner), params).clauses)
-      case CallInTxClause(imp, body, cap, sv, oe) =>
-        CallInTxClause(imp, bindParams(CypherQuery(body), params).clauses,
-          cap, sv, oe)
-      case w: WriteRelClause => // pattern props are literals already
-        w.copy(onCreate = w.onCreate.map { case (k, e) => (k, bx(e)) },
-          onMatch = w.onMatch.map { case (k, e) => (k, bx(e)) })
-      case CreateNodeClause(v, l, ps, m, oc, om) =>
-        CreateNodeClause(v, l, ps.map { case (k, e) => (k, bx(e)) }, m,
-          oc.map { case (k, e) => (k, bx(e)) },
-          om.map { case (k, e) => (k, bx(e)) })
-      case d: DeleteRelClause => d
-      case d: DetachDeleteClause => d
-      case r: RemovePropClause => r
-      case SetPropClause(as) =>
-        SetPropClause(as.map { case (v, p, e) => (v, p, bx(e)) })
-      case SetMapClause(v, entries) =>
-        SetMapClause(v, entries.map { case (k, e) => (k, bx(e)) })
-      case s: SetLabelClause => s
-      case ForeachClause(x, l, body) => ForeachClause(x, bx(l), body.map(bc))
-      case c: CatalogCallClause => c
-      case r: ReturnClause  => r.copy(items = r.items.map(bi))
-    }
-    CypherQuery(q.clauses.map(bc))
-  }
+    })))
 
   /** Pipeline state between clauses: the accumulated plan, the bound
     * pattern variables (columns `v__*`), and the scalar bindings
@@ -163,15 +119,10 @@ object CypherPlanner {
     // variables whose node-table columns are actually read somewhere —
     // every other label-less pattern variable is identity-only and its
     // node-table scan can be elided (the edge endpoint IS the id)
-    val needs = colsNeeded(q)
+    val needs = colsNeeded(q.clauses)
     planClauses(graph, q.clauses, Scope(null, Set.empty, Set.empty), needs)._2
   }
 
-  /** Plans a clause pipeline from an initial scope — the body of
-    * [[plan]], reusable for `CALL { … }` subqueries (which seed the
-    * scope with imported variables). Returns the final scope and the
-    * RETURN result (null when the pipeline has no RETURN).
-    */
   /** Spark column type → the Cypher type name the schema procedures
     * report (`db.schema.nodeTypeProperties` / `relTypeProperties`).
     */
@@ -194,6 +145,50 @@ object CypherPlanner {
       case other => other.typeName.capitalize
     }
 
+  /** The `db.schema.*TypeProperties()` frame of a set of tables: per
+    * table (name-sorted) its `key` columns and one row per property
+    * with the Cypher-mapped type and the HONEST `mandatory` answer — a
+    * per-table null-count aggregate (one distributed pass per table,
+    * lazily planned; Neo4j's own procedure samples the store the same
+    * way). Fully plan-side: the 1-row aggregate explodes into the
+    * per-property rows, no driver action. The ungrouped aggregate
+    * over an EMPTY table still yields one row, so it is guarded on the
+    * row count (Neo4j emits nothing for an empty label or type). A
+    * property-less table emits nothing, or with `nullFrame` one row
+    * of null property name and types, not mandatory.
+    */
+  private def schemaCatalog(spark: SparkSession, tables: Map[String, DataFrame],
+      key: String => Seq[Column], nullFrame: Boolean): DataFrame = {
+    val fields = Seq("propertyName", "propertyTypes", "mandatory")
+    def flat(e: DataFrame) = e.select(e.columns.filter(_ != "__e").map(col) ++
+      fields.map(f => col("__e").getField(f).as(f)): _*)
+    val nullRow = struct(lit(null).cast("string").as("propertyName"),
+      lit(null).cast("array<string>").as("propertyTypes"),
+      lit(false).as("mandatory"))
+    val perTable = tables.toSeq.sortBy(_._1).flatMap { case (name, t) =>
+      val props = t.columns
+        .filterNot(c => c.startsWith("__") || c.startsWith("@")).sorted.toSeq
+      val rows = props.map(p => struct(lit(p).as("propertyName"),
+        array(lit(cypherTypeName(t.schema(p).dataType))).as("propertyTypes"),
+        (col(s"__n_$p") === 0).as("mandatory")))
+      if (rows.isEmpty && !nullFrame) None
+      else Some(flat(t.agg(count(lit(1)).as("__cnt"), props.map(p =>
+          max(col(p).isNull.cast("int")).as(s"__n_$p")): _*)
+        .filter(col("__cnt") > 0)
+        .select(key(name) :+ explode(array(
+          (if (rows.isEmpty) Seq(nullRow) else rows): _*)).as("__e"): _*)))
+    }
+    // no table with rows to report → zero rows (Neo4j), typed like the
+    // per-table frames (r17)
+    perTable.reduceOption(_.unionByName(_)).getOrElse(
+      flat(spark.range(0).select(key("") :+ nullRow.as("__e"): _*)))
+  }
+
+  /** Plans a clause pipeline from an initial scope — the body of
+    * [[plan]], reusable for `CALL { … }` subqueries (which seed the
+    * scope with imported variables). Returns the final scope and the
+    * RETURN result (null when the pipeline has no RETURN).
+    */
   private def planClauses(graph0: PropertyGraph, clauses: Seq[Clause],
       s0: Scope, needs: Set[String]): (Scope, DataFrame) = {
     // a WriteRelClause swaps in the post-write graph, so clauses after
@@ -420,133 +415,40 @@ object CypherPlanner {
             scalars = s.scalars + sv, tiny = false)
         }
 
-      case CatalogCallClause("nodeTypeProperties") =>
-        // `CALL db.schema.nodeTypeProperties()` (r15): one row per
-        // (label, property) with the Cypher-mapped type and the HONEST
-        // `mandatory` answer — a per-table null-count aggregate (one
-        // distributed pass per node table, lazily planned; Neo4j's own
-        // procedure samples the store the same way). Fully plan-side:
-        // the 1-row aggregate explodes into the per-property rows, no
-        // driver action.
-        val perTable = graph.nodes.toSeq.sortBy(_._1).flatMap {
-          case (ln, nt) =>
-            val props = nt.columns
-              .filterNot(c => c.startsWith("__") || c.startsWith("@"))
-              .sorted.toSeq
-            if (props.isEmpty) None
-            else Some {
-              val nullAggs = props.map(p =>
-                max(col(p).isNull.cast("int")).as(s"__n_$p"))
-              // the ungrouped agg over an EMPTY table still yields one
-              // row (max over no rows = null) — Neo4j emits NO rows
-              // for a zero-node label, so guard on the row count
-              nt.agg(nullAggs.head,
-                  nullAggs.tail :+ count(lit(1)).as("__cnt"): _*)
-                .filter(col("__cnt") > 0)
-                .select(lit(s":`$ln`").as("nodeType"),
-                  array(lit(ln)).as("nodeLabels"),
-                  explode(array(props.map(p => struct(
-                    lit(p).as("propertyName"),
-                    array(lit(cypherTypeName(nt.schema(p).dataType)))
-                      .as("propertyTypes"),
-                    (col(s"__n_$p") === 0).as("mandatory"))): _*)).as("__e"))
-                .select(col("nodeType"), col("nodeLabels"),
-                  col("__e").getField("propertyName").as("propertyName"),
-                  col("__e").getField("propertyTypes").as("propertyTypes"),
-                  col("__e").getField("mandatory").as("mandatory"))
-            }
-        }
-        // a graph where every label is property-less flatMaps to an
-        // EMPTY collection — Neo4j returns zero rows there, so the
-        // fold needs an empty typed frame, not `empty.reduce` (r17)
-        val cat = perTable.reduceOption(_.unionByName(_)).getOrElse(
-          graph.nodes.values.head.sparkSession.range(0).select(
-            lit(null).cast("string").as("nodeType"),
-            lit(null).cast("array<string>").as("nodeLabels"),
-            lit(null).cast("string").as("propertyName"),
-            lit(null).cast("array<string>").as("propertyTypes"),
-            lit(null).cast("boolean").as("mandatory")))
-        val df = if (s.df == null) cat else s.df.crossJoin(broadcast(cat))
-        val cols = Set("nodeType", "nodeLabels", "propertyName",
-          "propertyTypes", "mandatory")
-        s = Scope(df, s.nodeVars, s.scalars ++ cols,
-          s.lists ++ Set("nodeLabels", "propertyTypes"),
-          tiny = s.df == null || s.tiny, tinyScalars =
-            (if (s.df == null || s.tiny) s.tinyScalars ++ cols
-             else s.tinyScalars))
-
-      case CatalogCallClause("relTypeProperties") =>
-        // `CALL db.schema.relTypeProperties()` (r16) — the
-        // relationship half of nodeTypeProperties: same per-table
-        // null-count plan over the EDGE tables; a relationship type
-        // with edges but no properties emits Neo4j's one null-frame
-        // row (propertyName/propertyTypes null, mandatory false),
-        // zero-edge types emit nothing
-        val perRel = graph.rels.toSeq.sortBy(_._1).map { case (tn, rt) =>
-          val props = rt.columns
-            .filterNot(c => c.startsWith("__") || c.startsWith("@"))
-            .sorted.toSeq
-          if (props.isEmpty)
-            rt.agg(count(lit(1)).as("__cnt")).filter(col("__cnt") > 0)
-              .select(lit(s":`$tn`").as("relType"),
-                lit(null).cast("string").as("propertyName"),
-                lit(null).cast("array<string>").as("propertyTypes"),
-                lit(false).as("mandatory"))
-          else {
-            val nullAggs = props.map(p =>
-              max(col(p).isNull.cast("int")).as(s"__n_$p"))
-            rt.agg(nullAggs.head,
-                nullAggs.tail :+ count(lit(1)).as("__cnt"): _*)
-              .filter(col("__cnt") > 0)
-              .select(lit(s":`$tn`").as("relType"),
-                explode(array(props.map(p => struct(
-                  lit(p).as("propertyName"),
-                  array(lit(cypherTypeName(rt.schema(p).dataType)))
-                    .as("propertyTypes"),
-                  (col(s"__n_$p") === 0).as("mandatory"))): _*)).as("__e"))
-              .select(col("relType"),
-                col("__e").getField("propertyName").as("propertyName"),
-                col("__e").getField("propertyTypes").as("propertyTypes"),
-                col("__e").getField("mandatory").as("mandatory"))
-          }
-        }
-        // zero relationship types → zero rows (Neo4j), not
-        // `empty.reduce` (r17)
-        val relCat = perRel.reduceOption(_.unionByName(_)).getOrElse(
-          graph.nodes.values.head.sparkSession.range(0).select(
-            lit(null).cast("string").as("relType"),
-            lit(null).cast("string").as("propertyName"),
-            lit(null).cast("array<string>").as("propertyTypes"),
-            lit(null).cast("boolean").as("mandatory")))
-        val rdf = if (s.df == null) relCat
-          else s.df.crossJoin(broadcast(relCat))
-        val rcols = Set("relType", "propertyName", "propertyTypes",
-          "mandatory")
-        s = Scope(rdf, s.nodeVars, s.scalars ++ rcols,
-          s.lists + "propertyTypes",
-          tiny = s.df == null || s.tiny, tinyScalars =
-            (if (s.df == null || s.tiny) s.tinyScalars ++ rcols
-             else s.tinyScalars))
-
       case CatalogCallClause(kind) =>
-        val (names, colName) = kind match {
-          case "labels" => (graph.nodes.keySet.toSeq.sorted, "label")
-          case "propertyKeys" =>
-            // every property column of every node and relationship
-            // table, deduplicated — the engine-wide key catalog
-            ((graph.nodes.values ++ graph.rels.values)
-              .flatMap(_.columns).filterNot(_.startsWith("__"))
-              .toSeq.distinct.sorted, "propertyKey")
-          case _        => (graph.rels.keySet.toSeq.sorted, "relationshipType")
-        }
         val spark0 = graph.nodes.values.head.sparkSession
-        import spark0.implicits._
-        val cat = names.toDF(colName)
-        val df = if (s.df == null) cat else s.df.crossJoin(broadcast(cat))
-        s = Scope(df, s.nodeVars, s.scalars + colName, s.lists,
-          tiny = s.df == null || s.tiny, tinyScalars =
-            (if (s.df == null || s.tiny) s.tinyScalars + colName
-             else s.tinyScalars))
+        val (cat, lists) = kind match {
+          // `CALL db.schema.nodeTypeProperties()` (r15) /
+          // `relTypeProperties()` (r16): one row per (label or type,
+          // property); a property-less label emits nothing, a
+          // property-less relationship type Neo4j's one null-frame row
+          case "nodeTypeProperties" =>
+            (schemaCatalog(spark0, graph.nodes, ln => Seq(lit(s":`$ln`").as("nodeType"),
+              array(lit(ln)).as("nodeLabels")), nullFrame = false),
+              Set("nodeLabels", "propertyTypes"))
+          case "relTypeProperties" =>
+            (schemaCatalog(spark0, graph.rels, tn => Seq(lit(s":`$tn`").as("relType")),
+              nullFrame = true), Set("propertyTypes"))
+          case _ =>
+            val (names, colName) = kind match {
+              case "labels" => (graph.nodes.keySet.toSeq.sorted, "label")
+              case "propertyKeys" =>
+                // every property column of every node and relationship
+                // table, deduplicated — the engine-wide key catalog
+                ((graph.nodes.values ++ graph.rels.values)
+                  .flatMap(_.columns).filterNot(_.startsWith("__"))
+                  .toSeq.distinct.sorted, "propertyKey")
+              case _ => (graph.rels.keySet.toSeq.sorted, "relationshipType")
+            }
+            import spark0.implicits._
+            (names.toDF(colName), Set.empty[String])
+        }
+        // the catalog is tiny: cross-joined (broadcast) into the frame
+        val cols = cat.columns.toSet
+        val tiny = s.df == null || s.tiny
+        s = Scope(if (s.df == null) cat else s.df.crossJoin(broadcast(cat)),
+          s.nodeVars, s.scalars ++ cols, s.lists ++ lists, tiny = tiny,
+          tinyScalars = if (tiny) s.tinyScalars ++ cols else s.tinyScalars)
 
       case r: ReturnClause =>
         // a query can be pure projection (`RETURN 1`, `UNWIND … RETURN`)
@@ -1021,8 +923,7 @@ object CypherPlanner {
     */
   private def planCall(graph: PropertyGraph, outer: Scope,
       imports: Seq[String], inner: Seq[Clause]): Scope = {
-    val innerQ = CypherQuery(inner)
-    val needs = colsNeeded(innerQ)
+    val needs = colsNeeded(inner)
     if (imports.isEmpty) {
       val sub = planClauses(graph, inner,
         Scope(null, Set.empty, Set.empty), needs)._2
@@ -1332,7 +1233,7 @@ object CypherPlanner {
       case w: WithClause => thread(w)
       case c             => c
     } ++ retAsWith.toSeq
-    val needsAll = colsNeeded(CypherQuery(threaded)) ++
+    val needsAll = colsNeeded(threaded) ++
       sharedNodes ++ sharedScalars
     val hasLimitHorizon = threaded.exists {
       case w: WithClause => w.skip.isDefined || w.limit.isDefined
@@ -1452,7 +1353,10 @@ object CypherPlanner {
         if (list) scope.lists + alias else scope.lists)
       Ident(alias)
     }
-    def rw(e: CExpr): CExpr = e match {
+    // rewrite FIRST: the rewrite mutates `scope`, so the tuple must
+    // read it after the traversal, not before. An EXISTS keeps its own
+    // scope: a count inside it is planned with it
+    lazy val rw: PartialFunction[CExpr, CExpr] = {
       case CountPattern(chain, w) =>
         val (odf, keys) = patternMatches(graph, scope, chain, w, "COUNT { } pattern")
         joinBack(odf, keys, "__graft_psq", count(lit(1)), list = false)
@@ -1483,30 +1387,16 @@ object CypherPlanner {
           subqueryBodyRows(graph, scope, body, keepReturn = true, "COLLECT")
         joinBack(rows, keys, "__graft_pc",
           sort_array(collect_list(col(valName))), list = true)
-      case Cmp(op, l, r)   => Cmp(op, rw(l), rw(r))
-      case Arith(op, l, r) => Arith(op, rw(l), rw(r))
-      case And(l, r)       => And(rw(l), rw(r))
-      case Or(l, r)        => Or(rw(l), rw(r))
-      case Not(x)          => Not(rw(x))
-      case IsNull(x)       => IsNull(rw(x))
-      case Coalesce(xs)    => Coalesce(xs.map(rw))
-      case CaseExpr(ws, o) =>
-        CaseExpr(ws.map { case (c, v) => (rw(c), rw(v)) }, o.map(rw))
-      case FnCall(n, a, st, d) => FnCall(n, a.map(rw), st, d)
-      case FnCallN(n, as)  => FnCallN(n, as.map(rw))
-      // descend into lambda containers so a pattern subquery inside
-      // reduce()/[x IN …]/any() materializes too (the subquery cannot
-      // reference the lambda variable — it joins on pattern vars)
-      case ReduceExpr(acc, init, v, l, step) =>
-        ReduceExpr(acc, rw(init), v, rw(l), step)
-      case ListComp(v, l, w, p) => ListComp(v, rw(l), w, p)
-      case ListPred(k, v, l, p) => ListPred(k, v, rw(l), p)
-      case InList(x, l)    => InList(rw(x), rw(l))
-      case leaf            => leaf
+      case x @ (_: ExistsPattern | _: ExistsSubquery) => x
+      // a lambda body runs per list element, which a per-row join-back
+      // cannot see: only the list (and a fold's seed) materialize, a
+      // subquery in the body fails loudly in toColumn
+      case lc: ListComp  => lc.copy(list = lc.list.transform(rw))
+      case lp: ListPred  => lp.copy(list = lp.list.transform(rw))
+      case r: ReduceExpr =>
+        r.copy(init = r.init.transform(rw), list = r.list.transform(rw))
     }
-    // rewrite FIRST: rw mutates `scope`, so the tuple must read it
-    // after the traversal, not before
-    val e2 = if (containsCountPattern(e0)) rw(e0) else e0
+    val e2 = e0.transform(rw)
     (scope, e2)
   }
 
@@ -1514,53 +1404,27 @@ object CypherPlanner {
       items: Seq[ReturnItem]): (Scope, Seq[ReturnItem]) = {
     var scope = s
     val out = items.map { it =>
-      it.expr match {
-        case cp: CountPattern => // bare item keeps its `count` default name
-          val (s2, e2) = bindCounts(graph, scope, cp)
-          scope = s2
-          ReturnItem(e2, Some(it.alias.getOrElse("count")))
-        case cs: CountSubquery =>
-          val (s2, e2) = bindCounts(graph, scope, cs)
-          scope = s2
-          ReturnItem(e2, Some(it.alias.getOrElse("count")))
-        case cs: CollectSubquery =>
-          val (s2, e2) = bindCounts(graph, scope, cs)
-          scope = s2
-          ReturnItem(e2, Some(it.alias.getOrElse("collect")))
-        case other if containsCountPattern(other) =>
-          val (s2, e2) = bindCounts(graph, scope, other)
-          scope = s2
-          ReturnItem(e2, it.alias)
-        case _ => it
+      if (!containsCountPattern(it.expr)) it
+      else {
+        val (s2, e2) = bindCounts(graph, scope, it.expr)
+        scope = s2
+        // a bare COUNT / COLLECT item keeps its default column name
+        ReturnItem(e2, it.alias.orElse(it.expr match {
+          case _: CountPattern | _: CountSubquery => Some("count")
+          case _: CollectSubquery                 => Some("collect")
+          case _                                  => None
+        }))
       }
     }
     (scope, out)
   }
 
-  private def containsCountPattern(e: CExpr): Boolean = e match {
-    case _: CountSubquery  => true
-    case _: CollectSubquery => true
-    case _: CountPattern  => true
-    case _: PatternComp   => true
-    case And(l, r)        => containsCountPattern(l) || containsCountPattern(r)
-    case Or(l, r)         => containsCountPattern(l) || containsCountPattern(r)
-    case Not(x)           => containsCountPattern(x)
-    case Cmp(_, l, r)     => containsCountPattern(l) || containsCountPattern(r)
-    case Arith(_, l, r)   => containsCountPattern(l) || containsCountPattern(r)
-    case IsNull(x)        => containsCountPattern(x)
-    case Coalesce(xs)     => xs.exists(containsCountPattern)
-    case CaseExpr(ws, o)  =>
-      ws.exists { case (c, v) =>
-        containsCountPattern(c) || containsCountPattern(v) } ||
-        o.exists(containsCountPattern)
-    case FnCall(_, a, _, _) => a.exists(containsCountPattern)
-    case FnCallN(_, as)   => as.exists(containsCountPattern)
-    case ReduceExpr(_, init, _, l, _) =>
-      containsCountPattern(init) || containsCountPattern(l)
-    case ListComp(_, l, _, _) => containsCountPattern(l)
-    case ListPred(_, _, l, _) => containsCountPattern(l)
-    case InList(x, l)     => containsCountPattern(x) || containsCountPattern(l)
-    case _                => false
+  /** True when [[bindCounts]] has a COUNT / COLLECT subquery or pattern
+    * comprehension to materialize in `e`.
+    */
+  private def containsCountPattern(e: CExpr): Boolean = e.exists {
+    case _: ExistsPattern | _: ExistsSubquery => false
+    case _: Subquery => true
   }
 
   private def containsExists(e: CExpr): Boolean = e match {
@@ -1722,61 +1586,30 @@ object CypherPlanner {
     * no property columns in the frame (scalar binding, elided scan)
     * rejects loudly — the narrowed form of the former blanket reject.
     */
-  private def expandMapStars(df: DataFrame, e: CExpr): CExpr = {
-    def rw(x: CExpr): CExpr = x match {
-      case FnCallN("@mapproj", as) =>
-        val hasStar = as.drop(1).exists {
-          case FnCallN("@mapstar", _) => true; case _ => false
-        }
-        if (!hasStar) FnCallN("@mapproj", as.head +: as.drop(1).map(rw))
-        else {
-          val v = as.head match {
-            case Ident(n) => n
-            case other => throw new IllegalArgumentException(
-              s"map projection must target a variable, got $other")
-          }
-          val explicit = as.drop(1).collect {
-            case LitV(k: String) => k
-            case FnCallN("@mapentry", Seq(LitV(k: String), _)) => k
-          }.toSet
-          val props =
-            if (df == null) Seq.empty[String]
-            else df.columns.toSeq.filter(_.startsWith(s"${v}__"))
-              .map(_.stripPrefix(s"${v}__"))
-              .filter(p => p != "id" && !p.startsWith("@")).sorted
-          require(props.nonEmpty,
-            s"map-projection `.*` on '$v': no property columns for " +
-              s"'$v' in the current frame — `.*` enumerates the " +
-              s"matched pattern's properties; list keys explicitly " +
-              s"for scalar bindings")
-          val entries = as.drop(1).flatMap {
-            case FnCallN("@mapstar", _) =>
-              props.filterNot(explicit).map(p => LitV(p): CExpr)
-            case other => Seq(rw(other))
-          }
-          FnCallN("@mapproj", as.head +: entries)
-        }
-      case FnCall(n, a, s0, d)   => FnCall(n, a.map(rw), s0, d)
-      case FnCallN(n, as)        => FnCallN(n, as.map(rw))
-      case Cmp(op, l, r)         => Cmp(op, rw(l), rw(r))
-      case Arith(op, l, r)       => Arith(op, rw(l), rw(r))
-      case And(l, r)             => And(rw(l), rw(r))
-      case Or(l, r)              => Or(rw(l), rw(r))
-      case Not(y)                => Not(rw(y))
-      case IsNull(y)             => IsNull(rw(y))
-      case InList(y, l)          => InList(rw(y), rw(l))
-      case StrPred(op, l, r)     => StrPred(op, rw(l), rw(r))
-      case Coalesce(xs)          => Coalesce(xs.map(rw))
-      case ListLit(xs)           => ListLit(xs.map(rw))
-      case CaseExpr(ws, o)       =>
-        CaseExpr(ws.map { case (c, v) => (rw(c), rw(v)) }, o.map(rw))
-      case ListComp(v, l, w, p)  => ListComp(v, rw(l), w.map(rw), p.map(rw))
-      case ReduceExpr(a, i, v, l, st) =>
-        ReduceExpr(a, rw(i), v, rw(l), rw(st))
-      case ListPred(k, v, l, p)  => ListPred(k, v, rw(l), rw(p))
-      case other                 => other
-    }
-    rw(e)
+  private def expandMapStars(df: DataFrame, e: CExpr): CExpr = e.transform {
+    case FnCallN("@mapproj", Ident(v) +: entries)
+        if entries.contains(FnCallN("@mapstar", Nil)) =>
+      val explicit = entries.collect {
+        case LitV(k: String) => k
+        case FnCallN("@mapentry", Seq(LitV(k: String), _)) => k
+      }.toSet
+      val props =
+        if (df == null) Seq.empty[String]
+        else df.columns.toSeq.filter(_.startsWith(s"${v}__"))
+          .map(_.stripPrefix(s"${v}__"))
+          .filter(p => p != "id" && !p.startsWith("@")).sorted
+      require(props.nonEmpty,
+        s"map-projection `.*` on '$v': no property columns for " +
+          s"'$v' in the current frame — `.*` enumerates the " +
+          s"matched pattern's properties; list keys explicitly " +
+          s"for scalar bindings")
+      FnCallN("@mapproj", Ident(v) +: entries.flatMap {
+        case FnCallN("@mapstar", _) =>
+          props.filterNot(explicit).map(p => LitV(p): CExpr)
+        case other => Seq(expandMapStars(df, other))
+      })
+    // a subquery's map projections read its own frame
+    case q: Subquery => q
   }
 
   /** `*` placeholder (RETURN * / WITH *) → every bound scalar then
@@ -1893,106 +1726,55 @@ object CypherPlanner {
     * (whole-node expansion) do. Everything else is identity-only and
     * eligible for scan elision in [[ChainPlanner]].
     */
-  private def colsNeeded(q: CypherQuery): Set[String] = {
+  private def colsNeeded(clauses: Seq[Clause]): Set[String] = {
     val out = scala.collection.mutable.Set[String]()
-    def walk(e: CExpr): Unit = e match {
-      case Prop(v, _)          => out += v
-      case FnCall("labels" | "keys" | "properties", arg, _, _) =>
-        arg.foreach { case Ident(v) => out += v; case other => walk(other) }
-      case FnCall(_, arg, _, _) => arg.foreach(walk)
-      case FnCallN("@mapproj", as) =>
-        as.headOption.foreach { case Ident(v) => out += v; case _ => () }
-        // computed entries may reference OTHER variables' properties
-        as.drop(1).foreach {
-          case FnCallN("@mapentry", Seq(_, e)) => walk(e)
-          case _ => ()
-        }
-      // a label predicate reads the variable's @labels scan column
-      case FnCallN("@haslabel", as) =>
-        as.headOption.foreach { case Ident(v) => out += v; case _ => () }
-      case FnCallN(_, as)      => as.foreach(walk)
-      case ListPred(_, _, l, p) => walk(l); walk(p)
-      case Cmp(_, l, r)        => walk(l); walk(r)
-      case Arith(_, l, r)      => walk(l); walk(r)
-      case And(l, r)           => walk(l); walk(r)
-      case Or(l, r)            => walk(l); walk(r)
-      case Not(x)              => walk(x)
-      case IsNull(x)           => walk(x)
-      case InList(x, l)        => walk(x); walk(l)
-      case StrPred(_, l, r)    => walk(l); walk(r)
-      case Coalesce(xs)        => xs.foreach(walk)
-      case CaseExpr(ws, els)   =>
-        ws.foreach { case (c, v) => walk(c); walk(v) }; els.foreach(walk)
-      case ListLit(xs)         => xs.foreach(walk)
-      // a full-body EXISTS reads outer columns inside its pipeline —
-      // over-approximate (extra names only reduce scan elision)
-      case ExistsSubquery(body) =>
-        out ++= colsNeeded(CypherQuery(body))
-        body.foreach {
-          case MatchClause(ch, _, _) => out ++= ch.nodeVars
-          case _                     => ()
-        }
-      case CountSubquery(body) =>
-        out ++= colsNeeded(CypherQuery(body))
-        body.foreach {
-          case MatchClause(ch, _, _) => out ++= ch.nodeVars
-          case _                     => ()
-        }
-      case CollectSubquery(body) =>
-        out ++= colsNeeded(CypherQuery(body))
-        body.foreach {
-          case MatchClause(ch, _, _) => out ++= ch.nodeVars
-          case _                     => ()
-        }
-      case _                   => () // Ident/LitV/Param/ExistsPattern
+    def matchVars(cs: Seq[Clause]) =
+      cs.collect { case MatchClause(ch, _, _) => ch.nodeVars }.flatten
+    // a full-body subquery reads outer columns inside its pipeline —
+    // over-approximate (extra names only reduce scan elision)
+    def body(cs: Seq[Clause]): Unit = out ++= colsNeeded(cs) ++ matchVars(cs)
+    lazy val read: PartialFunction[CExpr, Unit] = {
+      case Prop(v, _) => out += v
+      case FnCall("labels" | "keys" | "properties", Some(Ident(v)), _, _) =>
+        out += v
+      // a map projection reads the variable's columns (computed entries
+      // may reference OTHER variables' properties); a label predicate
+      // its @labels scan column
+      case FnCallN("@mapproj" | "@haslabel", Ident(v) +: rest) =>
+        out += v; rest.foreach(_.foreach(read))
+      case ExistsSubquery(cs)  => body(cs)
+      case CountSubquery(cs)   => body(cs)
+      case CollectSubquery(cs) => body(cs)
+      // a pattern subquery plans its own chain
+      case _: Subquery         => ()
     }
-    def walkItems(items: Seq[ReturnItem]): Unit = items.foreach {
+    def items(is: Seq[ReturnItem]): Unit = is.foreach {
       // `*` projects EVERY bound variable whole-node, so every pattern
       // variable's properties are needed — without this, a label-less
       // endpoint would be scan-elided as identity-only and then
       // silently contribute zero columns to the star expansion
-      case ReturnItem(Ident("*"), _) =>
-        q.clauses.foreach {
-          case MatchClause(chain, _, _) => out ++= chain.nodeVars
-          case _                        => ()
-        }
-      case ReturnItem(Ident(v), _) => out += v // whole-node projection
-      case ReturnItem(e, _)        => walk(e)
+      case ReturnItem(Ident("*"), _) => out ++= matchVars(clauses)
+      case ReturnItem(Ident(v), _)   => out += v // whole-node projection
+      case _                         => ()
     }
-    q.clauses.foreach {
-      case MatchClause(_, _, where) => where.foreach(walk)
-      case FilterClause(e)          => walk(e)
-      case UnwindClause(l, _)       => walk(l)
-      case w: WithClause            =>
-        walkItems(w.items); w.where.foreach(walk)
-        w.orderBy.foreach(s0 => walk(s0.expr))
-      case CallClause(imports, inner) =>
-        // over-approximate: imported vars and everything the subquery
-        // reads count as needed (extra columns only reduce scan
-        // elision, never correctness)
-        out ++= imports
-        out ++= colsNeeded(CypherQuery(inner))
-      case CallInTxClause(imports, body, _, _, _) =>
-        out ++= imports
-        out ++= colsNeeded(CypherQuery(body))
-      case WriteRelClause(_, _, oc, om) => // endpoints read only __id
-        (oc ++ om).foreach { case (_, e) => walk(e) }
-      case CreateNodeClause(_, _, ps, _, oc, om) =>
-        (ps ++ oc ++ om).foreach { case (_, e) => walk(e) }
-      case _: DeleteRelClause       => () // rel props bind via the rel var
-      case _: DetachDeleteClause    => () // reads only the node __id
-      case RemovePropClause(ts)     => ts.foreach { case (v, _) => out += v }
-      case SetPropClause(as)        =>
-        as.foreach { case (v, _, e) => out += v; walk(e) }
-      case SetMapClause(v, entries) =>
-        out += v; entries.foreach { case (_, e) => walk(e) }
+    clauses.foreach {
+      case w: WithClause            => items(w.items)
+      case r: ReturnClause          => items(r.items)
+      // over-approximate: imported vars and everything the subquery
+      // reads count as needed (extra columns only reduce scan
+      // elision, never correctness)
+      case CallClause(imports, inner) => out ++= imports ++ colsNeeded(inner)
+      case c: CallInTxClause        => out ++= c.imports ++ colsNeeded(c.body)
+      case ForeachClause(_, _, b)   => out ++= colsNeeded(b)
+      case RemovePropClause(ts)     => out ++= ts.map(_._1)
+      case SetPropClause(as)        => out ++= as.map(_._1)
+      case SetMapClause(v, _)       => out += v
       case SetLabelClause(v, _)     => out += v
-      case ForeachClause(_, l, body) =>
-        walk(l); out ++= colsNeeded(CypherQuery(body))
-      case _: CatalogCallClause     => () // plan-time catalog literals
-      case r: ReturnClause          =>
-        walkItems(r.items); r.orderBy.foreach(s0 => walk(s0.expr))
+      // DELETE reads the rel var / node __id; WriteRel endpoints only
+      // __id; catalog calls are plan-time literals
+      case _                        => ()
     }
+    clauses.foreach(_.exprs.foreach(_.foreach(read)))
     out.toSet
   }
 
@@ -2019,61 +1801,13 @@ object CypherPlanner {
     val nodesOf = scala.collection.mutable.Set[String]()
     val relsOf = scala.collection.mutable.Set[String]()
     val idents = scala.collection.mutable.Set[String]()
-    def walk(e: CExpr): Unit = e match {
+    clauses.foreach(_.exprs.foreach(_.foreach {
       case FnCall("nodes", Some(Ident(v)), _, _) => nodesOf += v; idents += v
       case FnCall("relationships", Some(Ident(v)), _, _) =>
         relsOf += v; idents += v
-      case Ident(v)             => idents += v
-      case Prop(v, _)           => idents += v
-      case FnCall(_, arg, _, _) => arg.foreach(walk)
-      case FnCallN(_, as)       => as.foreach(walk)
-      case ListPred(_, _, l, p) => walk(l); walk(p)
-      case ListComp(_, l, w, pj) => walk(l); w.foreach(walk); pj.foreach(walk)
-      case ReduceExpr(_, i, _, l, st) => walk(i); walk(l); walk(st)
-      case RangeList(f, t, st)  => walk(f); walk(t); walk(st)
-      case PercentileCont(a, _) => walk(a)
-      case PercentileDisc(a, _) => walk(a)
-      case ExistsPattern(_, w)  => w.foreach(walk)
-      case ExistsSubquery(body) => walkAll(body)
-      case CountSubquery(body)  => walkAll(body)
-      case CollectSubquery(body) => walkAll(body)
-      case CountPattern(_, w)   => w.foreach(walk)
-      case PatternComp(_, w, pj) => w.foreach(walk); walk(pj)
-      case Cmp(_, l, r)         => walk(l); walk(r)
-      case Arith(_, l, r)       => walk(l); walk(r)
-      case And(l, r)            => walk(l); walk(r)
-      case Or(l, r)             => walk(l); walk(r)
-      case Not(x)               => walk(x)
-      case IsNull(x)            => walk(x)
-      case InList(x, l)         => walk(x); walk(l)
-      case StrPred(_, l, r)     => walk(l); walk(r)
-      case Coalesce(xs)         => xs.foreach(walk)
-      case CaseExpr(ws, els)    =>
-        ws.foreach { case (c, v) => walk(c); walk(v) }; els.foreach(walk)
-      case ListLit(xs)          => xs.foreach(walk)
-      case _                    => () // LitV/Param/ColRef
-    }
-    def walkAll(cs: Seq[Clause]): Unit = cs.foreach {
-      case MatchClause(_, _, where)   => where.foreach(walk)
-      case FilterClause(e)            => walk(e)
-      case UnwindClause(l, _)         => walk(l)
-      case w: WithClause              =>
-        w.items.foreach(i => walk(i.expr)); w.where.foreach(walk)
-        w.orderBy.foreach(s0 => walk(s0.expr))
-      case CallClause(_, inner)       => walkAll(inner)
-      case CallInTxClause(_, body, _, _, _) => walkAll(body)
-      case WriteRelClause(_, _, oc, om) =>
-        (oc ++ om).foreach { case (_, e) => walk(e) }
-      case CreateNodeClause(_, _, ps, _, oc, om) =>
-        (ps ++ oc ++ om).foreach { case (_, e) => walk(e) }
-      case SetPropClause(as)          => as.foreach { case (_, _, e) => walk(e) }
-      case SetMapClause(_, entries)   => entries.foreach { case (_, e) => walk(e) }
-      case ForeachClause(_, l, body)  => walk(l); walkAll(body)
-      case r: ReturnClause            =>
-        r.items.foreach(i => walk(i.expr)); r.orderBy.foreach(s0 => walk(s0.expr))
-      case _                          => ()
-    }
-    walkAll(clauses)
+      case Ident(v)   => idents += v
+      case Prop(v, _) => idents += v
+    }))
     WalkRefs(nodesOf.toSet, relsOf.toSet, idents.toSet)
   }
 
@@ -2276,8 +2010,10 @@ object CypherPlanner {
       * funnel) and ordered by the remaining columns — `@`-meta
       * literals excluded, which keeps it off array-of-struct ordering —
       * so it is deterministic up to fully-duplicate rows, which are
-      * interchangeable. It ranks across whatever frame it is given: a
-      * single hop's type union, or one table of a group's inner hop.
+      * interchangeable. It ranks ONE type's table as stored, before any
+      * property filter, so every hop that can bind an edge — typed,
+      * multi-type, typeless, with or without an inline property map —
+      * gives it the same identity.
       */
     private def withEid(t: DataFrame, tag: Column): DataFrame = {
       val ordCols = t.columns.toSeq.filterNot(Set("__src", "__dst"))
@@ -2406,35 +2142,22 @@ object CypherPlanner {
       * property accesses per variable plus bare-identity uses
       * (`id(v)`, `v IN …`). Rejects expression forms that cannot
       * appear in a per-step predicate (pattern subqueries,
-      * comprehensions) loudly.
+      * comprehensions, `$` parameters — the WHERE belongs to the
+      * pattern, which takes literals) loudly.
       */
     private def stepWhereRefs(pred: CExpr): (Map[String, Set[String]], Set[String]) = {
       val propRefs = scala.collection.mutable.Map.empty[String, Set[String]]
       val identRefs = scala.collection.mutable.Set.empty[String]
-      def walk(e: CExpr): Unit = e match {
+      pred.foreach {
         case Prop(v, p) =>
           propRefs(v) = propRefs.getOrElse(v, Set.empty) + p
-        case Ident(n)        => identRefs += n
-        case LitV(_) | Param(_) =>
-        case ListLit(xs)     => xs.foreach(walk)
-        case Cmp(_, l, r)    => walk(l); walk(r)
-        case Arith(_, l, r)  => walk(l); walk(r)
-        case StrPred(_, l, r) => walk(l); walk(r)
-        case IsNull(x)       => walk(x)
-        case InList(x, l)    => walk(x); walk(l)
-        case And(l, r)       => walk(l); walk(r)
-        case Or(l, r)        => walk(l); walk(r)
-        case Not(x)          => walk(x)
-        case Coalesce(xs)    => xs.foreach(walk)
-        case FnCall(_, a, _, _) => a.foreach(walk)
-        case FnCallN(_, as)  => as.foreach(walk)
-        case CaseExpr(ws, other) =>
-          ws.foreach { case (c, v) => walk(c); walk(v) }
-          other.foreach(walk)
-        case other => throw new IllegalArgumentException(
-          s"unsupported expression inside a quantified-group WHERE: $other")
+        case Ident(n) => identRefs += n
+        case other @ (_: Subquery | _: ListComp | _: ReduceExpr |
+            _: ListPred | _: RangeList | _: PercentileCont |
+            _: PercentileDisc | _: Param | _: ColRef) =>
+          throw new IllegalArgumentException(
+            s"unsupported expression inside a quantified-group WHERE: $other")
       }
-      walk(pred)
       (propRefs.toMap, identRefs.toSet)
     }
 
@@ -2683,18 +2406,17 @@ object CypherPlanner {
       * relationship hop's and every inner hop's of a quantified group.
       * From `tables` (the hop's schema-pruned edge tables, relTables;
       * empty = statically no edge) it builds, in order:
+      *  - the identity `__eid`, per table as stored (withEid);
       *  - the inline property map, per table on the table's own columns;
       *  - one typed table as it is, or the union of several, each
-      *    branch tagged with its type (`__rt`, for type(r) and
-      *    identity) and, with `props`, null-filled to the union
-      *    property schema (one payload shape; `r.prop` reads Neo4j's
-      *    null where a type lacks it); with `meta`, each branch's own
-      *    `@keys` / `@props` literals;
-      *  - the identity `__eid` and the payload struct `__epl` (type,
-      *    stored endpoints, the properties), both in stored
-      *    orientation, so an undirected edge and its mirror share them.
-      *    A union ranks parallel edges across its types, or, with
-      *    `rankPerType` (a group's inner hop), each type on its own;
+      *    branch tagged with its type (`__rt`, for type(r)) and, with
+      *    `props`, null-filled to the union property schema (one
+      *    payload shape; `r.prop` reads Neo4j's null where a type lacks
+      *    it); with `meta`, each branch's own `@keys` / `@props`
+      *    literals;
+      *  - the payload struct `__epl` (type, stored endpoints, the
+      *    properties) in stored orientation, so an undirected edge and
+      *    its mirror share it and the identity;
       *  - the strictly positive weight `__w` of `weight` (property,
       *    search name for the error);
       *  - with `storedEnds`, the stored endpoints `@src` / `@dst` for
@@ -2709,7 +2431,7 @@ object CypherPlanner {
       */
     private def hopEdges(r: RelPattern, tables: Seq[(String, DataFrame)],
         what: String, props: Boolean, eid: Boolean, epl: Boolean,
-        weight: Option[(String, String)], rankPerType: Boolean = false,
+        weight: Option[(String, String)],
         meta: Boolean = false, storedEnds: Boolean = false,
         ends: Option[(NodePattern, NodePattern)] = None): DataFrame = {
       def weighable(tn: String, t: DataFrame): Unit = weight.foreach { case (wp, _) =>
@@ -2722,17 +2444,19 @@ object CypherPlanner {
           val (keys, ps) = keysAndProps(t, Set("__src", "__dst"))
           Seq(ps.as("@props"), keys.as("@keys"))
         }
+      def matched(tn: String, t: DataFrame) =
+        propsFilter(if (eid) withEid(t, lit(tn)) else t, r.props)
       val base = tables match {
         case Seq((tn, t)) if r.relType.isDefined && r.altTypes.isEmpty =>
           weighable(tn, t)
-          val b = propsFilter(t, r.props)
+          val b = matched(tn, t)
           b.select(b.columns.toSeq.map(col) ++ metaCols(t): _*)
         // no relationship type connects these labels — statically
         // empty, but keep the union's schema for downstream code
         case Seq() =>
           val (tn, t) = graph.rels.toSeq.minBy(_._1)
-          val e = t.select(col("__src"), col("__dst"), lit(tn).as("__rt"))
-            .filter(lit(false))
+          val e = matched(tn, t.select(col("__src"), col("__dst"),
+            lit(tn).as("__rt")).filter(lit(false)))
           weighable(tn, e)
           e
         case tabs =>
@@ -2740,18 +2464,17 @@ object CypherPlanner {
           val extra = weight.map(_._1).filterNot(schema.map(_._1).contains)
           tabs.map { case (tn, t) =>
             weighable(tn, t)
-            val b0 = propsFilter(t, r.props)
-            val b = if (eid && rankPerType) withEid(b0, lit(tn)) else b0
+            val b = matched(tn, t)
             b.select(Seq(col("__src"), col("__dst"), lit(tn).as("__rt")) ++
               schema.map { case (p, dt) =>
                 (if (b.columns.contains(p)) col(p)
                  else lit(null).cast(dt)).as(p) } ++
-              extra.map(col) ++ metaCols(b0) ++
+              extra.map(col) ++ metaCols(t) ++
               Seq("__eid").filter(b.columns.contains).map(col): _*)
           }.reduce(_.unionByName(_))
       }
       val tag = typeTag(base, r)
-      var e = if (eid && !base.columns.contains("__eid")) withEid(base, tag) else base
+      var e = base
       if (epl) {
         val propCols = base.columns.toSeq
           .filterNot(c => c.startsWith("__") || c.startsWith("@")).sorted
@@ -2934,7 +2657,7 @@ object CypherPlanner {
           props = r.variable.isDefined, eid = true, epl = r.variable.isDefined,
           weight = chain.weightProp.map(wp =>
             (wp, searchName(h.pathSel, weighted = true, composite = true))),
-          rankPerType = true, ends = Some((nodePats(j), nodePats(j + 1))))
+          ends = Some((nodePats(j), nodePats(j + 1))))
         e.select(Seq("__src", "__dst", "__eid", "__epl", "__w")
           .filter(e.columns.contains).map(col): _*)
       }
@@ -4523,47 +4246,21 @@ object CypherPlanner {
     * column throughout a sub-expression (respecting inner shadowing by
     * a same-named comprehension/reduce variable).
     */
-  private def subst(e: CExpr, name: String, c: Column): CExpr = e match {
+  private def subst(e: CExpr, name: String, c: Column): CExpr = e.transform {
     case Ident(`name`)   => ColRef(c)
-    case i: Ident        => i
     // property access on the lambda variable is struct-field access
     // (e.g. `r.w` in `reduce(acc = 0.0, r IN rs | acc + r.w)` over a
     // relationship payload list)
     case Prop(`name`, p) => ColRef(c.getField(p))
-    case p: Prop         => p
-    case l: LitV         => l
-    case pr: Param       => pr
-    case cr: ColRef      => cr
-    case ListLit(xs)     => ListLit(xs.map(subst(_, name, c)))
-    case Cmp(op, l, r)   => Cmp(op, subst(l, name, c), subst(r, name, c))
-    case Arith(op, l, r) => Arith(op, subst(l, name, c), subst(r, name, c))
-    case IsNull(x)       => IsNull(subst(x, name, c))
-    case InList(x, l)    => InList(subst(x, name, c), subst(l, name, c))
-    case And(l, r)       => And(subst(l, name, c), subst(r, name, c))
-    case Or(l, r)        => Or(subst(l, name, c), subst(r, name, c))
-    case Not(x)          => Not(subst(x, name, c))
-    case FnCall(f, a, s, d) => FnCall(f, a.map(subst(_, name, c)), s, d)
-    case FnCallN(f, as)     => FnCallN(f, as.map(subst(_, name, c)))
-    case lp @ ListPred(k, v, l, p) =>
-      if (v == name) lp.copy(list = subst(l, name, c)) // inner shadow
-      else ListPred(k, v, subst(l, name, c), subst(p, name, c))
-    case StrPred(op, l, r)  => StrPred(op, subst(l, name, c), subst(r, name, c))
-    case Coalesce(xs)    => Coalesce(xs.map(subst(_, name, c)))
-    case CaseExpr(ws, o) => CaseExpr(
-      ws.map { case (w, v) => (subst(w, name, c), subst(v, name, c)) },
-      o.map(subst(_, name, c)))
-    case RangeList(f, t, s) =>
-      RangeList(subst(f, name, c), subst(t, name, c), subst(s, name, c))
-    case lc @ ListComp(v, l, w, p) =>
-      if (v == name) lc.copy(list = subst(l, name, c)) // inner shadow
-      else ListComp(v, subst(l, name, c),
-        w.map(subst(_, name, c)), p.map(subst(_, name, c)))
-    case r @ ReduceExpr(acc, init, v, l, st) =>
-      val init2 = subst(init, name, c)
-      val l2 = subst(l, name, c)
-      if (acc == name || v == name) r.copy(init = init2, list = l2)
-      else ReduceExpr(acc, init2, v, l2, subst(st, name, c))
-    case other => other // patterns (EXISTS/COUNT) hold no lambda vars
+    // inner shadowing: a same-named lambda variable rebinds the name
+    // in its body, only the list (and the fold's init) see the outer one
+    case lp: ListPred if lp.variable == name =>
+      lp.copy(list = subst(lp.list, name, c))
+    case lc: ListComp if lc.variable == name =>
+      lc.copy(list = subst(lc.list, name, c))
+    case r: ReduceExpr if r.acc == name || r.variable == name =>
+      r.copy(init = subst(r.init, name, c), list = subst(r.list, name, c))
+    case q: Subquery => q // patterns (EXISTS/COUNT) hold no lambda vars
   }
 
   /** List-valued variables a MATCH chain binds as scalars: GQL node

@@ -144,6 +144,33 @@ class CypherPlannerSpec extends AnyFunSuite {
       .filter(org.apache.spark.sql.functions.col("c_mktsegment") === "BUILDING")
       .filter(org.apache.spark.sql.functions.col("c_acctbal") > 1000.0).count()
     assert(df.first().getLong(0) == direct)
+    // parameters bind wherever an expression appears: range bounds,
+    // comprehension lists and predicates, a fold's seed, and the WHERE
+    // of a pattern subquery — each equals its literal spelling
+    def rowsOf(d: org.apache.spark.sql.DataFrame) = d.collect().map(_.toString).sorted.toList
+    val ps = Map[String, Any]("n" -> 4L, "xs" -> Array(1L, 2L, 3L), "k" -> 1L,
+      "z" -> 10L)
+    Seq(
+      "UNWIND range(1, $n) AS x RETURN sum(x) AS s" ->
+        "UNWIND range(1, 4) AS x RETURN sum(x) AS s",
+      "RETURN [x IN $xs | x * 2] AS ys" -> "RETURN [x IN [1, 2, 3] | x * 2] AS ys",
+      "RETURN [x IN [1, 2, 3] WHERE x > $k] AS ys" ->
+        "RETURN [x IN [1, 2, 3] WHERE x > 1] AS ys",
+      "RETURN reduce(a = $z, x IN [1, 2] | a + x) AS s" ->
+        "RETURN reduce(a = 10, x IN [1, 2] | a + x) AS s",
+      ("MATCH (r:Region) WHERE EXISTS { MATCH (n:Nation)-[:IN_REGION]->(r) " +
+        "WHERE n.nationkey = $k } RETURN r.name AS name",
+        "MATCH (r:Region) WHERE EXISTS { MATCH (n:Nation)-[:IN_REGION]->(r) " +
+        "WHERE n.nationkey = 1 } RETURN r.name AS name"),
+      ("MATCH (r:Region) RETURN r.name AS name, COUNT { MATCH " +
+        "(n:Nation)-[:IN_REGION]->(r) WHERE n.nationkey < $k } AS c",
+        "MATCH (r:Region) RETURN r.name AS name, COUNT { MATCH " +
+        "(n:Nation)-[:IN_REGION]->(r) WHERE n.nationkey < 1 } AS c")
+    ).foreach { case (withParams, literal) =>
+      val got = rowsOf(CypherPlanner.run(spark, g, withParams, ps))
+      assert(got.nonEmpty && got == rowsOf(CypherPlanner.run(spark, g, literal)),
+        withParams)
+    }
     // unbound parameters fail loudly, not silently
     assertThrows[IllegalArgumentException](CypherPlanner.run(spark, g,
       "MATCH (c:Customer) WHERE c.acctbal > $x RETURN count(*) AS n",
@@ -1521,6 +1548,32 @@ class CypherPlannerSpec extends AnyFunSuite {
       "ORDER BY id").collect()
     assert(zeros.length.toLong == graft.Tables.customer(spark, TestSpark.sf).count())
     assert(zeros.forall(_.getLong(1) == 0L))
+    // a COUNT in a comprehension body would need the list element,
+    // which a per-row join-back cannot bind: it fails loudly instead of
+    // giving every element the count over the whole list
+    assertThrows[IllegalArgumentException](run(
+      "MATCH (n:Nation)-[:IN_REGION]->(r:Region) WITH r, collect(n) AS ns " +
+      "RETURN r.name AS name, [m IN ns | COUNT { (m)-[:IN_REGION]->(r) }] AS cs")
+      .collect())
+  }
+
+  test("a property read only inside a percentile, comprehension, fold or range keeps the label-less scan") {
+    // c is label-less: its scan is elided unless some expression reads
+    // its columns. Each spelling reads c.acctbal / c.custkey only
+    // inside one expression kind and must equal the spelling that also
+    // reads the property in a further column
+    def rowsOf(q: String, cols: Int) = run(q).collect()
+      .map(r => (0 until cols).map(r.get).mkString("|")).sorted.toList
+    val m = "MATCH (c)-[:FROM_NATION]->(n:Nation) RETURN n.name AS k, "
+    Seq(
+      "percentileCont(c.acctbal, 0.5) AS v" -> "max(c.acctbal) AS extra",
+      "[x IN [1] | c.acctbal] AS v" -> "c.acctbal AS extra",
+      "reduce(a = 0.0, x IN [1] | a + c.acctbal) AS v" -> "c.acctbal AS extra",
+      "size(range(0, c.custkey)) AS v" -> "c.custkey AS extra"
+    ).foreach { case (only, extra) =>
+      val got = rowsOf(m + only, 2)
+      assert(got.nonEmpty && got == rowsOf(m + only + ", " + extra, 2), only)
+    }
   }
 
   test("RETURN * keeps label-less variables whole (no scan elision)") {
@@ -3632,8 +3685,8 @@ class CypherPlannerSpec extends AnyFunSuite {
       (1L, 3L, List(10L), List("yy")),
       (2L, 4L, List(null), List(null))))
     // parallel edges of two types: relationships(p) reports each
-    // edge's rank k — a single-hop union ranks across its types, a
-    // composite hop ranks per type
+    // edge's rank k among the parallel edges of its own type — the
+    // same for a single-hop union and a composite hop
     val par = graft.graph.PropertyGraph(
       nodes = Map("V" -> (1L to 3L).map(Tuple1(_)).toDF("__id")),
       rels = Map(
@@ -3647,11 +3700,35 @@ class CypherPlannerSpec extends AnyFunSuite {
     assert(ranks("MATCH p = (a:V)-[:X|Y*2..2]->(b:V) WHERE id(a) = 1 " +
       "RETURN relationships(p) AS rs") == Set(
       List(("X", 1), ("Y", 1)), List(("X", 2), ("Y", 1)),
-      List(("Y", 3), ("Y", 1))))
+      List(("Y", 1), ("Y", 1))))
     assert(ranks("MATCH p = (a:V) ((u)-[:X|Y]->(v)-[:X|Y]->(w)){1,1} (b:V) " +
       "WHERE id(a) = 1 RETURN relationships(p) AS rs") == Set(
       List(("X", 1), ("Y", 1)), List(("X", 2), ("Y", 1)),
       List(("Y", 1), ("Y", 1))))
+  }
+
+  test("a relationship has one identity per type, whatever the hop's types or inline map") {
+    import spark.implicits._
+    val nodes = Map("V" -> Seq(Tuple1(1L), Tuple1(2L)).toDF("__id"))
+    def pairs(g: graft.graph.PropertyGraph, q: String) =
+      CypherPlanner.run(spark, g, q).collect().map(r => (r.get(0), r.get(1))).toSet
+    // a typed hop and a typeless hop of one MATCH may not bind the same
+    // Y edge, even with a parallel X edge between the same pair
+    val xy = graft.graph.PropertyGraph(nodes = nodes,
+      rels = Map("X" -> Seq((1L, 2L)).toDF("__src", "__dst"),
+        "Y" -> Seq((1L, 2L)).toDF("__src", "__dst")),
+      relEndpoints = Map("X" -> ("V", "V"), "Y" -> ("V", "V")))
+    assert(pairs(xy, "MATCH (a:V)-[r1:Y]->(b:V)<-[r2]-(a) " +
+      "RETURN type(r1), type(r2)") == Set(("Y", "X")))
+    // an inline property map filters after the identity is taken: the
+    // w = 5 edge is not the w = 3 edge, as with the WHERE spelling
+    val yy = graft.graph.PropertyGraph(nodes = nodes,
+      rels = Map("Y" -> Seq((1L, 2L, 3L), (1L, 2L, 5L)).toDF("__src", "__dst", "w")),
+      relEndpoints = Map("Y" -> ("V", "V")))
+    assert(pairs(yy, "MATCH (a:V)-[r1:Y {w: 5}]->(b:V)<-[r2:Y]-(a) " +
+      "RETURN r1.w, r2.w") == Set((5L, 3L)))
+    assert(pairs(yy, "MATCH (a:V)-[r1:Y]->(b:V)<-[r2:Y]-(a) WHERE r1.w = 5 " +
+      "RETURN r1.w, r2.w") == Set((5L, 3L)))
   }
 
   test("outer-scope QPP WHERE composes with shortestPath (per-tuple BFS)") {
