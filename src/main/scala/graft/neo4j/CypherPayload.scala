@@ -20,17 +20,17 @@ object CypherPayload {
     */
   val PayloadTemplate = """{"statements" : [ {"statement" : "%s", "parameters" : {%s} }]}"""
 
-  /** Builds the transactional payload with jackson so arbitrary query
-    * text (quotes, backslashes, newlines, control characters)
-    * serializes to valid JSON — the reference's String.format with
-    * quote-only escaping (Neo4jFormatBase.java:44) breaks on those.
-    */
   /** Shared mapper — ObjectMapper is expensive to build and
     * thread-safe for serialization, and [[statementJson]] sits on the
     * per-page / per-batch hot paths.
     */
   private lazy val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
+  /** Builds the transactional payload with jackson so arbitrary query
+    * text (quotes, backslashes, newlines, control characters)
+    * serializes to valid JSON — the reference's String.format with
+    * quote-only escaping (Neo4jFormatBase.java:44) breaks on those.
+    */
   def statementJson(query: String,
       parameters: Map[String, com.fasterxml.jackson.databind.JsonNode] = Map.empty)
       : String = {
@@ -117,10 +117,6 @@ object CypherPayload {
       keyRange, rowCap,
       "UNWIND $rows AS r MERGE (o:Order {orderkey:r.orderkey}) SET o.status = r.status")
 
-  /** Core of [[writeBatches]]/[[mergeBatches]] over any
-    * (orderkey, status) rows — split out so the cap is testable
-    * against pathological fully-dense keys.
-    */
   /** The key-range/row-cap transaction batcher SHARED by the
     * connector's payload builder ([[payloadBatches]]) and the Cypher
     * `CALL { … } IN TRANSACTIONS` surface (CypherPlanner): adds
@@ -143,6 +139,10 @@ object CypherPayload {
         floor((row_number().over(w) - 1) / rowCap).cast("long"))
   }
 
+  /** Core of [[writeBatches]]/[[mergeBatches]] over any
+    * (orderkey, status) rows — split out so the cap is testable
+    * against pathological fully-dense keys.
+    */
   private[neo4j] def payloadBatches(orders: DataFrame, keyRange: Int,
       rowCap: Int,
       stmt: String =

@@ -1,7 +1,10 @@
 package graft.neo4j
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import graft.neo4j.Neo4jConfig.TransactionUri
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.types._
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
@@ -136,24 +139,153 @@ private[neo4j] object Http {
   }
 }
 
+/** One partition of a read: partition `index` of a `pages` read, or the
+  * key range `(rangeLo, rangeHi]` of a `keyset` read.
+  */
+private[neo4j] final case class Neo4jInputPartition(
+    index: Int, rangeLo: Long, rangeHi: Long) extends InputPartition
+
+/** How a read splits into requests — the one implementation under
+  * both [[Neo4jReader]] and the `graft-neo4j` format. `Single` is one
+  * request; `Pages` appends SKIP/LIMIT windows, page k of partition p
+  * being page p + k·numPartitions; `Keyset` splits the key domain
+  * `(lo, hi]` into contiguous ranges, each walked with the last-seen
+  * key carried forward as a wire parameter. Every partition stops
+  * after its first short page.
+  */
+private[neo4j] sealed trait Neo4jRead extends Serializable {
+  def numPartitions: Int
+  def pageSize: Int
+
+  /** Refuses, before any request, a query this mode would read wrongly. */
+  def validate(cfg: Neo4jConfig): Unit = {
+    require(numPartitions >= 1 && pageSize >= 1, "bad partitioning")
+    this match {
+      case Neo4jRead.Single => ()
+      case _: Neo4jRead.Pages =>
+        // appending our own window onto a query that already paginates
+        // would silently return the wrong subset, and without an ORDER
+        // BY separate page requests may overlap or skip rows
+        require(!"""(?is).*\b(SKIP|LIMIT)\s+\d+\s*$""".r.matches(cfg.query),
+          "pages mode appends SKIP/LIMIT; the query must not end with its own")
+        require("""(?is).*\bORDER\s+BY\b.*""".r.matches(cfg.query),
+          "pages mode needs a deterministic ORDER BY to split the result exactly")
+      case Neo4jRead.Keyset(lo, hi, _, _, _) =>
+        Seq(Neo4jReader.KeysetAfter, Neo4jReader.KeysetUpper, Neo4jReader.KeysetPage)
+          .foreach(p => require(cfg.query.contains("$" + p),
+            s"keyset query must reference $$$p (wire parameter)"))
+        require(lo <= hi, s"empty key domain ($lo, $hi]")
+    }
+  }
+
+  /** The partitions to read, one task each; keyset ranges tile
+    * `(lo, hi]` with the remainder spread over the first ranges, and
+    * empty ranges are dropped.
+    */
+  def partitions: Seq[Neo4jInputPartition] = this match {
+    case Neo4jRead.Single => Seq(Neo4jInputPartition(0, 0L, 0L))
+    case _: Neo4jRead.Pages => (0 until numPartitions).map(Neo4jInputPartition(_, 0L, 0L))
+    case Neo4jRead.Keyset(lo, hi, _, n, _) =>
+      val span = hi - lo
+      (0 until n).map(p => Neo4jInputPartition(p,
+        lo + span / n * p + math.min(p.toLong, span % n),
+        lo + span / n * (p + 1) + math.min(p + 1L, span % n)))
+        .filter(r => r.rangeLo < r.rangeHi)
+  }
+
+  /** The request body for page `k` of partition `p`; `after` is the
+    * last key read (keyset only).
+    */
+  private def payload(query: String, p: Neo4jInputPartition, k: Int, after: Long): String =
+    this match {
+      case Neo4jRead.Single => CypherPayload.statementJson(query)
+      case Neo4jRead.Pages(n, size) => CypherPayload.statementJson(
+        s"$query SKIP ${(p.index.toLong + k.toLong * n) * size} LIMIT $size")
+      case Neo4jRead.Keyset(_, _, _, _, size) =>
+        val nodes = JsonNodeFactory.instance
+        CypherPayload.statementJson(query, Map(
+          Neo4jReader.KeysetAfter -> nodes.numberNode(after),
+          Neo4jReader.KeysetUpper -> nodes.numberNode(p.rangeHi),
+          Neo4jReader.KeysetPage -> nodes.numberNode(size)))
+    }
+
+  /** The rows of partition `p`, fetched page by page as they are consumed. */
+  def rows(cfg: Neo4jConfig, schema: StructType, p: Neo4jInputPartition): Iterator[Seq[Any]] = {
+    var more = true
+    var after = p.rangeLo
+    Iterator.from(0).takeWhile(_ => more).flatMap { k =>
+      val page = Neo4jRead.fetch(cfg, payload(cfg.query, p, k, after), schema)
+      more = page.size >= pageSize
+      this match {
+        case Neo4jRead.Keyset(_, _, i, _, _) if more => after = page.last(i) match {
+          case n: Number => n.longValue()
+          case other => throw new java.io.IOException(
+            s"keyset column $i must be integral, got $other")
+        }
+        case _ => ()
+      }
+      page
+    }
+  }
+
+  /** The read as a DataFrame over an RDD with one task per partition. */
+  def dataFrame(spark: SparkSession, cfg: Neo4jConfig, schema: StructType): DataFrame = {
+    validate(cfg)
+    val rdd = spark.sparkContext.parallelize(partitions, numPartitions)
+      .flatMap(p => rows(cfg, schema, p).map(Row.fromSeq))
+    spark.createDataFrame(rdd, schema)
+  }
+}
+
+private[neo4j] object Neo4jRead {
+  case object Single extends Neo4jRead {
+    val numPartitions = 1
+    val pageSize = Int.MaxValue // the one page is always the last
+  }
+  final case class Pages(numPartitions: Int, pageSize: Int) extends Neo4jRead
+  final case class Keyset(lo: Long, hi: Long, keyIndex: Int,
+      numPartitions: Int, pageSize: Int) extends Neo4jRead
+
+  /** One request: post, parse the streamed rows, align them with the
+    * schema, close the body.
+    */
+  def fetch(cfg: Neo4jConfig, payload: String, schema: StructType): Vector[Seq[Any]] = {
+    val resp = Http.post(cfg, payload)
+    try Neo4jRowParser.parseRows(resp.body()).map(coerce(_, schema)).toVector
+    finally resp.body().close()
+  }
+
+  /** Aligns parsed JSON scalars with the declared column types (the
+    * reference relies on Flink tuple field types the same way).
+    */
+  private def coerce(values: Array[Any], schema: StructType): Seq[Any] =
+    values.toSeq.zip(schema.fields).map {
+      case (null, _) => null
+      case (v: Number, f) => f.dataType match {
+        case IntegerType => v.intValue()
+        case LongType    => v.longValue()
+        case DoubleType  => v.doubleValue()
+        case FloatType   => v.floatValue()
+        case _           => v
+      }
+      case (v, _) => v
+    }
+}
+
 /** Reads a Cypher query result from a Neo4j transactional endpoint
   * into a DataFrame — the Spark twin of Neo4jInputFormat.
   *
-  * The HTTP fetch happens once on the driver (the endpoint is a
-  * single server — same NonParallelInput constraint as the reference,
-  * Neo4jInputFormat.java:40); rows are then parallelized so all
-  * downstream processing distributes. For graph-scale data the
-  * native path is GraphLoader + CypherPlanner, which never funnels
-  * through a socket.
+  * [[read]] fetches once on the driver (the endpoint is a single
+  * server — same NonParallelInput constraint as the reference,
+  * Neo4jInputFormat.java:40) and parallelizes the rows, so all
+  * downstream processing distributes. For graph-scale data the native
+  * path is GraphLoader + CypherPlanner, which never funnels through a
+  * socket.
   */
 object Neo4jReader {
 
   def read(spark: SparkSession, cfg: Neo4jConfig, schema: StructType): DataFrame = {
-    val payload = CypherPayload.statementJson(cfg.query)
-    val resp = Http.post(cfg, payload)
-    val rows =
-      try Neo4jRowParser.parseRows(resp.body()).map(coerce(_, schema)).toVector
-      finally resp.body().close()
+    val rows = Neo4jRead.fetch(cfg, CypherPayload.statementJson(cfg.query), schema)
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows.map(Row.fromSeq), math.max(1, rows.size / 10000)),
       schema)
@@ -179,38 +311,11 @@ object Neo4jReader {
     * wire transfer and JSON parsing across executor tasks instead of
     * funnelling everything through one socket on the driver. The query
     * must have a deterministic ORDER BY for pagination to partition
-    * the result exactly.
+    * the result exactly; a query without one is refused.
     */
   def readPartitioned(spark: SparkSession, cfg: Neo4jConfig, schema: StructType,
-      numPartitions: Int = 4, pageSize: Int = 10000): DataFrame = {
-    require(numPartitions >= 1 && pageSize >= 1, "bad partitioning")
-    // appending our own window onto a query that already paginates
-    // would silently return the wrong subset — refuse loudly
-    require(!"""(?is).*\b(SKIP|LIMIT)\s+\d+\s*$""".r.matches(cfg.query),
-      "partitioned read appends SKIP/LIMIT; the query must not end with its own")
-    val rows = spark.sparkContext
-      .parallelize(0 until numPartitions, numPartitions)
-      .flatMap { p =>
-        val pages = new Iterator[Vector[Seq[Any]]] {
-          private var k = 0
-          private var done = false
-          override def hasNext: Boolean = !done
-          override def next(): Vector[Seq[Any]] = {
-            val skip = (p.toLong + k.toLong * numPartitions) * pageSize
-            k += 1
-            val q = s"${cfg.query} SKIP $skip LIMIT $pageSize"
-            val resp = Http.post(cfg.copy(query = q), CypherPayload.statementJson(q))
-            val page =
-              try Neo4jRowParser.parseRows(resp.body()).map(coerce(_, schema)).toVector
-              finally resp.body().close()
-            if (page.size < pageSize) done = true
-            page
-          }
-        }
-        pages.flatten.map(Row.fromSeq)
-      }
-    spark.createDataFrame(rows, schema)
-  }
+      numPartitions: Int = 4, pageSize: Int = 10000): DataFrame =
+    Neo4jRead.Pages(numPartitions, pageSize).dataFrame(spark, cfg, schema)
 
   /** Parameter names a keyset query must embed (wire parameters in
     * the transactional payload, never spliced into query text).
@@ -245,62 +350,47 @@ object Neo4jReader {
     */
   def readKeyset(spark: SparkSession, cfg: Neo4jConfig, schema: StructType,
       bounds: (Long, Long), keyIndex: Int = 0,
-      numPartitions: Int = 4, pageSize: Int = 10000): DataFrame = {
-    require(numPartitions >= 1 && pageSize >= 1, "bad partitioning")
-    require(bounds._1 <= bounds._2, s"empty key domain $bounds")
-    Seq(KeysetAfter, KeysetUpper, KeysetPage).foreach(p =>
-      require(cfg.query.contains("$" + p),
-        s"keyset query must reference $$$p (wire parameter)"))
-    val (lo, hi) = bounds
-    val span = hi - lo
-    val nodes = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
-    val rows = spark.sparkContext
-      .parallelize(0 until numPartitions, numPartitions)
-      .flatMap { p =>
-        val rangeLo = lo + span / numPartitions * p + math.min(p, span % numPartitions)
-        val rangeHi = lo + span / numPartitions * (p + 1) + math.min(p + 1, span % numPartitions)
-        val pages = new Iterator[Vector[Seq[Any]]] {
-          private var after = rangeLo
-          private var done = rangeLo >= rangeHi
-          override def hasNext: Boolean = !done
-          override def next(): Vector[Seq[Any]] = {
-            val payload = CypherPayload.statementJson(cfg.query, Map(
-              KeysetAfter -> nodes.numberNode(after),
-              KeysetUpper -> nodes.numberNode(rangeHi),
-              KeysetPage -> nodes.numberNode(pageSize)))
-            val resp = Http.post(cfg, payload)
-            val page =
-              try Neo4jRowParser.parseRows(resp.body()).map(coerce(_, schema)).toVector
-              finally resp.body().close()
-            if (page.size < pageSize) done = true
-            else after = page.last(keyIndex) match {
-              case n: Number => n.longValue()
-              case other => throw new java.io.IOException(
-                s"keyset column $keyIndex must be integral, got $other")
-            }
-            page
-          }
-        }
-        pages.flatten.map(Row.fromSeq)
+      numPartitions: Int = 4, pageSize: Int = 10000): DataFrame =
+    Neo4jRead.Keyset(bounds._1, bounds._2, keyIndex, numPartitions, pageSize)
+      .dataFrame(spark, cfg, schema)
+}
+
+/** Rows → `UNWIND $param` payloads of at most `batchSize` rows, each
+  * posted as it fills: the one batcher under [[Neo4jWriter]] and the
+  * `graft-neo4j` batch and streaming sinks. Field i of a row becomes
+  * key i of its UNWIND element; `extraParams` ride along in every
+  * payload (the streaming epoch).
+  */
+private[neo4j] final class UnwindBatcher(cfg: Neo4jConfig, keys: Seq[String],
+    batchSize: Int, extraParams: Map[String, JsonNode] = Map.empty) {
+  private val param = CypherPayload.parameterName(cfg.query)
+  private var batch = JsonNodeFactory.instance.arrayNode()
+
+  def add(row: Row): Unit = {
+    val node = batch.addObject()
+    keys.zipWithIndex.foreach { case (key, i) =>
+      row.get(i) match {
+        case null       => node.putNull(key)
+        case b: Boolean => node.put(key, b)
+        case x: Int     => node.put(key, x)
+        case x: Long    => node.put(key, x)
+        case x: Float   => node.put(key, x)
+        case x: Double  => node.put(key, x)
+        case s: String  => node.put(key, s)
+        case other => throw new java.io.IOException(
+          s"Unsupported field type for value: $other (field $i, key $key)")
       }
-    spark.createDataFrame(rows, schema)
+    }
+    if (batch.size() >= batchSize) flush()
   }
 
-  /** Aligns parsed JSON scalars with the declared column types (the
-    * reference relies on Flink tuple field types the same way).
-    */
-  private[neo4j] def coerce(values: Array[Any], schema: StructType): Seq[Any] =
-    values.toSeq.zip(schema.fields).map {
-      case (null, _) => null
-      case (v: Number, f) => f.dataType match {
-        case IntegerType => v.intValue()
-        case LongType    => v.longValue()
-        case DoubleType  => v.doubleValue()
-        case FloatType   => v.floatValue()
-        case _           => v
-      }
-      case (v, _) => v
-    }
+  // whole payload built by jackson (query text AND parameter rows),
+  // so no hand-spliced JSON anywhere on the wire path
+  def flush(): Unit = if (batch.size() > 0) {
+    Http.post(cfg, CypherPayload.statementJson(cfg.query, extraParams + (param -> batch)),
+      replaySafe = cfg.idempotentWrites).body().close()
+    batch = JsonNodeFactory.instance.arrayNode()
+  }
 }
 
 /** Writes a DataFrame to Neo4j as batched `UNWIND $param` statements —
@@ -314,40 +404,11 @@ object Neo4jWriter {
   def write(df: DataFrame, cfg: Neo4jConfig, parameterKeys: Seq[String],
       batchSize: Int = 1000): Unit = {
     require(parameterKeys.nonEmpty, "No parameter keys were supplied.")
-    val param = CypherPayload.parameterName(cfg.query)
-    val schema = df.schema
+    CypherPayload.parameterName(cfg.query) // a non-UNWIND statement fails here, not per task
     df.foreachPartition { (rows: Iterator[Row]) =>
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      var batch = mapper.createArrayNode()
-
-      // whole payload built by jackson (query text AND parameter rows),
-      // so no hand-spliced JSON anywhere on the wire path
-      def flush(): Unit = if (batch.size() > 0) {
-        val payload = CypherPayload.statementJson(cfg.query, Map(param -> batch))
-        Http.post(cfg, payload, replaySafe = cfg.idempotentWrites)
-          .body().close()
-        batch = mapper.createArrayNode()
-      }
-
-      rows.foreach { row =>
-        val node = batch.addObject()
-        parameterKeys.zipWithIndex.foreach { case (key, i) =>
-          row.get(i) match {
-            case null       => node.putNull(key)
-            case b: Boolean => node.put(key, b)
-            case x: Int     => node.put(key, x)
-            case x: Long    => node.put(key, x)
-            case x: Float   => node.put(key, x)
-            case x: Double  => node.put(key, x)
-            case s: String  => node.put(key, s)
-            case other => throw new java.io.IOException(
-              s"Unsupported field type for value: $other " +
-                s"(column ${schema.fields(i).name})")
-          }
-        }
-        if (batch.size() >= batchSize) flush()
-      }
-      flush()
+      val batcher = new UnwindBatcher(cfg, parameterKeys, batchSize)
+      rows.foreach(batcher.add)
+      batcher.flush()
     }
   }
 }

@@ -1,5 +1,7 @@
 package graft.neo4j
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.JsonNodeFactory
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -31,11 +33,14 @@ import org.apache.spark.sql.Row
   *
   * This is the Spark-native spelling of the reference's
   * Neo4jInputFormat/Neo4jOutputFormat pair (registered formats rather
-  * than programmatic calls); the wire protocol, pagination and retry
-  * semantics are the ones in [[Neo4jReader]]/[[Neo4jWriter]], re-hosted
-  * inside Spark's partition planning so the fetches run IN EXECUTOR
-  * TASKS — including `single` mode, where the one fetch happens in the
-  * one task rather than on the driver. Schema is explicit by contract
+  * than programmatic calls). Both surfaces run one implementation:
+  * the scan plans and reads a [[Neo4jRead]] (the page loop, request
+  * checks and key ranges [[Neo4jReader]] runs) and the sinks feed an
+  * [[UnwindBatcher]] (the batcher [[Neo4jWriter]] runs), so the wire
+  * protocol, pagination and retry semantics are the same by
+  * construction. Every fetch runs IN AN EXECUTOR TASK — including
+  * `single` mode, where the one fetch happens in the one task rather
+  * than on the driver. Schema is explicit by contract
   * (Cypher results are untyped JSON; the reference requires Flink
   * tuple types the same way).
   *
@@ -65,16 +70,18 @@ final class Neo4jTableProvider extends TableProvider with DataSourceRegister {
 }
 
 private[neo4j] object Neo4jDataSource {
-  def config(o: CaseInsensitiveStringMap): Neo4jConfig = Neo4jConfig(
-    restUri = require(o, "url"),
-    query = require(o, "query"),
-    username = Option(o.get("username")),
-    password = Option(o.get("password")),
-    connectTimeoutMs = o.getInt("connectTimeoutMs", 1000),
-    readTimeoutMs = o.getInt("readTimeoutMs", 1000),
-    maxRetries = o.getInt("maxRetries", 3),
-    retryBackoffMs = o.getInt("retryBackoffMs", 100),
-    idempotentWrites = o.getBoolean("idempotentWrites", false))
+  /** The options over [[Neo4jConfig]]'s own defaults. */
+  def config(o: CaseInsensitiveStringMap): Neo4jConfig = {
+    val d = Neo4jConfig(require(o, "url"), require(o, "query"))
+    d.copy(
+      username = Option(o.get("username")),
+      password = Option(o.get("password")),
+      connectTimeoutMs = o.getInt("connectTimeoutMs", d.connectTimeoutMs),
+      readTimeoutMs = o.getInt("readTimeoutMs", d.readTimeoutMs),
+      maxRetries = o.getInt("maxRetries", d.maxRetries),
+      retryBackoffMs = o.getInt("retryBackoffMs", d.retryBackoffMs),
+      idempotentWrites = o.getBoolean("idempotentWrites", d.idempotentWrites))
+  }
 
   def require(o: CaseInsensitiveStringMap, key: String): String = {
     val v = o.get(key)
@@ -115,84 +122,45 @@ private[neo4j] final class Neo4jScanBuilder(
     schema: StructType, options: CaseInsensitiveStringMap) extends ScanBuilder {
   override def build(): Scan = {
     val cfg = Neo4jDataSource.config(options)
-    val mode = options.getOrDefault("mode", "single")
-    val numPartitions = options.getInt("numPartitions", 4)
-    val pageSize = options.getInt("pageSize", 10000)
-    mode match {
-      case "single" | "pages" | "keyset" => ()
+    val (n, size) = (options.getInt("numPartitions", 4), options.getInt("pageSize", 10000))
+    val read = options.getOrDefault("mode", "single") match {
+      case "single" => Neo4jRead.Single
+      case "pages"  => Neo4jRead.Pages(n, size)
+      case "keyset" => Neo4jRead.Keyset(options.getLong("keysetLo", 0L),
+        options.getLong("keysetHi", 0L), options.getInt("keyIndex", 0), n, size)
       case other => throw new IllegalArgumentException(
         s"graft-neo4j: unknown mode '$other' (single | pages | keyset)")
     }
-    if (mode == "pages")
-      // same guard as Neo4jReader.readPartitioned: appending our own
-      // window onto a self-paginating query returns the wrong subset
-      if ("""(?is).*\b(SKIP|LIMIT)\s+\d+\s*$""".r.matches(cfg.query))
-        throw new IllegalArgumentException(
-          "pages mode appends SKIP/LIMIT; the query must not end with its own")
-    val bounds = if (mode == "keyset") {
-      Seq(Neo4jReader.KeysetAfter, Neo4jReader.KeysetUpper,
-        Neo4jReader.KeysetPage).foreach(p =>
-        if (!cfg.query.contains("$" + p))
-          throw new IllegalArgumentException(
-            s"keyset mode: query must reference $$$p (wire parameter)"))
-      (options.getLong("keysetLo", 0L), options.getLong("keysetHi", 0L))
-    } else (0L, 0L)
-    if (mode == "keyset" && bounds._1 > bounds._2)
-      throw new IllegalArgumentException(
-        s"keyset mode: empty key domain $bounds (set keysetLo/keysetHi)")
-    new Neo4jScan(schema, cfg, mode, numPartitions, pageSize, bounds,
-      options.getInt("keyIndex", 0),
+    read.validate(cfg)
+    new Neo4jScan(schema, cfg, read,
       Option(options.get("maxKeyQuery")).filter(_.nonEmpty),
       options.getLong("startKey", options.getLong("keysetLo", 0L)))
   }
 }
 
-private[neo4j] final case class Neo4jInputPartition(
-    index: Int, rangeLo: Long, rangeHi: Long) extends InputPartition
-
 private[neo4j] final class Neo4jScan(
-    schema: StructType, cfg: Neo4jConfig, mode: String,
-    numPartitions: Int, pageSize: Int, bounds: (Long, Long), keyIndex: Int,
-    maxKeyQuery: Option[String] = None, startKey: Long = 0L)
+    schema: StructType, cfg: Neo4jConfig, read: Neo4jRead,
+    maxKeyQuery: Option[String], startKey: Long)
     extends Scan with Batch {
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
-  override def description(): String = s"graft-neo4j $mode ${cfg.endpoint}"
+  override def description(): String = s"graft-neo4j $read ${cfg.endpoint}"
 
-  override def planInputPartitions(): Array[InputPartition] = mode match {
-    case "single" => Array(Neo4jInputPartition(0, 0L, 0L))
-    case "pages" =>
-      (0 until numPartitions).map(Neo4jInputPartition(_, 0L, 0L)).toArray
-    case "keyset" =>
-      Neo4jScan.keysetRanges(bounds._1, bounds._2, numPartitions)
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    read.partitions.toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new Neo4jReaderFactory(schema, cfg, mode, numPartitions, pageSize, keyIndex)
+    new Neo4jReaderFactory(schema, cfg, read)
 
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-    require(mode == "keyset",
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = read match {
+    case keyset: Neo4jRead.Keyset =>
+      val maxQ = maxKeyQuery.getOrElse(throw new IllegalArgumentException(
+        "graft-neo4j streaming: set maxKeyQuery (e.g. " +
+          "'MATCH (n:User) RETURN max(id(n))') — it polls the high-water key"))
+      new Neo4jMicroBatchStream(schema, cfg, maxQ, keyset, startKey)
+    case _ => throw new IllegalArgumentException(
       "graft-neo4j streaming requires mode=keyset (a monotone key is " +
         "the only offset a Cypher endpoint can tail)")
-    val maxQ = maxKeyQuery.getOrElse(throw new IllegalArgumentException(
-      "graft-neo4j streaming: set maxKeyQuery (e.g. " +
-        "'MATCH (n:User) RETURN max(id(n))') — it polls the high-water key"))
-    new Neo4jMicroBatchStream(schema, cfg, maxQ, numPartitions, pageSize,
-      keyIndex, startKey)
-  }
-}
-
-private[neo4j] object Neo4jScan {
-  /** Contiguous key ranges over (lo, hi], remainder spread over the
-    * first ranges — same arithmetic as Neo4jReader.readKeyset.
-    */
-  def keysetRanges(lo: Long, hi: Long, numPartitions: Int): Array[InputPartition] = {
-    val span = hi - lo
-    (0 until numPartitions).map { p =>
-      val rLo = lo + span / numPartitions * p + math.min(p.toLong, span % numPartitions)
-      val rHi = lo + span / numPartitions * (p + 1) + math.min(p + 1L, span % numPartitions)
-      Neo4jInputPartition(p, rLo, rHi)
-    }.filter(r => r.rangeLo < r.rangeHi).toArray[InputPartition]
   }
 }
 
@@ -213,17 +181,14 @@ private[neo4j] final case class Neo4jOffset(key: Long) extends Offset {
   */
 private[neo4j] final class Neo4jMicroBatchStream(
     schema: StructType, cfg: Neo4jConfig, maxKeyQuery: String,
-    numPartitions: Int, pageSize: Int, keyIndex: Int, startKey: Long)
+    read: Neo4jRead.Keyset, startKey: Long)
     extends MicroBatchStream {
 
   override def initialOffset(): Offset = Neo4jOffset(startKey)
 
   override def latestOffset(): Offset = {
-    val resp = Http.post(cfg, CypherPayload.statementJson(maxKeyQuery),
-      replaySafe = true) // a read: always safe to retry
-    val rows =
-      try Neo4jRowParser.parseRows(resp.body()).toVector
-      finally resp.body().close()
+    val rows = Neo4jRead.fetch(cfg, CypherPayload.statementJson(maxKeyQuery),
+      new StructType().add("key", "long"))
     val latest = rows.headOption.flatMap(_.headOption) match {
       case Some(n: Number) => n.longValue()
       case _               => startKey // empty store: stay put
@@ -235,90 +200,31 @@ private[neo4j] final class Neo4jMicroBatchStream(
     Neo4jOffset(json.trim.toLong)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    Neo4jScan.keysetRanges(start.asInstanceOf[Neo4jOffset].key,
-      end.asInstanceOf[Neo4jOffset].key, numPartitions)
+    read.copy(lo = start.asInstanceOf[Neo4jOffset].key,
+      hi = end.asInstanceOf[Neo4jOffset].key).partitions.toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new Neo4jReaderFactory(schema, cfg, "keyset", numPartitions, pageSize, keyIndex)
+    new Neo4jReaderFactory(schema, cfg, read)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
 private[neo4j] final class Neo4jReaderFactory(
-    schema: StructType, cfg: Neo4jConfig, mode: String,
-    numPartitions: Int, pageSize: Int, keyIndex: Int)
+    schema: StructType, cfg: Neo4jConfig, read: Neo4jRead)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[Neo4jInputPartition]
-    val pages: Iterator[Vector[Seq[Any]]] = mode match {
-      case "single" => new Iterator[Vector[Seq[Any]]] {
-        private var done = false
-        override def hasNext: Boolean = !done
-        override def next(): Vector[Seq[Any]] = {
-          done = true
-          val resp = Http.post(cfg, CypherPayload.statementJson(cfg.query))
-          try Neo4jRowParser.parseRows(resp.body())
-            .map(Neo4jReader.coerce(_, schema)).toVector
-          finally resp.body().close()
-        }
-      }
-      case "pages" => new Iterator[Vector[Seq[Any]]] {
-        private var k = 0
-        private var done = false
-        override def hasNext: Boolean = !done
-        override def next(): Vector[Seq[Any]] = {
-          val skip = (p.index.toLong + k.toLong * numPartitions) * pageSize
-          k += 1
-          val paged = s"${cfg.query} SKIP $skip LIMIT $pageSize"
-          val resp = Http.post(cfg, CypherPayload.statementJson(paged))
-          val page =
-            try Neo4jRowParser.parseRows(resp.body())
-              .map(Neo4jReader.coerce(_, schema)).toVector
-            finally resp.body().close()
-          if (page.size < pageSize) done = true
-          page
-        }
-      }
-      case "keyset" =>
-        val nodes = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
-        new Iterator[Vector[Seq[Any]]] {
-          private var after = p.rangeLo
-          private var done = p.rangeLo >= p.rangeHi
-          override def hasNext: Boolean = !done
-          override def next(): Vector[Seq[Any]] = {
-            val payload = CypherPayload.statementJson(cfg.query, Map(
-              Neo4jReader.KeysetAfter -> nodes.numberNode(after),
-              Neo4jReader.KeysetUpper -> nodes.numberNode(p.rangeHi),
-              Neo4jReader.KeysetPage -> nodes.numberNode(pageSize)))
-            val resp = Http.post(cfg, payload)
-            val page =
-              try Neo4jRowParser.parseRows(resp.body())
-                .map(Neo4jReader.coerce(_, schema)).toVector
-              finally resp.body().close()
-            if (page.size < pageSize) done = true
-            else after = page.last(keyIndex) match {
-              case n: Number => n.longValue()
-              case other => throw new java.io.IOException(
-                s"keyset column $keyIndex must be integral, got $other")
-            }
-            page
-          }
-        }
-    }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       private val toCatalyst = CatalystTypeConverters.createToCatalystConverter(schema)
-      private val flat = pages.flatten
+      private val rows = read.rows(cfg, schema, partition.asInstanceOf[Neo4jInputPartition])
       private var current: InternalRow = _
-      override def next(): Boolean =
-        if (flat.hasNext) {
-          current = toCatalyst(Row.fromSeq(flat.next())).asInstanceOf[InternalRow]
-          true
-        } else false
+      override def next(): Boolean = rows.hasNext && {
+        current = toCatalyst(Row.fromSeq(rows.next())).asInstanceOf[InternalRow]
+        true
+      }
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }
-  }
 }
 
 // --------------------------------------------------------------- write
@@ -341,7 +247,7 @@ private[neo4j] final class Neo4jWriteBuilder(
     CypherPayload.parameterName(cfg.query)
     override def toBatch: BatchWrite = new BatchWrite {
       override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-        new Neo4jDataWriterFactory(schema, cfg, batchSize)
+        new Neo4jWriterFactory(schema, cfg, batchSize)
       // the transactional endpoint commits per request: there is no
       // job-level atomicity to add or roll back (same contract as the
       // reference's OutputFormat, which writes batches as it goes)
@@ -366,7 +272,7 @@ private[neo4j] final class Neo4jWriteBuilder(
       new StreamingWrite {
         override def createStreamingWriterFactory(
             info: PhysicalWriteInfo): StreamingDataWriterFactory =
-          new Neo4jStreamingWriterFactory(schema, cfg, batchSize)
+          new Neo4jWriterFactory(schema, cfg, batchSize)
         override def commit(epochId: Long,
             messages: Array[WriterCommitMessage]): Unit = ()
         override def abort(epochId: Long,
@@ -378,71 +284,38 @@ private[neo4j] final class Neo4jWriteBuilder(
 
 private[neo4j] final case class Neo4jCommit(rows: Long) extends WriterCommitMessage
 
-/** Row → UNWIND-batch writer shared by the batch and streaming write
-  * paths (one payload shape, one type mapping — the twins cannot
-  * drift). `extraParams` carries the streaming epoch when the
-  * statement references it.
+/** A sink task's writer: each record goes through one [[UnwindBatcher]],
+  * the same as a [[Neo4jWriter]] partition. `extraParams` carries the
+  * streaming epoch when the statement references it.
   */
 private[neo4j] final class Neo4jRowWriter(
     schema: StructType, cfg: Neo4jConfig, batchSize: Int,
-    extraParams: Map[String, com.fasterxml.jackson.databind.JsonNode])
+    extraParams: Map[String, JsonNode])
     extends DataWriter[InternalRow] {
-  private val param = CypherPayload.parameterName(cfg.query)
-  private val keys = schema.fields.map(_.name)
   private val toScala = CatalystTypeConverters.createToScalaConverter(schema)
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-  private var batch = mapper.createArrayNode()
+  private val batcher = new UnwindBatcher(cfg, schema.fieldNames.toSeq, batchSize, extraParams)
   private var written = 0L
 
-  private def flush(): Unit = if (batch.size() > 0) {
-    val payload = CypherPayload.statementJson(cfg.query,
-      extraParams + (param -> batch))
-    Http.post(cfg, payload, replaySafe = cfg.idempotentWrites).body().close()
-    batch = mapper.createArrayNode()
-  }
-
   override def write(record: InternalRow): Unit = {
-    val row = toScala(record).asInstanceOf[Row]
-    val node = batch.addObject()
-    keys.zipWithIndex.foreach { case (key, i) =>
-      row.get(i) match {
-        case null       => node.putNull(key)
-        case b: Boolean => node.put(key, b)
-        case x: Int     => node.put(key, x)
-        case x: Long    => node.put(key, x)
-        case x: Float   => node.put(key, x)
-        case x: Double  => node.put(key, x)
-        case s: String  => node.put(key, s)
-        case other => throw new java.io.IOException(
-          s"Unsupported field type for value: $other (column $key)")
-      }
-    }
+    batcher.add(toScala(record).asInstanceOf[Row])
     written += 1
-    if (batch.size() >= batchSize) flush()
   }
-  override def commit(): WriterCommitMessage = { flush(); Neo4jCommit(written) }
+  override def commit(): WriterCommitMessage = { batcher.flush(); Neo4jCommit(written) }
   override def abort(): Unit = ()
   override def close(): Unit = ()
 }
 
-private[neo4j] final class Neo4jDataWriterFactory(
+private[neo4j] final class Neo4jWriterFactory(
     schema: StructType, cfg: Neo4jConfig, batchSize: Int)
-    extends DataWriterFactory {
+    extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new Neo4jRowWriter(schema, cfg, batchSize, Map.empty)
-}
-
-private[neo4j] final class Neo4jStreamingWriterFactory(
-    schema: StructType, cfg: Neo4jConfig, batchSize: Int)
-    extends StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] = {
-    val nodes = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance
-    val extra =
-      if (cfg.query.contains("$" + Neo4jStreamingWrite.EpochParam))
-        Map(Neo4jStreamingWrite.EpochParam ->
-          (nodes.numberNode(epochId): com.fasterxml.jackson.databind.JsonNode))
-      else Map.empty[String, com.fasterxml.jackson.databind.JsonNode]
-    new Neo4jRowWriter(schema, cfg, batchSize, extra)
+    val epoch = Neo4jStreamingWrite.EpochParam
+    new Neo4jRowWriter(schema, cfg, batchSize,
+      if (cfg.query.contains("$" + epoch))
+        Map(epoch -> JsonNodeFactory.instance.numberNode(epochId))
+      else Map.empty)
   }
 }

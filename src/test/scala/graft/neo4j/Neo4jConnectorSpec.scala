@@ -34,7 +34,14 @@ class Neo4jConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val badreqRequests = new java.util.concurrent.atomic.AtomicInteger(0)
   private val amb500Requests = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  // paged and keyset endpoints: slice 25 canned rows by the appended
+  // SKIP/LIMIT or by the graftAfter/graftUpper/graftPage WIRE
+  // PARAMETERS (never spliced text) — a keyset page's work is
+  // proportional to the page, not to any offset
+  private var stub: StubEndpoint = _
+
   override def beforeAll(): Unit = {
+    stub = new StubEndpoint
     server = HttpServer.create(new InetSocketAddress(0), 0)
     server.createContext("/db/data/", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
@@ -92,57 +99,10 @@ class Neo4jConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
     uri = s"http://localhost:${server.getAddress.getPort}/db/data/"
   }
 
-  // paged endpoint: parses SKIP/LIMIT from the posted statement and
-  // slices a canned 25-row resultset — lets the partitioned reader be
-  // exercised against real pagination semantics
-  private val pagedRows = (1 to 25).map(i => s"""{"row":[$i,"name$i"]}""")
-  private def pagedContext(): Unit =
-    server.createContext("/paged/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        val stmt = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(body).at("/statements/0/statement").asText()
-        val m = """.*SKIP (\d+) LIMIT (\d+)""".r
-        val (skip, limit) = stmt match {
-          case m(s, l) => (s.toInt, l.toInt)
-          case _       => (0, pagedRows.size)
-        }
-        val page = pagedRows.slice(skip, skip + limit)
-        val resp = (s"""{"results":[{"columns":["id","name"],"data":[""" +
-          page.mkString(",") + """]}],"errors":[]}""").getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.add("Content-Type", "application/json")
-        ex.sendResponseHeaders(200, resp.length.toLong)
-        ex.getResponseBody.write(resp)
-        ex.close()
-      }
-    })
-
-  // keyset endpoint: reads the graftAfter/graftUpper/graftPage WIRE
-  // PARAMETERS (never spliced text) and slices the canned rows by key
-  // predicate — per-page work is proportional to the page, not to any
-  // offset, which is the whole point of keyset pagination
-  private def keysetContext(): Unit =
-    server.createContext("/keyset/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        received.add(body)
-        val params = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(body).at("/statements/0/parameters")
-        val after = params.get("graftAfter").asLong()
-        val upper = params.get("graftUpper").asLong()
-        val page = params.get("graftPage").asInt()
-        val rows = (1 to 25).filter(i => i > after && i <= upper).take(page)
-          .map(i => s"""{"row":[$i,"name$i"]}""")
-        val resp = (s"""{"results":[{"columns":["id","name"],"data":[""" +
-          rows.mkString(",") + """]}],"errors":[]}""").getBytes(StandardCharsets.UTF_8)
-        ex.getResponseHeaders.add("Content-Type", "application/json")
-        ex.sendResponseHeaders(200, resp.length.toLong)
-        ex.getResponseBody.write(resp)
-        ex.close()
-      }
-    })
-
-  override def afterAll(): Unit = if (server != null) server.stop(0)
+  override def afterAll(): Unit = {
+    if (server != null) server.stop(0)
+    if (stub != null) stub.stop()
+  }
 
   test("row parser maps JSON scalar types like the reference") {
     val rows = Neo4jRowParser.parseRows(
@@ -329,10 +289,8 @@ class Neo4jConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partitioned reader pages the full result exactly once") {
-    pagedContext()
     val spark = TestSpark.spark
-    val cfg = Neo4jConfig(
-      s"http://localhost:${server.getAddress.getPort}/paged/",
+    val cfg = Neo4jConfig(s"${stub.base}/paged/",
       "MATCH (n:User) RETURN id(n), n.name ORDER BY id(n)")
     val schema = StructType(Seq(
       StructField("id", IntegerType), StructField("name", StringType)))
@@ -347,11 +305,9 @@ class Neo4jConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("keyset reader covers the key domain exactly once with no offsets") {
-    keysetContext()
-    received.clear()
+    stub.drain()
     val spark = TestSpark.spark
-    val cfg = Neo4jConfig(
-      s"http://localhost:${server.getAddress.getPort}/keyset/",
+    val cfg = Neo4jConfig(s"${stub.base}/keyset/",
       "MATCH (n:User) WHERE id(n) > $graftAfter AND id(n) <= $graftUpper " +
         "RETURN id(n) AS id, n.name ORDER BY id LIMIT $graftPage")
     val schema = StructType(Seq(
@@ -360,7 +316,7 @@ class Neo4jConnectorSpec extends AnyFunSuite with BeforeAndAfterAll {
       bounds = (0L, 25L), keyIndex = 0, numPartitions = 3, pageSize = 4)
     assert(df.collect().map(_.getInt(0)).sorted.toSeq == (1 to 25))
     // every POST paged by key predicate — no SKIP anywhere on the wire
-    val bodies = Iterator.continually(received.poll()).takeWhile(_ != null).toList
+    val bodies = stub.drain()
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     assert(bodies.nonEmpty)
     bodies.foreach { b =>

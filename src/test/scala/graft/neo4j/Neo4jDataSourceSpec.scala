@@ -1,100 +1,26 @@
 package graft.neo4j
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import graft.TestSpark
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentLinkedQueue
 
 /** The DataSource V2 surface (`spark.read.format("graft-neo4j")`)
-  * against the same stub transactional endpoint the programmatic
-  * connector specs use.
+  * against the in-process stub transactional endpoint.
   */
 class Neo4jDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private var server: HttpServer = _
+  private var stub: StubEndpoint = _
   private var base: String = _
-  @volatile private var streamMax = 10
-  private val received = new ConcurrentLinkedQueue[String]()
+  private def received = stub.received
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private val rows25 = (1 to 25).map(i => s"""{"row":[$i,"name$i"]}""")
-  private def ok(ex: HttpExchange, body: String): Unit = {
-    val resp = body.getBytes(StandardCharsets.UTF_8)
-    ex.getResponseHeaders.add("Content-Type", "application/json")
-    ex.sendResponseHeaders(200, resp.length.toLong)
-    ex.getResponseBody.write(resp)
-    ex.close()
-  }
-  private def result(rows: Seq[String]): String =
-    s"""{"results":[{"columns":["id","name"],"data":[${rows.mkString(",")}]}],"errors":[]}"""
-
   override def beforeAll(): Unit = {
-    server = HttpServer.create(new InetSocketAddress(0), 0)
-    // paged endpoint: slices by SKIP/LIMIT appended to the statement
-    server.createContext("/paged/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        received.add(body)
-        val stmt = mapper.readTree(body).at("/statements/0/statement").asText()
-        val m = """.*SKIP (\d+) LIMIT (\d+)""".r
-        val (skip, limit) = stmt match {
-          case m(s, l) => (s.toInt, l.toInt)
-          case _       => (0, rows25.size)
-        }
-        ok(ex, result(rows25.slice(skip, skip + limit)))
-      }
-    })
-    // keyset endpoint: slices by the graftAfter/graftUpper/graftPage
-    // wire parameters
-    server.createContext("/keyset/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        received.add(body)
-        val params = mapper.readTree(body).at("/statements/0/parameters")
-        val (after, upper) = (params.get("graftAfter").asLong(),
-          params.get("graftUpper").asLong())
-        val page = params.get("graftPage").asInt()
-        ok(ex, result((1 to 25).filter(i => i > after && i <= upper)
-          .take(page).map(i => s"""{"row":[$i,"name$i"]}""")))
-      }
-    })
-    // streaming endpoint: an append-only store whose current size is
-    // `streamMax`; a max() statement returns the high-water key, a
-    // keyset statement slices like /keyset/
-    server.createContext("/stream/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        received.add(body)
-        val tree = mapper.readTree(body)
-        val stmt = tree.at("/statements/0/statement").asText()
-        if (stmt.contains("max(")) {
-          ok(ex, s"""{"results":[{"columns":["k"],"data":[{"row":[$streamMax]}]}],"errors":[]}""")
-        } else {
-          val params = tree.at("/statements/0/parameters")
-          val (after, upper) = (params.get("graftAfter").asLong(),
-            params.get("graftUpper").asLong())
-          val page = params.get("graftPage").asInt()
-          ok(ex, result((1 to streamMax).filter(i => i > after && i <= upper)
-            .take(page).map(i => s"""{"row":[$i,"name$i"]}""")))
-        }
-      }
-    })
-    // write endpoint: records payloads, returns an empty result
-    server.createContext("/write/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
-        received.add(body)
-        ok(ex, """{"results":[],"errors":[]}""")
-      }
-    })
-    server.start()
-    base = s"http://localhost:${server.getAddress.getPort}"
+    stub = new StubEndpoint
+    base = stub.base
   }
-  override def afterAll(): Unit = if (server != null) server.stop(0)
+  override def afterAll(): Unit = if (stub != null) stub.stop()
 
   private val schema = StructType(Seq(
     StructField("id", LongType), StructField("name", StringType)))
@@ -138,6 +64,42 @@ class Neo4jDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ids.toSeq == (1L to 25L))
   }
 
+  /** The message of the IllegalArgumentException a format read with
+    * `options` raises; the check must come before any request.
+    */
+  private def rejection(options: (String, String)*): String = {
+    received.clear()
+    val e = intercept[IllegalArgumentException](
+      TestSpark.spark.read.format("graft-neo4j").schema(schema)
+        .options(options.toMap).load().collect())
+    assert(received.isEmpty)
+    e.getMessage
+  }
+
+  test("format reader refuses a self-paged query, a keyset query without its parameters, an empty key domain and an unknown mode") {
+    val url = "url" -> s"$base/keyset/"
+    val keysetQuery = "MATCH (n) WHERE id(n) > $graftAfter AND id(n) <= $graftUpper " +
+      "RETURN id(n), n.name ORDER BY id(n) LIMIT $graftPage"
+    assert(rejection(url, "mode" -> "pages",
+      "query" -> "MATCH (n) RETURN id(n), n.name ORDER BY id(n) LIMIT 10")
+      .contains("must not end with its own"))
+    assert(rejection(url, "mode" -> "keyset",
+      "query" -> keysetQuery.replace("$graftAfter", "0")).contains("$graftAfter"))
+    assert(rejection(url, "mode" -> "keyset", "query" -> keysetQuery,
+      "keysetLo" -> "25", "keysetHi" -> "0").contains("empty key domain"))
+    assert(rejection(url, "mode" -> "bogus", "query" -> keysetQuery)
+      .contains("unknown mode 'bogus'"))
+  }
+
+  test("a pages read without ORDER BY is refused on both surfaces") {
+    val query = "MATCH (n) RETURN id(n), n.name"
+    assert(rejection("url" -> s"$base/paged/", "query" -> query, "mode" -> "pages")
+      .contains("ORDER BY"))
+    val e = intercept[IllegalArgumentException](Neo4jReader.readPartitioned(
+      TestSpark.spark, Neo4jConfig(s"$base/paged/", query), schema))
+    assert(e.getMessage.contains("ORDER BY") && received.isEmpty)
+  }
+
   test("read without a schema fails with a clear message") {
     val e = intercept[IllegalArgumentException](
       TestSpark.spark.read.format("graft-neo4j")
@@ -172,7 +134,7 @@ class Neo4jDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming keyset tail reads each appended key range exactly once") {
     received.clear()
-    streamMax = 10
+    stub.streamMax = 10
     val spark = TestSpark.spark
     val df = spark.readStream.format("graft-neo4j").schema(schema)
       .option("url", s"$base/stream/")
@@ -189,7 +151,7 @@ class Neo4jDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       val first = spark.table("neotail").collect().map(_.getLong(0)).sorted
       assert(first.toSeq == (1L to 10L))
       // the store grows; the next microbatches read ONLY the delta
-      streamMax = 25
+      stub.streamMax = 25
       q.processAllAvailable()
       val all = spark.table("neotail").collect().map(_.getLong(0)).sorted
       assert(all.toSeq == (1L to 25L), s"appended rows must arrive exactly once")
@@ -203,7 +165,7 @@ class Neo4jDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming tail resumes from the checkpoint after a restart") {
-    streamMax = 8
+    stub.streamMax = 8
     val spark = TestSpark.spark
     val ckpt = java.nio.file.Files
       .createTempDirectory("graft-neo4j-ckpt").toString
@@ -234,7 +196,7 @@ class Neo4jDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q1.stop()
     // the store grows while the query is DOWN; the restarted query
     // must resume from the checkpointed offset and read only the delta
-    streamMax = 14
+    stub.streamMax = 14
     val got2 = new ConcurrentLinkedQueue[Long]()
     val q2 = start(got2)
     try {

@@ -26,7 +26,8 @@ class Neo4jPlanSpec extends AnyFunSuite {
     // trigger). Pure partition planning: no endpoint is contacted.
     val stream = new Neo4jMicroBatchStream(schema, cfg,
       maxKeyQuery = "MATCH (n) RETURN max(id(n))",
-      numPartitions = 4, pageSize = 100, keyIndex = 0, startKey = 0L)
+      read = Neo4jRead.Keyset(lo = 0L, hi = 0L, keyIndex = 0,
+        numPartitions = 4, pageSize = 100), startKey = 0L)
     val parts = stream.planInputPartitions(Neo4jOffset(100L), Neo4jOffset(130L))
       .map(_.asInstanceOf[Neo4jInputPartition]).sortBy(_.rangeLo)
     assert(parts.nonEmpty && parts.length <= 4)
@@ -49,7 +50,8 @@ class Neo4jPlanSpec extends AnyFunSuite {
   }
 
   test("batch keyset ranges tile (lo, hi] with the remainder spread") {
-    val parts = Neo4jScan.keysetRanges(0L, 25L, 4)
+    val parts = Neo4jRead.Keyset(lo = 0L, hi = 25L, keyIndex = 0,
+      numPartitions = 4, pageSize = 100).partitions.toArray
       .map(_.asInstanceOf[Neo4jInputPartition]).sortBy(_.rangeLo)
     assert(parts.head.rangeLo == 0L && parts.last.rangeHi == 25L)
     parts.sliding(2).foreach {
