@@ -23,6 +23,20 @@ object Frames {
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
 
+  /** Eagerly materializes a frame as an optimizer leaf, like [[leaf]],
+    * that declares `HashPartitioning(keys, spark.sql.shuffle.partitions)`:
+    * a join of two keyed leaves on their keys, or a key-grouped
+    * aggregate over one, needs no exchange. A plain `localCheckpoint`
+    * keeps no partitioning under AQE (it reports
+    * `UnknownPartitioning(0)`), so loop state that must stay keyed
+    * across rounds goes through here. The rows are hash-exchanged by
+    * `keys` first unless the plan already ends in that partitioning
+    * (see `GraftFrameBridge.keyedLeaf`). Free it with [[free]].
+    */
+  def keyedLeaf(df: DataFrame, keys: String*): DataFrame =
+    org.apache.spark.sql.GraftFrameBridge.keyedLeaf(df, keys,
+      df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+
   /** Spreads a NARROW frame to the session's shuffle parallelism
     * ahead of compute-heavy per-row work (shingling, hashing, vector
     * math): a small file scans as a handful of splits, and any

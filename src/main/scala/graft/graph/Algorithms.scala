@@ -71,22 +71,23 @@ object Algorithms {
     * wanting the converged core loop until a round removes nothing
     * (the survivors-shrink monotonicity is spec-pinned).
     *
-    * 100 TB notes: per round one map-side-combined degree count plus
-    * two semi-joins against the (small, shrinking) survivor set; the
-    * symmetrized edge list is checkpointed with src-hash partitioning
-    * so the per-round degree count and src-side semi-join reuse the
-    * partitioning without a new exchange.
+    * 100 TB notes: per round one degree count plus two semi-joins
+    * against the (shrinking) survivor set. The symmetrized edge list
+    * is a [[graft.Frames.keyedLeaf]] keyed on src, so the degree count
+    * and the src-side semi-join run without an exchange; the dst-side
+    * semi-join exchanges both sides by dst, and the survivors are
+    * exchanged back by src for the next round's keyed checkpoint.
     */
   def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src")).localCheckpoint()
+    var sym = graft.Frames.keyedLeaf(edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))), "src")
     for (_ <- 1 to rounds) {
       val keep = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src"))
-      sym = sym.join(keep, Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-        .repartition(col("src")).localCheckpoint()
+      val next = graft.Frames.keyedLeaf(sym.join(keep, Seq("src"), "left_semi")
+        .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi"), "src")
+      graft.Frames.free(sym)
+      sym = next
     }
     sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("id"), col("deg"))
@@ -206,43 +207,52 @@ object Algorithms {
     * order either way, so every round is deterministic and the DuckDB
     * oracle unrolls it exactly.
     *
-    * 100 TB notes: per round, one (node, label)-keyed partial
-    * aggregate (map-side combine collapses repeated neighbor labels),
-    * one per-node argmax window on the same partitioning, and a
-    * labels join — all keyed on node id, so the edge table's
-    * partitioning is reused and nothing quadratic forms. The parity
-    * filter halves an alternating round's aggregate input — a full
-    * sweep costs the same total work as one synchronous round, just
-    * split in two. localCheckpoint per round bounds the plan like
-    * pageRank's.
+    * Plan per round (2 Spark jobs): `sym` and the labels are
+    * [[graft.Frames.keyedLeaf]]s keyed on node id, and `sym` is
+    * symmetric, so a node's neighbor labels are gathered by joining
+    * the labels on `src` — both sides keyed, no exchange — and
+    * counting them per receiving `dst`. ONE exchange by `dst` then
+    * feeds the (dst, label) count, the per-node argmax window and the
+    * `labels ⟕ best` join, which the `shuffle_hash` hint keeps
+    * co-partitioned (AQE would otherwise turn it into a broadcast at
+    * run time: one more job per round). The parity filter halves an
+    * alternating round's input — a full sweep costs the same total
+    * work as one synchronous round, just split in two. Each round's
+    * labels are a fresh keyed checkpoint; the one it supersedes is
+    * freed.
     */
   def labelPropagation(edges: DataFrame, rounds: Int,
       alternating: Boolean = false): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src")).localCheckpoint()
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .repartition(col("id")).localCheckpoint(true)
-    val w = Window.partitionBy(col("src")).orderBy(col("cnt").desc, col("label"))
+    val sym = graft.Frames.keyedLeaf(edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))), "src")
+    var labels = graft.Frames.keyedLeaf(sym.select(col("src").as("id")).distinct()
+      .withColumn("label", col("id")), "id")
+    val n = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val w = Window.partitionBy(col("dst")).orderBy(col("cnt").desc, col("label"))
     for (j <- 1 to rounds) {
       // pmod, not %: Spark's % yields -1 for negative odd ids, which
       // would match neither color class and freeze those vertices'
       // labels on general (possibly negative-id) edge lists.
       val movers =
-        if (alternating) sym.filter(pmod(col("src"), lit(2)) === lit(j % 2))
+        if (alternating) sym.filter(pmod(col("dst"), lit(2)) === lit(j % 2))
         else sym
       val best = movers
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src"), col("label")).agg(count(lit(1)).as("cnt"))
+        .join(labels.withColumnRenamed("id", "src"), "src")
+        // by number: AQE never coalesces it, so it stays co-partitioned
+        // with the keyed labels it is joined to below
+        .repartition(n, col("dst"))
+        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") === 1)
-        .select(col("src").as("id"), col("label").as("new_label"))
-      labels = labels.join(best, Seq("id"), "left_outer")
-        .select(col("id"),
-          coalesce(col("new_label"), col("label")).as("label"))
-        .localCheckpoint(true)
+        .select(col("dst").as("id"), col("label").as("new_label"))
+      val next = graft.Frames.keyedLeaf(
+        labels.join(best.hint("shuffle_hash"), Seq("id"), "left_outer")
+          .select(col("id"), coalesce(col("new_label"), col("label")).as("label")),
+        "id")
+      graft.Frames.free(labels)
+      labels = next
     }
+    graft.Frames.free(sym)
     labels
   }
 
@@ -748,9 +758,12 @@ object Algorithms {
       .orderBy(col("id"))
   }
 
-  /** `edges` as (src, dst), hash-partitioned by src and materialized
-    * once — the loop-invariant side of every frontier join keyed on
-    * src, so no round re-exchanges the edge list.
+  /** `edges` as (src, dst), spread by src and materialized once — the
+    * loop-invariant side of every frontier join keyed on src. The
+    * checkpoint keeps no partitioning under AQE (see
+    * [[graft.Frames.keyedLeaf]]): a round leaves the edge list in place
+    * because AQE broadcasts the frontier into that join, and a frontier
+    * above the broadcast threshold exchanges both sides.
     */
   private def bySrc(edges: DataFrame): DataFrame =
     edges.select(col("src"), col("dst"))
@@ -978,11 +991,13 @@ object Algorithms {
   }
 
   /** The static structures of [[pageRank]] and
-    * [[personalizedPageRank]], materialized ONCE (localCheckpoint
-    * preserves outputPartitioning): edges pre-joined with their
-    * source's out-degree and hash-partitioned by src, and the vertex
-    * frame partitioned by id, carrying a `has_out` flag (and an
-    * `is_seed` flag when `seeds` is given).
+    * [[personalizedPageRank]], materialized ONCE: edges pre-joined
+    * with their source's out-degree and spread by src, and the vertex
+    * frame spread by id, carrying a `has_out` flag (and an `is_seed`
+    * flag when `seeds` is given). Under AQE neither checkpoint keeps
+    * its partitioning (see [[graft.Frames.keyedLeaf]]); declaring it
+    * made these loops run MORE jobs, because [[rankLoop]]'s joins
+    * broadcast the small rank frames instead.
     */
   private def rankGraph(edges: DataFrame, seeds: Option[DataFrame])
       : (DataFrame, DataFrame) = {
@@ -1010,12 +1025,13 @@ object Algorithms {
     * over those columns, `received` (the contribution sum) and `dmass`
     * (the rank mass of nodes without out-edges).
     *
-    * Shuffle discipline (the part that matters at 100 TB): each
-    * iteration shuffles only the contribution aggregation — the
-    * edge×rank join co-locates on the [[rankGraph]] partitioning, the
-    * vertices×received join reuses the aggregation's id-partitioning,
-    * and dangling mass is a filter on `has_out` (no anti-join). One
-    * shuffle per iteration total.
+    * Exchanges per iteration: the contribution aggregation by id,
+    * and the vertex frame by id for the vertices×received join (the
+    * [[rankGraph]] checkpoints keep no partitioning under AQE). The
+    * edge×rank join re-exchanges nothing while the ranks fit the
+    * broadcast threshold — AQE broadcasts them; above it both sides
+    * are exchanged. Dangling mass is a filter on `has_out` (no
+    * anti-join) into a broadcast 1-row aggregate.
     */
   private def rankLoop(edgesDeg: DataFrame, base: DataFrame,
       init: DataFrame, update: Column): DataFrame = {
@@ -1087,12 +1103,12 @@ object Algorithms {
     */
   def hits(spark: SparkSession, edges: DataFrame): DataFrame = {
     val e = bySrc(edges)
-    // second copy partitioned on dst: the hub-sum join keys on e.dst,
-    // so without it every iteration re-exchanges the FULL edge list
-    // dst-ward (the aggregation exchanges are inherent, this one is
-    // not). Two materialized edge copies buy 8 iterations × one
-    // edge-list exchange — the classic in/out adjacency split every
-    // Pregel-style engine keeps
+    // second copy spread by dst for the hub-sum join, which keys on
+    // e.dst (the classic in/out adjacency split). Under AQE neither
+    // copy keeps its partitioning (see graft.Frames.keyedLeaf): the
+    // iterations leave both edge lists in place because AQE
+    // broadcasts the score frames into the two joins, and a score
+    // frame above the broadcast threshold exchanges both sides
     val eByDst = e.repartition(col("dst")).localCheckpoint(true)
     val vertices = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id")))
@@ -1394,15 +1410,19 @@ object Algorithms {
     * (relaxation is monotone).
     *
     * 100 TB notes: each round is one join keyed on src + one
-    * min-aggregate keyed on node id — the same two-exchange shape as
-    * a PageRank iteration; dist is localCheckpointed each round to
-    * cut lineage. Edge weights ride the edge relation; no per-round
-    * driver data beyond the 1-row convergence count.
+    * min-aggregate keyed on node id — the aggregate's exchange, plus
+    * the join's two while the frontier is too large to broadcast;
+    * dist is localCheckpointed each round to cut lineage. Edge
+    * weights ride the edge relation; no per-round driver data beyond
+    * the 1-row convergence count.
     */
   def ssspBoundedHops(edges: DataFrame, sources: DataFrame,
       rounds: Int): DataFrame = {
-    // edges partitioned by src ONCE: every round's relax join then
-    // reuses this layout instead of re-exchanging the edge relation
+    // edges spread by src and materialized ONCE. The checkpoint keeps
+    // no partitioning under AQE (see graft.Frames.keyedLeaf): a round
+    // leaves the edges in place because AQE broadcasts the frontier
+    // into the relax join; a frontier above the broadcast threshold
+    // exchanges both sides
     val e = edges.select(col("src"), col("dst"), col("w"))
       .repartition(col("src")).localCheckpoint(true)
     var dist = sources.select(col("id"), lit(0L).as("cost"))

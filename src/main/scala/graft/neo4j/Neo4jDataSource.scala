@@ -102,17 +102,22 @@ private[neo4j] final class Neo4jTable(
       TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
       TableCapability.ACCEPT_ANY_SCHEMA)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    // table properties (from the provider) + per-read options
-    val merged = new java.util.HashMap[String, String](props)
-    merged.putAll(options)
-    new Neo4jScanBuilder(schema, new CaseInsensitiveStringMap(merged))
-  }
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new Neo4jScanBuilder(schema, withTableProps(options))
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    val merged = new java.util.HashMap[String, String](props)
-    merged.putAll(info.options())
-    new Neo4jWriteBuilder(info.schema(), new CaseInsensitiveStringMap(merged))
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
+    new Neo4jWriteBuilder(info.schema(), withTableProps(info.options()))
+
+  /** The table properties (from the provider) overlaid with one
+    * operation's options as ONE case-insensitive map: keys are folded
+    * before they meet, so a key never appears twice and the
+    * operation's value wins.
+    */
+  private def withTableProps(options: java.util.Map[String, String]): CaseInsensitiveStringMap = {
+    val merged = new java.util.HashMap[String, String]()
+    for (m <- Seq(props, options))
+      m.forEach((k, v) => merged.put(k.toLowerCase(java.util.Locale.ROOT), v))
+    new CaseInsensitiveStringMap(merged)
   }
 }
 

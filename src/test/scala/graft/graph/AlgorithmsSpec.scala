@@ -132,6 +132,48 @@ class AlgorithmsSpec extends AnyFunSuite {
     assert(q.nonEmpty && q.forall(_.getLong(1) <= q.map(_.getLong(0)).max))
   }
 
+  /** The Spark jobs `body` starts, counted under a job group. A job in
+    * a second group then drains the listener bus: events reach a
+    * listener in order, so once its start is seen every job of `body`
+    * has been counted.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val (group, fence) = (s"jobs-${System.nanoTime()}", s"fence-${System.nanoTime()}")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(): Unit
+          case Some(`fence`) => fenced.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, group)
+      body
+      sc.setJobGroup(fence, fence)
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(listener) }
+    jobs.get
+  }
+
+  test("label propagation: each extra round costs at most 2 Spark jobs") {
+    // the per-nation chain shape: offsets 1 and 2 along 300 ids
+    val edges = edgeDf((0L until 300L).flatMap(i =>
+      Seq(1L, 2L).filter(i + _ < 300L).map(d => (i, i + d))))
+    for (alternating <- Seq(false, true)) {
+      def run(rounds: Int) = jobsOf(
+        Algorithms.labelPropagation(edges, rounds, alternating).collect(): Unit)
+      val (two, six) = (run(2), run(6))
+      assert(six - two <= 4 * 2,
+        s"alternating=$alternating: 2 rounds $two jobs, 6 rounds $six jobs")
+    }
+  }
+
   test("k-truss: K4 survives at k=4, empties at k=5; pendant edges peel") {
     val k4 = edgeDf(Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)))
     // every K4 edge sits in exactly 2 triangles -> the 4-truss keeps

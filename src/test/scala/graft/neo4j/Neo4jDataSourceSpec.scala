@@ -5,6 +5,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
 
 /** The DataSource V2 surface (`spark.read.format("graft-neo4j")`)
   * against the in-process stub transactional endpoint.
@@ -338,5 +339,32 @@ class Neo4jDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
         .save())
     assert(e.getMessage.contains("parameter statement") ||
       Option(e.getCause).exists(_.getMessage.contains("parameter statement")))
+  }
+
+  test("a per-operation option wins over a table property that differs only in key case") {
+    def table(props: (String, String)*) = new Neo4jTableProvider().getTable(schema,
+      Array.empty, new java.util.HashMap[String, String](
+        (Seq("url" -> s"$base/paged/", "query" -> "MATCH (n) RETURN n ORDER BY n") ++ props)
+          .toMap.asJava))
+    def opts(kv: (String, String)*) =
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(kv.toMap.asJava)
+    def scan(t: org.apache.spark.sql.connector.catalog.Table, o: (String, String)*) =
+      t.asInstanceOf[Neo4jTable].newScanBuilder(opts(o: _*)).build().description()
+    assert(scan(table("mode" -> "pages", "numPartitions" -> "1", "pageSize" -> "2"),
+      "NUMPARTITIONS" -> "3", "pagesize" -> "4").contains("Pages(3,4)"))
+    assert(scan(table("mode" -> "pages", "NumPartitions" -> "5"), "numPartitions" -> "2")
+      .contains("Pages(2,10000)"))
+    def streaming(t: org.apache.spark.sql.connector.catalog.Table, o: (String, String)*) =
+      t.asInstanceOf[Neo4jTable].newWriteBuilder(
+        new org.apache.spark.sql.connector.write.LogicalWriteInfo {
+          def queryId(): String = "q"
+          def schema(): StructType = Neo4jDataSourceSpec.this.schema
+          def options() = opts(o: _*)
+        }).build().toStreaming
+    val unwind = "query" -> "UNWIND $rows AS r MERGE (n:User {id: r.id})"
+    streaming(table(unwind, "idempotentWrites" -> "false"), "IDEMPOTENTWRITES" -> "true")
+    val e = intercept[IllegalArgumentException](
+      streaming(table(unwind, "IdempotentWrites" -> "true"), "idempotentwrites" -> "false"))
+    assert(e.getMessage.contains("idempotentWrites"))
   }
 }
